@@ -42,20 +42,44 @@ import org.apache.spark.sql.functions._
   * `_SUCCESS` marker, so a torn write is invisible. Audit-counter caveat:
   * a pruned merge never scans untouched buckets, so their retained rows
   * are not counted as `noop`.
+  *
+  * Concurrent writes: [[writeAll]] takes a loader's writes that do not
+  * read one another's tables and runs the writes to different tables at
+  * once, each table's writes in the order given, on threads started for
+  * that call (see there for why). A small write is mostly fixed per-job
+  * cost (bucket discovery, planning, a handful of tiny tasks), so one
+  * write alone leaves most task slots idle; overlapped writes fill them.
+  *
+  * Write-stage width: the shuffle in front of every layer write has
+  * `min(buckets it holds, defaultParallelism)` partitions, hash-partitioned
+  * on the bucket id, so each bucket stays inside one task and a layer
+  * still has one file per bucket. Each write task pays a fixed cost
+  * (deserializing the write job's Hadoop configuration, 50-75 ms on 4
+  * cores) whether it writes one bucket or several, so more tasks than
+  * slots only queue that cost. At 32 or more slots the plan is one task
+  * per bucket, as before.
   */
 class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32,
     compactEvery: Int = 64) {
+  import PersistentGraphStore.{Edges, Merge, Write}
 
   private def tableDir(table: String) = s"$root/$table"
 
+  /** Partitions of the bucket shuffle in front of a layer write holding
+    * rows of `buckets` buckets: one task per bucket up to the slot count.
+    */
+  private def writeWidth(buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
+
   // ---- per-table write serialization --------------------------------------
-  // Concurrent loaders (level-parallel orchestration) may target the SAME
-  // table; version allocation is read-latest+1, so unsynchronized writers
-  // would both claim v=N+1 and one layer would vanish. A per-table monitor
-  // serializes mutators per table while leaving writes to DIFFERENT tables
-  // fully concurrent. Driver-side only — one store instance per JVM owns a
-  // root; multi-driver coordination is a table-format concern (Delta/
-  // Iceberg), out of scope here.
+  // Concurrent loaders (level-parallel orchestration, each with its own
+  // writeAll batches) may target the SAME table; version allocation is
+  // read-latest+1, so unsynchronized writers would both claim v=N+1 and
+  // one layer would vanish. A per-table monitor serializes mutators per
+  // table while leaving writes to DIFFERENT tables fully concurrent.
+  // Driver-side only — one store instance per JVM owns a root;
+  // multi-driver coordination is a table-format concern (Delta/Iceberg),
+  // out of scope here.
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(table: String): Object =
@@ -329,15 +353,16 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     // touched bucket and the writer opens (#tasks × #buckets) files —
     // measured 1049 files in one fixture edges layer, ~9 KB each, and
     // every later merge re-opens them all. The explicit partition
-    // count keeps AQE from coalescing below one-task-per-bucket; one
-    // narrow batch-sized shuffle buys ≤ nBuckets well-sized files per
-    // layer, which is also the layout readers want. (r18 A/B kept it:
-    // the AQE-coalescible `repartition(col)` form saved ~5% CPU but
-    // serialized each tiny layer's ≤ nBuckets parquet-writer opens into
-    // ONE task — BenchDag wall 222 s → 386-414 s over the two-pass DAG.
-    // One-task-per-bucket keeps the file opens parallel.)
+    // count keeps AQE from coalescing the shuffle; one narrow
+    // batch-sized shuffle buys ≤ nBuckets well-sized files per layer,
+    // which is also the layout readers want. (r18 A/B: the
+    // AQE-coalescible `repartition(col)` form serialized each tiny
+    // layer's parquet-writer opens into ONE task — BenchDag wall 222 s →
+    // 386-414 s over the two-pass DAG. The width is therefore pinned at
+    // the slot count (see [[writeWidth]]), which keeps every slot
+    // opening files.)
     val plan = df.withColumn("__b", bucketExpr(m))
-      .repartition(m.nBuckets, col("__b"))
+      .repartition(writeWidth(m.nBuckets), col("__b"))
     writeStaged(table, plan, full)(keep = true).get
   }
 
@@ -598,19 +623,13 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
         // table's full bucket count — classified holds rows of touched
         // buckets only (current was pruned to them; incoming defines
         // them), so a trickle merge runs 1-3 write tasks instead of
-        // nBuckets mostly-empty ones (guide §2.2 fewer tasks; the empty
-        // tasks were pure scheduling constant × hundreds of merges in the
-        // loader DAG). Scale-adaptive by construction: a batch that
-        // touches every bucket keeps one task per bucket, the layout the
-        // r18 A/B pinned (parallel parquet-writer opens). A hash collision
-        // at small counts just means one task writes two bucket files
-        // sequentially — both tiny by definition of the small count.
-        val nParts = touched
-          .map(t => math.min(m.nBuckets, math.max(1, t.size)))
-          .getOrElse(m.nBuckets)
+        // nBuckets mostly-empty ones (the empty tasks were pure
+        // scheduling constant × hundreds of merges in the loader DAG),
+        // capped at the slot count (see [[writeWidth]]). A hash collision
+        // just means one task writes two bucket files sequentially.
         val bucketed = classified
           .withColumn("__b", bucketExpr(m))
-          .repartition(nParts, col("__b"))
+          .repartition(writeWidth(touched.fold(m.nBuckets)(_.size)), col("__b"))
         val anyRewrite = max(col(GraphStore.REWRITE).cast("int")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
         val obs = org.apache.spark.sql.Observation()
@@ -692,12 +711,9 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       // same touched-bucket-count layer shuffle as merge (r19): the layer
       // holds candidate-bucket rows only (existing was pruned to them;
       // every candidate edge lands in one of them by definition)
-      val nParts = touched
-        .map(t => math.min(m.nBuckets, math.max(1, t.size)))
-        .getOrElse(m.nBuckets)
       val bucketed = layer
         .withColumn("__b", bucketExpr(m))
-        .repartition(nParts, col("__b"))
+        .repartition(writeWidth(touched.fold(m.nBuckets)(_.size)), col("__b"))
       val anyFresh = max(col("__fresh").cast("int")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
       val obs = org.apache.spark.sql.Observation()
@@ -717,4 +733,69 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   def upsertSource(source: DataFrame): Map[String, Long] =
     merge("sources", source, keyCols = Seq("name"),
       compareCols = source.columns.filterNot(_ == "name").toSeq)
+
+  /** Run a loader's writes, none of which may read another's table: writes
+    * to different tables run at once, writes to one table run in the order
+    * given. Each write goes through the public [[merge]] or [[upsertEdges]],
+    * so a subclass sees every call. Returns each write's counters in input
+    * order once every write has finished. If any failed, rethrows the first
+    * failure in input order with the others attached as suppressed; a
+    * failed write skips the later writes to its table.
+    *
+    * Each table's writes run on a thread started by the calling thread for
+    * this call, not on a shared pool: a new thread inherits the caller's
+    * Spark local properties (job group, scheduler pool, tracing tags), so
+    * every job the batch submits is attributed to the caller. A pooled
+    * thread would keep whatever properties it was created with.
+    */
+  def writeAll(writes: Seq[Write]): Seq[Map[String, Long]] = {
+    val results = new Array[Map[String, Long]](writes.length)
+    val failures = new Array[Throwable](writes.length)
+    val lanes = writes.zipWithIndex.groupBy(_._1.table).values.toSeq
+    val threads = lanes.map { lane =>
+      val t = new Thread(() => {
+        val it = lane.iterator
+        var failed = false
+        while (!failed && it.hasNext) {
+          val (w, i) = it.next()
+          try results(i) = w match {
+            case m: Merge => merge(m.table, m.incoming, m.keyCols, m.compareCols,
+              m.setCols, m.softDelete)
+            case Edges(candidates) => upsertEdges(candidates)
+          } catch { case e: Throwable => failures(i) = e; failed = true }
+        }
+      }, s"graft-store-write-${lane.head._1.table}")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    // wait for every write even if interrupted, then restore the flag
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.filter(_ != null).toSeq match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ => results.toSeq
+    }
+  }
+}
+
+object PersistentGraphStore {
+
+  /** One write of a [[PersistentGraphStore.writeAll]] batch. */
+  sealed trait Write { def table: String }
+
+  /** A [[PersistentGraphStore.merge]] call. */
+  final case class Merge(table: String, incoming: DataFrame,
+      keyCols: Seq[String], compareCols: Seq[String],
+      setCols: Seq[String] = Nil, softDelete: Boolean = false) extends Write
+
+  /** A [[PersistentGraphStore.upsertEdges]] call. */
+  final case class Edges(candidates: DataFrame) extends Write {
+    def table: String = "edges"
+  }
 }

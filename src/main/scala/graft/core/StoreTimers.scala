@@ -23,7 +23,8 @@ import java.util.concurrent.atomic.AtomicLong
   * into any query row — only [[graft.BenchDag]] reads it. Thread-safe:
   * concurrent loaders accumulate into shared atomics (summed-across-
   * threads time exceeds wall under parallelism; the attribution run pins
-  * SPARK_GRAFT_DAG_PAR=1 so sums are disjoint wall-clock).
+  * SPARK_GRAFT_DAG_PAR=1, but a loader's `writeAll` batch still overlaps
+  * its own writes, so `entryNanos` can exceed wall even then).
   */
 object StoreTimers {
   val entryNanos = new AtomicLong(0L)

@@ -11,9 +11,11 @@ import org.apache.spark.sql.SparkSession
   * whole corpus), and aggregates per-loader audit counters.
   *
   * Scale: ordering is driver-side metadata; each loader body is ordinary
-  * distributed Spark. Independent loaders could be submitted concurrently —
-  * the deterministic level-order here keeps logs and reruns reproducible
-  * (levels are the Snakemake parallelism unit too).
+  * distributed Spark. Concurrency comes at two grains: `run` with
+  * `parallelism > 1` runs a level's loaders at once (levels are the
+  * Snakemake parallelism unit), and inside one loader the store's
+  * `writeAll` overlaps its writes to different tables. Level membership
+  * and the report stay deterministic either way.
   */
 object Orchestrator {
 
@@ -99,7 +101,9 @@ object Orchestrator {
         if (badDeps.nonEmpty) Skipped(badDeps)
         else
           try Succeeded(loader.run(spark))
-          catch { case e: Exception => Failed(e.getMessage) }
+          // toString, not getMessage: an exception without a message
+          // (a NullPointerException, say) still names its class
+          catch { case e: Exception => Failed(e.toString) }
       name -> status
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.variant.HgvsParser
 
 /** cancerhotspots.org loader (reference src/cancerhotspots/index.js:
@@ -132,12 +133,6 @@ object CancerHotspots {
       val badRecs = allRecs.join(goodProt, Seq("recId"), "left_anti")
       val live = resolved.join(badRecs, Seq("recId"), "left_anti")
         .filter(col("dim_sid").isNotNull)
-      val counts = store.merge("variants",
-        live.select(col("vid"), col("form"), col("notation"), col("term"),
-          col("break1"), col("dim_sid").as("reference1"))
-          .dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("form", "notation", "term", "reference1"))
       // per-record form presence → conditional Infers topology
       def vidOf(form: String) =
         live.filter(col("form") === form)
@@ -150,8 +145,6 @@ object CancerHotspots {
       val genomicTo = byRec.filter(col("genomic_vid").isNotNull)
         .select(col("genomic_vid").as("out"),
           coalesce(col("cds_vid"), col("protein_vid")).as("in"))
-      val e = store.upsertEdges(cdsToProt.unionByName(genomicTo)
-        .withColumn("edgeClass", lit("Infers")))
       // statements: disease both condition and subject; previous sourceIds skipped
       val recsDF = records.toDF()
         .join(badRecs.withColumnRenamed("recId", "sourceId"),
@@ -171,9 +164,20 @@ object CancerHotspots {
           prev.select("sourceId"), Seq("sourceId"), "left_anti")
         case None => candidates
       }
-      val sc = store.merge("statements", fresh, keyCols = Seq("sourceId"),
-        compareCols = Seq("relevance", "subject", "reviewStatus"),
-        setCols = Seq("conditions"))
+      // the statements merge reads only its own table (`fresh` above), so
+      // the three writes are independent
+      val Seq(counts, e, sc) = store.writeAll(Seq(
+        Merge("variants",
+          live.select(col("vid"), col("form"), col("notation"), col("term"),
+            col("break1"), col("dim_sid").as("reference1"))
+            .dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("form", "notation", "term", "reference1")),
+        Edges(cdsToProt.unionByName(genomicTo)
+          .withColumn("edgeClass", lit("Infers"))),
+        Merge("statements", fresh, keyCols = Seq("sourceId"),
+          compareCols = Seq("relevance", "subject", "reviewStatus"),
+          setCols = Seq("conditions"))))
       counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
         sc.map { case (k, v) => s"statements_$k" -> v } +
         ("record_errors" -> badRecs.count())

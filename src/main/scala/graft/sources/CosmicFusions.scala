@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** COSMIC fusions recurrence loader (reference src/cosmic/fusions.js:
   * 36-225): a three-level recurrence rollup with specificity suppression —
@@ -141,22 +142,23 @@ object CosmicFusions {
             .select(col("specific_vid").as("vid"), lit("positional").as("form"),
               concat(lit("e."), col("rep.exon1")).as("break1"),
               concat(lit("e."), col("rep.exon2")).as("break2"))
-          val counts = store.merge("variants",
-            general.unionByName(specific).dropDuplicates("vid"),
-            keyCols = Seq("vid"), compareCols = Seq("form", "break1", "break2"))
-          val e = store.upsertEdges(live.filter(col("specific_vid").isNotNull)
-            .select(col("specific_vid").as("out"), col("general_vid").as("in"),
-              lit("Infers").as("edgeClass")).distinct())
-          val sc = store.merge("statements",
-            live.select(col("rep.recId").as("sourceId"),
-              col("level").cast("long").as("level"),
-              lit("recurrent").as("relevance"),
-              coalesce(col("specific_vid"), col("general_vid")).as("condition"),
-              col("disease_sid").as("subject"),
-              col("n_samples").cast("long").as("n_samples")),
-            keyCols = Seq("sourceId"),
-            compareCols = Seq("level", "relevance", "condition", "subject",
-              "n_samples"))
+          val Seq(counts, e, sc) = store.writeAll(Seq(
+            Merge("variants",
+              general.unionByName(specific).dropDuplicates("vid"),
+              keyCols = Seq("vid"), compareCols = Seq("form", "break1", "break2")),
+            Edges(live.filter(col("specific_vid").isNotNull)
+              .select(col("specific_vid").as("out"), col("general_vid").as("in"),
+                lit("Infers").as("edgeClass")).distinct()),
+            Merge("statements",
+              live.select(col("rep.recId").as("sourceId"),
+                col("level").cast("long").as("level"),
+                lit("recurrent").as("relevance"),
+                coalesce(col("specific_vid"), col("general_vid")).as("condition"),
+                col("disease_sid").as("subject"),
+                col("n_samples").cast("long").as("n_samples")),
+              keyCols = Seq("sourceId"),
+              compareCols = Seq("level", "relevance", "condition", "subject",
+                "n_samples"))))
           val errors = resolved.filter(col("disease_sid").isNull).count()
           counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
             sc.map { case (k, v) => s"statements_$k" -> v } +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** The composed NCIt flat-file pipeline (reference `uploadFile`
   * src/ncit/index.js:199-460): scan → parent-concept derivation → row
@@ -184,10 +185,10 @@ object NcitLoad {
     val r = resolvedFrom(stagedFrom(spark, raw).toDF())
     r.persist()
     try {
-      val counts = store.merge("terms", vertices(r),
-        keyCols = Seq("sourceId", "name"),
-        compareCols = Seq("displayName", "endpoint", "alias"))
-      val e = store.upsertEdges(edges(r))
+      val Seq(counts, e) = store.writeAll(Seq(
+        Merge("terms", vertices(r), keyCols = Seq("sourceId", "name"),
+          compareCols = Seq("displayName", "endpoint", "alias")),
+        Edges(edges(r))))
       counts ++ e.map { case (k, v) => s"edges_$k" -> v }
     } finally { r.unpersist(); () }
   }

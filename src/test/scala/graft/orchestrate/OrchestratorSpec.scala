@@ -152,6 +152,20 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(store.read("t").get.count() == 4L)
   }
 
+  test("a failure without a message still names its exception") {
+    import spark.implicits._
+    // the NullPointerException comes back from a writeAll batch thread
+    val store = new graft.core.PersistentGraphStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-npe").toString) {
+      override def upsertEdges(rawCandidates: org.apache.spark.sql.DataFrame) =
+        throw new NullPointerException()
+    }
+    val report = Orchestrator.run(spark, Seq(Loader("npe", Seq.empty, _ =>
+      store.writeAll(Seq(graft.core.PersistentGraphStore.Edges(
+        Seq(("a", "b", "SubClassOf")).toDF("out", "in", "edgeClass")))).head)))
+    assert(report.statuses("npe") == Failed("java.lang.NullPointerException"))
+  }
+
   test("full corpus DAG: every loader succeeds into one store; rerun creates nothing") {
     val store = new graft.core.PersistentGraphStore(spark,
       java.nio.file.Files.createTempDirectory("graft-corpus").toString)
