@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** BM25 lane A/B (measurement tool, not part of the driver contract —
-  * the BenchDag pattern): times the INLINE corpus-tokenizing path
-  * against the STANDING-INDEX banded probe, exact MaxScore, and the
-  * per-batch AUTO pick on the same corpus and query batch, with the
-  * one-time index build priced separately. `qmod` scales the query
+/** BM25 lane A/B (measurement tool, outside the Verify/Bench contract):
+  * times the INLINE corpus-tokenizing path against the STANDING-INDEX
+  * banded probe, exact MaxScore, and the per-batch AUTO pick on the same
+  * corpus and query batch, with the one-time index build priced
+  * separately. `qmod` scales the query
   * batch (doc_id % qmod == 0 → |docs|/qmod queries): production probe
   * batches are small, and band pruning only shows once the batch's term
   * set stops covering every word-hash band — the registry row's %97

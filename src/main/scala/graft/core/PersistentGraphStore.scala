@@ -52,12 +52,12 @@ import org.apache.spark.sql.functions._
   *
   * Write-stage width: the shuffle in front of every layer write has
   * `min(buckets it holds, defaultParallelism)` partitions, hash-partitioned
-  * on the bucket id, so each bucket stays inside one task and a layer
-  * still has one file per bucket. Each write task pays a fixed cost
-  * (deserializing the write job's Hadoop configuration, 50-75 ms on 4
-  * cores) whether it writes one bucket or several, so more tasks than
-  * slots only queue that cost. At 32 or more slots the plan is one task
-  * per bucket, as before.
+  * on the bucket id. Each bucket is in exactly one task, so a layer has one
+  * file per bucket; two buckets may share a task (hashing 32 bucket ids
+  * into 32 partitions leaves about 1/e of them empty). Each write task pays
+  * a fixed cost (deserializing the write job's Hadoop configuration,
+  * 50-75 ms on 4 cores) whether it writes one bucket or several, so more
+  * tasks than slots only queue that cost.
   */
 class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32,
     compactEvery: Int = 64) {
@@ -66,7 +66,8 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   private def tableDir(table: String) = s"$root/$table"
 
   /** Partitions of the bucket shuffle in front of a layer write holding
-    * rows of `buckets` buckets: one task per bucket up to the slot count.
+    * rows of `buckets` buckets, capped at the slot count. Hash partitioning
+    * keeps each bucket in one task but may put two buckets in one task.
     */
   private def writeWidth(buckets: Int): Int =
     math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
@@ -241,7 +242,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * version's buckets share one schema, so the footer-merge cost is
     * skipped for the common post-compaction case.
     *
-    * r19 per-dir schema cache: a published leaf directory is IMMUTABLE
+    * Per-dir schema cache: a published leaf directory is IMMUTABLE
     * (layers are staged and atomically renamed, never rewritten), so its
     * INFERRED schema is read once and cached — caching only what
     * inference returns keeps the cached path byte-identical to today's
@@ -251,9 +252,9 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * table), the read passes that schema explicitly and Spark skips
     * footer inference; genuinely mixed schemas keep today's mergeSchema
     * path. Measured motivation: readDirs construction was ~10% of the
-    * DAG's store time (BenchDag r19 instrumentation), and dimension
-    * tables are re-read by almost every loader — only a NEW layer's
-    * dirs ever pay inference, once each.
+    * loader DAG's store time, and dimension tables are re-read by almost
+    * every loader — only a NEW layer's dirs ever pay inference, once
+    * each.
     */
   private val dirSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
@@ -274,7 +275,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   }
 
 
-  private def readDirs(dirs: Seq[String]): DataFrame = StoreTimers.readPlan {
+  private def readDirs(dirs: Seq[String]): DataFrame = {
     val schemas = dirs.map(dirSchema).distinct
     if (schemas.length == 1) spark.read.schema(schemas.head).parquet(dirs: _*)
     else {
@@ -285,7 +286,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     }
   }
 
-  def read(table: String): Option[DataFrame] = StoreTimers.entry {
+  def read(table: String): Option[DataFrame] = {
     val dirs = leafDirs(table)
     if (dirs.isEmpty) None else Some(readDirs(dirs.map(_._2)))
   }
@@ -294,7 +295,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * semantics for a loader that merges a table and re-reads it within
     * one pinned level (e.g. fetch-fallback hydration).
     */
-  def readLatest(table: String): Option[DataFrame] = StoreTimers.entry {
+  def readLatest(table: String): Option[DataFrame] = {
     val dirs = leafDirsLatest(table)
     if (dirs.isEmpty) None else Some(readDirs(dirs.map(_._2)))
   }
@@ -323,21 +324,17 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * action that can materialize the (persisted) incoming frame.
     */
   private def touchedBuckets(df: DataFrame, m: Meta): Set[Int] =
-    StoreTimers.touch {
-      df.agg(collect_set(bucketExpr(m).cast("int")).as("__bs"))
-        .collect()(0).getSeq[Int](0).toSet
-    }
+    df.agg(collect_set(bucketExpr(m).cast("int")).as("__bs"))
+      .collect()(0).getSeq[Int](0).toSet
 
-  // NOTE (r18 negative result, kept for the record): a variant that
-  // fused bucket discovery into the write action for small tables (read
-  // ALL leaf dirs + in-plan broadcast semi-join on the bucket id instead
-  // of the touchedBuckets collect + driver-pruned read) was built and
-  // A/B'd with BenchDag — and LOST: write-action wall more than doubled
-  // (103.9 s → 226.8 s over the two-pass DAG). Saving one driver action
-  // per merge did not pay for reading every bucket directory per merge
-  // (10-30× the file opens + mergeSchema footers on layered fixtures)
-  // plus the extra broadcast exchange inside the write job. The
-  // collect-then-prune shape below stays.
+  // Negative result, kept for the record: fusing bucket discovery into
+  // the write action for small tables (read ALL leaf dirs + in-plan
+  // broadcast semi-join on the bucket id instead of the touchedBuckets
+  // collect + driver-pruned read) LOST: write-action wall more than
+  // doubled (103.9 s → 226.8 s over the two-pass DAG). Saving one driver
+  // action per merge did not pay for reading every bucket directory per
+  // merge (10-30× the file opens + mergeSchema footers on layered
+  // fixtures) plus the extra broadcast exchange inside the write job.
 
   /** Write the next version layer. `df` must be the COMPLETE new content of
     * every bucket it contains rows for — buckets without rows keep their
@@ -345,7 +342,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * snapshot (then absent buckets are empty).
     */
   def write(table: String, df: DataFrame, bucketCols: Seq[String],
-      full: Boolean = false): Int = StoreTimers.entry {
+      full: Boolean = false): Int = {
     val m = metaFor(table, bucketCols)
     // co-locate each bucket's rows in ONE task before the dynamic-
     // partition write: the upstream classify join is partitioned by
@@ -355,12 +352,11 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     // every later merge re-opens them all. The explicit partition
     // count keeps AQE from coalescing the shuffle; one narrow
     // batch-sized shuffle buys ≤ nBuckets well-sized files per layer,
-    // which is also the layout readers want. (r18 A/B: the
-    // AQE-coalescible `repartition(col)` form serialized each tiny
-    // layer's parquet-writer opens into ONE task — BenchDag wall 222 s →
-    // 386-414 s over the two-pass DAG. The width is therefore pinned at
-    // the slot count (see [[writeWidth]]), which keeps every slot
-    // opening files.)
+    // which is also the layout readers want. (The AQE-coalescible
+    // `repartition(col)` form serialized each tiny layer's
+    // parquet-writer opens into ONE task — two-pass DAG wall 222 s →
+    // 386-414 s. The width is therefore pinned at the slot count, see
+    // [[writeWidth]], which keeps every slot opening files.)
     val plan = df.withColumn("__b", bucketExpr(m))
       .repartition(writeWidth(m.nBuckets), col("__b"))
     writeStaged(table, plan, full)(keep = true).get
@@ -388,10 +384,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     val dir = Paths.get(f"${tableDir(table)}/v=$next%05d")
     val tmp = Paths.get(s"${tableDir(table)}/.tmp_v$next")
     if (Files.exists(tmp)) deleteRecursively(tmp.toString)
-    StoreTimers.write {
-      plan.write.partitionBy("__b").mode(SaveMode.Overwrite)
-        .parquet(tmp.toString)
-    }
+    plan.write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (keep) {
       if (full) Files.createFile(tmp.resolve("_FULL"))
       Files.move(tmp, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -419,7 +412,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * Returns the snapshot's version number, or None for an empty table.
     */
   def compact(table: String, prune: Boolean = true): Option[Int] =
-    StoreTimers.entry { lockFor(table).synchronized {
+    lockFor(table).synchronized {
       readMeta(table).flatMap { m =>
         // latest, never the pinned view: folding only pinned layers into
         // a NEW top snapshot would drop same-level writes above the pin
@@ -429,7 +422,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
           v
         }
       }
-    } }
+    }
 
   /** Version number of the newest `_FULL` snapshot layer, if any — THE
     * live-layer boundary: readers walk only layers >= this, vacuum may
@@ -443,7 +436,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * Only safe when no lazy DataFrame from an earlier read() is still
     * pending materialization — call at orchestration boundaries.
     */
-  def vacuum(table: String): Unit = StoreTimers.entry {
+  def vacuum(table: String): Unit = {
     val vs = versions(table)
     newestSnapshot(vs).foreach { snap =>
       vs.filter(_._1 < snap).foreach { case (_, p) => deleteRecursively(p) }
@@ -451,7 +444,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   }
 
   /** [[vacuum]] over every table in the store. */
-  def vacuumAll(): Unit = StoreTimers.entry {
+  def vacuumAll(): Unit = {
     val dir = Paths.get(root)
     if (Files.exists(dir)) {
       val stream = Files.list(dir)
@@ -495,21 +488,89 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       keyCols: Seq[String],
       compareCols: Seq[String],
       setCols: Seq[String] = Nil,
-      softDelete: Boolean = false): Map[String, Long] = StoreTimers.entry {
-    StoreTimers.mergeCalls.incrementAndGet()
-    // r19 lock narrowing: bucket discovery reads ONLY the caller's
-    // incoming frame, so it runs BEFORE the table lock — same-table
-    // siblings under level-concurrent orchestration overlap their
-    // discovery jobs (25-40% of per-merge store time in the BenchDag
-    // r19 attribution) instead of serializing their entire merges. The
-    // lock still covers classify + version allocation + write, which is
-    // what sibling visibility and layer integrity actually require; the
-    // touched-bucket set is a pure function of `incoming`, so computing
-    // it pre-lock cannot go stale. If the table doesn't exist yet the
-    // discovery is skipped (first-write path); in the rare race where a
-    // sibling creates it before we take the lock, mergeLocked computes
-    // the set inside the lock exactly as before.
-    val preDiscover = !softDelete && latestVersion(table).nonEmpty
+      softDelete: Boolean = false): Map[String, Long] = {
+    val payload = (compareCols ++ setCols).distinct
+    def classified(current: Option[DataFrame]): DataFrame = current match {
+      case Some(cur) =>
+        GraphStore.classifyInternal(alignTo(cur, incoming, payload),
+          incoming, keyCols, compareCols, setCols, softDelete)
+      case None =>
+        // nothing stored where the batch lands: pure creates. Set columns
+        // are sorted here too, so "stored set columns are always sorted"
+        // holds from layer one (the rewrite flag compares normalized
+        // values against stored bytes).
+        setCols.foldLeft(incoming)((d, c) => d.withColumn(c, sort_array(col(c))))
+          .withColumn(GraphStore.ACTION, lit("create"))
+          .withColumn(GraphStore.REWRITE, lit(true))
+    }
+    if (!softDelete)
+      upsert(table, incoming, keyCols, GraphStore.ACTIONS.map(a =>
+        a -> count(when(col(GraphStore.ACTION) === a, 1))))(classified)
+        .filter(_._2 != 0L)
+    else lockFor(table).synchronized {
+      // soft delete compares the FULL key set and its layer is a _FULL
+      // snapshot carrying every bucket — a fused always-write would
+      // rewrite the whole table even on an all-noop replay, so this path
+      // summarizes first: one bounded action over the cached classify
+      // output (≤ 4·nBuckets rows), then a conditional snapshot write,
+      // under the same publish rule as [[upsert]]. `incoming` is
+      // evaluated once here (no bucket discovery), so it is not persisted.
+      val m = metaFor(table, keyCols)
+      val first = latestVersion(table).isEmpty
+      val rows = classified(readLatest(table)).persist()
+      try {
+        val cells = rows
+          .groupBy(bucketExpr(m).cast("int").as("__b"), col(GraphStore.ACTION))
+          .agg(count(lit(1)).as("n"),
+            max(col(GraphStore.REWRITE).cast("int")).as("rw"))
+          .collect()
+        if (first || cells.exists(_.getInt(3) == 1)) {
+          write(table, GraphStore.apply(rows.drop(GraphStore.REWRITE)),
+            keyCols, full = true)
+          maybeCompact(table)
+        }
+        cells.groupBy(_.getString(1)).view
+          .mapValues(_.map(_.getLong(2)).sum).toMap.filter(_._2 != 0L)
+      } finally { rows.unpersist(); () }
+    }
+  }
+
+  /** The idempotent upsert both [[merge]] (without soft delete) and
+    * [[upsertEdges]] run — the reference's `addRecord` / `edgeExists`
+    * protocol, set-based:
+    *
+    *  1. Find the buckets `incoming` lands in. Once the table has a layer
+    *     this runs BEFORE the table lock: it reads only the caller's
+    *     frame and is a pure function of it, so it cannot go stale, and
+    *     writers of one table overlap their discovery jobs instead of
+    *     queueing for them. `incoming` is persisted for it, so an
+    *     expensive upstream plan runs once for discovery and layer. If a
+    *     sibling creates the table between the check and the lock, the
+    *     discovery runs under the lock and evaluates `incoming` again —
+    *     correct, marginally slower, rare.
+    *  2. Under the lock, which version allocation and sibling visibility
+    *     need, read the stored rows of those buckets only: a key always
+    *     lands in the same bucket.
+    *  3. `layer` turns them (None: nothing stored there) into the rows of
+    *     those buckets after the upsert, each flagged with
+    *     [[GraphStore.REWRITE]]: true iff persisting it changes stored
+    *     bytes. From None every row must be flagged.
+    *  4. One write action: the bucket shuffle, the per-bucket max of the
+    *     flag, `counters` and the flag count observed on the write, and
+    *     only buckets with a flagged row written — the others keep their
+    *     previous layer, so the write cost is O(changed buckets), not
+    *     O(touched buckets). Folding the counters into the write saves the
+    *     summary job a collect-then-write shape needs, a measurable
+    *     per-merge constant on DAGs of many tiny merges. The staged layer
+    *     is published when a row rewrites or the table has no layer yet:
+    *     an idempotent replay publishes nothing.
+    *
+    * Returns each counter's value.
+    */
+  private def upsert(table: String, incoming: DataFrame, keyCols: Seq[String],
+      counters: Seq[(String, Column)])(
+      layer: Option[DataFrame] => DataFrame): Map[String, Long] = {
+    val preDiscover = latestVersion(table).nonEmpty
     if (preDiscover) incoming.persist()
     try {
       val pre =
@@ -518,139 +579,40 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
             lockFor(table).synchronized(metaFor(table, keyCols))))
         else None
       lockFor(table).synchronized {
-        mergeLocked(table, incoming, keyCols, compareCols, setCols,
-          softDelete, pre, cached = preDiscover)
-      }
-    } finally if (preDiscover) { incoming.unpersist(); () }
-  }
-
-  private def mergeLocked(
-      table: String,
-      incoming: DataFrame,
-      keyCols: Seq[String],
-      compareCols: Seq[String],
-      setCols: Seq[String],
-      softDelete: Boolean,
-      pre: Option[Set[Int]],
-      cached: Boolean): Map[String, Long] = {
-    val m = metaFor(table, keyCols)
-    def normalizeSets(df: DataFrame): DataFrame =
-      setCols.foldLeft(df)((d, c) => d.withColumn(c, sort_array(col(c))))
-
-    if (latestVersion(table).isEmpty) {
-      // first write: everything creates, nothing to compare or skip —
-      // one write action with the audit counter observed on it. Set
-      // columns are sorted here too, so "stored set columns are always
-      // sorted" holds from layer one (classifyInternal's rewrite flag
-      // compares normalized values against stored bytes).
-      val obs = org.apache.spark.sql.Observation()
-      val observed = normalizeSets(incoming)
-        .observe(obs, coalesce(count(lit(1)), lit(0L)).as("create"))
-      write(table, observed, keyCols, full = true)
-      val n = obs.get("create").asInstanceOf[Number].longValue
-      return if (n == 0L) Map.empty else Map("create" -> n)
-    }
-
-    // the upsert branch evaluates `incoming` twice (bucket scan +
-    // classify) — the CALLER persisted it pre-lock (see merge) so an
-    // expensive upstream pipeline runs once; soft-delete merges consume
-    // incoming exactly once (no bucket scan), so caching would be pure
-    // overhead there. `cached = false` only in the create-race path
-    // (sibling created the table between the pre-lock check and here):
-    // then the bucket scan + classify each evaluate incoming — correct,
-    // marginally slower, and rare by construction.
-    val touched: Option[Set[Int]] =
-      if (softDelete) None
-      else Some(pre.getOrElse(touchedBuckets(incoming, m)))
-    val current =
-      if (softDelete) readLatest(table)
-      else readBuckets(table, touched.get)
-    locally {
-      val payload = (compareCols ++ setCols).distinct
-      val classified: DataFrame = current match {
-        case Some(cur) =>
-          GraphStore.classifyInternal(alignTo(cur, incoming, payload),
-            incoming, keyCols, compareCols, setCols, softDelete)
-        case None => // touched buckets never written before: pure creates
-          normalizeSets(incoming)
-            .withColumn(GraphStore.ACTION, lit("create"))
-            .withColumn(GraphStore.REWRITE, lit(true))
-      }
-
-      if (softDelete) {
-        // soft delete compares the FULL key set and its layer is a _FULL
-        // snapshot carrying every bucket — a fused always-write would
-        // rewrite the whole table even on an all-noop replay, so this
-        // path keeps the summarize-then-decide shape: one bounded action
-        // over the cached classify output (≤ 4·nBuckets rows), then a
-        // conditional snapshot write.
-        classified.persist()
-        try {
-          val cells = classified
-            .groupBy(bucketExpr(m).cast("int").as("__b"),
-              col(GraphStore.ACTION))
-            .agg(count(lit(1)).as("n"),
-              max(col(GraphStore.REWRITE).cast("int")).as("rw"))
-            .collect()
-          if (cells.exists(_.getInt(3) == 1)) {
-            write(table, GraphStore.apply(classified.drop(GraphStore.REWRITE)),
-              keyCols, full = true)
-            maybeCompact(table)
-          }
-          cells.groupBy(_.getString(1)).view
-            .mapValues(_.map(_.getLong(2)).sum).toMap.filter(_._2 != 0L)
-        } finally { classified.unpersist(); () }
-      } else {
-        // fused classify → bucket shuffle → per-bucket rewrite flag →
-        // observe()-folded audit counters → changed-buckets-only staged
-        // write: ONE driver action instead of a summary collect plus a
-        // conditional write (the summary job was a measurable per-merge
-        // constant on many-tiny-merge DAGs), and `classified` no longer
-        // needs a cache round-trip — the plan runs exactly once. Buckets
-        // where no row would change stored bytes are filtered OUT of the
-        // layer (the per-bucket window max over the classify rewrite
-        // flag), so they KEEP their previous layer; when NO bucket
-        // changed the staged directory is discarded before publication —
-        // an idempotent replay still writes no layer at all, and a
-        // mostly-noop incremental merge writes only its changed buckets
-        // (the MERGE file-skipping analogue — at 100 TB the per-batch
-        // write cost stays O(changed buckets), not O(touched buckets)).
-        // The bucket shuffle the window needs is the SAME shuffle the
-        // layer write wants anyway (one task per bucket, well-sized
-        // files); an all-noop replay pays it on touched-bucket rows where
-        // the old path paid a cache materialization — a wash.
-        // r19: size the layer shuffle to the TOUCHED bucket count, not the
-        // table's full bucket count — classified holds rows of touched
-        // buckets only (current was pruned to them; incoming defines
-        // them), so a trickle merge runs 1-3 write tasks instead of
-        // nBuckets mostly-empty ones (the empty tasks were pure
-        // scheduling constant × hundreds of merges in the loader DAG),
-        // capped at the slot count (see [[writeWidth]]). A hash collision
-        // just means one task writes two bucket files sequentially.
-        val bucketed = classified
+        val m = metaFor(table, keyCols)
+        val first = latestVersion(table).isEmpty
+        val touched =
+          if (first) None else Some(pre.getOrElse(touchedBuckets(incoming, m)))
+        val stored = touched.flatMap(readBuckets(table, _))
+        // the layer holds rows of touched buckets only, so the shuffle is
+        // sized to their count (see [[writeWidth]]): a trickle merge runs
+        // a few write tasks, not nBuckets mostly empty ones. The window
+        // over the bucket id reuses the shuffle the write needs anyway.
+        val bucketed = layer(stored)
           .withColumn("__b", bucketExpr(m))
           .repartition(writeWidth(touched.fold(m.nBuckets)(_.size)), col("__b"))
+        val obs = org.apache.spark.sql.Observation()
+        def withCounters(df: DataFrame) = df.observe(obs,
+          coalesce(sum(col(GraphStore.REWRITE).cast("long")), lit(0L))
+            .as("__rewrites"), counters.map { case (n, c) => c.as(n) }: _*)
         val anyRewrite = max(col(GraphStore.REWRITE).cast("int")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
-        val obs = org.apache.spark.sql.Observation()
-        val observed = bucketed
-          .withColumn("__rw_b", anyRewrite)
-          .observe(obs,
-            coalesce(sum(col(GraphStore.REWRITE).cast("long")), lit(0L))
-              .as("rewrites"),
-            GraphStore.ACTIONS.map(a =>
-              count(when(col(GraphStore.ACTION) === a, 1)).as(a)): _*)
-        val toWrite = GraphStore.apply(
-          observed.filter(col("__rw_b") === 1)
-            .drop("__rw_b", GraphStore.REWRITE))
+        // with nothing stored every row is new, so no bucket can be
+        // skipped; the window's sort would only add cost to a first load.
+        // An upsert classify emits no delete rows, so dropping the action
+        // column is all GraphStore.apply would do here.
+        val toWrite =
+          (if (stored.isEmpty) withCounters(bucketed)
+           else withCounters(bucketed.withColumn("__rw_b", anyRewrite))
+             .filter(col("__rw_b") === 1))
+            .drop("__rw_b", GraphStore.REWRITE, GraphStore.ACTION)
+        def counter(name: String) = obs.get(name).asInstanceOf[Number].longValue
         writeStaged(table, toWrite, full = false) {
-          obs.get("rewrites").asInstanceOf[Number].longValue > 0L
+          first || counter("__rewrites") > 0L
         }.foreach(_ => maybeCompact(table))
-        GraphStore.ACTIONS
-          .map(a => a -> obs.get(a).asInstanceOf[Number].longValue)
-          .toMap.filter(_._2 != 0L)
+        counters.map { case (n, _) => n -> counter(n) }.toMap
       }
-    }
+    } finally if (preDiscover) { incoming.unpersist(); () }
   }
 
   val EdgeKey: Seq[String] = Seq("out", "in", "edgeClass")
@@ -662,70 +624,21 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * the rewrite touch candidate buckets only — and the touched buckets
     * are read ONCE, feeding the anti-join and the new layer's union.
     */
-  def upsertEdges(rawCandidates: DataFrame): Map[String, Long] =
-    StoreTimers.entry {
-      StoreTimers.mergeCalls.incrementAndGet()
-      // the reference's per-record edgeExists check suppresses duplicates
-      // WITHIN one batch too (a trial listing the same intervention twice
-      // creates one edge) — dedup here so every caller gets that semantics
-      val candidates = rawCandidates.dropDuplicates(EdgeKey)
-      // same pre-lock bucket discovery as merge (see the r19 note there):
-      // the scan reads only the caller's candidates, so concurrent
-      // loaders' edge upserts overlap it instead of serializing on the
-      // edges lock; the anti-join + write stay under the lock
-      val preDiscover = latestVersion("edges").nonEmpty
-      if (preDiscover) candidates.persist()
-      try {
-        val pre =
-          if (preDiscover)
-            Some(touchedBuckets(candidates,
-              lockFor("edges").synchronized(metaFor("edges", EdgeKey))))
-          else None
-        lockFor("edges").synchronized { upsertEdgesLocked(candidates, pre) }
-      } finally if (preDiscover) { candidates.unpersist(); () }
-    }
-
-  private def upsertEdgesLocked(candidates: DataFrame,
-      pre: Option[Set[Int]]): Map[String, Long] = {
-    val m = metaFor("edges", EdgeKey)
-    locally {
-      val touched: Option[Set[Int]] =
-        if (latestVersion("edges").isEmpty) None
-        else Some(pre.getOrElse(touchedBuckets(candidates, m)))
-      val existing = touched.flatMap(readBuckets("edges", _))
-      // fused anti-join → union → per-bucket fresh flag → observed created
-      // count → fresh-buckets-only staged write: the separate fresh.count()
-      // job (and the fresh cache round-trip) fold into the write action —
-      // same shape as the fused merge path above. An all-duplicate batch —
-      // the idempotent replay — observes created = 0 and the staged layer
-      // is discarded unpublished; only buckets holding ≥ 1 genuinely new
-      // edge are rewritten (allowMissingColumns: some sources carry edge
-      // payload columns — actionType, uuid — the others lack).
-      val layer = existing match {
-        case Some(e) =>
-          e.withColumn("__fresh", lit(false)).unionByName(
-            GraphStore.newEdges(e, candidates).withColumn("__fresh", lit(true)),
-            allowMissingColumns = true)
-        case None => candidates.withColumn("__fresh", lit(true))
-      }
-      // same touched-bucket-count layer shuffle as merge (r19): the layer
-      // holds candidate-bucket rows only (existing was pruned to them;
-      // every candidate edge lands in one of them by definition)
-      val bucketed = layer
-        .withColumn("__b", bucketExpr(m))
-        .repartition(writeWidth(touched.fold(m.nBuckets)(_.size)), col("__b"))
-      val anyFresh = max(col("__fresh").cast("int")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
-      val obs = org.apache.spark.sql.Observation()
-      val toWrite = bucketed
-        .withColumn("__f_b", anyFresh)
-        .observe(obs, count(when(col("__fresh"), 1)).as("created"))
-        .filter(col("__f_b") === 1)
-        .drop("__f_b", "__fresh")
-      writeStaged("edges", toWrite, full = false) {
-        obs.get("created").asInstanceOf[Number].longValue > 0L
-      }.foreach(_ => maybeCompact("edges"))
-      Map("created" -> obs.get("created").asInstanceOf[Number].longValue)
+  def upsertEdges(rawCandidates: DataFrame): Map[String, Long] = {
+    // the reference's per-record edgeExists check suppresses duplicates
+    // WITHIN one batch too (a trial listing the same intervention twice
+    // creates one edge) — dedup here so every caller gets that semantics
+    val candidates = rawCandidates.dropDuplicates(EdgeKey)
+    upsert("edges", candidates, EdgeKey,
+      Seq("created" -> count(when(col(GraphStore.REWRITE), 1)))) {
+      // stored edges are kept as they are, new ones flagged
+      // (allowMissingColumns: some sources carry edge payload columns —
+      // actionType, uuid — the others lack)
+      case Some(e) =>
+        e.withColumn(GraphStore.REWRITE, lit(false)).unionByName(
+          GraphStore.newEdges(e, candidates).withColumn(GraphStore.REWRITE, lit(true)),
+          allowMissingColumns = true)
+      case None => candidates.withColumn(GraphStore.REWRITE, lit(true))
     }
   }
 

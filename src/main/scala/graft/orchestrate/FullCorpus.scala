@@ -456,18 +456,14 @@ object FullCorpus {
       // than aborting the whole corpus run with a bare NumberFormat.
       parallelism: Int =
         sys.env.get("SPARK_GRAFT_DAG_PAR").flatMap(_.trim.toIntOption)
-          .filter(_ > 0).getOrElse(8),
-      // per-level wall observer passthrough (BenchDag's g14 attribution)
-      onLevelDone: (Seq[String], Double) => Unit = (_, _) => ())
-      : Orchestrator.Report = {
+          .filter(_ > 0).getOrElse(8)): Orchestrator.Report = {
     // snapshot isolation per level: reads inside a level see exactly the
     // level-start store state, so results don't depend on intra-level
     // scheduling (sequential list order OR concurrent interleaving)
     val report =
       try Orchestrator.run(spark, loaders(store, ncitPath), parallelism,
         beforeLevel = () => store.pinVersions(),
-        afterLevel = () => store.unpinVersions(),
-        onLevelDone = onLevelDone)
+        afterLevel = () => store.unpinVersions())
       finally store.unpinVersions()
     // orchestration boundary: no loader holds an outstanding lazy read any
     // more, so superseded layers kept by auto-compaction are reclaimable

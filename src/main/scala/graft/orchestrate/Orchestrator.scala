@@ -83,12 +83,7 @@ object Orchestrator {
   def run(spark: SparkSession, loaders: Seq[Loader],
       parallelism: Int = 1,
       beforeLevel: () => Unit = () => (),
-      afterLevel: () => Unit = () => (),
-      // per-level wall-clock observer (level members, seconds) — the
-      // g14 cost-attribution hook: BenchDag passes a printer so the
-      // full-DAG bench row decomposes into per-level times without
-      // touching the run's semantics. Driver-side metadata only.
-      onLevelDone: (Seq[String], Double) => Unit = (_, _) => ()): Report = {
+      afterLevel: () => Unit = () => ()): Report = {
     val byName = loaders.map(l => l.name -> l).toMap
     val levels = topoLevels(loaders)
     val statuses = scala.collection.mutable.Map.empty[String, Status]
@@ -109,7 +104,6 @@ object Orchestrator {
 
     levels.foreach { level =>
       beforeLevel()
-      val tLevel = System.nanoTime()
       try {
         val results: Seq[(String, Status)] =
           if (parallelism <= 1 || level.size <= 1) level.map(runOne)
@@ -126,7 +120,6 @@ object Orchestrator {
             } finally pool.shutdown()
           }
         statuses ++= results
-        onLevelDone(level, (System.nanoTime() - tLevel) / 1e9)
       } finally afterLevel()
     }
     Report(levels.flatten, statuses.toMap)

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -232,5 +234,132 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
     store.vacuumAll()
     assert(nLayers == live, s"vacuum must prune superseded layers")
     assert(store.read("vertices").get.count() == 6)
+  }
+
+  private def edgeRows(rows: (String, String, String, String)*) =
+    rows.toDF("out", "in", "edgeClass", "actionType")
+
+  private def tmpDirs(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".tmp_v")).toList
+    finally s.close()
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("an existing edge re-offered with a different payload keeps its stored value") {
+    val store = freshStore()
+    assert(store.upsertEdges(edgeRows(("a", "b", "Treats", "sensitivity"))) ==
+      Map("created" -> 1L))
+    val vBefore = store.latestVersion("edges")
+    assert(store.upsertEdges(edgeRows(("a", "b", "Treats", "resistance"))) ==
+      Map("created" -> 0L))
+    assert(store.latestVersion("edges") == vBefore,
+      "a re-offered edge must not write a version layer")
+    assert(store.read("edges").get.select("actionType").as[String].collect()
+      .toSeq == Seq("sensitivity"))
+  }
+
+  test("a batch with a payload column the stored edges lack creates its new edge") {
+    // one bucket: the new layer unions the stored edge with the new one;
+    // 32 buckets: the two edges sit in different buckets, so the read
+    // merges two layers of different schemas
+    Seq(1 -> 2L, 32 -> 1L).foreach { case (n, newLayerRows) =>
+      val dir = Files.createTempDirectory("graft-store")
+      val store = new PersistentGraphStore(spark, dir.toString, nBuckets = n)
+      store.upsertEdges(Seq(("a", "b", "SubClassOf")).toDF("out", "in", "edgeClass"))
+      assert(store.upsertEdges(edgeRows(("a", "c", "Treats", "sensitivity"))) ==
+        Map("created" -> 1L), s"nBuckets=$n")
+      assert(spark.read.parquet(dir.resolve("edges/v=00002").toString).count() ==
+        newLayerRows, s"nBuckets=$n")
+      val got = store.read("edges").get.select("in", "actionType")
+        .as[(String, Option[String])].collect().toMap
+      assert(got == Map("b" -> None, "c" -> Some("sensitivity")), s"nBuckets=$n")
+    }
+  }
+
+  test("a batch listing one edge twice creates one edge") {
+    val store = freshStore()
+    val twice = Seq(("a", "b", "SubClassOf"), ("a", "b", "SubClassOf"))
+      .toDF("out", "in", "edgeClass")
+    assert(store.upsertEdges(twice) == Map("created" -> 1L))
+    // again once the table exists, for a new edge
+    val twiceNew = Seq(("b", "c", "SubClassOf"), ("b", "c", "SubClassOf"))
+      .toDF("out", "in", "edgeClass")
+    assert(store.upsertEdges(twiceNew) == Map("created" -> 1L))
+    assert(store.read("edges").get.count() == 2)
+  }
+
+  test("an empty first merge and an empty first edge upsert each publish v=00001") {
+    val store = freshStore()
+    assert(store.merge("vertices", v1.limit(0), Seq("sourceId"),
+      compareCols = Seq("name", "deprecated"), setCols = Seq("subsets")) == Map.empty)
+    val noEdges = Seq.empty[(String, String, String)].toDF("out", "in", "edgeClass")
+    assert(store.upsertEdges(noEdges) == Map("created" -> 0L))
+    Seq("vertices", "edges").foreach { t =>
+      assert(store.latestVersion(t).contains(1), t)
+      // the layer holds no bucket directory, so there is nothing to read
+      assert(store.read(t).isEmpty, t)
+    }
+  }
+
+  test("a stale staging directory is reclaimed by the next merge, not published") {
+    val dir = Files.createTempDirectory("graft-store")
+    val store = new PersistentGraphStore(spark, dir.toString)
+    val clean = freshStore()
+    val update = Seq(("d2", "glioma-renamed", Seq("cns"), false))
+      .toDF("sourceId", "name", "subsets", "deprecated")
+    def mergeInto(s: PersistentGraphStore, df: org.apache.spark.sql.DataFrame) =
+      s.merge("vertices", df, Seq("sourceId"),
+        compareCols = Seq("name", "deprecated"), setCols = Seq("subsets"))
+    Seq(store, clean).foreach(mergeInto(_, v1))
+    // what a merge that crashed before publishing v=00002 leaves behind
+    val junkDir = dir.resolve("vertices/.tmp_v2/__b=0")
+    Seq(("junk", "junk", Seq("junk"), true))
+      .toDF("sourceId", "name", "subsets", "deprecated")
+      .write.parquet(junkDir.toString)
+    val junkFiles = {
+      val s = Files.list(junkDir)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSet
+      finally s.close()
+    }
+    assert(junkFiles.nonEmpty)
+    assert(mergeInto(store, update) == mergeInto(clean, update))
+    assert(store.latestVersion("vertices").contains(2))
+    assert(tmpDirs(dir.resolve("vertices")).isEmpty)
+    val published = Files.walk(dir.resolve("vertices/v=00002"))
+    try assert(!published.iterator().asScala
+      .exists(p => junkFiles(p.getFileName.toString)))
+    finally published.close()
+    assert(sortedRows(store.read("vertices").get) ==
+      sortedRows(clean.read("vertices").get))
+  }
+
+  test("a first merge that fails mid-write publishes nothing; a rerun converges") {
+    val dir = Files.createTempDirectory("graft-store")
+    val store = new PersistentGraphStore(spark, dir.toString)
+    val clean = freshStore()
+    val boom = udf { (id: Long) =>
+      if (id == 3L) throw new IllegalStateException("sentinel row")
+      s"name$id"
+    }
+    def batch(name: org.apache.spark.sql.Column) =
+      spark.range(0, 8, 1, 4).select(concat(lit("id"), col("id")).as("sourceId"),
+        name.as("name"))
+    def mergeInto(s: PersistentGraphStore, df: org.apache.spark.sql.DataFrame) =
+      s.merge("vertices", df, Seq("sourceId"), compareCols = Seq("name"))
+    intercept[Exception](mergeInto(store, batch(boom(col("id")))))
+    assert(store.latestVersion("vertices").isEmpty)
+    assert(store.read("vertices").isEmpty)
+    val good = batch(concat(lit("name"), col("id")))
+    assert(mergeInto(store, good) == Map("create" -> 8L))
+    assert(mergeInto(clean, good) == Map("create" -> 8L))
+    assert(store.latestVersion("vertices").contains(1))
+    assert(tmpDirs(dir.resolve("vertices")).isEmpty)
+    assert(sortedRows(store.read("vertices").get) ==
+      sortedRows(clean.read("vertices").get))
   }
 }
