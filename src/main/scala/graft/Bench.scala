@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times the headline (scale-relevant) queries at
@@ -144,17 +143,13 @@ object Bench {
     * push the r18 contract run past the driver's time cap (rc=124).
     * 10 jobs keeps the latency median meaningful at 40% of the cost.
     */
-  val SentinelJobs: Int =
-    sys.env.get("SPARK_GRAFT_SENTINEL_JOBS").flatMap(_.toIntOption)
-      .filter(_ >= 0).getOrElse(10)
+  val SentinelJobs = 10
 
   /** Timed rows between sentinel re-runs: fine enough to bracket a
     * multi-minute steal burst, coarse enough that the sentinel series
     * stays under ~10% of a quiet run's wall time.
     */
-  val SentinelEvery: Int =
-    sys.env.get("SPARK_GRAFT_SENTINEL_EVERY").flatMap(_.toIntOption)
-      .filter(_ > 0).getOrElse(10)
+  val SentinelEvery = 10
 
   /** Hard cap on the sentinel series' share of elapsed wall: once the
     * cumulative sentinel cost exceeds max(30 s, 5% of elapsed), further
@@ -165,17 +160,59 @@ object Bench {
     */
   val SentinelMaxFraction = 0.05
 
+  /** Bucket passes. Buckets are overhead-dominated (hundreds of tiny
+    * store-round-trip jobs) and a single pass swung ±60% round-over-round
+    * under host-load windows (148.6 s vs 173.9 s vs a same-code rerun at
+    * 140.5 s). The noise is strictly ADDITIVE (a load spike only ever
+    * inflates a wall time), so min-of-2 passes is the robust per-row
+    * estimator at a third of median-of-3's cost on a ~150 s bucket.
+    */
+  val BucketReps = 2
+
+  /** Per-row estimates of one run (None: the row has no successful
+    * sample) and the rollups over them. Headline rows are timed
+    * individually; fixture and loader rows form the two buckets.
+    * `scaledTotal` (headline rows, whose cost grows with sf) is the
+    * repeatable signal, `fixtureTotal` (both buckets) the fixed-fixture
+    * overhead lane, and `total` their sum.
+    */
+  final case class Totals(
+      headline: Seq[(String, Option[Double])],
+      loaders: Seq[(String, Option[Double])],
+      fixtures: Seq[(String, Option[Double])]) {
+    private def sum(rows: Seq[(String, Option[Double])]) = rows.flatMap(_._2).sum
+    def failed: Seq[String] = (headline ++ fixtures ++ loaders).collect { case (n, None) => n }
+    def scaledTotal: Double = sum(headline)
+    def fixturesBucket: Double = sum(fixtures)
+    def loadersBucket: Double = sum(loaders)
+    def fixtureTotal: Double = fixturesBucket + loadersBucket
+    def total: Double = scaledTotal + fixtureTotal
+  }
+
+  /** Headline rows take the median of their interleaved reps, bucket rows
+    * the min of their passes (see [[BucketReps]]). A row with no sample
+    * failed: it is named in `failed` and adds nothing to any total, so a
+    * failing row can never read as a faster run.
+    */
+  def totals(samples: String => Seq[Double], headline: Seq[String],
+      fixtures: Seq[String], loaders: Seq[String]): Totals = {
+    def est(names: Seq[String])(f: Seq[Double] => Double) =
+      names.map(n => n -> Some(samples(n)).filter(_.nonEmpty).map(f))
+    Totals(est(headline)(ts => ts.sorted.apply(ts.size / 2)),
+      est(loaders)(_.min), est(fixtures)(_.min))
+  }
+
+  /** `runMain graft.Bench` times the whole registry: the headline rows
+    * individually plus both buckets. `runMain graft.Bench <name>...`
+    * times exactly the named rows, each as a headline row (median of
+    * `SPARK_GRAFT_BENCH_REPS` interleaved reps), and no bucket.
+    */
   def main(args: Array[String]): Unit = {
+    val all = SparkEntry.queries
+    val unknown = args.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown bench rows: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // native function registry (qdot, jaccard_sim) via the extension hook
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // JVM/session warm-up outside the timed region: one trivial job plus a
     // small parquet scan+agg (against the CONFIGURED sf dir, guarded), so
     // the first timed query doesn't absorb executor startup, codegen, or
@@ -183,7 +220,6 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
-    val all = SparkEntry.queries
     // median of N reps per query, INTERLEAVED: the whole headline suite
     // runs as N full passes and each query's median is taken across
     // passes. Consecutive reps share any sustained host-load window, so a
@@ -192,14 +228,15 @@ object Bench {
     // practice); interleaving puts a whole suite pass (~minutes) between a
     // query's reps, so one load window cannot touch more than one of them
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val names = headline.filter(all.contains)
+    val names = if (args.nonEmpty) args.toSeq else headline.filter(all.contains)
     // fixture/golden queries split into two buckets: grammar/golden frames
     // (fixtures_bucket) vs the gN loader pipelines, which each run a store
     // round-trip twice plus the g14 full-DAG run (loaders_bucket) — both
     // constant-cost, not per-query news, but the loader bucket grows with
     // every new composed source and would otherwise read as a fixtures
     // regression
-    val rest = all.keys.toSeq.sorted.filterNot(headline.contains)
+    val rest =
+      if (args.nonEmpty) Nil else all.keys.toSeq.sorted.filterNot(headline.contains)
     val (loaderQs, fixtureQs) = rest.partition(_.matches("^g\\d+_.*"))
     // per-row attribution log (name, pass, epoch-second start, elapsed)
     // and the interleaved sentinel series — both land in the bench_out
@@ -238,7 +275,7 @@ object Bench {
     // a run killed by the driver's time cap still leaves a parseable
     // partial record in the bench_out file (r18's rc=124 left NOTHING)
     var flush: () => Unit = () => ()
-    def timeOne(name: String, pass: Int): Option[Double] = {
+    def timeOne(name: String, pass: Int): Unit = {
       if (sinceSentinel % SentinelEvery == 0) sentinelOnce()
       sinceSentinel += 1
       spark.sparkContext.setJobDescription(s"bench:$name#$pass")
@@ -255,16 +292,8 @@ object Bench {
       // makes later queries GC-bound (measured 10x spikes late in the run)
       spark.catalog.clearCache()
       if (rowLog.size % 20 == 0) flush()
-      if (ok) Some(dt) else None
     }
-    // buckets are overhead-dominated (hundreds of tiny store-round-trip
-    // jobs) and a single pass swung ±60% round-over-round under host-load
-    // windows (r9 148.6 s vs r10 173.9 s vs a same-code rerun at 140.5 s).
-    // The noise is strictly ADDITIVE (a load spike only ever inflates a
-    // wall time), so min-of-2 passes is the robust per-row estimator at
-    // a third of median-of-3's cost on a ~150 s bucket
-    val bucketReps = sys.env.getOrElse("SPARK_GRAFT_BUCKET_REPS", "2").toInt
-      .min(reps).max(1)
+    val bucketReps = BucketReps.min(reps).max(1)
     // times rounded to ms: full-precision doubles pushed the single JSON
     // line past the driver's tail-parse window in round 5 (the leading
     // '{' got clipped and the round artifact recorded parsed=null);
@@ -273,37 +302,15 @@ object Bench {
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // Assemble the metric payload from whatever samples exist so far.
-    // `partial = true` (the incremental flushes) includes only rows with
-    // ≥ 1 sample and tags the record `"partial":true` — a run killed by
+    // `partial = true` (the incremental flushes) covers only the rows
+    // timed so far and tags the record `"partial":true` — a run killed by
     // the driver's external time cap leaves a parseable per-row record
     // in the bench_out file instead of nothing (r18's rc=124 artifact).
-    // The final call (partial = false) reports unsampled rows as -1,
-    // exactly the old failure signaling.
-    def payload(partial: Boolean): (String, String, String, Double, Double) = {
-      def median(ts: Vector[Double]): Double =
-        if (ts.isEmpty) -1.0 else ts.sorted.apply(ts.size / 2)
-      def minOf(ts: Vector[Double]): Double =
-        if (ts.isEmpty) -1.0 else ts.min
-      val hNames = if (partial) names.filter(samples(_).nonEmpty) else names
-      // headline = median of interleaved reps; buckets = min of passes
-      // (the noise is strictly additive — see the bucketReps note above)
-      val results = hNames.map(n => n -> median(samples(n)))
-      val (lQs, fQs) =
-        if (partial) (loaderQs.filter(samples(_).nonEmpty),
-          fixtureQs.filter(samples(_).nonEmpty))
-        else (loaderQs, fixtureQs)
-      val fixtures = "fixtures_bucket" -> fQs.map(n => minOf(samples(n))).sum
-      // keep the bucket total for round-over-round comparison, but also
-      // record each loader pipeline's own time so a regression localizes
-      // to the loader that caused it
-      val loaderTimes = lQs.map(n => n -> minOf(samples(n)))
-      val loaders = "loaders_bucket" -> loaderTimes.map(_._2).sum
-      // headline split: scaled_total is the repeatable signal
-      // (median-of-reps rows whose cost grows with sf); fixture_total is
-      // the fixed-fixture overhead lane (min-of-passes buckets). The
-      // grand total remains their sum for continuity with rounds ≤10.
-      val scaledTotal = results.map(_._2).sum
-      val fixtureTotal = fixtures._2 + loaders._2
+    // A row without a sample reports -1 and is named under "failed".
+    def payload(partial: Boolean): (String, String, String, Totals) = {
+      val timed = rowLog.map(_._1).toSet
+      def sel(ns: Seq[String]) = if (partial) ns.filter(timed) else ns
+      val t = totals(samples, sel(names), sel(fixtureQs), sel(loaderQs))
       // rollups namespaced with "__" so a consumer summing or diffing the
       // per-query entries can exclude them (they are NOT query rows; the
       // same values are also emitted as separate top-level metric lines).
@@ -312,18 +319,19 @@ object Bench {
       // names in r12 — a cross-round diff of the queries map should treat
       // the pairs as the same series. The un-prefixed names survive as
       // the standalone top-level metric lines below, which are the
-      // stable interface.
-      val qs = (results ++ loaderTimes :+ fixtures :+ loaders :+
-        ("__scaled_total" -> scaledTotal) :+ ("__fixture_total" -> fixtureTotal))
+      // stable interface. Each loader pipeline keeps its own time beside
+      // the bucket total, so a regression localizes to its loader.
+      val qs = ((t.headline ++ t.loaders).map { case (k, v) => k -> v.getOrElse(-1.0) } :+
+        ("fixtures_bucket" -> t.fixturesBucket) :+ ("loaders_bucket" -> t.loadersBucket) :+
+        ("__scaled_total" -> t.scaledTotal) :+ ("__fixture_total" -> t.fixtureTotal))
         .map { case (k, v) => "\"" + k + "\":" + r3(v) }
         .mkString("{", ",", "}")
-      val total = scaledTotal + fixtureTotal
       val json =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${r3(t.total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
       // The full line outgrew the driver's tail-parse window two rounds
       // running (88+ queries); emit a short record LAST so the tail
       // always contains one complete parseable JSON line.
-      val summary = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir"}"""
+      val summary = s"""{"metric":"total","value":${r3(t.total)},"unit":"sec","sf":"$sfDir","n_failed":${t.failed.size}}"""
       // the FILE record carries the full attribution payload: every timed
       // run with its start timestamp, plus the interleaved sentinel series
       // — any row's ambient factor is (bracketing sentinel readings /
@@ -336,14 +344,15 @@ object Bench {
       val sentinelJson = sentinelLog
         .map { case (ts, s, j) => s"""{"t":$ts,"s":${r3(s)},"j":${r3(j)}}""" }
         .mkString("[", ",", "]")
+      val failedJson = t.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val fileJson = json.stripSuffix("}") +
-        s""","partial":$partial,"rows":$rowsJson,"sentinel":$sentinelJson}"""
-      (json, summary, fileJson, scaledTotal, fixtureTotal)
+        s""","partial":$partial,"failed":$failedJson,"rows":$rowsJson,"sentinel":$sentinelJson}"""
+      (json, summary, fileJson, t)
     }
-    def emit(partial: Boolean): (String, String, Double, Double) = {
-      val (json, summary, fileJson, st, ft) = payload(partial)
+    def emit(partial: Boolean): (String, String, Totals) = {
+      val (json, summary, fileJson, t) = payload(partial)
       Files.writeString(Paths.get(out), fileJson + "\n")
-      (json, summary, st, ft)
+      (json, summary, t)
     }
     flush = () => { emit(partial = true); () }
     // Wall-time budget (seconds, measured from Bench start): the r18
@@ -374,30 +383,13 @@ object Bench {
       emit(partial = true)
     }
     sentinelOnce(force = true) // closing bracket: trailing reading for the last rows
-    val (json, summary, scaledTotal, fixtureTotal) = emit(partial = false)
+    val (json, summary, t) = emit(partial = false)
     // Quiesce Spark COMPLETELY before emitting the metric lines, and make
-    // them the very last stdout of the run: in round 16 the state-store
-    // maintenance pool's teardown stack trace ("RpcEnv already stopped",
-    // logged asynchronously during/after spark.stop()) landed AFTER the
-    // metrics and displaced them from the driver's tail-parse window
-    // (BENCH_r16.json parsed=null). Order: stop any streaming queries a
-    // timed row left behind, unload the state-store providers and their
-    // maintenance thread pool (the trace's source), silence the loggers,
-    // THEN stop the session — only after all of that print the metrics.
-    try spark.streams.active.foreach(q =>
-      try q.stop() catch { case _: Throwable => () })
-    catch { case _: Throwable => () }
-    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => () }
-    spark.sparkContext.setLogLevel("OFF")
-    // swallow stop() failures too: an exception out of the teardown is
-    // exactly the noisy-teardown scenario this ordering guards against,
-    // and an unguarded throw here would skip every metric line below
-    // (regressing the driver tail-parse to parsed=null)
-    try spark.stop() catch { case _: Throwable => () }
+    // them the very last stdout of the run (see GraftSession.stop).
+    GraftSession.stop(spark)
     println(json)
-    println(s"""{"metric":"scaled_total","value":${r3(scaledTotal)},"unit":"sec","sf":"$sfDir"}""")
-    println(s"""{"metric":"fixture_total","value":${r3(fixtureTotal)},"unit":"sec","sf":"$sfDir"}""")
+    println(s"""{"metric":"scaled_total","value":${r3(t.scaledTotal)},"unit":"sec","sf":"$sfDir"}""")
+    println(s"""{"metric":"fixture_total","value":${r3(t.fixtureTotal)},"unit":"sec","sf":"$sfDir"}""")
     // sentinel rollup: the run-level ambient summary (full series in the
     // bench_out file). cpu leg quiet ≈ 0.3-0.6 s, sched leg quiet
     // ≈ 0.4 s; a max >> median on either leg means an intra-run burst in

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** BM25 lane A/B (measurement tool, outside the Verify/Bench contract):
@@ -31,10 +30,7 @@ object BenchBm25 {
     val qmod = if (args.length > 1) args(1).toInt else 97
     val reps = if (args.length > 2) args(2).toInt else 3
     val perturb = args.length > 3 && args(3).toBoolean
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -126,6 +122,6 @@ object BenchBm25 {
         f"expand_fwd ${(s2 - s1) / 1e9}%.2f s " +
         f"($nFwd rows, $fbBands/${llm.Retrieval.DocBands} doc bands)")
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

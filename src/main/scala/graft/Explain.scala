@@ -1,16 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     for (q <- args) {
       println(s"===== $q =====")
       SparkEntry.queries(q)(spark, dir).explain("formatted")
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

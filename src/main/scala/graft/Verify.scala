@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,24 +8,17 @@ object Verify {
     // optional third arg: comma-separated query-name subset (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native function registry (qdot, jaccard_sim) via the extension hook
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val rows = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
+    val failed = rows.keys.toSeq.filterNot { name =>
+      try {
+        rows(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: $e")
+        false
       }
       // queries that persist intermediates (DiffMerge tiers, resolver
       // passes) would otherwise accumulate storage blocks across the ~90
@@ -49,6 +41,11 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    GraftSession.stop(spark)
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] failed ${failed.size} of ${rows.size}: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

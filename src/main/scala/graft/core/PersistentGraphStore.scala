@@ -152,12 +152,6 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
 
   def latestVersion(table: String): Option[Int] = versions(table).lastOption.map(_._1)
 
-  /** Per-bucket newest leaf directories: (bucketId, path), walking versions
-    * newest-first so the first sighting of a bucket wins. A version marked
-    * `_FULL` is a complete snapshot — buckets absent from it (and from any
-    * newer layer) are EMPTY, not inherited: a soft-delete can empty a
-    * bucket entirely, which the layering alone cannot represent.
-    */
   /** Snapshot isolation for level-concurrent orchestration: while a pin
     * is set (per thread-crossing @volatile), PUBLIC [[read]] resolves
     * against the version listing captured at pin time — same-level
@@ -210,6 +204,12 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   private def leafDirsLatest(table: String): Seq[(Int, String)] =
     leafDirsOf(versions(table))
 
+  /** Per-bucket newest leaf directories: (bucketId, path), walking versions
+    * newest-first so the first sighting of a bucket wins. A version marked
+    * `_FULL` is a complete snapshot — buckets absent from it (and from any
+    * newer layer) are EMPTY, not inherited: a soft-delete can empty a
+    * bucket entirely, which the layering alone cannot represent.
+    */
   private def leafDirsOf(vs: Seq[(Int, String)]): Seq[(Int, String)] = {
     val seen = scala.collection.mutable.Map.empty[Int, String]
     val newestFirst = vs.reverse.iterator
@@ -233,16 +233,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     seen.toSeq.sortBy(_._1)
   }
 
-  /** Latest table state (newest layer of every bucket), or None before the
-    * first write. The bucket column is not materialized — it is derivable
-    * from the key columns.
-    */
-  /** Leaf dirs from more than one version layer may carry different
-    * schemas (see merge's alignment) and need mergeSchema; a single
-    * version's buckets share one schema, so the footer-merge cost is
-    * skipped for the common post-compaction case.
-    *
-    * Per-dir schema cache: a published leaf directory is IMMUTABLE
+  /** Per-dir schema cache: a published leaf directory is IMMUTABLE
     * (layers are staged and atomically renamed, never rewritten), so its
     * INFERRED schema is read once and cached — caching only what
     * inference returns keeps the cached path byte-identical to today's
@@ -274,7 +265,11 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
         spark.read.parquet(d).schema.fields.filterNot(_.name == "__b")))
   }
 
-
+  /** Leaf dirs from more than one version layer may carry different
+    * schemas (see merge's alignment) and need mergeSchema; a single
+    * version's buckets share one schema, so the footer-merge cost is
+    * skipped for the common post-compaction case.
+    */
   private def readDirs(dirs: Seq[String]): DataFrame = {
     val schemas = dirs.map(dirSchema).distinct
     if (schemas.length == 1) spark.read.schema(schemas.head).parquet(dirs: _*)
@@ -286,6 +281,10 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     }
   }
 
+  /** Latest table state (newest layer of every bucket), or None before the
+    * first write. The bucket column is not materialized — it is derivable
+    * from the key columns.
+    */
   def read(table: String): Option[DataFrame] = {
     val dirs = leafDirs(table)
     if (dirs.isEmpty) None else Some(readDirs(dirs.map(_._2)))
@@ -516,7 +515,6 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       // under the same publish rule as [[upsert]]. `incoming` is
       // evaluated once here (no bucket discovery), so it is not persisted.
       val m = metaFor(table, keyCols)
-      val first = latestVersion(table).isEmpty
       val rows = classified(readLatest(table)).persist()
       try {
         val cells = rows
@@ -524,7 +522,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
           .agg(count(lit(1)).as("n"),
             max(col(GraphStore.REWRITE).cast("int")).as("rw"))
           .collect()
-        if (first || cells.exists(_.getInt(3) == 1)) {
+        if (cells.exists(_.getInt(3) == 1)) {
           write(table, GraphStore.apply(rows.drop(GraphStore.REWRITE)),
             keyCols, full = true)
           maybeCompact(table)
@@ -562,8 +560,8 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     *     O(touched buckets). Folding the counters into the write saves the
     *     summary job a collect-then-write shape needs, a measurable
     *     per-merge constant on DAGs of many tiny merges. The staged layer
-    *     is published when a row rewrites or the table has no layer yet:
-    *     an idempotent replay publishes nothing.
+    *     is published when a row rewrites: an idempotent replay, like an
+    *     empty first write, publishes nothing.
     *
     * Returns each counter's value.
     */
@@ -607,9 +605,8 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
              .filter(col("__rw_b") === 1))
             .drop("__rw_b", GraphStore.REWRITE, GraphStore.ACTION)
         def counter(name: String) = obs.get(name).asInstanceOf[Number].longValue
-        writeStaged(table, toWrite, full = false) {
-          first || counter("__rewrites") > 0L
-        }.foreach(_ => maybeCompact(table))
+        writeStaged(table, toWrite, full = false)(counter("__rewrites") > 0L)
+          .foreach(_ => maybeCompact(table))
         counters.map { case (n, _) => n -> counter(n) }.toMap
       }
     } finally if (preDiscover) { incoming.unpersist(); () }

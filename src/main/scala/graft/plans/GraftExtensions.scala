@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 
 /** Session-extension hook: `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (or `builder.withExtensions(new GraftExtensions)`) registers the
+  * (set by [[graft.GraftSession.local]]) registers the
   * engine's native functions into the Catalyst function registry, so SQL
   * text and `expr()` strings can call them alongside the builtins.
   */
@@ -13,20 +13,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(JaccardSim.descriptor)
     ext.injectFunction(NfcNormalize.descriptor)
     ext.injectFunction(AlphaSpaceCount.descriptor)
-  }
-}
-
-object GraftExtensions {
-
-  /** Idempotent runtime registration for sessions the caller doesn't
-    * build (the driver owns the Verify/Bench sessions): drops the same
-    * descriptors into an existing session's function registry.
-    */
-  def register(spark: SparkSession): Unit = {
-    Seq(QuantizedDot.descriptor, JaccardSim.descriptor,
-        NfcNormalize.descriptor, AlphaSpaceCount.descriptor).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
   }
 }

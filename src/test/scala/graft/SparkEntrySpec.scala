@@ -1,17 +1,23 @@
 package graft
 
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites. */
+/** Shared local session for all suites (8 slots: StoreWriteWidthSpec's
+  * width bound depends on it).
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession.local(8)
+    // Stopped once, when the test JVM exits after the last suite, and
+    // before Spark's own shutdown hooks: Hadoop's hook manager runs
+    // higher priorities first, and Spark installs its hooks at 40. Left
+    // to Spark's hook, the context stops with task results still
+    // arriving and the result getter logs RejectedExecutionException.
+    ShutdownHookManager.get().addShutdownHook(() => GraftSession.stop(s), 50)
+    s
+  }
 
   val sf: String = "/root/testdata/sf0.001"
 

@@ -292,16 +292,28 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
     assert(store.read("edges").get.count() == 2)
   }
 
-  test("an empty first merge and an empty first edge upsert each publish v=00001") {
+  test("an empty first merge or edge upsert publishes no version") {
     val store = freshStore()
-    assert(store.merge("vertices", v1.limit(0), Seq("sourceId"),
-      compareCols = Seq("name", "deprecated"), setCols = Seq("subsets")) == Map.empty)
+    def mergeInto(table: String, df: org.apache.spark.sql.DataFrame,
+        softDelete: Boolean = false) =
+      store.merge(table, df, Seq("sourceId"), compareCols = Seq("name", "deprecated"),
+        setCols = Seq("subsets"), softDelete = softDelete)
+    assert(mergeInto("vertices", v1.limit(0)) == Map.empty)
+    assert(mergeInto("tombstoned", v1.limit(0), softDelete = true) == Map.empty)
     val noEdges = Seq.empty[(String, String, String)].toDF("out", "in", "edgeClass")
     assert(store.upsertEdges(noEdges) == Map("created" -> 0L))
-    Seq("vertices", "edges").foreach { t =>
-      assert(store.latestVersion(t).contains(1), t)
-      // the layer holds no bucket directory, so there is nothing to read
+    Seq("vertices", "tombstoned", "edges").foreach { t =>
+      // nothing rewrote, so nothing was published: latestVersion and read agree
+      assert(store.latestVersion(t).isEmpty, t)
       assert(store.read(t).isEmpty, t)
+    }
+    // the next non-empty write publishes the table's first version
+    assert(mergeInto("vertices", v1) == Map("create" -> 3L))
+    assert(store.upsertEdges(Seq(("d1", "d2", "SubClassOf"))
+      .toDF("out", "in", "edgeClass")) == Map("created" -> 1L))
+    Seq("vertices" -> 3L, "edges" -> 1L).foreach { case (t, n) =>
+      assert(store.latestVersion(t).contains(1), t)
+      assert(store.read(t).map(_.count()).contains(n), t)
     }
   }
 

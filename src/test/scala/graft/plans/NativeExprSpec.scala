@@ -82,7 +82,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("jaccard_sim resolves in SQL after registration") {
-    GraftExtensions.register(spark)
     val out = spark.sql(
       "SELECT jaccard_sim(array('a','b'), array('b','c')) AS j").head
     assert(out.getDouble(0) == 1.0 / 3.0)

@@ -47,7 +47,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("nfc_normalize is registered as a SQL function") {
-    GraftExtensions.register(spark)
     val got = spark.sql("SELECT nfc_normalize('cafe\\u0301')").collect()
     assert(got(0).getString(0) === "café")
   }

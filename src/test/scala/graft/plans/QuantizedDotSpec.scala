@@ -50,7 +50,6 @@ class QuantizedDotSpec extends AnyFunSuite {
   }
 
   test("registered function resolves in SQL text") {
-    GraftExtensions.register(spark)
     val out = spark.sql("SELECT qdot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d").head
     assert(out.getLong(0) == 32L)
   }
