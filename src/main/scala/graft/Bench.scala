@@ -189,8 +189,8 @@ object Bench {
     def total: Double = scaledTotal + fixtureTotal
   }
 
-  /** Headline rows take the median of their interleaved reps, bucket rows
-    * the min of their passes (see [[BucketReps]]). A row with no sample
+  /** Headline rows take the [[median]] of their interleaved reps, bucket
+    * rows the min of their passes (see [[BucketReps]]). A row with no sample
     * failed: it is named in `failed` and adds nothing to any total, so a
     * failing row can never read as a faster run.
     */
@@ -198,8 +198,15 @@ object Bench {
       fixtures: Seq[String], loaders: Seq[String]): Totals = {
     def est(names: Seq[String])(f: Seq[Double] => Double) =
       names.map(n => n -> Some(samples(n)).filter(_.nonEmpty).map(f))
-    Totals(est(headline)(ts => ts.sorted.apply(ts.size / 2)),
-      est(loaders)(_.min), est(fixtures)(_.min))
+    Totals(est(headline)(median), est(loaders)(_.min), est(fixtures)(_.min))
+  }
+
+  /** The middle sample, or the mean of the two middle ones for an even
+    * count (2 reps, or a pass the budget skipped), never the slower one.
+    */
+  def median(ts: Seq[Double]): Double = {
+    val (s, m) = (ts.sorted, ts.size / 2)
+    if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
   }
 
   /** `runMain graft.Bench` times the whole registry: the headline rows

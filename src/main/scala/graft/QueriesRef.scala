@@ -389,30 +389,16 @@ private[graft] object QueriesRef {
     // scan → parent-concept derivation → row normalization → deprecation
     // skip → name-collision resolution (species dups rejected, duplicate
     // groups renamed to their preferred synonym) → primary+alias vertices
-    // + aliasof/SubClassOf edges → store round-trip. The fixture is built
-    // inline (the reference ships no NCIt flat file) and exercises every
-    // branch; the oracle is the hand-derived frozen frame.
+    // + aliasof/SubClassOf edges → store round-trip. The fixture is the
+    // NCIt sample the corpus DAG loads too (the reference ships no NCIt
+    // flat file) and exercises every branch; the oracle is the
+    // hand-derived frozen frame.
     "g3_ncit" -> ((s, dir) => {
-      val rows = Seq(
-        // id, xmlTag, parents, synonyms, definition, name, status, semanticType, subset
-        Seq("C1001", "<http://n/C1001>", "", "Skin Cancer Dark|Melanoma", "a skin cancer", "Melanoma", "", "Neoplastic Process", ""),
-        Seq("C1002", "<http://n/C1002>", "C1001", "", "a glioma", "Glioma", "", "Neoplastic Process", ""),
-        Seq("C1003", "<http://n/C1003>", "C61063", "", "", "Old Thing", "", "Neoplastic Process", ""),
-        Seq("C1004", "<http://n/C1004>", "", "", "", "Gone", "Obsolete_Concept", "Neoplastic Process", ""),
-        Seq("C1005", "<http://n/C1005>", "", "Aloe", "a plant", "Aloe Vera", "", "Plant", ""),
-        Seq("C1006", "<http://n/C1006>", "C1005", "", "a cream", "Aloe Cream", "", "Unknown Thing", ""),
-        Seq("C1007", "<http://n/C1007>", "", "", "", "Mystery", "", "Weird Category", ""),
-        Seq("C1008", "<http://n/C1008>", "", "Mtum", "", "Mouse Tumor", "", "Neoplastic Process", ""),
-        Seq("C1009", "<http://n/C1009>", "", "Mtm2", "", "Mouse Tumor", "", "Neoplastic Process", ""),
-        Seq("C1010", "<http://n/C1010>", "", "EGFR Receptor Variant|ov1", "", "Egfr Overexpression", "", "Neoplastic Process", ""),
-        Seq("C1011", "<http://n/C1011>", "", "EGFR Kinase Variant|ov2", "", "Egfr Overexpression", "", "Neoplastic Process", ""))
-      val f = java.io.File.createTempFile("graft-g3", ".txt")
-      java.nio.file.Files.writeString(f.toPath,
-        rows.map(_.mkString("\t")).mkString("\n"))
+      val ncit = orchestrate.FullCorpus.writeNcitSample()
       val store = new core.PersistentGraphStore(s,
         scratchDir("g3"))
-      sources.NcitLoad.load(s, store, f.getPath)
-      sources.NcitLoad.load(s, store, f.getPath) // idempotency pass
+      sources.NcitLoad.load(s, store, ncit)
+      sources.NcitLoad.load(s, store, ncit) // idempotency pass
       val terms = store.read("terms").get
       val outCounts = store.read("edges").get
         .groupBy(col("out")).agg(count(lit(1)).as("n_out"))
@@ -1758,6 +1744,15 @@ private[graft] object QueriesRef {
       val ncit = orchestrate.FullCorpus.writeNcitSample()
       val r1 = orchestrate.FullCorpus.run(s, store, ncit)
       val r2 = orchestrate.FullCorpus.run(s, store, ncit)
+      // a loader that failed or was skipped fails the row: a partial DAG
+      // must never read as a (faster) full one. One line per loader: a
+      // Spark failure's message carries the whole stack trace.
+      val bad = Seq("pass 1" -> r1, "pass 2" -> r2).flatMap { case (pass, r) =>
+        r.order.filterNot(r.succeeded.contains)
+          .map(n => s"$pass $n: ${r.statuses(n).toString.linesIterator.next()}")
+      }
+      if (bad.nonEmpty) throw new IllegalStateException(
+        s"g14_full_dag: ${bad.size} loader runs did not succeed: ${bad.mkString("; ")}")
       def creates(r: orchestrate.Orchestrator.Report): Long =
         r.statuses.values.collect {
           case orchestrate.Orchestrator.Succeeded(c) =>

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
+
 /** Parquet-backed persistent graph store: vertices and edges survive the
   * job, and re-running the same merge is a no-op (idempotent upsert —
   * reference `addRecord` graphkb.js:545-612 made set-based).
@@ -515,8 +517,8 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       // under the same publish rule as [[upsert]]. `incoming` is
       // evaluated once here (no bucket discovery), so it is not persisted.
       val m = metaFor(table, keyCols)
-      val rows = classified(readLatest(table)).persist()
-      try {
+      val rows = classified(readLatest(table))
+      withCached(rows) {
         val cells = rows
           .groupBy(bucketExpr(m).cast("int").as("__b"), col(GraphStore.ACTION))
           .agg(count(lit(1)).as("n"),
@@ -529,7 +531,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
         }
         cells.groupBy(_.getString(1)).view
           .mapValues(_.map(_.getLong(2)).sum).toMap.filter(_._2 != 0L)
-      } finally { rows.unpersist(); () }
+      }
     }
   }
 
@@ -569,8 +571,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       counters: Seq[(String, Column)])(
       layer: Option[DataFrame] => DataFrame): Map[String, Long] = {
     val preDiscover = latestVersion(table).nonEmpty
-    if (preDiscover) incoming.persist()
-    try {
+    withCached((if (preDiscover) Seq(incoming) else Nil): _*) {
       val pre =
         if (preDiscover)
           Some(touchedBuckets(incoming,
@@ -609,7 +610,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
           .foreach(_ => maybeCompact(table))
         counters.map { case (n, _) => n -> counter(n) }.toMap
       }
-    } finally if (preDiscover) { incoming.unpersist(); () }
+    }
   }
 
   val EdgeKey: Seq[String] = Seq("out", "in", "edgeClass")

@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
+
 /** Declarative record validation with an error side-channel.
   *
   * Re-expresses the reference's Ajv `checkSpec` (util.js:201-214) +
@@ -37,12 +39,11 @@ object Specs {
     * Returns the error count for the audit trail (A8/K9).
     */
   def writeErrors(errors: DataFrame, path: String): Long = {
-    errors.persist()
-    try {
+    withCached(errors) {
       val n = errors.count()
       errors.write.mode("overwrite").parquet(path)
       n
-    } finally errors.unpersist()
+    }
   }
 
   /** The reference's recursive 'None'/'' → null cleanup

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
+
 /** Sparse/lexical retrieval and corpus-LM scoring — the complement to the
   * dense ANN family in `Ann`: BM25 keyword search over an inverted-index
   * shape, reciprocal-rank fusion for hybrid (sparse + dense) retrieval,
@@ -184,8 +186,7 @@ object Retrieval {
       // once per artifact (on a real cluster the same role is played by
       // checkpointing the postings table; the parquet write itself is
       // that checkpoint for everything downstream of a load())
-      postings.persist(); dl.persist()
-      try {
+      withCached(postings, dl) {
         postings.write.partitionBy("__band")
           .mode("overwrite").parquet(s"$path/postings")
         fwd.write.partitionBy("__dband")
@@ -194,7 +195,7 @@ object Retrieval {
         dfTable.write.mode("overwrite").parquet(s"$path/df")
         stats.write.mode("overwrite").parquet(s"$path/stats")
         maxImpact.write.mode("overwrite").parquet(s"$path/max_impact")
-      } finally { postings.unpersist(); dl.unpersist(); () }
+      }
     }
   }
 
@@ -725,12 +726,11 @@ object Retrieval {
       // docs derives FROM postings (buildPosIndex projects the indexed-id
       // set off the postings table, not off the source docs), so
       // persisting postings really does make the two writes tokenize once
-      postings.persist()
-      try {
+      withCached(postings) {
         postings.write.partitionBy("__band")
           .mode("overwrite").parquet(s"$path/postings")
         docs.write.mode("overwrite").parquet(s"$path/docs")
-      } finally { postings.unpersist(); () }
+      }
     }
   }
 

@@ -3,6 +3,7 @@ package graft.orchestrate
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.EntryHelpers.REF_DATA
 import graft.core.PersistentGraphStore
 import graft.sources._
 import Orchestrator.Loader
@@ -44,9 +45,10 @@ import Orchestrator.Loader
   */
 object FullCorpus {
 
-  val RefData = "/root/reference/test/data"
-
-  /** The NCIt Thesaurus sample (same rows the g3 oracle pins). */
+  /** The NCIt Thesaurus sample (the rows the g3 oracle pins). Columns:
+    * id, xmlTag, parents, synonyms, definition, name, status,
+    * semanticType, subset.
+    */
   val NcitSample: Seq[Seq[String]] = Seq(
     Seq("C1001", "<http://n/C1001>", "", "Skin Cancer Dark|Melanoma", "a skin cancer", "Melanoma", "", "Neoplastic Process", ""),
     Seq("C1002", "<http://n/C1002>", "C1001", "", "a glioma", "Glioma", "", "Neoplastic Process", ""),
@@ -100,8 +102,7 @@ object FullCorpus {
     f.getPath
   }
 
-  def loaders(store: PersistentGraphStore, ncitPath: String,
-      refData: String = RefData): Seq[Loader] = Seq(
+  def loaders(store: PersistentGraphStore, ncitPath: String): Seq[Loader] = Seq(
 
     // all_sources/index.js: the full 39-definition source catalog is a
     // root — every loader's addSource upserts against it, and the J2
@@ -126,48 +127,48 @@ object FullCorpus {
     Loader("ncit", Seq("vocab"), sp => NcitLoad.load(sp, store, ncitPath)),
 
     Loader("fdaSrs", Seq("vocab", "ncit"), sp => FdaSrs.load(sp, store,
-      s"$refData/UNII_Records_25Oct2018_sample.txt",
+      s"$REF_DATA/UNII_Records_25Oct2018_sample.txt",
       store.read("terms").get.select("sourceId"))),
 
     Loader("do", Seq("ncit"), sp =>
-      Loaders.loadDoid(sp, store, s"$refData/doid.sample.json")),
+      Loaders.loadDoid(sp, store, s"$REF_DATA/doid.sample.json")),
 
     Loader("oncotree", Seq("ncit"), sp => Loaders.loadOncotree(sp, store,
-      s"$refData/tumorTypes-oncotree_latest_stable.json")),
+      s"$REF_DATA/tumorTypes-oncotree_latest_stable.json")),
 
     Loader("drugbank", Seq("fdaSrs"), sp =>
-      Loaders.loadDrugbank(sp, store, s"$refData/drugbank_sample.xml")),
+      Loaders.loadDrugbank(sp, store, s"$REF_DATA/drugbank_sample.xml")),
 
     Loader("entrez", Seq.empty, sp => {
       val g = Entrez.hydrate(sp, store, "genes", Seq("3845"),
-        Entrez.fileFetcher(Map("3845" -> s"$refData/entrez_gene.3845.json")),
+        Entrez.fileFetcher(Map("3845" -> s"$REF_DATA/entrez_gene.3845.json")),
         Entrez.parseGene(_), Seq("sourceId"),
         Seq("biotype", "name", "displayName", "longName", "description", "url"))
       val p = Entrez.hydrate(sp, store, "articles", Seq("30016509"),
         Entrez.fileFetcher(
-          Map("30016509" -> s"$refData/entrez_pubmed.30016509.json")),
+          Map("30016509" -> s"$REF_DATA/entrez_pubmed.30016509.json")),
         Entrez.parsePubmed(_), Seq("sourceId"),
         Seq("name", "journalName", "year", "displayName"))
       g ++ p.map { case (k, v) => s"pubmed_$k" -> v }
     }),
 
     Loader("refseq", Seq("vocab", "entrez"), sp => RefseqTab.load(sp, store,
-      s"$refData/LRG_RefSeqGene_d1541209245_kras.tab",
+      s"$REF_DATA/LRG_RefSeqGene_d1541209245_kras.tab",
       store.read("genes").get)),
 
     Loader("ensembl", Seq("refseq"), sp => Loaders.loadEnsembl(sp, store,
-      s"$refData/ensembl_biomart_export_ENSG00000139618.tsv")),
+      s"$REF_DATA/ensembl_biomart_export_ENSG00000139618.tsv")),
 
     Loader("hgnc", Seq("ensembl"), sp => Loaders.loadHgnc(sp, store,
-      Loaders.hgncDocs(sp, s"$refData/external_api_responses.json",
+      Loaders.hgncDocs(sp, s"$REF_DATA/external_api_responses.json",
         "http://rest.genenames.org/fetch/hgnc_id/1101"),
       table = "genes_hgnc")),
 
     Loader("vario", Seq.empty, sp => Vario.load(sp, store,
-      s"$refData/vario_v2018-04-27.owl", table = "vario_terms")),
+      s"$REF_DATA/vario_v2018-04-27.owl", table = "vario_terms")),
 
     Loader("chembl", Seq.empty, sp =>
-      Chembl.load(sp, store, s"$refData/chembl.CHEMBL553.json")),
+      Chembl.load(sp, store, s"$REF_DATA/chembl.CHEMBL553.json")),
 
     Loader("civic", Seq("vocab", "entrez"), sp => {
       val vocabDim = store.read("vocabulary").get.select(col("name"),
@@ -177,12 +178,12 @@ object FullCorpus {
       // so the leg runs empty here; g36_snp + the extended g12 row
       // exercise it with live rsIDs
       val snpFix = Snp.fixturePath("/fixtures/entrez_snp.esummary.json")
-      CivicVariants.load(sp, store, s"$refData/civic_variant.json",
+      CivicVariants.load(sp, store, s"$REF_DATA/civic_variant.json",
         vocabDim, featuresTable = "genes",
         rsidLoad = Some(ids => Snp.fetchAndLoad(sp, store, ids,
           Snp.rsFetcher(Map("121434568" -> snpFix)),
           Entrez.fileFetcher(Map(
-            "NM_005228.5" -> s"$refData/entrez_refseq.NM_005228.5.json",
+            "NM_005228.5" -> s"$REF_DATA/entrez_refseq.NM_005228.5.json",
             "NP_005219.2" ->
               Snp.fixturePath("/fixtures/entrez_refseq.NP_005219.2.json"))),
           Entrez.fileFetcher(Map(
@@ -203,7 +204,7 @@ object FullCorpus {
       val diseaseDim = store.read("vertices").get.select("name")
         .unionByName(store.read("diseases").get.select("name")).distinct()
       ClinicalTrials.load(sp, store,
-        s"$refData/clinicaltrialsgov.NCT03478891.json", therapyDim, diseaseDim)
+        s"$REF_DATA/clinicaltrialsgov.NCT03478891.json", therapyDim, diseaseDim)
     }),
 
     // uberon ← ncit (Snakefile:270-278): the xref gate resolves against
@@ -217,7 +218,7 @@ object FullCorpus {
       val ids = Seq("NC_000003.11", "NC_000003", "NM_005228.5", "NP_008819.1")
       Entrez.hydrate(sp, store, "refseqs", ids,
         Entrez.fileFetcher(
-          ids.map(i => i -> s"$refData/entrez_refseq.$i.json").toMap),
+          ids.map(i => i -> s"$REF_DATA/entrez_refseq.$i.json").toMap),
         Entrez.parseRefseq(_), Seq("sourceId", "sourceIdVersion"),
         Seq("biotype", "name", "displayName", "longName"),
         matchCol = "displayName")
@@ -441,27 +442,25 @@ object FullCorpus {
           diseaseSid = "cancer")
       }))
 
+  /** Level-internal loader concurrency. 8 measured ~10% faster than 4 on
+    * the full DAG at local[32]; 16 plateaus — the residual cost is
+    * per-job scheduling latency on many small fixture jobs, which a real
+    * cluster amortizes.
+    */
+  private val Parallelism = 8
+
   /** Run the whole corpus DAG into `store`; returns the report. Levels
     * execute with bounded concurrency (Snakemake's independent-rule
     * parallelism): distinct-table loaders overlap fully, same-table
     * merges serialize on the store's per-table locks.
     */
   def run(spark: SparkSession, store: PersistentGraphStore,
-      ncitPath: String,
-      // level-internal loader concurrency (env-overridable for tuning).
-      // 8 measured ~10% faster than 4 on the full DAG at local[32]; 16
-      // plateaus — the residual cost is per-job scheduling latency on
-      // many small fixture jobs, which a real cluster amortizes.
-      // Malformed/non-positive values fall back to the default rather
-      // than aborting the whole corpus run with a bare NumberFormat.
-      parallelism: Int =
-        sys.env.get("SPARK_GRAFT_DAG_PAR").flatMap(_.trim.toIntOption)
-          .filter(_ > 0).getOrElse(8)): Orchestrator.Report = {
+      ncitPath: String): Orchestrator.Report = {
     // snapshot isolation per level: reads inside a level see exactly the
     // level-start store state, so results don't depend on intra-level
     // scheduling (sequential list order OR concurrent interleaving)
     val report =
-      try Orchestrator.run(spark, loaders(store, ncitPath), parallelism,
+      try Orchestrator.run(spark, loaders(store, ncitPath), Parallelism,
         beforeLevel = () => store.pinVersions(),
         afterLevel = () => store.unpinVersions())
       finally store.unpinVersions()

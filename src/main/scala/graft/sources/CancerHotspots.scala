@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.variant.HgvsParser
@@ -83,19 +84,6 @@ object CancerHotspots {
       chromosomes: DataFrame, transcripts: DataFrame, diseases: DataFrame,
       vocab: DataFrame): Map[String, Long] = {
     import spark.implicits._
-    // three consumers (forms, the fatal-record census, the statement
-    // build) — persist so a scale-sized upstream derivation runs once
-    records.persist()
-    try loadDsPersisted(spark, store, records, genes, chromosomes,
-      transcripts, diseases, vocab)
-    finally { records.unpersist(); () }
-  }
-
-  private def loadDsPersisted(spark: SparkSession, store: PersistentGraphStore,
-      records: org.apache.spark.sql.Dataset[HotspotRecord], genes: DataFrame,
-      chromosomes: DataFrame, transcripts: DataFrame, diseases: DataFrame,
-      vocab: DataFrame): Map[String, Long] = {
-    import spark.implicits._
     val f = records.flatMap(forms).toDF()
     val chromDim = chromosomes
       .select(col("sourceId").as("reference1"), col("sourceId").as("dim_sid"))
@@ -118,8 +106,9 @@ object CancerHotspots {
       .join(broadcast(anyTerms), Seq("vtype"), "left")
       .withColumn("vid", concat(col("dim_sid"), lit(":"), col("notation"),
         lit("@"), col("term")))
-    resolved.persist()
-    try {
+    // records has three consumers (forms, the fatal-record census, the
+    // statement build): cached so a scale-sized upstream derivation runs once
+    withCached(records, resolved) {
       // protein failure (unparseable OR unresolved gene) is fatal to the
       // record; genomic/cds failures are not. goodProt/badRecs are
       // RECORD-id sets — row-proportional, unlike the dimension frames
@@ -181,6 +170,6 @@ object CancerHotspots {
       counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
         sc.map { case (k, v) => s"statements_$k" -> v } +
         ("record_errors" -> badRecs.count())
-    } finally resolved.unpersist()
+    }
   }
 }

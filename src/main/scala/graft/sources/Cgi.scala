@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Cached.withCached
+
 /** Cancer Genome Interpreter row parsing (reference
   * src/cancergenomeinterpreter/index.js:73-190):
   *  - `parseCategoryVariant` strips the gene prefix off the biomarker,
@@ -201,109 +203,104 @@ object Cgi {
     import org.apache.spark.sql.functions._
 
     val parsed = parse(spark, rows)
-    parsed.persist()
-    try {
-      // id set, not a count: a row can fail BOTH the parse rung and a
-      // resolve rung, and the reference's per-row try/catch throws once —
-      // the error total is distinct failed rows, not failed rungs
-      val parseErrorIds = parsed.filter(col("kind") === "error")
-        .select(col("rowId"))
+    // id set, not a count: a row can fail BOTH the parse rung and a
+    // resolve rung, and the reference's per-row try/catch throws once —
+    // the error total is distinct failed rows, not failed rungs
+    val parseErrorIds = parsed.filter(col("kind") === "error")
+      .select(col("rowId"))
 
-      // ---- per-row scalar resolves (relevance, disease)
-      val meta = rows.map(r => (r.rowId, r.disease, r.relevance))
-        .toDF("rowId", "disease", "relevance")
-      val relName = coalesce(
-        element_at(typedLit(RelevanceMapping), lower(trim(col("relevance")))),
-        col("relevance"))
-      // dims dedup to ONE row per lowercased key (deterministic min) —
-      // a caller-supplied dim with case-duplicate names (e.g. the DAG's
-      // vertices ∪ diseases union) would otherwise fan the left joins
-      // out into duplicate statement rows under the same merge key
-      val withRel = meta.withColumn("rel_name", relName)
-        .join(broadcast(vocab.select(lower(col("name")).as("rel_key"),
-          col("term_id").as("rel_term"))
-          .groupBy("rel_key").agg(min("rel_term").as("rel_term"))),
-          lower(col("rel_name")) === col("rel_key"), "left")
-      val dDim = broadcast(diseases.select(lower(col("name")).as("d_key"),
-        col("sourceId").as("d_sid"))
-        .groupBy("d_key").agg(min("d_sid").as("d_sid")))
-      val mapped = withRel.withColumn("d_mapped",
-        element_at(typedLit(DiseaseMapping), lower(trim(col("disease")))))
-      // rung 1: the mapped name, else the raw name
-      val direct = mapped.join(dDim,
-        coalesce(lower(col("d_mapped")), lower(trim(col("disease")))) === col("d_key"),
+    // ---- per-row scalar resolves (relevance, disease)
+    val meta = rows.map(r => (r.rowId, r.disease, r.relevance))
+      .toDF("rowId", "disease", "relevance")
+    val relName = coalesce(
+      element_at(typedLit(RelevanceMapping), lower(trim(col("relevance")))),
+      col("relevance"))
+    // dims dedup to ONE row per lowercased key (deterministic min) —
+    // a caller-supplied dim with case-duplicate names (e.g. the DAG's
+    // vertices ∪ diseases union) would otherwise fan the left joins
+    // out into duplicate statement rows under the same merge key
+    val withRel = meta.withColumn("rel_name", relName)
+      .join(broadcast(vocab.select(lower(col("name")).as("rel_key"),
+        col("term_id").as("rel_term"))
+        .groupBy("rel_key").agg(min("rel_term").as("rel_term"))),
+        lower(col("rel_name")) === col("rel_key"), "left")
+    val dDim = broadcast(diseases.select(lower(col("name")).as("d_key"),
+      col("sourceId").as("d_sid"))
+      .groupBy("d_key").agg(min("d_sid").as("d_sid")))
+    val mapped = withRel.withColumn("d_mapped",
+      element_at(typedLit(DiseaseMapping), lower(trim(col("disease")))))
+    // rung 1: the mapped name, else the raw name
+    val direct = mapped.join(dDim,
+      coalesce(lower(col("d_mapped")), lower(trim(col("disease")))) === col("d_key"),
+      "left").drop("d_key")
+    // rung 2: unmapped misses retry as `<name> cancer`
+    val retry = direct.filter(col("d_sid").isNull && col("d_mapped").isNull)
+      .drop("d_sid")
+      .join(dDim, concat(lower(trim(col("disease"))), lit(" cancer")) === col("d_key"),
         "left").drop("d_key")
-      // rung 2: unmapped misses retry as `<name> cancer`
-      val retry = direct.filter(col("d_sid").isNull && col("d_mapped").isNull)
-        .drop("d_sid")
-        .join(dDim, concat(lower(trim(col("disease"))), lit(" cancer")) === col("d_key"),
-          "left").drop("d_key")
-      val rowMeta = direct.filter(col("d_sid").isNotNull || col("d_mapped").isNotNull)
-        .unionByName(retry)
+    val rowMeta = direct.filter(col("d_sid").isNotNull || col("d_mapped").isNotNull)
+      .unionByName(retry)
 
-      // ---- therapy resolve-or-create
-      val tDim = broadcast(therapies.select(lower(col("name")).as("t_key"),
-        col("sourceId").as("t_dim_sid"))
-        .groupBy("t_key").agg(min("t_dim_sid").as("t_dim_sid")))
-      val comboName = when(col("value").contains(";"),
-        array_join(array_sort(transform(split(col("value"), ";"),
-          x => lower(trim(x)))), " + "))
-        .otherwise(col("value"))
-      val drugs = parsed.filter(col("kind") === "therapy")
-        .withColumn("t_name", lower(trim(coalesce(
-          element_at(typedLit(TherapyMapping), lower(trim(comboName))),
-          comboName))))
-        .join(tDim, col("t_name") === col("t_key"), "left")
-        .withColumn("t_rid",
-          coalesce(col("t_dim_sid"), concat(lit("cgi:"), col("t_name"))))
-        .select(col("rowId"), col("t_name"), col("t_dim_sid"), col("t_rid"))
-      drugs.persist()
-      try {
-        val newTherapies = drugs.filter(col("t_dim_sid").isNull)
-          .select(col("t_rid").as("sourceId"), col("t_name").as("name"),
-            lit("cancer genome interpreter").as("source"))
-          .distinct()
-        val tCounts = store.merge("therapies", newTherapies,
-          keyCols = Seq("sourceId"), compareCols = Seq("name", "source"))
+    // ---- therapy resolve-or-create
+    val tDim = broadcast(therapies.select(lower(col("name")).as("t_key"),
+      col("sourceId").as("t_dim_sid"))
+      .groupBy("t_key").agg(min("t_dim_sid").as("t_dim_sid")))
+    val comboName = when(col("value").contains(";"),
+      array_join(array_sort(transform(split(col("value"), ";"),
+        x => lower(trim(x)))), " + "))
+      .otherwise(col("value"))
+    val drugs = parsed.filter(col("kind") === "therapy")
+      .withColumn("t_name", lower(trim(coalesce(
+        element_at(typedLit(TherapyMapping), lower(trim(comboName))),
+        comboName))))
+      .join(tDim, col("t_name") === col("t_key"), "left")
+      .withColumn("t_rid",
+        coalesce(col("t_dim_sid"), concat(lit("cgi:"), col("t_name"))))
+      .select(col("rowId"), col("t_name"), col("t_dim_sid"), col("t_rid"))
+    withCached(parsed, drugs) {
+      val newTherapies = drugs.filter(col("t_dim_sid").isNull)
+        .select(col("t_rid").as("sourceId"), col("t_name").as("name"),
+          lit("cancer genome interpreter").as("source"))
+        .distinct()
+      val tCounts = store.merge("therapies", newTherapies,
+        keyCols = Seq("sourceId"), compareCols = Seq("name", "source"))
 
-        // ---- statements: one per combo, rows passing both resolves
-        val evid = parsed.filter(col("kind") === "evidence")
-          .select(col("rowId"),
-            when(col("value") === "", "cancer genome interpreter")
-              .otherwise(col("value")).as("evidence"))
-        val ok = rowMeta.filter(col("rel_term").isNotNull && col("d_sid").isNotNull)
-        val combos = parsed.filter(col("kind") === "combo")
-          .join(ok.select(col("rowId"), col("rel_term"), col("d_sid")), Seq("rowId"))
-          .join(drugs.select(col("rowId"), col("t_rid")), Seq("rowId"))
-          .join(evid, Seq("rowId"))
-        combos.persist()
-        try {
-          val vCounts = store.merge("variants",
-            combos.select(explode(split(col("value"), " AND ")).as("vid"))
-              .distinct()
-              .select(col("vid"), lit("cgi").as("form"), col("vid").as("notation")),
-            keyCols = Seq("vid"), compareCols = Seq("form", "notation"))
-          val sCounts = store.merge("statements",
-            combos.select(
-              concat(col("rowId"), lit(":"), col("comboIdx")).as("sourceId"),
-              col("rel_term").as("relevance"), col("t_rid").as("subject"),
-              sort_array(concat(split(col("value"), " AND "),
-                array(col("d_sid"), col("t_rid")))).as("conditions"),
-              col("evidence").as("description")),
-            keyCols = Seq("sourceId"),
-            compareCols = Seq("relevance", "subject", "description"),
-            setCols = Seq("conditions"))
-          val errorRows = parseErrorIds
-            .unionByName(rowMeta
-              .filter(col("rel_term").isNull || col("d_sid").isNull)
-              .select(col("rowId")))
-            .distinct().count()
-          sCounts ++
-            vCounts.map { case (k, v) => s"variants_$k" -> v } ++
-            tCounts.map { case (k, v) => s"therapies_$k" -> v } +
-            ("errors" -> errorRows)
-        } finally combos.unpersist()
-      } finally drugs.unpersist()
-    } finally parsed.unpersist()
+      // ---- statements: one per combo, rows passing both resolves
+      val evid = parsed.filter(col("kind") === "evidence")
+        .select(col("rowId"),
+          when(col("value") === "", "cancer genome interpreter")
+            .otherwise(col("value")).as("evidence"))
+      val ok = rowMeta.filter(col("rel_term").isNotNull && col("d_sid").isNotNull)
+      val combos = parsed.filter(col("kind") === "combo")
+        .join(ok.select(col("rowId"), col("rel_term"), col("d_sid")), Seq("rowId"))
+        .join(drugs.select(col("rowId"), col("t_rid")), Seq("rowId"))
+        .join(evid, Seq("rowId"))
+      withCached(combos) {
+        val vCounts = store.merge("variants",
+          combos.select(explode(split(col("value"), " AND ")).as("vid"))
+            .distinct()
+            .select(col("vid"), lit("cgi").as("form"), col("vid").as("notation")),
+          keyCols = Seq("vid"), compareCols = Seq("form", "notation"))
+        val sCounts = store.merge("statements",
+          combos.select(
+            concat(col("rowId"), lit(":"), col("comboIdx")).as("sourceId"),
+            col("rel_term").as("relevance"), col("t_rid").as("subject"),
+            sort_array(concat(split(col("value"), " AND "),
+              array(col("d_sid"), col("t_rid")))).as("conditions"),
+            col("evidence").as("description")),
+          keyCols = Seq("sourceId"),
+          compareCols = Seq("relevance", "subject", "description"),
+          setCols = Seq("conditions"))
+        val errorRows = parseErrorIds
+          .unionByName(rowMeta
+            .filter(col("rel_term").isNull || col("d_sid").isNull)
+            .select(col("rowId")))
+          .distinct().count()
+        sCounts ++
+          vCounts.map { case (k, v) => s"variants_$k" -> v } ++
+          tCounts.map { case (k, v) => s"therapies_$k" -> v } +
+          ("errors" -> errorRows)
+      }
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.HgvsParser
 
@@ -154,8 +155,7 @@ object Cgl {
       .filter(col("dim_sid").isNotNull)
       .withColumn("vid", concat(col("dim_sid"), lit(":"), col("notation"),
         lit("@"), col("term")))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       val counts = store.merge("variants",
         resolved.select(col("vid"), col("form"), col("notation"), col("term"),
           col("break1"), col("dim_sid").as("reference1"), col("assembly"))
@@ -193,6 +193,6 @@ object Cgl {
       val errors = best.filter(col("condition").isNull).count()
       counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
         sc.map { case (k, v) => s"statements_$k" -> v } + ("error" -> errors)
-    } finally resolved.unpersist()
+    }
   }
 }

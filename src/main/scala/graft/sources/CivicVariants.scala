@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.{CivicNames, HgvsParser}
 
@@ -76,45 +77,40 @@ object CivicVariants {
     import spark.implicits._
     val rsPat = "^\\s*rs[0-9]+\\s*$" // names are already lowercased
     val h0 = hydrated(spark, path)
-    // persist only when the rsID hook consumes h0 twice (the rs split +
-    // the remainder); try/finally below guarantees the unpersist even when
-    // the rsID loader or a merge throws (matching Snp.fetchAndLoad's
-    // persist hygiene — a leaked cached frame squeezes executor storage
-    // for the rest of the session)
-    val persisted = rsidLoad.isDefined
-    if (persisted) h0.persist()
-    try {
-    val (h, rsCounts) = rsidLoad match {
-      case Some(loader) =>
-        val isRs = !col("positional") && col("vtype").rlike(rsPat)
-        val ids = h0.filter(isRs).select(trim(col("vtype"))).distinct().as[String]
-        val counts = loader(ids).map { case (k, v) => s"rsid_$k" -> v }
-        (h0.filter(!isRs), counts)
-      case None => (h0, Map.empty[String, Long])
+    // cached only when the rsID hook consumes h0 twice (the rs split +
+    // the remainder)
+    withCached((if (rsidLoad.isDefined) Seq(h0) else Nil): _*) {
+      val (h, rsCounts) = rsidLoad match {
+        case Some(loader) =>
+          val isRs = !col("positional") && col("vtype").rlike(rsPat)
+          val ids = h0.filter(isRs).select(trim(col("vtype"))).distinct().as[String]
+          val counts = loader(ids).map { case (k, v) => s"rsid_$k" -> v }
+          (h0.filter(!isRs), counts)
+        case None => (h0, Map.empty[String, Long])
+      }
+      val civicTerms = vocab.filter(col("source") === "civic")
+        .select(col("name").as("vtype"), col("term_id").as("civic_term"))
+      val anyTerms = vocab.groupBy(col("name").as("vtype"))
+        .agg(min(col("term_id")).as("any_term"))
+      val typed = h
+        .join(broadcast(civicTerms), Seq("vtype"), "left")
+        .join(broadcast(anyTerms), Seq("vtype"), "left")
+        .withColumn("term", coalesce(col("civic_term"), col("any_term")))
+      val feats = typed.select(
+        coalesce(col("geneSourceId"), col("geneName")).as("sourceId"),
+        col("geneName").as("name")).distinct()
+      val fc = store.merge(featuresTable, feats, Seq("sourceId"), Seq("name"))
+      // variant identity = reference + notation + type term (vid), the
+      // shared-variants-table key every loader agrees on
+      val variants = typed.select(col("notation"), col("positional"),
+        col("term"), col("break1"),
+        coalesce(col("geneSourceId"), col("geneName")).as("reference1"))
+        .withColumn("vid", concat(col("reference1"), lit(":"),
+          col("notation"), lit("@"), col("term")))
+      val vc = store.merge(variantsTable, variants, Seq("vid"),
+        Seq("notation", "positional", "term", "break1", "reference1"))
+      fc.map { case (k, v) => s"features_$k" -> v } ++
+        vc.map { case (k, v) => s"variants_$k" -> v } ++ rsCounts
     }
-    val civicTerms = vocab.filter(col("source") === "civic")
-      .select(col("name").as("vtype"), col("term_id").as("civic_term"))
-    val anyTerms = vocab.groupBy(col("name").as("vtype"))
-      .agg(min(col("term_id")).as("any_term"))
-    val typed = h
-      .join(broadcast(civicTerms), Seq("vtype"), "left")
-      .join(broadcast(anyTerms), Seq("vtype"), "left")
-      .withColumn("term", coalesce(col("civic_term"), col("any_term")))
-    val feats = typed.select(
-      coalesce(col("geneSourceId"), col("geneName")).as("sourceId"),
-      col("geneName").as("name")).distinct()
-    val fc = store.merge(featuresTable, feats, Seq("sourceId"), Seq("name"))
-    // variant identity = reference + notation + type term (vid), the
-    // shared-variants-table key every loader agrees on
-    val variants = typed.select(col("notation"), col("positional"),
-      col("term"), col("break1"),
-      coalesce(col("geneSourceId"), col("geneName")).as("reference1"))
-      .withColumn("vid", concat(col("reference1"), lit(":"),
-        col("notation"), lit("@"), col("term")))
-    val vc = store.merge(variantsTable, variants, Seq("vid"),
-      Seq("notation", "positional", "term", "break1", "reference1"))
-    fc.map { case (k, v) => s"features_$k" -> v } ++
-      vc.map { case (k, v) => s"variants_$k" -> v } ++ rsCounts
-    } finally { if (persisted) h0.unpersist() }
   }
 }

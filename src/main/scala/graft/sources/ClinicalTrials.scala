@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.functions.Scalars
 
@@ -143,8 +144,7 @@ object ClinicalTrials {
       therapyDim: DataFrame, diseaseDim: DataFrame): Map[String, Long] = {
     val processed = processWithLinks(convert(Scans.json(spark, path)),
       therapyDim, diseaseDim)
-    processed.persist()
-    try {
+    withCached(processed) {
       val counts = store.merge("trials",
         processed.select(col("sourceId"), col("sourceIdVersion"), col("name"),
           col("displayName"), col("recruitmentStatus"), col("phase"),
@@ -158,6 +158,6 @@ object ClinicalTrials {
         processed.select(col("sourceId").as("in"), explode(col("links")).as("out"))
           .select(col("out"), col("in"), lit("ElementOf").as("edgeClass")))
       counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-    } finally processed.unpersist()
+    }
   }
 }

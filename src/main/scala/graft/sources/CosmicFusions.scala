@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
 
@@ -80,91 +81,82 @@ object CosmicFusions {
   def loadDf(spark: SparkSession, store: PersistentGraphStore,
       rows: DataFrame, diseases: DataFrame): Map[String, Long] = {
     val pre = preprocess(rows)
-    pre.persist()
-    try {
-      val disDim = broadcast(diseases.select(col("name").as("diseaseName"),
-        col("sourceId").as("disease_sid")))
-      // disease resolve: level 2 overridden to cancer; else name-first
-      // (sub-disease preferred over the family)
-      def resolve(w: DataFrame, level: Int): DataFrame =
-        w.withColumn("diseaseName", if (level == 2) lit("cancer")
-            else coalesce(nullif(col("rep.rep_disease"), lit("")),
-              nullif(col("rep.rep_family"), lit(""))))
-          .join(disDim, Seq("diseaseName"), "left")
-          .select(lit(level).as("level"), col("n_samples"), col("rep"),
-            col("disease_sid"))
+    val disDim = broadcast(diseases.select(col("name").as("diseaseName"),
+      col("sourceId").as("disease_sid")))
+    // disease resolve: level 2 overridden to cancer; else name-first
+    // (sub-disease preferred over the family)
+    def resolve(w: DataFrame, level: Int): DataFrame =
+      w.withColumn("diseaseName", if (level == 2) lit("cancer")
+          else coalesce(nullif(col("rep.rep_disease"), lit("")),
+            nullif(col("rep.rep_family"), lit(""))))
+        .join(disDim, Seq("diseaseName"), "left")
+        .select(lit(level).as("level"), col("n_samples"), col("rep"),
+          col("disease_sid"))
 
-      val r0 = resolve(
-        winners(pre, Seq("variant", "diseaseFamily", "disease")), 0)
-      r0.persist()
-      val s0 = r0.filter(col("disease_sid").isNotNull)
-      // suppression: only a SUCCESSFULLY processed winner blocks its
-      // representative's less-specific groups (the reference's blocking
-      // step sits after the await, skipped when the group errors)
-      // the blocked-key frames are threshold-passing GROUP KEYS — bounded
-      // by the distinct recurrent (variant, disease) combinations, but
-      // data-derived and corpus-growing, so the broadcast decision is
-      // left to AQE's runtime size check rather than pinned with a hint
-      val blocked1 = s0.select(
-        col("rep.rep_nonspec").as("nonSpecificVariant"),
-        col("rep.rep_family").as("diseaseFamily"),
-        col("rep.rep_disease").as("disease"))
-      val r1 = resolve(
-        winners(pre, Seq("nonSpecificVariant", "diseaseFamily", "disease"))
-          .join(blocked1,
-            Seq("nonSpecificVariant", "diseaseFamily", "disease"), "left_anti"),
-        1)
-      r1.persist()
-      val s1 = r1.filter(col("disease_sid").isNotNull)
-      val blocked2 = s0.select(col("rep.rep_nonspec").as("nonSpecificVariant"))
-        .unionByName(s1.select(col("rep.rep_nonspec").as("nonSpecificVariant")))
-      val r2 = resolve(
-        winners(pre, Seq("nonSpecificVariant"))
-          .join(blocked2.distinct(),
-            Seq("nonSpecificVariant"), "left_anti"),
-        2)
-      r2.persist()
-      val resolved = r0.unionByName(r1).unionByName(r2)
-      try {
-        // a disease miss errors the group BEFORE any variant is created
-        val live = resolved.filter(col("disease_sid").isNotNull)
-          .withColumn("general_vid", concat(col("rep.g1"), lit("::"),
-            col("rep.g2"), lit(":fusion")))
-          .withColumn("specific_vid", when(col("level") === 0,
-            concat(col("rep.g1"), lit("::"), col("rep.g2"), lit(":fus(e."),
-              col("rep.exon1"), lit(",e."), col("rep.exon2"), lit(")"))))
-        live.persist()
-        try {
-          val general = live.select(col("general_vid").as("vid"),
-            lit("category").as("form"), lit(null).cast("string").as("break1"),
-            lit(null).cast("string").as("break2"))
-          val specific = live.filter(col("specific_vid").isNotNull)
-            .select(col("specific_vid").as("vid"), lit("positional").as("form"),
-              concat(lit("e."), col("rep.exon1")).as("break1"),
-              concat(lit("e."), col("rep.exon2")).as("break2"))
-          val Seq(counts, e, sc) = store.writeAll(Seq(
-            Merge("variants",
-              general.unionByName(specific).dropDuplicates("vid"),
-              keyCols = Seq("vid"), compareCols = Seq("form", "break1", "break2")),
-            Edges(live.filter(col("specific_vid").isNotNull)
-              .select(col("specific_vid").as("out"), col("general_vid").as("in"),
-                lit("Infers").as("edgeClass")).distinct()),
-            Merge("statements",
-              live.select(col("rep.recId").as("sourceId"),
-                col("level").cast("long").as("level"),
-                lit("recurrent").as("relevance"),
-                coalesce(col("specific_vid"), col("general_vid")).as("condition"),
-                col("disease_sid").as("subject"),
-                col("n_samples").cast("long").as("n_samples")),
-              keyCols = Seq("sourceId"),
-              compareCols = Seq("level", "relevance", "condition", "subject",
-                "n_samples"))))
-          val errors = resolved.filter(col("disease_sid").isNull).count()
-          counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
-            sc.map { case (k, v) => s"statements_$k" -> v } +
-            ("error" -> errors)
-        } finally live.unpersist()
-      } finally { r0.unpersist(); r1.unpersist(); r2.unpersist() }
-    } finally pre.unpersist()
+    val r0 = resolve(
+      winners(pre, Seq("variant", "diseaseFamily", "disease")), 0)
+    val s0 = r0.filter(col("disease_sid").isNotNull)
+    // suppression: only a SUCCESSFULLY processed winner blocks its
+    // representative's less-specific groups (the reference's blocking
+    // step sits after the await, skipped when the group errors)
+    // the blocked-key frames are threshold-passing GROUP KEYS — bounded
+    // by the distinct recurrent (variant, disease) combinations, but
+    // data-derived and corpus-growing, so the broadcast decision is
+    // left to AQE's runtime size check rather than pinned with a hint
+    val blocked1 = s0.select(
+      col("rep.rep_nonspec").as("nonSpecificVariant"),
+      col("rep.rep_family").as("diseaseFamily"),
+      col("rep.rep_disease").as("disease"))
+    val r1 = resolve(
+      winners(pre, Seq("nonSpecificVariant", "diseaseFamily", "disease"))
+        .join(blocked1,
+          Seq("nonSpecificVariant", "diseaseFamily", "disease"), "left_anti"),
+      1)
+    val s1 = r1.filter(col("disease_sid").isNotNull)
+    val blocked2 = s0.select(col("rep.rep_nonspec").as("nonSpecificVariant"))
+      .unionByName(s1.select(col("rep.rep_nonspec").as("nonSpecificVariant")))
+    val r2 = resolve(
+      winners(pre, Seq("nonSpecificVariant"))
+        .join(blocked2.distinct(),
+          Seq("nonSpecificVariant"), "left_anti"),
+      2)
+    val resolved = r0.unionByName(r1).unionByName(r2)
+    // a disease miss errors the group BEFORE any variant is created
+    val live = resolved.filter(col("disease_sid").isNotNull)
+      .withColumn("general_vid", concat(col("rep.g1"), lit("::"),
+        col("rep.g2"), lit(":fusion")))
+      .withColumn("specific_vid", when(col("level") === 0,
+        concat(col("rep.g1"), lit("::"), col("rep.g2"), lit(":fus(e."),
+          col("rep.exon1"), lit(",e."), col("rep.exon2"), lit(")"))))
+    withCached(pre, r0, r1, r2, live) {
+      val general = live.select(col("general_vid").as("vid"),
+        lit("category").as("form"), lit(null).cast("string").as("break1"),
+        lit(null).cast("string").as("break2"))
+      val specific = live.filter(col("specific_vid").isNotNull)
+        .select(col("specific_vid").as("vid"), lit("positional").as("form"),
+          concat(lit("e."), col("rep.exon1")).as("break1"),
+          concat(lit("e."), col("rep.exon2")).as("break2"))
+      val Seq(counts, e, sc) = store.writeAll(Seq(
+        Merge("variants",
+          general.unionByName(specific).dropDuplicates("vid"),
+          keyCols = Seq("vid"), compareCols = Seq("form", "break1", "break2")),
+        Edges(live.filter(col("specific_vid").isNotNull)
+          .select(col("specific_vid").as("out"), col("general_vid").as("in"),
+            lit("Infers").as("edgeClass")).distinct()),
+        Merge("statements",
+          live.select(col("rep.recId").as("sourceId"),
+            col("level").cast("long").as("level"),
+            lit("recurrent").as("relevance"),
+            coalesce(col("specific_vid"), col("general_vid")).as("condition"),
+            col("disease_sid").as("subject"),
+            col("n_samples").cast("long").as("n_samples")),
+          keyCols = Seq("sourceId"),
+          compareCols = Seq("level", "relevance", "condition", "subject",
+            "n_samples"))))
+      val errors = resolved.filter(col("disease_sid").isNull).count()
+      counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
+        sc.map { case (k, v) => s"statements_$k" -> v } +
+        ("error" -> errors)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.HgvsParser
 
@@ -85,8 +86,7 @@ object CosmicResistance {
       .filter(col("ref_sid").isNotNull)
       .withColumn("vid", concat(col("ref_sid"), lit(":"), col("notation"),
         lit("@"), coalesce(col("term"), lit("-"))))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       val counts = store.merge("variants",
         resolved.select(col("vid"), col("form"), col("notation"),
           col("term"), col("break1"), col("ref_sid").as("reference1"),
@@ -123,6 +123,6 @@ object CosmicResistance {
           .unionByName(catalogTo).withColumn("edgeClass", lit("Infers"))
           .distinct())
       counts ++ e.map { case (k, v) => s"edges_$k" -> v }
-    } finally resolved.unpersist()
+    }
   }
 }

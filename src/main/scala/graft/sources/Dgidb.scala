@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** DGIdb drug-gene interaction loader (reference src/dgidb/index.js:
@@ -37,8 +38,7 @@ object Dgidb {
     val joined = recs
       .join(broadcast(g), Seq("entrezId"), "left")
       .join(broadcast(d), Seq("chemblId"), "left")
-    joined.persist()
-    try {
+    withCached(joined) {
       val ok = joined.filter(col("gene_ok").isNotNull && col("drug_ok").isNotNull)
       val e = store.upsertEdges(ok.select(
         col("entrezId").as("out"), col("chemblId").as("in"),
@@ -48,6 +48,6 @@ object Dgidb {
         .filter(col("gene_ok").isNull || col("drug_ok").isNull).count()
       Map("success" -> (joined.count() - errors), "error" -> errors) ++
         e.map { case (k, v) => s"edges_$k" -> v }
-    } finally joined.unpersist()
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.{DocmFixes, HgvsParser}
 
@@ -82,8 +83,7 @@ object Docm {
       .join(broadcast(anyTerms), Seq("vtype"), "left")
       .withColumn("vid", concat(col("ref_sid"), lit(":"), col("notation"),
         lit("@"), col("term")))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       // protein-side failure fails the record; genomic-side failure only
       // loses the genomic variant + edge
       // badRecs is a RECORD-id set (row-proportional) — no broadcast
@@ -108,6 +108,6 @@ object Docm {
       val errors = badRecs.count()
       counts ++ e.map { case (k, v) => s"edges_$k" -> v } +
         ("record_errors" -> errors)
-    } finally resolved.unpersist()
+    }
   }
 }

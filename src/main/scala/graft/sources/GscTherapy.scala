@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** GSC therapeutic (drug-class) ontology loader (reference
@@ -93,85 +94,80 @@ object GscTherapy {
       .join(ch, Seq("name"), "left")
       .withColumn("drug_rid",
         coalesce(col("db_rid"), col("ch_rid"), concat(lit("gsct:"), col("name"))))
-    withDrug.persist()
-    try {
-      // ---- record-creation candidates, in the reference's creation order
-      val drugCands = withDrug
-        .filter(col("db_rid").isNull && col("ch_rid").isNull)
-        .select(col("rowId"), lit(0).as("site"), col("name").as("term"),
-          tagsFor(col("name")).as("subsets"))
-      val classCands = Seq(("parent", 1), ("grandparent1", 2), ("grandparent2", 3))
-        .map { case (c, site) =>
-          withDrug.filter(col(c) =!= "")
-            .select(col("rowId"), lit(site).as("site"), col(c).as("term"),
-              tagsFor(col(c)).as("subsets"))
-        }.reduce(_ unionByName _)
-      val aliasTerms = withDrug
-        .select(col("rowId"), col("name"), col("drug_rid"),
-          explode(split(col("alias"), "\\s*,\\s*")).as("term"))
-        .filter(col("term") =!= "" && col("term") =!= col("name"))
-        .join(db.withColumnRenamed("name", "term")
-          .withColumnRenamed("db_rid", "a_db_rid"), Seq("term"), "left")
-        .join(ch.withColumnRenamed("name", "term")
-          .withColumnRenamed("ch_rid", "a_ch_rid"), Seq("term"), "left")
-        .withColumn("alias_rid", coalesce(col("a_db_rid"), col("a_ch_rid"),
-          concat(lit("gsct:"), col("term"))))
-      aliasTerms.persist()
-      try {
-        val aliasCands = aliasTerms
-          .filter(col("a_db_rid").isNull && col("a_ch_rid").isNull)
-          .select(col("rowId"), lit(4).as("site"), col("term"),
-            array().cast("array<string>").as("subsets"))
+    // ---- record-creation candidates, in the reference's creation order
+    val drugCands = withDrug
+      .filter(col("db_rid").isNull && col("ch_rid").isNull)
+      .select(col("rowId"), lit(0).as("site"), col("name").as("term"),
+        tagsFor(col("name")).as("subsets"))
+    val classCands = Seq(("parent", 1), ("grandparent1", 2), ("grandparent2", 3))
+      .map { case (c, site) =>
+        withDrug.filter(col(c) =!= "")
+          .select(col("rowId"), lit(site).as("site"), col(c).as("term"),
+            tagsFor(col(c)).as("subsets"))
+      }.reduce(_ unionByName _)
+    val aliasTerms = withDrug
+      .select(col("rowId"), col("name"), col("drug_rid"),
+        explode(split(col("alias"), "\\s*,\\s*")).as("term"))
+      .filter(col("term") =!= "" && col("term") =!= col("name"))
+      .join(db.withColumnRenamed("name", "term")
+        .withColumnRenamed("db_rid", "a_db_rid"), Seq("term"), "left")
+      .join(ch.withColumnRenamed("name", "term")
+        .withColumnRenamed("ch_rid", "a_ch_rid"), Seq("term"), "left")
+      .withColumn("alias_rid", coalesce(col("a_db_rid"), col("a_ch_rid"),
+        concat(lit("gsct:"), col("term"))))
+    withCached(withDrug, aliasTerms) {
+      val aliasCands = aliasTerms
+        .filter(col("a_db_rid").isNull && col("a_ch_rid").isNull)
+        .select(col("rowId"), lit(4).as("site"), col("term"),
+          array().cast("array<string>").as("subsets"))
 
-        // first-creation-wins subsets (existsOk fetch on later encounters)
-        val records = drugCands.unionByName(classCands).unionByName(aliasCands)
-          .groupBy(col("term"))
-          .agg(min_by(col("subsets"), struct(col("rowId"), col("site"))).as("subsets"))
-          .select(col("term").as("sourceId"), col("term").as("name"),
-            lit(sourceName).as("source"), col("subsets"))
-        val counts = store.merge("therapies", records,
-          keyCols = Seq("sourceId", "name", "source"),
-          compareCols = Seq("subsets"))
+      // first-creation-wins subsets (existsOk fetch on later encounters)
+      val records = drugCands.unionByName(classCands).unionByName(aliasCands)
+        .groupBy(col("term"))
+        .agg(min_by(col("subsets"), struct(col("rowId"), col("site"))).as("subsets"))
+        .select(col("term").as("sourceId"), col("term").as("name"),
+          lit(sourceName).as("source"), col("subsets"))
+      val counts = store.merge("therapies", records,
+        keyCols = Seq("sourceId", "name", "source"),
+        compareCols = Seq("subsets"))
 
-        // ---- edges
-        val aliasEdges = aliasTerms.select(col("alias_rid").as("out"),
-          col("drug_rid").as("in"), lit("aliasof").as("edgeClass"))
-        val drugParent = withDrug.filter(col("parent") =!= "" &&
-            col("drug_rid") =!= concat(lit("gsct:"), col("parent")))
-          .select(col("drug_rid").as("out"),
-            concat(lit("gsct:"), col("parent")).as("in"),
+      // ---- edges
+      val aliasEdges = aliasTerms.select(col("alias_rid").as("out"),
+        col("drug_rid").as("in"), lit("aliasof").as("edgeClass"))
+      val drugParent = withDrug.filter(col("parent") =!= "" &&
+          col("drug_rid") =!= concat(lit("gsct:"), col("parent")))
+        .select(col("drug_rid").as("out"),
+          concat(lit("gsct:"), col("parent")).as("in"),
+          lit("subclassof").as("edgeClass"))
+      val parentGp = Seq("grandparent1", "grandparent2").map { c =>
+        withDrug.filter(col("parent") =!= "" && col(c) =!= "" &&
+            col("parent") =!= col(c))
+          .select(concat(lit("gsct:"), col("parent")).as("out"),
+            concat(lit("gsct:"), col(c)).as("in"),
             lit("subclassof").as("edgeClass"))
-        val parentGp = Seq("grandparent1", "grandparent2").map { c =>
-          withDrug.filter(col("parent") =!= "" && col(c) =!= "" &&
-              col("parent") =!= col(c))
-            .select(concat(lit("gsct:"), col("parent")).as("out"),
-              concat(lit("gsct:"), col(c)).as("in"),
-              lit("subclassof").as("edgeClass"))
-        }.reduce(_ unionByName _)
-        // addDrugClass: class record → same-name drugbank drug
-        val classXref = classCands.select(col("term")).distinct()
-          .join(db.withColumnRenamed("name", "term"), Seq("term"))
-          .select(concat(lit("gsct:"), col("term")).as("out"),
-            col("db_rid").as("in"), lit("crossreferenceof").as("edgeClass"))
-        // DrugBankID mapping: hit → crossref unless same rid; miss → error
-        val dbIdRows = withDrug
-          .filter(col("drugbankId").rlike("(?i)^DB\\d+$"))
-          .join(dbById, lower(col("drugbankId")) === col("db_id"), "left")
-        dbIdRows.persist()
-        try {
-          val dbIdXref = dbIdRows
-            .filter(col("dbid_rid").isNotNull && col("dbid_rid") =!= col("drug_rid"))
-            .select(col("drug_rid").as("out"), col("dbid_rid").as("in"),
-              lit("crossreferenceof").as("edgeClass"))
-          val errors = dbIdRows.filter(col("dbid_rid").isNull).count()
+      }.reduce(_ unionByName _)
+      // addDrugClass: class record → same-name drugbank drug
+      val classXref = classCands.select(col("term")).distinct()
+        .join(db.withColumnRenamed("name", "term"), Seq("term"))
+        .select(concat(lit("gsct:"), col("term")).as("out"),
+          col("db_rid").as("in"), lit("crossreferenceof").as("edgeClass"))
+      // DrugBankID mapping: hit → crossref unless same rid; miss → error
+      val dbIdRows = withDrug
+        .filter(col("drugbankId").rlike("(?i)^DB\\d+$"))
+        .join(dbById, lower(col("drugbankId")) === col("db_id"), "left")
+      withCached(dbIdRows) {
+        val dbIdXref = dbIdRows
+          .filter(col("dbid_rid").isNotNull && col("dbid_rid") =!= col("drug_rid"))
+          .select(col("drug_rid").as("out"), col("dbid_rid").as("in"),
+            lit("crossreferenceof").as("edgeClass"))
+        val errors = dbIdRows.filter(col("dbid_rid").isNull).count()
 
-          val edges = store.upsertEdges(
-            aliasEdges.unionByName(drugParent).unionByName(parentGp)
-              .unionByName(classXref).unionByName(dbIdXref))
-          counts ++ edges.map { case (k, v) => s"edges_$k" -> v } +
-            ("errors" -> errors)
-        } finally dbIdRows.unpersist()
-      } finally aliasTerms.unpersist()
-    } finally withDrug.unpersist()
+        val edges = store.upsertEdges(
+          aliasEdges.unionByName(drugParent).unionByName(parentGp)
+            .unionByName(classXref).unionByName(dbIdXref))
+        counts ++ edges.map { case (k, v) => s"edges_$k" -> v } +
+          ("errors" -> errors)
+      }
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** End-to-end loader slice (SURVEY §7.2 step 3): scan → normalize →
@@ -225,9 +226,9 @@ object Loaders {
   def loadDrugbankFull(spark: SparkSession, store: PersistentGraphStore,
       path: String, fdaDim: DataFrame, chemblDim: DataFrame,
       geneDim: DataFrame): Map[String, Long] = {
-    val all = drugbankRecords(spark, path).persist()
+    val all = drugbankRecords(spark, path)
     val recs = all.filter(col("sourceId").isNotNull && col("sourceId") =!= "")
-    try {
+    withCached(all) {
       val errors = all.count() - recs.count()
       def rid(id: org.apache.spark.sql.Column, nm: org.apache.spark.sql.Column) =
         concat_ws("|", id, nm)
@@ -318,7 +319,7 @@ object Loaders {
           .unionByName(targetOf).unionByName(drugAtc).unionByName(atcLadder))
       val base = counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
       if (errors > 0) base + ("error" -> errors) else base
-    } finally { all.unpersist(); () }
+    }
   }
 
   /** Seed vocabulary terms (the DAG root). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.HgvsParser
 
@@ -157,8 +158,7 @@ object Moa {
       // same variant from two assertions — addVariant existsOk dedup
       .withColumn("vid", concat(col("ref_sid"), lit(":"), col("notation"),
         lit("@"), col("term")))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       val counts = store.merge("variants",
         resolved.select(col("vid"), col("form"), col("notation"),
           col("term"), col("break1"), col("ref_sid").as("reference1"),
@@ -175,6 +175,6 @@ object Moa {
           lit("Infers").as("edgeClass"))
       val e = store.upsertEdges(infers)
       counts ++ e.map { case (k, v) => s"edges_$k" -> v }
-    } finally resolved.unpersist()
+    }
   }
 }

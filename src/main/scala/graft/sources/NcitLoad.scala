@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
 
@@ -183,13 +184,12 @@ object NcitLoad {
   def loadFrom(spark: SparkSession, store: PersistentGraphStore,
       raw: DataFrame): Map[String, Long] = {
     val r = resolvedFrom(stagedFrom(spark, raw).toDF())
-    r.persist()
-    try {
+    withCached(r) {
       val Seq(counts, e) = store.writeAll(Seq(
         Merge("terms", vertices(r), keyCols = Seq("sourceId", "name"),
           compareCols = Seq("displayName", "endpoint", "alias")),
         Edges(edges(r))))
       counts ++ e.map { case (k, v) => s"edges_$k" -> v }
-    } finally { r.unpersist(); () }
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.{HgvsParser, OncoKbNames}
 
@@ -109,8 +110,7 @@ object OncoKb {
       .withColumn("vid", concat_ws("", col("r1"),
         when(col("r2").isNotNull, concat(lit("::"), col("r2"))),
         lit(":"), col("notation"), lit("@"), col("term")))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       val live = resolved.filter(!col("err"))
       val counts = store.merge("variants",
         live.select(col("vid"),
@@ -121,6 +121,6 @@ object OncoKb {
         keyCols = Seq("vid"),
         compareCols = Seq("form", "notation", "term", "reference1", "reference2"))
       counts + ("error" -> resolved.filter(col("err")).count())
-    } finally resolved.unpersist()
+    }
   }
 }

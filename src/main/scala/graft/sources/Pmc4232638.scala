@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.variant.HgvsParser
 
@@ -96,8 +97,7 @@ object Pmc4232638 {
         col("relevance") === col("name"), "left").drop("name")
       .withColumn("vid", concat(col("gene_sid"), lit(":"), col("notation"),
         lit("@"), col("type_term")))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       val counts = store.merge("variants",
         resolved.select(col("vid"), col("notation"), col("type_term"),
           col("break1"), col("gene_sid").as("reference1"))
@@ -117,6 +117,6 @@ object Pmc4232638 {
         compareCols = Seq("relevance", "subject", "comment"),
         setCols = Seq("conditions", "evidence"))
       counts ++ sc.map { case (k, v) => s"statements_$k" -> v }
-    } finally resolved.unpersist()
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** PMC4468049 recurrent-fusions loader (reference
@@ -64,8 +65,7 @@ object Pmc4468049 {
       .join(broadcast(geneDim.withColumnRenamed("symbol", "geneB")
         .withColumnRenamed("gene_sid", "sidB")), Seq("geneB"), "left")
       .crossJoin(broadcast(fusionTerm))
-    resolved.persist()
-    try {
+    withCached(resolved) {
       // specific-code disease miss → skip; gene miss → error
       val skips = resolved.filter(col("disease_sid").isNull).count()
       val withDisease = resolved.filter(col("disease_sid").isNotNull)
@@ -91,6 +91,6 @@ object Pmc4468049 {
         setCols = Seq("conditions"))
       counts ++ sc.map { case (k, v) => s"statements_$k" -> v } +
         ("skip" -> (skips + lowFreq)) + ("error" -> errors)
-    } finally resolved.unpersist()
+    }
   }
 }

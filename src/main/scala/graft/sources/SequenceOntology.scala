@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** Sequence Ontology loader (reference src/sequenceOntology.js:82-133):
@@ -93,28 +94,24 @@ object SequenceOntology {
   def load(spark: SparkSession, store: PersistentGraphStore,
       path: String, table: String = "vocabulary"): Map[String, Long] = {
     val triples = soTriples(spark, path)
-    triples.persist()
-    try {
-      val recs = records(triples)
-      recs.persist()
-      try {
-        val labeled = terms(recs)
-        val counts = store.merge(table, labeled,
-          keyCols = Seq("sourceId", "name"),
-          compareCols = Seq("description", "deprecated"))
-        val codes = broadcast(labeled.select(col("sourceId")).distinct())
-        val cands = subclassCandidates(triples)
-          .select(lower(col("out")).as("out"), lower(col("in")).as("in"))
-        val good = cands
-          .join(codes.withColumnRenamed("sourceId", "out"), Seq("out"), "left_semi")
-          .join(codes.withColumnRenamed("sourceId", "in"), Seq("in"), "left_semi")
-          .select(col("out"), col("in"), lit("subclassof").as("edgeClass"))
-        val edges = store.upsertEdges(good)
-        val errors = recs.filter(col("label").isNull).count()
-        val drops = cands.count() - good.count()
-        counts ++ edges.map { case (k, v) => s"edges_$k" -> v } +
-          ("errors" -> errors) + ("edge_drops" -> drops)
-      } finally recs.unpersist()
-    } finally triples.unpersist()
+    val recs = records(triples)
+    withCached(triples, recs) {
+      val labeled = terms(recs)
+      val counts = store.merge(table, labeled,
+        keyCols = Seq("sourceId", "name"),
+        compareCols = Seq("description", "deprecated"))
+      val codes = broadcast(labeled.select(col("sourceId")).distinct())
+      val cands = subclassCandidates(triples)
+        .select(lower(col("out")).as("out"), lower(col("in")).as("in"))
+      val good = cands
+        .join(codes.withColumnRenamed("sourceId", "out"), Seq("out"), "left_semi")
+        .join(codes.withColumnRenamed("sourceId", "in"), Seq("in"), "left_semi")
+        .select(col("out"), col("in"), lit("subclassof").as("edgeClass"))
+      val edges = store.upsertEdges(good)
+      val errors = recs.filter(col("label").isNull).count()
+      val drops = cands.count() - good.count()
+      counts ++ edges.map { case (k, v) => s"edges_$k" -> v } +
+        ("errors" -> errors) + ("edge_drops" -> drops)
+    }
   }
 }

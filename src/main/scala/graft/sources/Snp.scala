@@ -5,6 +5,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.remote.EntrezBatch
 import graft.variant.HgvsParser
@@ -182,8 +183,8 @@ object Snp {
     // on every idempotent re-run (a pure re-load would otherwise cost the
     // whole merge cycle just to record zero changes)
     if (missing.isEmpty) return Map.empty
-    val parsed = parseSnp(EntrezBatch.fetchByIds(missing, snpFetcher)).persist()
-    try {
+    val parsed = parseSnp(EntrezBatch.fetchByIds(missing, snpFetcher))
+    withCached(parsed) {
       val catCounts = store.merge(catalogueTable,
         parsed.select(col("sourceId"), col("name"), col("displayName"),
           col("sourceIdVersion"), col("url")),
@@ -198,8 +199,8 @@ object Snp {
       val legs = parsed.select(col("sourceId"), col("name"), col("cds"),
         col("protein")).as[(String, String, String, String)]
         .flatMap { case (s, n, c, p) => legsOf(s, n, c, p) }
-        .toDF().persist()
-      try {
+        .toDF()
+      withCached(legs) {
         val parseErrors = legs.filter(col("err").isNotNull).count()
         val terms = vocab.groupBy(col("name").as("vtype"))
           .agg(min(col("term_id")).as("term"))
@@ -251,8 +252,8 @@ object Snp {
           .join(geneDim, col("ref1Resolved") === col("sourceId"), "left_semi")
           .join(refLegs.filter(col("leg") === "protein").select(col("snp").as("__ps")),
             col("snp") === col("__ps"), "left_semi")
-        val survivors = refLegs.unionByName(altLegs).persist()
-        try {
+        val survivors = refLegs.unionByName(altLegs)
+        withCached(survivors) {
           val refMisses = ok.count() - survivors.count()
           val vids = survivors.withColumn("vid",
             concat(col("ref1Resolved"), lit(":"), col("notation"),
@@ -289,8 +290,8 @@ object Snp {
             edgeCounts.map { case (k, v) => s"edges_$k" -> v } ++
             (if (errors > 0) Map("hgvs_errors" -> errors) else Map.empty) ++
             (if (misses > 0) Map("misses" -> misses) else Map.empty)
-        } finally { survivors.unpersist(); () }
-      } finally { legs.unpersist(); () }
-    } finally { parsed.unpersist(); () }
+        }
+      }
+    }
   }
 }

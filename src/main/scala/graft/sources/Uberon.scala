@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** Uberon anatomy ontology loader (reference src/uberon/index.js:36-207):
@@ -48,8 +49,7 @@ object Uberon {
   def load(spark: SparkSession, store: PersistentGraphStore, path: String,
       ncitDim: DataFrame, table: String = "anatomy"): Map[String, Long] = {
     val t = OwlScan.triples(spark, path)
-    t.persist()
-    try {
+    withCached(t) {
       val ents = entities(t)
       val counts = store.merge(table, ents, keyCols = Seq("sourceId"),
         compareCols = Seq("name", "description", "deprecated"),
@@ -76,6 +76,6 @@ object Uberon {
         .select(col("out"), col("in"), lit("crossreferenceof").as("edgeClass"))
       val e = store.upsertEdges(sub.unionByName(xref).distinct())
       counts ++ e.map { case (k, v) => s"edges_$k" -> v }
-    } finally t.unpersist()
+    }
   }
 }

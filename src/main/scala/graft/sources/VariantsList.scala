@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.remote.EntrezBatch
 import graft.variant.HgvsParser
@@ -66,69 +67,64 @@ object VariantsList {
     import spark.implicits._
 
     val parsed = parseLines(spark, Scans.textLines(spark, path))
-    parsed.persist()
-    try {
-      val wellFormed = parsed.filter(col("parseError").isNull)
-      val typed = wellFormed
-        .join(broadcast(vocab.select(col("name").as("vtype"),
-          col("term_id").as("term"))), Seq("vtype"), "left")
-      typed.persist()
-      try {
-        val withTerm = typed.filter(col("term").isNotNull)
+    val wellFormed = parsed.filter(col("parseError").isNull)
+    val typed = wellFormed
+      .join(broadcast(vocab.select(col("name").as("vtype"),
+        col("term_id").as("term"))), Seq("vtype"), "left")
+    withCached(parsed, typed) {
+      val withTerm = typed.filter(col("term").isNotNull)
 
-        // J9 by-symbol hydration: fetch only symbols absent from the
-        // gene-biotype slice of the dimension, upsert the fetched genes
-        val geneCols = Seq("biotype", "name", "displayName", "longName",
-          "description", "url")
-        // readLatest, not read: the second geneDim() call below must see
-        // the genes THIS loader just merged (read-your-own-writes), even
-        // under the orchestrator's level pin
-        def geneDim(): DataFrame = store.readLatest("genes")
-          .map(_.filter(col("biotype") === "gene").select(col("name"), col("sourceId")))
-          .getOrElse(Seq.empty[(String, String)].toDF("name", "sourceId"))
-        val symbols = withTerm.select(col("ref1").as("name"))
-          .unionByName(withTerm.filter(col("ref2").isNotNull)
-            .select(col("ref2").as("name")))
-          .distinct()
-        val missing = symbols.join(geneDim(), Seq("name"), "left_anti").as[String]
-        val fetched = EntrezBatch.fetchByIds(missing, geneFetcher)
-        store.merge("genes", Entrez.parseGene(fetched),
-          keyCols = Seq("sourceId"), compareCols = geneCols)
+      // J9 by-symbol hydration: fetch only symbols absent from the
+      // gene-biotype slice of the dimension, upsert the fetched genes
+      val geneCols = Seq("biotype", "name", "displayName", "longName",
+        "description", "url")
+      // readLatest, not read: the second geneDim() call below must see
+      // the genes THIS loader just merged (read-your-own-writes), even
+      // under the orchestrator's level pin
+      def geneDim(): DataFrame = store.readLatest("genes")
+        .map(_.filter(col("biotype") === "gene").select(col("name"), col("sourceId")))
+        .getOrElse(Seq.empty[(String, String)].toDF("name", "sourceId"))
+      val symbols = withTerm.select(col("ref1").as("name"))
+        .unionByName(withTerm.filter(col("ref2").isNotNull)
+          .select(col("ref2").as("name")))
+        .distinct()
+      val missing = symbols.join(geneDim(), Seq("name"), "left_anti").as[String]
+      val fetched = EntrezBatch.fetchByIds(missing, geneFetcher)
+      store.merge("genes", Entrez.parseGene(fetched),
+        keyCols = Seq("sourceId"), compareCols = geneCols)
 
-        val dim = broadcast(geneDim())
-        val resolved = withTerm
-          .join(dim.select(col("name").as("ref1"), col("sourceId").as("ref1_sid")),
-            Seq("ref1"), "left")
-          .join(dim.select(col("name").as("ref2"), col("sourceId").as("ref2_sid")),
-            Seq("ref2"), "left")
-        resolved.persist()
-        try {
-          val good = resolved.filter(col("ref1_sid").isNotNull &&
-            (col("ref2").isNull || col("ref2_sid").isNotNull))
-          // vid keys on the gene-resolved rid + the featureless HGVS tail
-          // (the feature prefix is already the rid), matching the other
-          // composed variant loaders' key convention
-          val variants = good.select(
-            concat(col("ref1_sid"),
-              when(col("ref2_sid").isNotNull, concat(lit("::"), col("ref2_sid")))
-                .otherwise(lit("")),
-              lit(":"), regexp_replace(col("notation"), "^[^:]*:", ""),
-              lit("@"), col("term")).as("vid"),
-            col("notation"), col("vtype"), col("term"),
-            col("ref1_sid").as("reference1"), col("ref2_sid").as("reference2"),
-            col("break1Repr").as("break1"), col("break2Repr").as("break2"))
-            .dropDuplicates("vid")
-          val counts = store.merge("variants", variants,
-            keyCols = Seq("vid"),
-            compareCols = Seq("notation", "vtype", "term", "reference1",
-              "reference2", "break1", "break2"))
-          val parseErrors = parsed.filter(col("parseError").isNotNull).count()
-          val vocabErrors = typed.filter(col("term").isNull).count()
-          val geneErrors = resolved.count() - good.count()
-          counts + ("parse_errors" -> parseErrors) +
-            ("vocab_errors" -> vocabErrors) + ("gene_errors" -> geneErrors)
-        } finally resolved.unpersist()
-      } finally typed.unpersist()
-    } finally parsed.unpersist()
+      val dim = broadcast(geneDim())
+      val resolved = withTerm
+        .join(dim.select(col("name").as("ref1"), col("sourceId").as("ref1_sid")),
+          Seq("ref1"), "left")
+        .join(dim.select(col("name").as("ref2"), col("sourceId").as("ref2_sid")),
+          Seq("ref2"), "left")
+      withCached(resolved) {
+        val good = resolved.filter(col("ref1_sid").isNotNull &&
+          (col("ref2").isNull || col("ref2_sid").isNotNull))
+        // vid keys on the gene-resolved rid + the featureless HGVS tail
+        // (the feature prefix is already the rid), matching the other
+        // composed variant loaders' key convention
+        val variants = good.select(
+          concat(col("ref1_sid"),
+            when(col("ref2_sid").isNotNull, concat(lit("::"), col("ref2_sid")))
+              .otherwise(lit("")),
+            lit(":"), regexp_replace(col("notation"), "^[^:]*:", ""),
+            lit("@"), col("term")).as("vid"),
+          col("notation"), col("vtype"), col("term"),
+          col("ref1_sid").as("reference1"), col("ref2_sid").as("reference2"),
+          col("break1Repr").as("break1"), col("break2Repr").as("break2"))
+          .dropDuplicates("vid")
+        val counts = store.merge("variants", variants,
+          keyCols = Seq("vid"),
+          compareCols = Seq("notation", "vtype", "term", "reference1",
+            "reference2", "break1", "break2"))
+        val parseErrors = parsed.filter(col("parseError").isNotNull).count()
+        val vocabErrors = typed.filter(col("term").isNull).count()
+        val geneErrors = resolved.count() - good.count()
+        counts + ("parse_errors" -> parseErrors) +
+          ("vocab_errors" -> vocabErrors) + ("gene_errors" -> geneErrors)
+      }
+    }
   }
 }

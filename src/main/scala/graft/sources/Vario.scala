@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 
 /** VariO loader (reference src/vario.js:45-105): OWL RDF/XML → vocabulary
@@ -60,13 +61,12 @@ object Vario {
   def load(spark: SparkSession, store: PersistentGraphStore,
       path: String, table: String = "vocabulary"): Map[String, Long] = {
     val triples = varioTriples(spark, path)
-    triples.persist()
-    try {
+    withCached(triples) {
       val labeled = terms(triples)
       val counts = store.merge(table, labeled,
         keyCols = Seq("sourceId"), compareCols = Seq("name", "description"))
       val edges = store.upsertEdges(subclassEdges(triples, labeled))
       counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-    } finally triples.unpersist()
+    }
   }
 }

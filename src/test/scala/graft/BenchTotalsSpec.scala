@@ -28,4 +28,13 @@ class BenchTotalsSpec extends AnyFunSuite {
     assert((ok.scaledTotal, ok.fixtureTotal, ok.total) ==
       ((t.scaledTotal, t.fixtureTotal, t.total)))
   }
+
+  test("an even sample count takes the mean of the two middle samples") {
+    assert(Bench.median(Seq(3.0, 1.0)) == 2.0)
+    assert(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
+    assert(Bench.median(Seq(3.0, 1.0, 2.0)) == 2.0)
+    val t = Bench.totals(Map("h" -> Seq(3.0, 1.0)), Seq("h"), Nil, Nil)
+    assert(t.headline == Seq("h" -> Some(2.0)))
+    assert(t.scaledTotal == 2.0)
+  }
 }
