@@ -402,10 +402,10 @@ object Bench {
     // ≈ 0.4 s; a max >> median on either leg means an intra-run burst in
     // THAT dimension — read the file series to localize which rows it
     // bracketed (many-small-job rows move with the sched leg)
-    val sSorted = sentinelLog.map(_._2).sorted
-    val jSorted = sentinelLog.map(_._3).sorted
+    val sSorted = sentinelLog.map(_._2).toSeq.sorted
+    val jSorted = sentinelLog.map(_._3).toSeq.sorted
     if (sSorted.nonEmpty)
-      println(s"""{"metric":"sentinel","value":${r3(sSorted(sSorted.size / 2))},"unit":"sec","n":${sSorted.size},"min":${r3(sSorted.head)},"max":${r3(sSorted.last)},"sched_median":${r3(jSorted(jSorted.size / 2))},"sched_min":${r3(jSorted.head)},"sched_max":${r3(jSorted.last)}}""")
+      println(s"""{"metric":"sentinel","value":${r3(median(sSorted))},"unit":"sec","n":${sSorted.size},"min":${r3(sSorted.head)},"max":${r3(sSorted.last)},"sched_median":${r3(median(jSorted))},"sched_min":${r3(jSorted.head)},"sched_max":${r3(jSorted.last)}}""")
     println(summary)
   }
 }

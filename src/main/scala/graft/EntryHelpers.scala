@@ -67,14 +67,7 @@ private[graft] object EntryHelpers {
     */
   lazy val scratchRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => core.Fs.deleteRecursively(root)))
     root
   }
 

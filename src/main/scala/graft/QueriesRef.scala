@@ -1745,11 +1745,9 @@ private[graft] object QueriesRef {
       val r1 = orchestrate.FullCorpus.run(s, store, ncit)
       val r2 = orchestrate.FullCorpus.run(s, store, ncit)
       // a loader that failed or was skipped fails the row: a partial DAG
-      // must never read as a (faster) full one. One line per loader: a
-      // Spark failure's message carries the whole stack trace.
+      // must never read as a (faster) full one
       val bad = Seq("pass 1" -> r1, "pass 2" -> r2).flatMap { case (pass, r) =>
-        r.order.filterNot(r.succeeded.contains)
-          .map(n => s"$pass $n: ${r.statuses(n).toString.linesIterator.next()}")
+        r.order.filterNot(r.succeeded.contains).map(n => s"$pass $n: ${r.statuses(n)}")
       }
       if (bad.nonEmpty) throw new IllegalStateException(
         s"g14_full_dag: ${bad.size} loader runs did not succeed: ${bad.mkString("; ")}")

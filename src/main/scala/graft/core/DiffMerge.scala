@@ -19,7 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *  - each tier's match frame and both residues are persisted — the match
   *    frame feeds three consumers (result union + two anti-joins) and each
   *    residue feeds the next tier, so without persist the lineage is
-  *    recomputed per consumer and compounds per tier;
+  *    recomputed per consumer and compounds per tier. The result's lineage
+  *    reads those blocks, so they live until the session's cache is
+  *    cleared (Bench and Verify clear it after every row);
   *  - tier keys are expected to be tight (high-cardinality) — the per-key
   *    zip window sorts one key-group per task. Weak keys belong in the
   *    artificial final pass, NOT in a tier;
@@ -29,21 +31,6 @@ import org.apache.spark.storage.StorageLevel
   *    when the residue is large.
   */
 object DiffMerge {
-
-  /** Registry for the intermediate frames one `contentMatch` call persists
-    * (per-tier match + residues). A long-lived session running many diffs
-    * should pass a scope and `release()` it once the result has been
-    * materialized — otherwise the storage blocks live until the session's
-    * cache is cleared and squeeze execution memory.
-    */
-  final class PersistScope {
-    private val buf = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    private[core] def track(df: DataFrame): DataFrame = { buf += df; df }
-    /** Non-blocking unpersist of every tracked frame. Only call after the
-      * consuming action has run — the result's lineage reads these blocks.
-      */
-    def release(): Unit = { buf.foreach(_.unpersist(blocking = false)); buf.clear() }
-  }
 
   /** Deterministic dense global index: distributed sort by `idCol`, then
     * zipWithIndex (narrow, no second shuffle). Equivalent to
@@ -63,9 +50,6 @@ object DiffMerge {
     * @param artificialFinal  when true, the post-tier residues are globally
     *                  zip-paired (reference's artificial matching) with
     *                  tier = tiers.size + 1
-    * @param scope     registry for intermediate persists; callers running
-    *                  many diffs in one session should `release()` it after
-    *                  materializing the result
     * @return columns: incoming_id, existing_id, bucket, tier
     *         bucket ∈ match | create | delete;
     *         tier = 1-based tier index for matches, 0 for the 1×1
@@ -78,8 +62,7 @@ object DiffMerge {
       existingId: String,
       tiers: Seq[Seq[String]],
       artificialFinal: Boolean = false,
-      sizeHint: Option[(Long, Long)] = None,
-      scope: PersistScope = new PersistScope): DataFrame = {
+      sizeHint: Option[(Long, Long)] = None): DataFrame = {
 
     // 1 incoming × 1 existing auto-matches unconditionally — BEFORE any
     // key comparison and regardless of the matching flags
@@ -115,26 +98,26 @@ object DiffMerge {
         .select(col(incomingId), struct(keys.map(col): _*).as("__k"), col("__z"))
       val le = exRest.withColumn("__z", row_number().over(we))
         .select(col(existingId), struct(keys.map(col): _*).as("__k"), col("__z"))
-      val m = scope.track(li.join(le, Seq("__k", "__z"))
+      val m = li.join(le, Seq("__k", "__z"))
         .select(col(incomingId).as("incoming_id"), col(existingId).as("existing_id"),
           lit("match").as("bucket"), lit(i + 1).as("tier"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK)
       acc = Some(acc.map(_.unionByName(m)).getOrElse(m))
-      inRest = scope.track(inRest
+      inRest = inRest
         .join(m.select(col("incoming_id").as(incomingId)), Seq(incomingId), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK))
-      exRest = scope.track(exRest
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      exRest = exRest
         .join(m.select(col("existing_id").as(existingId)), Seq(existingId), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
     if (artificialFinal) {
       val zi = globalZipIndex(inRest, incomingId)
       val ze = globalZipIndex(exRest, existingId)
-      val m = scope.track(zi.join(ze, Seq("__z"))
+      val m = zi.join(ze, Seq("__z"))
         .select(col(incomingId).as("incoming_id"), col(existingId).as("existing_id"),
           lit("match").as("bucket"), lit(tiers.size + 1).as("tier"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK)
       acc = Some(acc.map(_.unionByName(m)).getOrElse(m))
       inRest = inRest
         .join(m.select(col("incoming_id").as(incomingId)), Seq(incomingId), "left_anti")

@@ -2,10 +2,25 @@ package graft.core
 
 import java.nio.file.{Files, Path}
 
-/** Tiny shared filesystem helpers — one copy of the walk-and-delete idiom
-  * instead of per-file clones (a symlink/retry fix must land once).
+import scala.jdk.CollectionConverters._
+
+/** Tiny shared filesystem helpers — one copy of the walk-and-delete and
+  * directory-listing idioms instead of per-file clones (a symlink/retry
+  * fix must land once).
   */
 object Fs {
+
+  /** The entries directly under `dir`; empty when `dir` is absent. The
+    * listing stream is closed before returning (an open one leaks a
+    * directory descriptor).
+    */
+  def list(dir: Path): Seq[Path] =
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val stream = Files.list(dir)
+      try stream.iterator().asScala.toList
+      finally stream.close()
+    }
 
   /** Delete `p` and everything under it; no-op when absent. */
   def deleteRecursively(p: Path): Unit = {

@@ -45,10 +45,11 @@ import graft.core.Cached.withCached
   * a pruned merge never scans untouched buckets, so their retained rows
   * are not counted as `noop`.
   *
-  * Concurrent writes: [[writeAll]] takes a loader's writes that do not
-  * read one another's tables and runs the writes to different tables at
-  * once, each table's writes in the order given, on threads started for
-  * that call (see there for why). A small write is mostly fixed per-job
+  * Concurrent writes: [[writeAll]] is a loader's whole store phase. It
+  * takes writes that do not read one another's tables, runs the writes to
+  * different tables at once through [[Concurrent.all]] (one lane per
+  * table, each table's writes in the order given) and returns the
+  * loader's one flat counter map. A small write is mostly fixed per-job
   * cost (bucket discovery, planning, a handful of tiny tasks), so one
   * write alone leaves most task slots idle; overlapped writes fill them.
   *
@@ -133,24 +134,15 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
 
   // ---- version / bucket resolution ---------------------------------------
 
-  private def versions(table: String): Seq[(Int, String)] = {
-    val dir = Paths.get(tableDir(table))
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val stream = Files.list(dir) // must be closed — leaks a directory fd otherwise
-      try {
-        val it = stream.iterator()
-        val buf = Seq.newBuilder[(Int, String)]
-        while (it.hasNext) {
-          val p = it.next()
-          val name = p.getFileName.toString
-          if (name.startsWith("v=") && Files.exists(p.resolve("_SUCCESS")))
-            buf += ((name.drop(2).toInt, p.toString))
-        }
-        buf.result().sortBy(_._1)
-      } finally stream.close()
-    }
-  }
+  private def versions(table: String): Seq[(Int, String)] =
+    Fs.list(Paths.get(tableDir(table))).collect {
+      case p if p.getFileName.toString.startsWith("v=") &&
+          Files.exists(p.resolve("_SUCCESS")) =>
+        (p.getFileName.toString.drop(2).toInt, p.toString)
+    }.sortBy(_._1)
+
+  private def tables: Seq[String] =
+    Fs.list(Paths.get(root)).filter(Files.isDirectory(_)).map(_.getFileName.toString)
 
   def latestVersion(table: String): Option[Int] = versions(table).lastOption.map(_._1)
 
@@ -169,25 +161,9 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   @volatile private var pinnedVersions: Option[Map[String, Int]] = None
 
   /** Capture the current per-table version ceiling for public reads. */
-  def pinVersions(): Unit = {
-    val dir = Paths.get(root)
-    val tables =
-      if (!Files.exists(dir)) Seq.empty[String]
-      else {
-        val stream = Files.list(dir)
-        try {
-          val it = stream.iterator()
-          val buf = Seq.newBuilder[String]
-          while (it.hasNext) {
-            val p = it.next()
-            if (Files.isDirectory(p)) buf += p.getFileName.toString
-          }
-          buf.result()
-        } finally stream.close()
-      }
+  def pinVersions(): Unit =
     pinnedVersions = Some(
       tables.map(t => t -> versions(t).lastOption.map(_._1).getOrElse(-1)).toMap)
-  }
 
   def unpinVersions(): Unit = pinnedVersions = None
 
@@ -218,18 +194,13 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     var done = false
     while (newestFirst.hasNext && !done) {
       val (_, vPath) = newestFirst.next()
-      val stream = Files.list(Paths.get(vPath))
-      try {
-        val it = stream.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val name = p.getFileName.toString
-          if (name.startsWith("__b=")) {
-            val b = name.drop(4).toInt
-            if (!seen.contains(b)) seen(b) = p.toString
-          }
+      Fs.list(Paths.get(vPath)).foreach { p =>
+        val name = p.getFileName.toString
+        if (name.startsWith("__b=")) {
+          val b = name.drop(4).toInt
+          if (!seen.contains(b)) seen(b) = p.toString
         }
-      } finally stream.close()
+      }
       done = Files.exists(Paths.get(vPath, "_FULL")) // full snapshot: stop layering
     }
     seen.toSeq.sortBy(_._1)
@@ -384,13 +355,13 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     val next = latestVersion(table).getOrElse(0) + 1
     val dir = Paths.get(f"${tableDir(table)}/v=$next%05d")
     val tmp = Paths.get(s"${tableDir(table)}/.tmp_v$next")
-    if (Files.exists(tmp)) deleteRecursively(tmp.toString)
+    Fs.deleteRecursively(tmp)
     plan.write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (keep) {
       if (full) Files.createFile(tmp.resolve("_FULL"))
       Files.move(tmp, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       Some(next)
-    } else { deleteRecursively(tmp.toString); None }
+    } else { Fs.deleteRecursively(tmp); None }
   }
 
   /** Fold every version layer of `table` into a single `_FULL` snapshot.
@@ -440,26 +411,12 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   def vacuum(table: String): Unit = {
     val vs = versions(table)
     newestSnapshot(vs).foreach { snap =>
-      vs.filter(_._1 < snap).foreach { case (_, p) => deleteRecursively(p) }
+      vs.filter(_._1 < snap).foreach { case (_, p) => Fs.deleteRecursively(p) }
     }
   }
 
   /** [[vacuum]] over every table in the store. */
-  def vacuumAll(): Unit = {
-    val dir = Paths.get(root)
-    if (Files.exists(dir)) {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (Files.isDirectory(p)) vacuum(p.getFileName.toString)
-        }
-      } finally stream.close()
-    }
-  }
-
-  private def deleteRecursively(dir: String): Unit = Fs.deleteRecursively(dir)
+  def vacuumAll(): Unit = tables.foreach(vacuum)
 
   /** Compact when the layer count passes the threshold — called after
     * every merge so the amortized read cost stays O(1) layers. Never
@@ -645,68 +602,51 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     merge("sources", source, keyCols = Seq("name"),
       compareCols = source.columns.filterNot(_ == "name").toSeq)
 
-  /** Run a loader's writes, none of which may read another's table: writes
-    * to different tables run at once, writes to one table run in the order
-    * given. Each write goes through the public [[merge]] or [[upsertEdges]],
-    * so a subclass sees every call. Returns each write's counters in input
-    * order once every write has finished. If any failed, rethrows the first
-    * failure in input order with the others attached as suppressed; a
-    * failed write skips the later writes to its table.
+  /** A loader's store phase: run `writes`, none of which may read another's
+    * table, and return the loader's counters as one flat map — each
+    * write's counters under its [[Write.prefix]], counters that share a
+    * prefix added up. Writes to different tables run at once, writes to
+    * one table run in the order given; each goes through the public
+    * [[merge]] or [[upsertEdges]], so a subclass sees every call. Returns
+    * once every write has finished. If any failed, rethrows the first
+    * table's failure (tables in the order of their first write) with the
+    * others attached as suppressed; a failed write skips the later writes
+    * to its table.
     *
-    * Each table's writes run on a thread started by the calling thread for
-    * this call, not on a shared pool: a new thread inherits the caller's
-    * Spark local properties (job group, scheduler pool, tracing tags), so
-    * every job the batch submits is attributed to the caller. A pooled
-    * thread would keep whatever properties it was created with.
+    * A loader whose later write reads a table an earlier write changed
+    * (read-your-own-writes hydration) makes one call per phase.
     */
-  def writeAll(writes: Seq[Write]): Seq[Map[String, Long]] = {
-    val results = new Array[Map[String, Long]](writes.length)
-    val failures = new Array[Throwable](writes.length)
-    val lanes = writes.zipWithIndex.groupBy(_._1.table).values.toSeq
-    val threads = lanes.map { lane =>
-      val t = new Thread(() => {
-        val it = lane.iterator
-        var failed = false
-        while (!failed && it.hasNext) {
-          val (w, i) = it.next()
-          try results(i) = w match {
-            case m: Merge => merge(m.table, m.incoming, m.keyCols, m.compareCols,
-              m.setCols, m.softDelete)
-            case Edges(candidates) => upsertEdges(candidates)
-          } catch { case e: Throwable => failures(i) = e; failed = true }
+  def writeAll(writes: Seq[Write]): Map[String, Long] = {
+    val lanes = writes.map(_.table).distinct.map(t => writes.filter(_.table == t))
+    val counters = Concurrent.results(Concurrent.all(lanes.size, "graft-store-write")(
+      lanes.map(lane => () => lane.flatMap { w =>
+        val cs = w match {
+          case m: Merge => merge(m.table, m.incoming, m.keyCols, m.compareCols,
+            m.setCols, m.softDelete)
+          case Edges(candidates) => upsertEdges(candidates)
         }
-      }, s"graft-store-write-${lane.head._1.table}")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    // wait for every write even if interrupted, then restore the flag
-    var interrupted = false
-    threads.foreach { t =>
-      while (t.isAlive)
-        try t.join()
-        catch { case _: InterruptedException => interrupted = true }
-    }
-    if (interrupted) Thread.currentThread().interrupt()
-    failures.filter(_ != null).toSeq match {
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-      case _ => results.toSeq
-    }
+        cs.map { case (k, v) => (w.prefix + k) -> v }
+      })))
+    counters.flatten.groupMapReduce(_._1)(_._2)(_ + _)
   }
 }
 
 object PersistentGraphStore {
 
-  /** One write of a [[PersistentGraphStore.writeAll]] batch. */
-  sealed trait Write { def table: String }
+  /** One write of a [[PersistentGraphStore.writeAll]] batch; `prefix`
+    * names its counters in the loader's counter map.
+    */
+  sealed trait Write { def table: String; def prefix: String }
 
   /** A [[PersistentGraphStore.merge]] call. */
   final case class Merge(table: String, incoming: DataFrame,
       keyCols: Seq[String], compareCols: Seq[String],
-      setCols: Seq[String] = Nil, softDelete: Boolean = false) extends Write
+      setCols: Seq[String] = Nil, softDelete: Boolean = false,
+      prefix: String = "") extends Write
 
-  /** A [[PersistentGraphStore.upsertEdges]] call. */
+  /** A [[PersistentGraphStore.upsertEdges]] call, counted as `edges_*`. */
   final case class Edges(candidates: DataFrame) extends Write {
     def table: String = "edges"
+    def prefix: String = "edges_"
   }
 }

@@ -2,6 +2,8 @@ package graft.orchestrate
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Concurrent
+
 /** §2.11 — whole-corpus orchestration: the reference coordinates ~30
   * loaders through a Snakemake DAG (Snakefile:32-46 `rule all`; per-loader
   * `dependencies` exports, e.g. drugbank/index.js:339,
@@ -11,11 +13,12 @@ import org.apache.spark.sql.SparkSession
   * whole corpus), and aggregates per-loader audit counters.
   *
   * Scale: ordering is driver-side metadata; each loader body is ordinary
-  * distributed Spark. Concurrency comes at two grains: `run` with
-  * `parallelism > 1` runs a level's loaders at once (levels are the
-  * Snakemake parallelism unit), and inside one loader the store's
-  * `writeAll` overlaps its writes to different tables. Level membership
-  * and the report stay deterministic either way.
+  * distributed Spark. Concurrency comes at two grains, both through
+  * [[graft.core.Concurrent.all]]: `run` runs up to `parallelism` of a
+  * level's loaders at once (levels are the Snakemake parallelism unit),
+  * and inside one loader the store's `writeAll` overlaps its writes to
+  * different tables and returns the loader's flat counter map. Level
+  * membership and the report stay deterministic either way.
   */
 object Orchestrator {
 
@@ -26,6 +29,9 @@ object Orchestrator {
 
   sealed trait Status
   case class Succeeded(counts: Map[String, Long]) extends Status
+  /** `error`: the first line of the exception's `toString` (its class and
+    * the start of its message); the full stack goes to stderr.
+    */
   case class Failed(error: String) extends Status
   case class Skipped(failedDeps: Seq[String]) extends Status
 
@@ -63,13 +69,14 @@ object Orchestrator {
     * transitive dependents Skipped (the reference's per-loader error
     * isolation, §7.4 risk 5).
     *
-    * `parallelism > 1` runs each level's loaders concurrently (Snakemake
-    * executes independent rules in parallel): loader bodies submit Spark
-    * jobs from a bounded thread pool and the scheduler interleaves their
-    * stages across the cluster's slots. Correctness under concurrency
-    * rests on (1) levels — a loader never runs before its dependencies'
-    * level completed, so every dimension it reads is fully written — and
-    * (2) the store's per-table write locks, which serialize same-table
+    * A level's loaders run on up to `parallelism` threads started for that
+    * level (Snakemake executes independent rules in parallel; 1 runs them
+    * one after another): loader bodies submit Spark jobs from those
+    * threads, which inherit the caller's Spark local properties, and the
+    * scheduler interleaves their stages across the cluster's slots.
+    * Correctness under concurrency rests on (1) levels — a loader never
+    * runs before its dependencies' level completed, so every dimension it
+    * reads is fully written — and (2) the store's per-table write locks, which serialize same-table
     * merges from concurrent loaders (see PersistentGraphStore.lockFor).
     * Level membership and the report's order stay deterministic; only
     * wall-clock interleaving varies.
@@ -96,31 +103,23 @@ object Orchestrator {
         if (badDeps.nonEmpty) Skipped(badDeps)
         else
           try Succeeded(loader.run(spark))
-          // toString, not getMessage: an exception without a message
-          // (a NullPointerException, say) still names its class
-          catch { case e: Exception => Failed(e.toString) }
+          catch {
+            case e: Exception =>
+              val trace = new java.io.StringWriter
+              e.printStackTrace(new java.io.PrintWriter(trace))
+              System.err.print(s"[orchestrator] loader $name failed: $trace")
+              // toString, not getMessage: an exception without a message
+              // (a NullPointerException, say) still names its class
+              Failed(e.toString.linesIterator.next())
+          }
       name -> status
     }
 
     levels.foreach { level =>
       beforeLevel()
-      try {
-        val results: Seq[(String, Status)] =
-          if (parallelism <= 1 || level.size <= 1) level.map(runOne)
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(parallelism, level.size))
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            try {
-              val fs = level.map(n => scala.concurrent.Future(runOne(n)))
-              scala.concurrent.Await.result(
-                scala.concurrent.Future.sequence(fs),
-                scala.concurrent.duration.Duration.Inf)
-            } finally pool.shutdown()
-          }
-        statuses ++= results
-      } finally afterLevel()
+      try statuses ++= Concurrent.results(Concurrent.all(parallelism, "graft-loader")(
+        level.map(n => () => runOne(n))))
+      finally afterLevel()
     }
     Report(levels.flatten, statuses.toMap)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 
 /** ASCO abstracts loader (reference src/asco/index.js:47-93
   * `collapseAbstractDups` + :150-190 upload): ASCO's solr feed returns
@@ -44,12 +45,12 @@ object Asco {
     import spark.implicits._
     val winners = collapse(spark.createDataset(abstracts).toDF())
       .withColumn("sourceId", concat_ws("|", DupKey.map(col): _*))
-    store.merge("abstracts",
+    store.writeAll(Seq(Merge("abstracts",
       winners.select(col("sourceId"), col("abstId"), col("year"),
         col("meeting"), col("title"), col("firstAuthor"), col("citation"),
         col("doi")),
       keyCols = Seq("sourceId"),
       compareCols = Seq("abstId", "year", "meeting", "title", "firstAuthor",
-        "citation", "doi"))
+        "citation", "doi"))))
   }
 }

@@ -155,7 +155,7 @@ object CancerHotspots {
       }
       // the statements merge reads only its own table (`fresh` above), so
       // the three writes are independent
-      val Seq(counts, e, sc) = store.writeAll(Seq(
+      store.writeAll(Seq(
         Merge("variants",
           live.select(col("vid"), col("form"), col("notation"), col("term"),
             col("break1"), col("dim_sid").as("reference1"))
@@ -166,9 +166,7 @@ object CancerHotspots {
           .withColumn("edgeClass", lit("Infers"))),
         Merge("statements", fresh, keyCols = Seq("sourceId"),
           compareCols = Seq("relevance", "subject", "reviewStatus"),
-          setCols = Seq("conditions"))))
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
-        sc.map { case (k, v) => s"statements_$k" -> v } +
+          setCols = Seq("conditions"), prefix = "statements_"))) +
         ("record_errors" -> badRecs.count())
     }
   }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Cached.withCached
+import graft.core.PersistentGraphStore.Merge
 
 /** Cancer Genome Interpreter row parsing (reference
   * src/cancergenomeinterpreter/index.js:73-190):
@@ -262,8 +263,6 @@ object Cgi {
         .select(col("t_rid").as("sourceId"), col("t_name").as("name"),
           lit("cancer genome interpreter").as("source"))
         .distinct()
-      val tCounts = store.merge("therapies", newTherapies,
-        keyCols = Seq("sourceId"), compareCols = Seq("name", "source"))
 
       // ---- statements: one per combo, rows passing both resolves
       val evid = parsed.filter(col("kind") === "evidence")
@@ -276,30 +275,32 @@ object Cgi {
         .join(drugs.select(col("rowId"), col("t_rid")), Seq("rowId"))
         .join(evid, Seq("rowId"))
       withCached(combos) {
-        val vCounts = store.merge("variants",
-          combos.select(explode(split(col("value"), " AND ")).as("vid"))
-            .distinct()
-            .select(col("vid"), lit("cgi").as("form"), col("vid").as("notation")),
-          keyCols = Seq("vid"), compareCols = Seq("form", "notation"))
-        val sCounts = store.merge("statements",
-          combos.select(
-            concat(col("rowId"), lit(":"), col("comboIdx")).as("sourceId"),
-            col("rel_term").as("relevance"), col("t_rid").as("subject"),
-            sort_array(concat(split(col("value"), " AND "),
-              array(col("d_sid"), col("t_rid")))).as("conditions"),
-            col("evidence").as("description")),
-          keyCols = Seq("sourceId"),
-          compareCols = Seq("relevance", "subject", "description"),
-          setCols = Seq("conditions"))
+        val counts = store.writeAll(Seq(
+          Merge("therapies", newTherapies,
+            keyCols = Seq("sourceId"), compareCols = Seq("name", "source"),
+            prefix = "therapies_"),
+          Merge("variants",
+            combos.select(explode(split(col("value"), " AND ")).as("vid"))
+              .distinct()
+              .select(col("vid"), lit("cgi").as("form"), col("vid").as("notation")),
+            keyCols = Seq("vid"), compareCols = Seq("form", "notation"),
+            prefix = "variants_"),
+          Merge("statements",
+            combos.select(
+              concat(col("rowId"), lit(":"), col("comboIdx")).as("sourceId"),
+              col("rel_term").as("relevance"), col("t_rid").as("subject"),
+              sort_array(concat(split(col("value"), " AND "),
+                array(col("d_sid"), col("t_rid")))).as("conditions"),
+              col("evidence").as("description")),
+            keyCols = Seq("sourceId"),
+            compareCols = Seq("relevance", "subject", "description"),
+            setCols = Seq("conditions"))))
         val errorRows = parseErrorIds
           .unionByName(rowMeta
             .filter(col("rel_term").isNull || col("d_sid").isNull)
             .select(col("rowId")))
           .distinct().count()
-        sCounts ++
-          vCounts.map { case (k, v) => s"variants_$k" -> v } ++
-          tCounts.map { case (k, v) => s"therapies_$k" -> v } +
-          ("errors" -> errorRows)
+        counts + ("errors" -> errorRows)
       }
     }
   }

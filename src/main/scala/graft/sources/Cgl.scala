@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.variant.HgvsParser
 
 /** CGL (Clinical Genomics Laboratory) variant loader (reference
@@ -156,12 +157,6 @@ object Cgl {
       .withColumn("vid", concat(col("dim_sid"), lit(":"), col("notation"),
         lit("@"), col("term")))
     withCached(resolved) {
-      val counts = store.merge("variants",
-        resolved.select(col("vid"), col("form"), col("notation"), col("term"),
-          col("break1"), col("dim_sid").as("reference1"), col("assembly"))
-          .dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("form", "notation", "term", "reference1", "assembly"))
       def vidOf(form: String) = resolved.filter(col("form") === form)
         .select(col("recId"), col("vid").as(s"${form}_vid"))
       val byRec = spark.createDataset(records.map(_.recId)).toDF("recId")
@@ -175,24 +170,29 @@ object Cgl {
           coalesce(col("cds_vid"), col("protein_vid")).isNotNull)
         .select(col("genomic_vid").as("out"),
           coalesce(col("cds_vid"), col("protein_vid")).as("in"))
-      val e = store.upsertEdges(cdsToProt.unionByName(genomicTo)
-        .withColumn("edgeClass", lit("Infers")).distinct())
       val best = byRec.withColumn("condition",
         coalesce(col("protein_vid"), col("cds_vid"), col("genomic_vid")))
-      val sc = store.merge("statements",
-        best.filter(col("condition").isNotNull)
-          .select(col("recId").as("sourceId"),
-            lit("pathogenic").as("relevance"),
-            lit(diseaseSid).as("subject"),
-            sort_array(array(col("condition"), lit(diseaseSid))).as("conditions"),
-            lit("reviewed by Clinical Molecular Geneticist at CGL")
-              .as("description")),
-        keyCols = Seq("sourceId"),
-        compareCols = Seq("relevance", "subject", "description"),
-        setCols = Seq("conditions"))
-      val errors = best.filter(col("condition").isNull).count()
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
-        sc.map { case (k, v) => s"statements_$k" -> v } + ("error" -> errors)
+      val counts = store.writeAll(Seq(
+        Merge("variants",
+          resolved.select(col("vid"), col("form"), col("notation"), col("term"),
+            col("break1"), col("dim_sid").as("reference1"), col("assembly"))
+            .dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("form", "notation", "term", "reference1", "assembly")),
+        Edges(cdsToProt.unionByName(genomicTo)
+          .withColumn("edgeClass", lit("Infers")).distinct()),
+        Merge("statements",
+          best.filter(col("condition").isNotNull)
+            .select(col("recId").as("sourceId"),
+              lit("pathogenic").as("relevance"),
+              lit(diseaseSid).as("subject"),
+              sort_array(array(col("condition"), lit(diseaseSid))).as("conditions"),
+              lit("reviewed by Clinical Molecular Geneticist at CGL")
+                .as("description")),
+          keyCols = Seq("sourceId"),
+          compareCols = Seq("relevance", "subject", "description"),
+          setCols = Seq("conditions"), prefix = "statements_")))
+      counts + ("error" -> best.filter(col("condition").isNull).count())
     }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** ChEMBL loader (reference src/chembl/index.js:30-107): one molecule
   * document per fetch → a Therapy vertex, plus an optional USAN-stem
@@ -46,13 +47,11 @@ object Chembl {
       path: String): Map[String, Long] = {
     val mols = molecules(spark, path)
     val therapyCols = Seq("name", "displayName", "molecularFormula")
-    val counts = store.merge("therapies",
-      mols.drop("usanStem").unionByName(usanParents(mols)),
-      keyCols = Seq("sourceId"), compareCols = therapyCols)
-    val edges = store.upsertEdges(
-      mols.filter(col("usanStem").isNotNull)
+    store.writeAll(Seq(
+      Merge("therapies", mols.drop("usanStem").unionByName(usanParents(mols)),
+        keyCols = Seq("sourceId"), compareCols = therapyCols),
+      Edges(mols.filter(col("usanStem").isNotNull)
         .select(col("sourceId").as("out"), col("usanStem").as("in"),
-          lit("SubClassOf").as("edgeClass")))
-    counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
+          lit("SubClassOf").as("edgeClass")))))
   }
 }

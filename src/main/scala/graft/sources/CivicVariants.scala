@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 import graft.variant.{CivicNames, HgvsParser}
 
 /** CIViC variant hydration (reference src/civic/variant.js:410-553
@@ -99,7 +100,6 @@ object CivicVariants {
       val feats = typed.select(
         coalesce(col("geneSourceId"), col("geneName")).as("sourceId"),
         col("geneName").as("name")).distinct()
-      val fc = store.merge(featuresTable, feats, Seq("sourceId"), Seq("name"))
       // variant identity = reference + notation + type term (vid), the
       // shared-variants-table key every loader agrees on
       val variants = typed.select(col("notation"), col("positional"),
@@ -107,10 +107,11 @@ object CivicVariants {
         coalesce(col("geneSourceId"), col("geneName")).as("reference1"))
         .withColumn("vid", concat(col("reference1"), lit(":"),
           col("notation"), lit("@"), col("term")))
-      val vc = store.merge(variantsTable, variants, Seq("vid"),
-        Seq("notation", "positional", "term", "break1", "reference1"))
-      fc.map { case (k, v) => s"features_$k" -> v } ++
-        vc.map { case (k, v) => s"variants_$k" -> v } ++ rsCounts
+      store.writeAll(Seq(
+        Merge(featuresTable, feats, Seq("sourceId"), Seq("name"), prefix = "features_"),
+        Merge(variantsTable, variants, Seq("vid"),
+          Seq("notation", "positional", "term", "break1", "reference1"),
+          prefix = "variants_"))) ++ rsCounts
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.functions.Scalars
 
 /** clinicaltrials.gov loader (reference src/clinicaltrialsgov/index.js):
@@ -145,19 +146,18 @@ object ClinicalTrials {
     val processed = processWithLinks(convert(Scans.json(spark, path)),
       therapyDim, diseaseDim)
     withCached(processed) {
-      val counts = store.merge("trials",
-        processed.select(col("sourceId"), col("sourceIdVersion"), col("name"),
-          col("displayName"), col("recruitmentStatus"), col("phase"),
-          col("startDate"), col("completionDate"), col("country"), col("city"),
-          col("comment")),
-        keyCols = Seq("sourceId"),
-        compareCols = Seq("sourceIdVersion", "name", "displayName",
-          "recruitmentStatus", "phase", "startDate", "completionDate",
-          "country", "city", "comment"))
-      val edges = store.upsertEdges(
-        processed.select(col("sourceId").as("in"), explode(col("links")).as("out"))
-          .select(col("out"), col("in"), lit("ElementOf").as("edgeClass")))
-      counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
+      store.writeAll(Seq(
+        Merge("trials",
+          processed.select(col("sourceId"), col("sourceIdVersion"), col("name"),
+            col("displayName"), col("recruitmentStatus"), col("phase"),
+            col("startDate"), col("completionDate"), col("country"), col("city"),
+            col("comment")),
+          keyCols = Seq("sourceId"),
+          compareCols = Seq("sourceIdVersion", "name", "displayName",
+            "recruitmentStatus", "phase", "startDate", "completionDate",
+            "country", "city", "comment")),
+        Edges(processed.select(col("sourceId").as("in"), explode(col("links")).as("out"))
+          .select(col("out"), col("in"), lit("ElementOf").as("edgeClass")))))
     }
   }
 }

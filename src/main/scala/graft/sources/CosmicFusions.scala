@@ -136,7 +136,7 @@ object CosmicFusions {
         .select(col("specific_vid").as("vid"), lit("positional").as("form"),
           concat(lit("e."), col("rep.exon1")).as("break1"),
           concat(lit("e."), col("rep.exon2")).as("break2"))
-      val Seq(counts, e, sc) = store.writeAll(Seq(
+      val counts = store.writeAll(Seq(
         Merge("variants",
           general.unionByName(specific).dropDuplicates("vid"),
           keyCols = Seq("vid"), compareCols = Seq("form", "break1", "break2")),
@@ -152,11 +152,8 @@ object CosmicFusions {
             col("n_samples").cast("long").as("n_samples")),
           keyCols = Seq("sourceId"),
           compareCols = Seq("level", "relevance", "condition", "subject",
-            "n_samples"))))
-      val errors = resolved.filter(col("disease_sid").isNull).count()
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v } ++
-        sc.map { case (k, v) => s"statements_$k" -> v } +
-        ("error" -> errors)
+            "n_samples"), prefix = "statements_")))
+      counts + ("error" -> resolved.filter(col("disease_sid").isNull).count())
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.variant.HgvsParser
 
 /** COSMIC resistance-mutation variant ladder (reference
@@ -87,13 +88,6 @@ object CosmicResistance {
       .withColumn("vid", concat(col("ref_sid"), lit(":"), col("notation"),
         lit("@"), coalesce(col("term"), lit("-"))))
     withCached(resolved) {
-      val counts = store.merge("variants",
-        resolved.select(col("vid"), col("form"), col("notation"),
-          col("term"), col("break1"), col("ref_sid").as("reference1"),
-          when(col("form") === "genomic", "grch38").as("assembly"))
-          .dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("form", "notation", "term", "reference1", "assembly"))
       // Infers: protein→general, cds→protein, genomic→(cds||protein),
       // catalog→(genomic||cds||protein) (resistance.js:101-196)
       def vidOf(form: String) = resolved.filter(col("form") === form)
@@ -118,11 +112,17 @@ object CosmicResistance {
           coalesce(col("genomic_vid"), col("cds_vid"), col("protein_vid")).isNotNull)
         .select(col("catalog_vid").as("out"),
           coalesce(col("genomic_vid"), col("cds_vid"), col("protein_vid")).as("in"))
-      val e = store.upsertEdges(
-        protToGen.unionByName(cdsToProt).unionByName(genomicTo)
+      store.writeAll(Seq(
+        Merge("variants",
+          resolved.select(col("vid"), col("form"), col("notation"),
+            col("term"), col("break1"), col("ref_sid").as("reference1"),
+            when(col("form") === "genomic", "grch38").as("assembly"))
+            .dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("form", "notation", "term", "reference1", "assembly")),
+        Edges(protToGen.unionByName(cdsToProt).unionByName(genomicTo)
           .unionByName(catalogTo).withColumn("edgeClass", lit("Infers"))
-          .distinct())
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v }
+          .distinct())))
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Edges
 
 /** DGIdb drug-gene interaction loader (reference src/dgidb/index.js:
   * 30-86): each interaction record resolves its entrez gene and its
@@ -40,14 +41,13 @@ object Dgidb {
       .join(broadcast(d), Seq("chemblId"), "left")
     withCached(joined) {
       val ok = joined.filter(col("gene_ok").isNotNull && col("drug_ok").isNotNull)
-      val e = store.upsertEdges(ok.select(
+      val e = store.writeAll(Seq(Edges(ok.select(
         col("entrezId").as("out"), col("chemblId").as("in"),
         lit("TargetOf").as("edgeClass"), col("actionType"),
-        col("id").as("uuid")))
+        col("id").as("uuid")))))
       val errors = joined
         .filter(col("gene_ok").isNull || col("drug_ok").isNull).count()
-      Map("success" -> (joined.count() - errors), "error" -> errors) ++
-        e.map { case (k, v) => s"edges_$k" -> v }
+      Map("success" -> (joined.count() - errors), "error" -> errors) ++ e
     }
   }
 }

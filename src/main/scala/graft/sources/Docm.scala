@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.variant.{DocmFixes, HgvsParser}
 
 /** DOCM variant loader (reference src/docm/index.js:72-165
@@ -93,21 +94,19 @@ object Docm {
         .select(col("recId")).distinct()
       val live = resolved.join(badRecs, Seq("recId"), "left_anti")
         .filter(col("ref_sid").isNotNull)
-      val counts = store.merge("variants",
-        live.select(col("vid"), col("form"), col("notation"), col("term"),
-          col("break1"), col("ref_sid").as("reference1"), col("assembly"))
-          .dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("form", "notation", "term", "reference1", "assembly"))
       val pairs = live.filter(col("form") === "genomic")
         .select(col("recId"), col("vid").as("out"))
         .join(live.filter(col("form") === "protein")
           .select(col("recId"), col("vid").as("in")), Seq("recId"))
         .select(col("out"), col("in"), lit("Infers").as("edgeClass"))
-      val e = store.upsertEdges(pairs)
-      val errors = badRecs.count()
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v } +
-        ("record_errors" -> errors)
+      store.writeAll(Seq(
+        Merge("variants",
+          live.select(col("vid"), col("form"), col("notation"), col("term"),
+            col("break1"), col("ref_sid").as("reference1"), col("assembly"))
+            .dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("form", "notation", "term", "reference1", "assembly")),
+        Edges(pairs))) + ("record_errors" -> badRecs.count())
     }
   }
 }

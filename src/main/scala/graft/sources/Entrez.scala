@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 import graft.remote.EntrezBatch
 
 /** Entrez dimension hydration (reference src/entrez/{gene,pubmed,refseq}.js
@@ -120,6 +121,6 @@ object Entrez {
       case None => requested
     }
     val fetched = EntrezBatch.fetchByIds(missing.as[String], fetcher)
-    store.merge(table, parser(fetched), keyCols, compareCols)
+    store.writeAll(Seq(Merge(table, parser(fetched), keyCols, compareCols)))
   }
 }

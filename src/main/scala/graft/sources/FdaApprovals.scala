@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 import graft.remote.Scrape
 
 /** FDA oncology approval announcements loader (reference
@@ -71,10 +72,9 @@ object FdaApprovals {
     val links = announcementLinks(indexHtml)
     val (found, missing) = links.partition(pages.contains)
     val records = found.map(l => parseAnnouncement(l, pages(l), baseUrl))
-    val counts = store.merge("curated",
-      spark.createDataset(records).toDF(),
+    store.writeAll(Seq(Merge("curated", spark.createDataset(records).toDF(),
       keyCols = Seq("sourceId"),
-      compareCols = Seq("name", "content", "year", "url"))
-    counts + ("error" -> missing.size.toLong)
+      compareCols = Seq("name", "content", "year", "url")))) +
+      ("error" -> missing.size.toLong)
   }
 }

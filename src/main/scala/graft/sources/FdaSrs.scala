@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** fdaSrs loader (reference src/fdaSrs/index.js:10-110): the FDA UNII
   * records TSV → Therapy vertices keyed by UNII, plus CrossReferenceOf
@@ -54,10 +55,9 @@ object FdaSrs {
         lit("CrossReferenceOf").as("edgeClass"))
 
   def load(spark: SparkSession, store: PersistentGraphStore,
-      path: String, ncitDim: DataFrame): Map[String, Long] = {
-    val counts = store.merge("therapies", therapies(spark, path),
-      keyCols = Seq("sourceId"), compareCols = Seq("name"))
-    val edges = store.upsertEdges(ncitXrefs(spark, path, ncitDim))
-    counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-  }
+      path: String, ncitDim: DataFrame): Map[String, Long] =
+    store.writeAll(Seq(
+      Merge("therapies", therapies(spark, path),
+        keyCols = Seq("sourceId"), compareCols = Seq("name")),
+      Edges(ncitXrefs(spark, path, ncitDim))))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** GSC therapeutic (drug-class) ontology loader (reference
   * src/gscTherapeuticOntology.js:13-240): TSV rows → therapy records with
@@ -127,9 +128,6 @@ object GscTherapy {
         .agg(min_by(col("subsets"), struct(col("rowId"), col("site"))).as("subsets"))
         .select(col("term").as("sourceId"), col("term").as("name"),
           lit(sourceName).as("source"), col("subsets"))
-      val counts = store.merge("therapies", records,
-        keyCols = Seq("sourceId", "name", "source"),
-        compareCols = Seq("subsets"))
 
       // ---- edges
       val aliasEdges = aliasTerms.select(col("alias_rid").as("out"),
@@ -162,10 +160,12 @@ object GscTherapy {
             lit("crossreferenceof").as("edgeClass"))
         val errors = dbIdRows.filter(col("dbid_rid").isNull).count()
 
-        val edges = store.upsertEdges(
-          aliasEdges.unionByName(drugParent).unionByName(parentGp)
-            .unionByName(classXref).unionByName(dbIdXref))
-        counts ++ edges.map { case (k, v) => s"edges_$k" -> v } +
+        store.writeAll(Seq(
+          Merge("therapies", records,
+            keyCols = Seq("sourceId", "name", "source"),
+            compareCols = Seq("subsets")),
+          Edges(aliasEdges.unionByName(drugParent).unionByName(parentGp)
+            .unionByName(classXref).unionByName(dbIdXref)))) +
           ("errors" -> errors)
       }
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** End-to-end loader slice (SURVEY §7.2 step 3): scan → normalize →
   * resolve → upsert into the persistent graph store, per source, with the
@@ -49,12 +50,11 @@ object Loaders {
         lit("SubClassOf").as("edgeClass"))
       .filter(col("out") =!= "" && col("in") =!= "")
 
-  def loadDoid(spark: SparkSession, store: PersistentGraphStore, path: String): Map[String, Long] = {
-    val counts = store.merge("vertices", doidVertices(spark, path),
-      keyCols = Seq("sourceId"), compareCols = Seq("name", "deprecated", "nAlias"))
-    val edges = store.upsertEdges(doidEdges(spark, path))
-    counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-  }
+  def loadDoid(spark: SparkSession, store: PersistentGraphStore, path: String): Map[String, Long] =
+    store.writeAll(Seq(
+      Merge("vertices", doidVertices(spark, path),
+        keyCols = Seq("sourceId"), compareCols = Seq("name", "deprecated", "nAlias")),
+      Edges(doidEdges(spark, path))))
 
   /** Therapy vertices from the DrugBank XML via the streaming rowTag scan.
     * This is the MINIMAL corpus-DAG form (lowercased name, 64-char
@@ -81,9 +81,9 @@ object Loaders {
   }
 
   def loadDrugbank(spark: SparkSession, store: PersistentGraphStore, path: String): Map[String, Long] =
-    store.merge("therapies", drugbankTherapies(spark, path),
+    store.writeAll(Seq(Merge("therapies", drugbankTherapies(spark, path),
       keyCols = Seq("sourceId"),
-      compareCols = Seq("name", "casNumber", "unii", "mechanismOfAction"))
+      compareCols = Seq("name", "casNumber", "unii", "mechanismOfAction"))))
 
   // ---- drugbank, the full record slice (drugbank/index.js:38-249) --------
 
@@ -263,12 +263,6 @@ object Loaders {
           nullS.as("mechanismOfAction"), nullS.as("iupacName"),
           nullS.as("molecularFormula"), nullA.as("subsets"),
           nullS.as("dependency"), lit(false).as("alias"), lit(true).as("atc"))
-      val counts = store.merge("therapies",
-        main.unionByName(aliasV).unionByName(atcV),
-        keyCols = Seq("sourceId", "name"),
-        compareCols = Seq("description", "sourceIdVersion",
-          "mechanismOfAction", "iupacName", "molecularFormula", "subsets",
-          "dependency", "alias", "atc"))
       val drugRid = rid(col("sourceId"), col("name"))
       val aliasOf = recs.select(col("sourceId"), col("name"),
           explode(col("aliases")).as("__alias"))
@@ -314,11 +308,15 @@ object Loaders {
         .select(rid(col("__lo"), col("__loName")).as("out"),
           rid(col("__hi"), col("__hiName")).as("in"),
           lit("subclassof").as("edgeClass"), nullS.as("comment"))
-      val edges = store.upsertEdges(
-        aliasOf.unionByName(fdaXref).unionByName(chemblXref)
-          .unionByName(targetOf).unionByName(drugAtc).unionByName(atcLadder))
-      val base = counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-      if (errors > 0) base + ("error" -> errors) else base
+      val counts = store.writeAll(Seq(
+        Merge("therapies", main.unionByName(aliasV).unionByName(atcV),
+          keyCols = Seq("sourceId", "name"),
+          compareCols = Seq("description", "sourceIdVersion",
+            "mechanismOfAction", "iupacName", "molecularFormula", "subsets",
+            "dependency", "alias", "atc")),
+        Edges(aliasOf.unionByName(fdaXref).unionByName(chemblXref)
+          .unionByName(targetOf).unionByName(drugAtc).unionByName(atcLadder))))
+      if (errors > 0) counts + ("error" -> errors) else counts
     }
   }
 
@@ -330,8 +328,8 @@ object Loaders {
 
   def loadVocab(spark: SparkSession, store: PersistentGraphStore): Map[String, Long] = {
     import spark.implicits._
-    store.merge("vocabulary", VocabSeed.toDF("name", "category"),
-      keyCols = Seq("name"), compareCols = Seq("category"))
+    store.writeAll(Seq(Merge("vocabulary", VocabSeed.toDF("name", "category"),
+      keyCols = Seq("name"), compareCols = Seq("category"))))
   }
 
   // ---- oncotree (reference src/oncotree/index.js:72-260) -----------------
@@ -371,14 +369,12 @@ object Loaders {
   }
 
   def loadOncotree(spark: SparkSession, store: PersistentGraphStore,
-      path: String): Map[String, Long] = {
-    val counts = store.merge("diseases",
-      oncotreeVertices(spark, path).drop("parent", "nciIds"),
-      keyCols = Seq("sourceId"),
-      compareCols = Seq("name", "displayName", "subset", "sourceIdVersion"))
-    val edges = store.upsertEdges(oncotreeEdges(spark, path))
-    counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-  }
+      path: String): Map[String, Long] =
+    store.writeAll(Seq(
+      Merge("diseases", oncotreeVertices(spark, path).drop("parent", "nciIds"),
+        keyCols = Seq("sourceId"),
+        compareCols = Seq("name", "displayName", "subset", "sourceIdVersion")),
+      Edges(oncotreeEdges(spark, path))))
 
   // ---- ensembl biomart (reference src/ensembl/index.js:179-470) ----------
 
@@ -461,14 +457,13 @@ object Loaders {
   }
 
   def loadEnsembl(spark: SparkSession, store: PersistentGraphStore,
-      path: String): Map[String, Long] = {
+      path: String): Map[String, Long] =
     // (sourceId, sourceIdVersion) is a null-padded key: the unversioned
     // record has sourceIdVersion = null and must match itself on re-run (K8)
-    val counts = store.merge("features", ensemblFeatures(spark, path),
-      keyCols = Seq("sourceId", "sourceIdVersion"), compareCols = Seq("biotype"))
-    val edges = store.upsertEdges(ensemblEdges(spark, path))
-    counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-  }
+    store.writeAll(Seq(
+      Merge("features", ensemblFeatures(spark, path),
+        keyCols = Seq("sourceId", "sourceIdVersion"), compareCols = Seq("biotype")),
+      Edges(ensemblEdges(spark, path))))
 
   // ---- hgnc (reference src/hgnc/index.js:50-180, 260-293) ----------------
 
@@ -532,11 +527,9 @@ object Loaders {
       .select(col("d.*"))
 
   def loadHgnc(spark: SparkSession, store: PersistentGraphStore,
-      docs: DataFrame, table: String = "genes"): Map[String, Long] = {
-    val counts = store.merge(table, hgncFeatures(docs),
-      keyCols = Seq("sourceId", "name"),
-      compareCols = Seq("displayName", "longName", "deprecated", "dependent"))
-    val edges = store.upsertEdges(hgncEdges(docs))
-    counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
-  }
+      docs: DataFrame, table: String = "genes"): Map[String, Long] =
+    store.writeAll(Seq(
+      Merge(table, hgncFeatures(docs), keyCols = Seq("sourceId", "name"),
+        compareCols = Seq("displayName", "longName", "deprecated", "dependent")),
+      Edges(hgncEdges(docs))))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.variant.HgvsParser
 
 /** MOAlmanac small-mutation loader (reference src/moa/index.js:48-188
@@ -159,13 +160,6 @@ object Moa {
       .withColumn("vid", concat(col("ref_sid"), lit(":"), col("notation"),
         lit("@"), col("term")))
     withCached(resolved) {
-      val counts = store.merge("variants",
-        resolved.select(col("vid"), col("form"), col("notation"),
-          col("term"), col("break1"), col("ref_sid").as("reference1"),
-          col("germline")).dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("form", "notation", "term", "reference1", "germline"),
-        setCols = Nil)
       // Infers chain: out = previous form, in = current (index.js:174-181)
       val w = Window.partitionBy(col("assertionId")).orderBy(col("pos"))
       val infers = resolved
@@ -173,8 +167,14 @@ object Moa {
         .filter(col("prev_vid").isNotNull)
         .select(col("prev_vid").as("out"), col("vid").as("in"),
           lit("Infers").as("edgeClass"))
-      val e = store.upsertEdges(infers)
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v }
+      store.writeAll(Seq(
+        Merge("variants",
+          resolved.select(col("vid"), col("form"), col("notation"),
+            col("term"), col("break1"), col("ref_sid").as("reference1"),
+            col("germline")).dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("form", "notation", "term", "reference1", "germline")),
+        Edges(infers)))
     }
   }
 }

@@ -185,11 +185,10 @@ object NcitLoad {
       raw: DataFrame): Map[String, Long] = {
     val r = resolvedFrom(stagedFrom(spark, raw).toDF())
     withCached(r) {
-      val Seq(counts, e) = store.writeAll(Seq(
+      store.writeAll(Seq(
         Merge("terms", vertices(r), keyCols = Seq("sourceId", "name"),
           compareCols = Seq("displayName", "endpoint", "alias")),
         Edges(edges(r))))
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v }
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 import graft.variant.{HgvsParser, OncoKbNames}
 
 /** OncoKB variant loader (reference src/oncokb/index.js:199-312
@@ -112,15 +113,15 @@ object OncoKb {
         lit(":"), col("notation"), lit("@"), col("term")))
     withCached(resolved) {
       val live = resolved.filter(!col("err"))
-      val counts = store.merge("variants",
+      store.writeAll(Seq(Merge("variants",
         live.select(col("vid"),
           when(col("isCategory"), "category").otherwise("positional").as("form"),
           col("notation"), col("term"), col("posBreak1").as("break1"),
           col("r1").as("reference1"), col("r2").as("reference2"))
           .dropDuplicates("vid"),
         keyCols = Seq("vid"),
-        compareCols = Seq("form", "notation", "term", "reference1", "reference2"))
-      counts + ("error" -> resolved.filter(col("err")).count())
+        compareCols = Seq("form", "notation", "term", "reference1", "reference2")))) +
+        ("error" -> resolved.filter(col("err")).count())
     }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** Generic local-ontology JSON loader (reference src/ontology/index.js:
   * 106-242 `uploadFromJSON` — the loader behind the local data JSON DAG
@@ -75,9 +76,6 @@ object OntologyFile {
     import spark.implicits._
     val parsed = parse(path)
     val recs = spark.createDataset(parsed.records).toDF()
-    val counts = store.merge(table, recs,
-      keyCols = Seq("sourceId", "name", "source"),
-      compareCols = Seq("description", "deprecated", "displayName"))
     val byKey = recs.select(col("key"), col("sourceId"))
     val edges = spark.createDataset(parsed.links).toDF()
       .join(byKey.withColumnRenamed("key", "outKey")
@@ -85,7 +83,9 @@ object OntologyFile {
       .join(byKey.withColumnRenamed("key", "target")
         .withColumnRenamed("sourceId", "in"), Seq("target"))
       .select(col("out"), col("in"), col("edgeClass"))
-    val e = store.upsertEdges(edges)
-    counts ++ e.map { case (k, v) => s"edges_$k" -> v }
+    store.writeAll(Seq(
+      Merge(table, recs, keyCols = Seq("sourceId", "name", "source"),
+        compareCols = Seq("description", "deprecated", "displayName")),
+      Edges(edges)))
   }
 }

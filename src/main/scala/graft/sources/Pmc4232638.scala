@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 import graft.variant.HgvsParser
 
 /** PMC4232638 supplementary-table loader (reference
@@ -98,25 +99,25 @@ object Pmc4232638 {
       .withColumn("vid", concat(col("gene_sid"), lit(":"), col("notation"),
         lit("@"), col("type_term")))
     withCached(resolved) {
-      val counts = store.merge("variants",
-        resolved.select(col("vid"), col("notation"), col("type_term"),
-          col("break1"), col("gene_sid").as("reference1"))
-          .dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("notation", "type_term", "break1", "reference1"))
-      val sc = store.merge("statements",
-        resolved.select(
-          concat(col("gene_sid"), lit(":"), col("notation"), lit("@"),
-            col("rel_term")).as("sourceId"),
-          col("rel_term").as("relevance"),
-          col("gene_sid").as("subject"),
-          sort_array(array(col("vid"), col("gene_sid"))).as("conditions"),
-          sort_array(col("evidence")).as("evidence"),
-          col("comment")),
-        keyCols = Seq("sourceId"),
-        compareCols = Seq("relevance", "subject", "comment"),
-        setCols = Seq("conditions", "evidence"))
-      counts ++ sc.map { case (k, v) => s"statements_$k" -> v }
+      store.writeAll(Seq(
+        Merge("variants",
+          resolved.select(col("vid"), col("notation"), col("type_term"),
+            col("break1"), col("gene_sid").as("reference1"))
+            .dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("notation", "type_term", "break1", "reference1")),
+        Merge("statements",
+          resolved.select(
+            concat(col("gene_sid"), lit(":"), col("notation"), lit("@"),
+              col("rel_term")).as("sourceId"),
+            col("rel_term").as("relevance"),
+            col("gene_sid").as("subject"),
+            sort_array(array(col("vid"), col("gene_sid"))).as("conditions"),
+            sort_array(col("evidence")).as("evidence"),
+            col("comment")),
+          keyCols = Seq("sourceId"),
+          compareCols = Seq("relevance", "subject", "comment"),
+          setCols = Seq("conditions", "evidence"), prefix = "statements_")))
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 
 /** PMC4468049 recurrent-fusions loader (reference
   * src/PMC4468049/index.js:32-185, Table S7): `A__B` fusion pairs with a
@@ -75,21 +76,21 @@ object Pmc4468049 {
         .filter(col("sidA").isNotNull && col("sidB").isNotNull)
         .withColumn("vid", concat(col("sidA"), lit("::"), col("sidB"),
           lit(":fusion@"), col("fusion_term")))
-      val counts = store.merge("variants",
-        live.select(col("vid"), col("fusion_term").as("term"),
-          col("sidA").as("reference1"), col("sidB").as("reference2"))
-          .dropDuplicates("vid"),
-        keyCols = Seq("vid"),
-        compareCols = Seq("term", "reference1", "reference2"))
-      val sc = store.merge("statements",
-        live.select(col("rowId").as("sourceId"),
-          lit("recurrent").as("relevance"),
-          col("disease_sid").as("subject"),
-          sort_array(array(col("vid"), col("disease_sid"))).as("conditions")),
-        keyCols = Seq("sourceId"),
-        compareCols = Seq("relevance", "subject"),
-        setCols = Seq("conditions"))
-      counts ++ sc.map { case (k, v) => s"statements_$k" -> v } +
+      store.writeAll(Seq(
+        Merge("variants",
+          live.select(col("vid"), col("fusion_term").as("term"),
+            col("sidA").as("reference1"), col("sidB").as("reference2"))
+            .dropDuplicates("vid"),
+          keyCols = Seq("vid"),
+          compareCols = Seq("term", "reference1", "reference2")),
+        Merge("statements",
+          live.select(col("rowId").as("sourceId"),
+            lit("recurrent").as("relevance"),
+            col("disease_sid").as("subject"),
+            sort_array(array(col("vid"), col("disease_sid"))).as("conditions")),
+          keyCols = Seq("sourceId"),
+          compareCols = Seq("relevance", "subject"),
+          setCols = Seq("conditions"), prefix = "statements_"))) +
         ("skip" -> (skips + lowFreq)) + ("error" -> errors)
     }
   }

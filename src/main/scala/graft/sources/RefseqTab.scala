@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** RefSeq LRG_RefSeqGene loader (reference src/refseq/index.js:23-155):
   * tab file → versioned + generalized transcript/protein Features,
@@ -77,10 +78,9 @@ object RefseqTab {
   }
 
   def load(spark: SparkSession, store: PersistentGraphStore,
-      path: String, geneDim: DataFrame): Map[String, Long] = {
-    val counts = store.merge("features", features(spark, path),
-      keyCols = Seq("sourceId", "sourceIdVersion"), compareCols = Seq("biotype"))
-    val e = store.upsertEdges(edges(spark, path, geneDim))
-    counts ++ e.map { case (k, v) => s"edges_$k" -> v }
-  }
+      path: String, geneDim: DataFrame): Map[String, Long] =
+    store.writeAll(Seq(
+      Merge("features", features(spark, path),
+        keyCols = Seq("sourceId", "sourceIdVersion"), compareCols = Seq("biotype")),
+      Edges(edges(spark, path, geneDim))))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** Sequence Ontology loader (reference src/sequenceOntology.js:82-133):
   * SO OWL RDF/XML → Vocabulary vertices + subclassof edges, end-to-end
@@ -97,9 +98,6 @@ object SequenceOntology {
     val recs = records(triples)
     withCached(triples, recs) {
       val labeled = terms(recs)
-      val counts = store.merge(table, labeled,
-        keyCols = Seq("sourceId", "name"),
-        compareCols = Seq("description", "deprecated"))
       val codes = broadcast(labeled.select(col("sourceId")).distinct())
       val cands = subclassCandidates(triples)
         .select(lower(col("out")).as("out"), lower(col("in")).as("in"))
@@ -107,11 +105,13 @@ object SequenceOntology {
         .join(codes.withColumnRenamed("sourceId", "out"), Seq("out"), "left_semi")
         .join(codes.withColumnRenamed("sourceId", "in"), Seq("in"), "left_semi")
         .select(col("out"), col("in"), lit("subclassof").as("edgeClass"))
-      val edges = store.upsertEdges(good)
+      val counts = store.writeAll(Seq(
+        Merge(table, labeled, keyCols = Seq("sourceId", "name"),
+          compareCols = Seq("description", "deprecated")),
+        Edges(good)))
       val errors = recs.filter(col("label").isNull).count()
       val drops = cands.count() - good.count()
-      counts ++ edges.map { case (k, v) => s"edges_$k" -> v } +
-        ("errors" -> errors) + ("edge_drops" -> drops)
+      counts + ("errors" -> errors) + ("edge_drops" -> drops)
     }
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 import graft.remote.EntrezBatch
 import graft.variant.HgvsParser
 
@@ -147,9 +148,10 @@ object Snp {
 
   /** The composed `fetchAndLoadByIds` (snp.js:139-150 + loadSnpRecord):
     * resolve rs-names against the catalogue dimension, batch-fetch the
-    * misses, upsert `CatalogueVariant`s, hydrate the refseq / gene
-    * reference dimensions the docsum legs need, upsert the
-    * `PositionalVariant` ladder and its `Infers` chain.
+    * misses, hydrate the refseq / gene reference dimensions the docsum
+    * legs need (a store phase each: the legs re-read them), then upsert
+    * the `CatalogueVariant`s, the `PositionalVariant` ladder and its
+    * `Infers` chain in one last phase.
     *
     * `vocab` is (name, term_id) — the any-source `getVocabularyTerm`
     * resolution (min term wins, same as the civic loader's fallback).
@@ -185,11 +187,6 @@ object Snp {
     if (missing.isEmpty) return Map.empty
     val parsed = parseSnp(EntrezBatch.fetchByIds(missing, snpFetcher))
     withCached(parsed) {
-      val catCounts = store.merge(catalogueTable,
-        parsed.select(col("sourceId"), col("name"), col("displayName"),
-          col("sourceIdVersion"), col("url")),
-        keyCols = Seq("sourceId"),
-        compareCols = Seq("name", "displayName", "sourceIdVersion", "url"))
       // ids the API returned nothing for — the civic path treats these as
       // an error ("unable to fetch variant by RSID", civic/variant.js:519)
       val misses = missing.toDF("name")
@@ -227,7 +224,7 @@ object Snp {
             case None => want
           }
           val fetched = EntrezBatch.fetchByIds(miss.as[String], fetcher)
-          store.merge(table, parser(fetched), Seq("sourceId"), compareCols)
+          store.writeAll(Seq(Merge(table, parser(fetched), Seq("sourceId"), compareCols)))
           ()
         }
         hydrateDim(refseqTable, col("leg").isin("cds", "protein"), col("ref1"),
@@ -258,13 +255,6 @@ object Snp {
           val vids = survivors.withColumn("vid",
             concat(col("ref1Resolved"), lit(":"), col("notation"),
               lit("@"), col("term")))
-          val varCounts = store.merge(variantsTable,
-            vids.select(col("vid"), col("notation"), lit(true).as("positional"),
-              col("term"), col("break1"), col("ref1Resolved").as("reference1")),
-            keyCols = Seq("vid"),
-            compareCols = Seq("notation", "positional", "term", "break1",
-              "reference1"))
-
           // the Infers chain (snp.js:76-79 cds→protein, :89-92
           // protein→alternate, :124-130 (cds||protein)→catalogue)
           val per = vids.groupBy(col("snp"), col("snpName")).agg(
@@ -282,12 +272,24 @@ object Snp {
             .select(coalesce(col("cdsVid"), col("protVid")).as("out"),
               col("snpName").as("in"),
               lit("Infers").as("edgeClass"), nullS.as("comment"))
-          val edgeCounts = store.upsertEdges(e1.unionByName(e2).unionByName(e3))
+          val counts = store.writeAll(Seq(
+            Merge(catalogueTable,
+              parsed.select(col("sourceId"), col("name"), col("displayName"),
+                col("sourceIdVersion"), col("url")),
+              keyCols = Seq("sourceId"),
+              compareCols = Seq("name", "displayName", "sourceIdVersion", "url"),
+              prefix = "catalogue_"),
+            Merge(variantsTable,
+              vids.select(col("vid"), col("notation"), lit(true).as("positional"),
+                col("term"), col("break1"), col("ref1Resolved").as("reference1")),
+              keyCols = Seq("vid"),
+              compareCols = Seq("notation", "positional", "term", "break1",
+                "reference1"),
+              prefix = "variants_"),
+            Edges(e1.unionByName(e2).unionByName(e3))))
 
           val errors = parseErrors + termMisses + refMisses
-          catCounts.map { case (k, v) => s"catalogue_$k" -> v } ++
-            varCounts.map { case (k, v) => s"variants_$k" -> v } ++
-            edgeCounts.map { case (k, v) => s"edges_$k" -> v } ++
+          counts ++
             (if (errors > 0) Map("hgvs_errors" -> errors) else Map.empty) ++
             (if (misses > 0) Map("misses" -> misses) else Map.empty)
         }

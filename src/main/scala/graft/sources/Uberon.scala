@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** Uberon anatomy ontology loader (reference src/uberon/index.js:36-207):
   * OWL classes keyed `uberon:<digits>` (parseUberonId, :36-41), entities
@@ -51,9 +52,6 @@ object Uberon {
     val t = OwlScan.triples(spark, path)
     withCached(t) {
       val ents = entities(t)
-      val counts = store.merge(table, ents, keyCols = Seq("sourceId"),
-        compareCols = Seq("name", "description", "deprecated"),
-        setCols = Seq("subsets"))
       val loaded = ents.select(col("sourceId"))
       val sub = t
         .select(uberonId(col("subject")).as("out"),
@@ -74,8 +72,11 @@ object Uberon {
         .join(broadcast(ncitDim.select(col("sourceId").as("in")).distinct()),
           Seq("in"), "left_semi")
         .select(col("out"), col("in"), lit("crossreferenceof").as("edgeClass"))
-      val e = store.upsertEdges(sub.unionByName(xref).distinct())
-      counts ++ e.map { case (k, v) => s"edges_$k" -> v }
+      store.writeAll(Seq(
+        Merge(table, ents, keyCols = Seq("sourceId"),
+          compareCols = Seq("name", "description", "deprecated"),
+          setCols = Seq("subsets")),
+        Edges(sub.unionByName(xref).distinct())))
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.Merge
 import graft.remote.EntrezBatch
 import graft.variant.HgvsParser
 
@@ -90,8 +91,8 @@ object VariantsList {
         .distinct()
       val missing = symbols.join(geneDim(), Seq("name"), "left_anti").as[String]
       val fetched = EntrezBatch.fetchByIds(missing, geneFetcher)
-      store.merge("genes", Entrez.parseGene(fetched),
-        keyCols = Seq("sourceId"), compareCols = geneCols)
+      store.writeAll(Seq(Merge("genes", Entrez.parseGene(fetched),
+        keyCols = Seq("sourceId"), compareCols = geneCols)))
 
       val dim = broadcast(geneDim())
       val resolved = withTerm
@@ -115,10 +116,10 @@ object VariantsList {
           col("ref1_sid").as("reference1"), col("ref2_sid").as("reference2"),
           col("break1Repr").as("break1"), col("break2Repr").as("break2"))
           .dropDuplicates("vid")
-        val counts = store.merge("variants", variants,
+        val counts = store.writeAll(Seq(Merge("variants", variants,
           keyCols = Seq("vid"),
           compareCols = Seq("notation", "vtype", "term", "reference1",
-            "reference2", "break1", "break2"))
+            "reference2", "break1", "break2"))))
         val parseErrors = parsed.filter(col("parseError").isNotNull).count()
         val vocabErrors = typed.filter(col("term").isNull).count()
         val geneErrors = resolved.count() - good.count()

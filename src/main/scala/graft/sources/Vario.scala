@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
+import graft.core.PersistentGraphStore.{Edges, Merge}
 
 /** VariO loader (reference src/vario.js:45-105): OWL RDF/XML → vocabulary
   * vertices + subclassof edges, end-to-end through the store.
@@ -63,10 +64,10 @@ object Vario {
     val triples = varioTriples(spark, path)
     withCached(triples) {
       val labeled = terms(triples)
-      val counts = store.merge(table, labeled,
-        keyCols = Seq("sourceId"), compareCols = Seq("name", "description"))
-      val edges = store.upsertEdges(subclassEdges(triples, labeled))
-      counts ++ edges.map { case (k, v) => s"edges_$k" -> v }
+      store.writeAll(Seq(
+        Merge(table, labeled,
+          keyCols = Seq("sourceId"), compareCols = Seq("name", "description")),
+        Edges(subclassEdges(triples, labeled))))
     }
   }
 }

@@ -19,8 +19,9 @@ class StoreWriteAllSpec extends AnyFunSuite {
 
   private def terms(rows: (String, String)*): DataFrame =
     rows.toDF("sourceId", "name")
-  private def termMerge(table: String, df: DataFrame) =
-    Merge(table, df, keyCols = Seq("sourceId"), compareCols = Seq("name"))
+  private def termMerge(table: String, df: DataFrame, prefix: String = "") =
+    Merge(table, df, keyCols = Seq("sourceId"), compareCols = Seq("name"),
+      prefix = prefix)
   private def edges(rows: (String, String)*): DataFrame =
     rows.map { case (o, i) => (o, i, "SubClassOf") }.toDF("out", "in", "edgeClass")
 
@@ -36,16 +37,21 @@ class StoreWriteAllSpec extends AnyFunSuite {
   test("a batch over different tables matches the same calls made one at a time") {
     val rounds: Seq[Seq[Write]] = Seq(
       Seq(termMerge("terms", terms(("a", "alpha"), ("b", "beta"), ("c", "gamma"))),
-        termMerge("diseases", terms(("d1", "melanoma"), ("d2", "glioma"))),
+        termMerge("diseases", terms(("d1", "melanoma"), ("d2", "glioma")), "diseases_"),
         Edges(edges(("a", "b"), ("b", "c")))),
       // updates, noops, creates and duplicate edges against the first round
       Seq(termMerge("terms", terms(("a", "alpha"), ("b", "BETA"), ("e", "epsilon"))),
-        termMerge("diseases", terms(("d1", "melanoma"), ("d3", "sarcoma"))),
+        termMerge("diseases", terms(("d1", "melanoma"), ("d3", "sarcoma")), "diseases_"),
         Edges(edges(("a", "b"), ("a", "e")))))
     val batched = freshStore()
     val serial = freshStore()
     rounds.foreach { writes =>
-      assert(batched.writeAll(writes) == writes.map(one(serial, _)))
+      // one call per write, each write's counters under its own prefix
+      val expected = writes.flatMap(w =>
+        one(serial, w).map { case (k, v) => (w.prefix + k) -> v }).toMap
+      assert(expected.keySet.exists(_.startsWith("diseases_")))
+      assert(expected.keySet.exists(_.startsWith("edges_")))
+      assert(batched.writeAll(writes) == expected)
     }
     Seq("terms", "diseases", "edges").foreach { t =>
       assert(contents(batched, t) == contents(serial, t), t)
@@ -54,14 +60,25 @@ class StoreWriteAllSpec extends AnyFunSuite {
   }
 
   test("two merges of one table in a batch apply in the order given") {
-    val store = freshStore()
+    val merged = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
+    val store = new PersistentGraphStore(spark, tmp(), nBuckets = 8) {
+      override def merge(table: String, incoming: DataFrame, keyCols: Seq[String],
+          compareCols: Seq[String], setCols: Seq[String],
+          softDelete: Boolean): Map[String, Long] = {
+        val out = super.merge(table, incoming, keyCols, compareCols, setCols, softDelete)
+        merged.add(out)
+        out
+      }
+    }
     val out = store.writeAll(Seq(
       termMerge("terms", terms(("a", "first"), ("b", "kept"))),
       Edges(edges(("a", "b"))),
       termMerge("terms", terms(("a", "second"))),
       termMerge("terms", terms(("a", "third"), ("c", "new")))))
-    assert(out == Seq(Map("create" -> 2L), Map("created" -> 1L),
+    assert(merged.asScala.toSeq == Seq(Map("create" -> 2L),
       Map("update" -> 1L), Map("update" -> 1L, "create" -> 1L)))
+    // counters that share a prefix add up
+    assert(out == Map("create" -> 3L, "update" -> 2L, "edges_created" -> 1L))
     assert(contents(store, "terms") == Seq("a|third", "b|kept", "c|new"))
     assert(store.latestVersion("terms").contains(3))
   }

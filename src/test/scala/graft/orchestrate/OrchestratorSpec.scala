@@ -162,8 +162,15 @@ class OrchestratorSpec extends AnyFunSuite {
     }
     val report = Orchestrator.run(spark, Seq(Loader("npe", Seq.empty, _ =>
       store.writeAll(Seq(graft.core.PersistentGraphStore.Edges(
-        Seq(("a", "b", "SubClassOf")).toDF("out", "in", "edgeClass")))).head)))
+        Seq(("a", "b", "SubClassOf")).toDF("out", "in", "edgeClass")))))))
     assert(report.statuses("npe") == Failed("java.lang.NullPointerException"))
+  }
+
+  test("a failure keeps only the first line of its message") {
+    val report = Orchestrator.run(spark, Seq(Loader("multi", Seq.empty, _ =>
+      throw new IllegalStateException("job aborted\n\tat executor frame\n\tat more"))))
+    assert(report.statuses("multi") ==
+      Failed("java.lang.IllegalStateException: job aborted"))
   }
 
   test("full corpus DAG: every loader succeeds into one store; rerun creates nothing") {
