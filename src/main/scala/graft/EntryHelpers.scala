@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared plumbing of the query registry: table readers, the run-scoped
-  * scratch root, the quantized ANN corpus/query frames, the shared
-  * persisted indexes, and the exact-quantile/fixture builders every
-  * registry file composes. Split out of SparkEntry (round 14) so the
-  * per-package registries (QueriesRef / QueriesLlm / QueriesStreaming and
-  * their oracle twins) stay reviewable; `private[graft]` keeps the driver
-  * contract surface exactly {entry, queries, oracleSql}.
+/** Shared plumbing of the query registry: table readers, the quantized
+  * ANN corpus/query frames, the shared persisted indexes, and the
+  * exact-quantile/fixture builders every registry file composes. Split
+  * out of SparkEntry (round 14) so the per-package registries (QueriesRef
+  * / QueriesLlm / QueriesStreaming and their oracle twins) stay
+  * reviewable; `private[graft]` keeps the driver contract surface exactly
+  * {entry, queries, oracleSql}.
   */
 private[graft] object EntryHelpers {
 
@@ -21,13 +21,6 @@ private[graft] object EntryHelpers {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
-
-  /** The reference repo's own golden input fixtures (read-only) — the scan
-    * queries parse them and the DuckDB oracle re-reads them independently
-    * (read_csv/read_json) or asserts a frozen golden frame (XML/OWL, which
-    * DuckDB can't parse).
-    */
-  val REF_DATA = "/root/reference/test/data"
 
   /** EXACT percentiles over the value DOMAIN histogram — the audit
     * companion of `Sketches.histQuantiles`: group values (per key),
@@ -58,21 +51,6 @@ private[graft] object EntryHelpers {
       .agg(min(col(vCol)).as("exact_v"))
       .drop("__g")
   }
-
-  /** Run-scoped scratch directory for the store-backed rows: every
-    * per-invocation store (g-rows, k-rows, sketch registry) roots its
-    * parquet layers under ONE JVM-lifetime temp root that a shutdown
-    * hook deletes recursively — repeated bench reps / spec runs no
-    * longer leak layer files into /tmp across runs.
-    */
-  lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => core.Fs.deleteRecursively(root)))
-    root
-  }
-
-  def scratchDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(scratchRoot, tag).toString
 
   /** The synthetic arithmetic-neighbour doc link graph shared by the
     * graph-analytics rows (PageRank / TrustRank / communities / seed

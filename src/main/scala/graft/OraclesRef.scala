@@ -1,5 +1,7 @@
 package graft
 
+import Inputs.{SeedData, TestData}
+
 /** DuckDB oracle SQL for the reference-surface rows. */
 private[graft] object OraclesRef {
 
@@ -47,8 +49,8 @@ private[graft] object OraclesRef {
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events) WHERE rn = 1""".stripMargin,
     "s9_text_scan" ->
-      """SELECT CAST(line AS VARCHAR) AS line
-        |FROM read_csv('/root/reference/test/data/UNII_Records_25Oct2018_sample.txt',
+      raw"""SELECT CAST(line AS VARCHAR) AS line
+        |FROM read_csv('$TestData/UNII_Records_25Oct2018_sample.txt',
         |  delim=chr(1), header=false, quote='', escape='',
         |  columns={'line': 'VARCHAR'})""".stripMargin,
     "set_except" ->
@@ -490,13 +492,13 @@ private[graft] object OraclesRef {
         |  unnest(list_distinct([p_brand, p_type, CAST(p_size AS VARCHAR)])) AS alias
         |FROM part WHERE p_partkey % 11 = 0""".stripMargin,
     "g1_loader_pipeline" ->
-      """SELECT lower(replace(regexp_extract(n.id, '.*/([A-Za-z]+_[0-9]+)$', 1), '_', ':')) AS source_id,
+      raw"""SELECT lower(replace(regexp_extract(n.id, '.*/([A-Za-z]+_[0-9]+)$$', 1), '_', ':')) AS source_id,
         |  n.lbl AS name,
         |  coalesce(len(list_filter(n.meta.basicPropertyValues,
         |    x -> x.pred LIKE '%deprecated' AND x.val = 'true')) > 0, false) AS deprecated,
         |  CAST(coalesce(len(n.meta.synonyms), 0) AS BIGINT) AS n_alias
         |FROM (SELECT unnest(graphs[1].nodes) AS n
-        |      FROM read_json_auto('/root/reference/test/data/doid.sample.json',
+        |      FROM read_json_auto('$TestData/doid.sample.json',
         |                          maximum_object_size=20000000))""".stripMargin,
     "g2_civic_sync" ->
       """SELECT CAST(content AS VARCHAR) AS content, CAST(bucket AS VARCHAR) AS bucket FROM (VALUES
@@ -530,12 +532,12 @@ private[graft] object OraclesRef {
         |('c1011', 'ov2', 'ov2 [c1011]', 'Disease', true, 1)
         |) AS t(source_id, name, display_name, endpoint, alias, n_out)""".stripMargin,
     "g4_oncotree" ->
-      """WITH raw AS (
+      raw"""WITH raw AS (
         |  SELECT lower(code) AS source_id, name,
         |         mainType AS subset, lower(parent) AS parent,
         |         coalesce(len(externalReferences.NCI), 0) AS n_nci,
         |         upper(code) AS code_u
-        |  FROM read_json_auto('/root/reference/test/data/tumorTypes-oncotree_latest_stable.json')
+        |  FROM read_json_auto('$TestData/tumorTypes-oncotree_latest_stable.json')
         |)
         |SELECT source_id, name, name || ' [' || code_u || ']' AS display_name, subset,
         |  CAST(CASE WHEN parent IS NOT NULL AND parent IN (SELECT source_id FROM raw)
@@ -543,7 +545,7 @@ private[graft] object OraclesRef {
         |  CAST(n_nci AS BIGINT) AS n_xref
         |FROM raw""".stripMargin,
     "g5_ensembl" ->
-      """WITH r AS (
+      raw"""WITH r AS (
         |  SELECT split_part(lower("Gene stable ID version"),'.',1) AS gid,
         |         split_part(lower("Gene stable ID version"),'.',2) AS gv,
         |         split_part(lower("Transcript stable ID version"),'.',1) AS tid,
@@ -551,7 +553,7 @@ private[graft] object OraclesRef {
         |         split_part(lower("Protein stable ID version"),'.',1) AS pid,
         |         split_part(lower("Protein stable ID version"),'.',2) AS pv,
         |         lower("HGNC ID") AS hgnc
-        |  FROM read_csv('/root/reference/test/data/ensembl_biomart_export_ENSG00000139618.tsv',
+        |  FROM read_csv('$TestData/ensembl_biomart_export_ENSG00000139618.tsv',
         |                delim='\t', header=true)
         |)
         |SELECT DISTINCT kind, a, b FROM (
@@ -571,9 +573,9 @@ private[graft] object OraclesRef {
         |  UNION ALL SELECT 'crossreferenceof', gid, hgnc FROM r WHERE hgnc IS NOT NULL
         |) AS u""".stripMargin,
     "g6_hgnc" ->
-      """WITH doc AS (
+      raw"""WITH doc AS (
         |  SELECT unnest("http://rest.genenames.org/fetch/hgnc_id/1101".response.docs) AS d
-        |  FROM read_json_auto('/root/reference/test/data/external_api_responses.json')
+        |  FROM read_json_auto('$TestData/external_api_responses.json')
         |)
         |SELECT d.hgnc_id AS source_id, d.symbol AS name, upper(d.symbol) AS display_name,
         |       false AS deprecated, false AS dependent,
@@ -587,9 +589,9 @@ private[graft] object OraclesRef {
         |SELECT d.hgnc_id, a, upper(a), false, true, CAST(1 AS BIGINT)
         |FROM doc, unnest(d.alias_symbol) AS t(a)""".stripMargin,
     "g7_fdasrs" ->
-      """WITH raw AS (
+      raw"""WITH raw AS (
         |  SELECT UNII AS id, PT AS name, NCIT AS ncit
-        |  FROM read_csv('/root/reference/test/data/UNII_Records_25Oct2018_sample.txt',
+        |  FROM read_csv('$TestData/UNII_Records_25Oct2018_sample.txt',
         |                delim='\t', header=true, all_varchar=true)
         |  WHERE UNII IS NOT NULL AND PT IS NOT NULL
         |)
@@ -599,8 +601,8 @@ private[graft] object OraclesRef {
         |       THEN 1 ELSE 0 END AS BIGINT) AS n_out
         |FROM raw""".stripMargin,
     "g8_vario" ->
-      """WITH txt AS (
-        |  SELECT content FROM read_text('/root/reference/test/data/vario_v2018-04-27.owl')
+      raw"""WITH txt AS (
+        |  SELECT content FROM read_text('$TestData/vario_v2018-04-27.owl')
         |), block AS (
         |  SELECT unnest(regexp_extract_all(content,
         |    '<owl:Class rdf:about="http://purl\.obolibrary\.org/obo/VariO_[0-9]+">.*?</owl:Class>',
@@ -627,9 +629,9 @@ private[graft] object OraclesRef {
         |  CAST(coalesce(g.n_sub, 0) AS BIGINT) AS n_sub
         |FROM labeled l LEFT JOIN good g USING (source_id)""".stripMargin,
     "g9_ctg" ->
-      """WITH raw AS (
+      raw"""WITH raw AS (
         |  SELECT protocolSection AS p
-        |  FROM read_json_auto('/root/reference/test/data/clinicaltrialsgov.NCT03478891.json')
+        |  FROM read_json_auto('$TestData/clinicaltrialsgov.NCT03478891.json')
         |)
         |SELECT p.identificationModule.nctId AS source_id,
         |  coalesce(p.identificationModule.officialTitle,
@@ -649,18 +651,18 @@ private[graft] object OraclesRef {
         |  CAST(1 AS BIGINT) AS n_links
         |FROM raw""".stripMargin,
     "g10_refseq" ->
-      """WITH r AS (
+      raw"""WITH r AS (
         |  SELECT GeneID,
         |         split_part(RNA, '.', 1) AS rna, split_part(RNA, '.', 2) AS rnav,
         |         split_part(coalesce(Protein, ''), '.', 1) AS prot,
         |         split_part(coalesce(Protein, ''), '.', 2) AS protv
-        |  FROM read_csv('/root/reference/test/data/LRG_RefSeqGene_d1541209245_kras.tab',
+        |  FROM read_csv('$TestData/LRG_RefSeqGene_d1541209245_kras.tab',
         |                delim='\t', header=true, all_varchar=true)
         |  WHERE RNA IS NOT NULL AND RNA <> ''
         |), gene AS (
         |  SELECT r1."3845".uid AS uid, r1."3845".name AS name
         |  FROM (SELECT result AS r1
-        |        FROM read_json_auto('/root/reference/test/data/entrez_gene.3845.json'))
+        |        FROM read_json_auto('$TestData/entrez_gene.3845.json'))
         |)
         |SELECT DISTINCT kind, a, b FROM (
         |  SELECT 'feature:transcript' AS kind, rna AS a, rnav AS b FROM r
@@ -676,8 +678,8 @@ private[graft] object OraclesRef {
         |    WHERE GeneID IN (SELECT uid FROM gene)
         |) AS u""".stripMargin,
     "g11_chembl" ->
-      """WITH m AS (
-        |  SELECT * FROM read_json_auto('/root/reference/test/data/chembl.CHEMBL553.json')
+      raw"""WITH m AS (
+        |  SELECT * FROM read_json_auto('$TestData/chembl.CHEMBL553.json')
         |)
         |SELECT molecule_chembl_id AS source_id,
         |  coalesce(pref_name, molecule_properties.full_molformula) AS name,
@@ -1108,20 +1110,20 @@ private[graft] object OraclesRef {
         |('variant', '613::25:fusion@t:fus', '613|25', '')
         |) AS t(kind, a, b, c)""".stripMargin,
     "g28_vocab_file" ->
-      """WITH raw AS (
-        |  SELECT records FROM read_json('/root/reference/data/vocab.json',
+      raw"""WITH raw AS (
+        |  SELECT records FROM read_json('$SeedData/vocab.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), entries AS (
         |  SELECT unnest(map_keys(records)) AS key, unnest(map_values(records)) AS v
         |  FROM raw
         |), recs AS (
         |  SELECT key,
-        |    coalesce(json_extract_string(v, '$.sourceId'), key) AS source_id,
-        |    coalesce(json_extract_string(v, '$.name'),
-        |             coalesce(json_extract_string(v, '$.sourceId'), key)) AS name,
-        |    coalesce(CAST(json_extract(v, '$.deprecated') AS BOOLEAN), false) AS deprecated,
-        |    coalesce(json_extract_string(v, '$.source'), 'default') AS source,
-        |    json_extract(v, '$.links') AS links
+        |    coalesce(json_extract_string(v, '$$.sourceId'), key) AS source_id,
+        |    coalesce(json_extract_string(v, '$$.name'),
+        |             coalesce(json_extract_string(v, '$$.sourceId'), key)) AS name,
+        |    coalesce(CAST(json_extract(v, '$$.deprecated') AS BOOLEAN), false) AS deprecated,
+        |    coalesce(json_extract_string(v, '$$.source'), 'default') AS source,
+        |    json_extract(v, '$$.links') AS links
         |  FROM entries
         |), lnk AS (
         |  SELECT key, count(*) AS n_links
@@ -1320,12 +1322,12 @@ private[graft] object OraclesRef {
         |('variant:protein', '673:p.V600E@t:sub', 't:sub', 'p.V600|-')
         |) AS t(kind, a, b, c)""".stripMargin,
     "g17_dgidb" ->
-      """WITH g AS (
+      raw"""WITH g AS (
         |  SELECT r."3845".uid AS uid FROM (SELECT result AS r
-        |    FROM read_json_auto('/root/reference/test/data/entrez_gene.3845.json'))
+        |    FROM read_json_auto('$TestData/entrez_gene.3845.json'))
         |), m AS (
         |  SELECT molecule_chembl_id AS cid
-        |  FROM read_json_auto('/root/reference/test/data/chembl.CHEMBL553.json')
+        |  FROM read_json_auto('$TestData/chembl.CHEMBL553.json')
         |)
         |SELECT 'targetof' AS kind, uid AS a, cid AS b,
         |       'antagonist;inhibitor|u1' AS c
@@ -1353,26 +1355,26 @@ private[graft] object OraclesRef {
         |('variant:protein', '673:p.V600E@t:substitution', 't:substitution', 'p.V600|false')
         |) AS t(kind, a, b, c)""".stripMargin,
     "g15_entrez_refseq" ->
-      """WITH recs AS (
+      raw"""WITH recs AS (
         |  SELECT r."224589815".accessionversion AS acc, r."224589815".biomol AS biomol,
         |         r."224589815".subname AS subname, r."224589815".title AS title
         |  FROM (SELECT result AS r
-        |    FROM read_json_auto('/root/reference/test/data/entrez_refseq.NC_000003.11.json'))
+        |    FROM read_json_auto('$TestData/entrez_refseq.NC_000003.11.json'))
         |  UNION ALL
         |  SELECT r."568815595".accessionversion, r."568815595".biomol,
         |         r."568815595".subname, r."568815595".title
         |  FROM (SELECT result AS r
-        |    FROM read_json_auto('/root/reference/test/data/entrez_refseq.NC_000003.json'))
+        |    FROM read_json_auto('$TestData/entrez_refseq.NC_000003.json'))
         |  UNION ALL
         |  SELECT r."1519245592".accessionversion, r."1519245592".biomol,
         |         r."1519245592".subname, r."1519245592".title
         |  FROM (SELECT result AS r
-        |    FROM read_json_auto('/root/reference/test/data/entrez_refseq.NM_005228.5.json'))
+        |    FROM read_json_auto('$TestData/entrez_refseq.NM_005228.5.json'))
         |  UNION ALL
         |  SELECT r."5901912".accessionversion, r."5901912".biomol,
         |         r."5901912".subname, r."5901912".title
         |  FROM (SELECT result AS r
-        |    FROM read_json_auto('/root/reference/test/data/entrez_refseq.NP_008819.1.json'))
+        |    FROM read_json_auto('$TestData/entrez_refseq.NP_008819.1.json'))
         |), parsed AS (
         |  SELECT split_part(acc, '.', 1) AS source_id,
         |    nullif(split_part(acc, '.', 2), '') AS source_id_version,
@@ -1393,42 +1395,42 @@ private[graft] object OraclesRef {
     // g3's oracle pins, ncit edges = the sum of g3's pinned n_out) and DAG
     // semantics (14 loaders, rerun creates nothing).
     "g14_full_dag" ->
-      """WITH vocab_recs AS (
+      raw"""WITH vocab_recs AS (
         |  SELECT unnest(map_values(records)) AS v
-        |  FROM read_json('/root/reference/data/vocab.json',
+        |  FROM read_json('$SeedData/vocab.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), sig_recs AS (
         |  SELECT unnest(map_values(records)) AS v
-        |  FROM read_json('/root/reference/data/signatures.json',
+        |  FROM read_json('$SeedData/signatures.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), chrom_recs AS (
         |  SELECT unnest(map_values(records)) AS v
-        |  FROM read_json('/root/reference/data/chromosomes.json',
+        |  FROM read_json('$SeedData/chromosomes.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), ev_recs AS (
         |  SELECT unnest(map_values(records)) AS v
-        |  FROM read_json('/root/reference/data/evidenceLevels.json',
+        |  FROM read_json('$SeedData/evidenceLevels.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), aacr_recs AS (
         |  SELECT unnest(map_values(records)) AS v
-        |  FROM read_json('/root/reference/data/aacr.json',
+        |  FROM read_json('$SeedData/aacr.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), ascoL_recs AS (
         |  SELECT unnest(map_values(records)) AS v
-        |  FROM read_json('/root/reference/data/asco.json',
+        |  FROM read_json('$SeedData/asco.json',
         |    columns={records: 'MAP(VARCHAR, JSON)'})
         |), doid_nodes AS (
         |  SELECT unnest(graphs[1].nodes) AS n
-        |  FROM read_json_auto('/root/reference/test/data/doid.sample.json',
+        |  FROM read_json_auto('$TestData/doid.sample.json',
         |                      maximum_object_size=20000000)
         |), doid_edges AS (
         |  SELECT unnest(graphs[1].edges) AS e
-        |  FROM read_json_auto('/root/reference/test/data/doid.sample.json',
+        |  FROM read_json_auto('$TestData/doid.sample.json',
         |                      maximum_object_size=20000000)
         |), onc AS (
         |  SELECT lower(code) AS sid, lower(parent) AS parent,
         |         coalesce(len(externalReferences.NCI), 0) AS n_nci
-        |  FROM read_json_auto('/root/reference/test/data/tumorTypes-oncotree_latest_stable.json')
+        |  FROM read_json_auto('$TestData/tumorTypes-oncotree_latest_stable.json')
         |), ens_r AS (
         |  SELECT split_part(lower("Gene stable ID version"),'.',1) AS gid,
         |         split_part(lower("Gene stable ID version"),'.',2) AS gv,
@@ -1437,7 +1439,7 @@ private[graft] object OraclesRef {
         |         split_part(lower("Protein stable ID version"),'.',1) AS pid,
         |         split_part(lower("Protein stable ID version"),'.',2) AS pv,
         |         lower("HGNC ID") AS hgnc
-        |  FROM read_csv('/root/reference/test/data/ensembl_biomart_export_ENSG00000139618.tsv',
+        |  FROM read_csv('$TestData/ensembl_biomart_export_ENSG00000139618.tsv',
         |                delim='\t', header=true)
         |), ens_u AS (
         |  SELECT DISTINCT kind, a, b FROM (
@@ -1461,7 +1463,7 @@ private[graft] object OraclesRef {
         |         split_part(RNA,'.',1) AS rna, split_part(RNA,'.',2) AS rnav,
         |         split_part(coalesce(Protein,''),'.',1) AS prot,
         |         split_part(coalesce(Protein,''),'.',2) AS protv
-        |  FROM read_csv('/root/reference/test/data/LRG_RefSeqGene_d1541209245_kras.tab',
+        |  FROM read_csv('$TestData/LRG_RefSeqGene_d1541209245_kras.tab',
         |                delim='\t', header=true, all_varchar=true)
         |  WHERE RNA IS NOT NULL AND RNA <> ''
         |), rs_u AS (
@@ -1480,7 +1482,7 @@ private[graft] object OraclesRef {
         |  SELECT unnest(regexp_extract_all(content,
         |    '<owl:Class rdf:about="http://purl\.obolibrary\.org/obo/VariO_[0-9]+">.*?</owl:Class>',
         |    0, 's')) AS b
-        |  FROM read_text('/root/reference/test/data/vario_v2018-04-27.owl')
+        |  FROM read_text('$TestData/vario_v2018-04-27.owl')
         |), vario_lab AS (
         |  SELECT * FROM (
         |    SELECT lower(replace(regexp_extract(b, 'obo/(VariO_[0-9]+)"', 1), '_', ':')) AS sid,
@@ -1494,10 +1496,10 @@ private[graft] object OraclesRef {
         |  WHERE t.s IN (SELECT sid FROM vario_lab)
         |), hgnc_doc AS (
         |  SELECT unnest("http://rest.genenames.org/fetch/hgnc_id/1101".response.docs) AS d
-        |  FROM read_json_auto('/root/reference/test/data/external_api_responses.json')
+        |  FROM read_json_auto('$TestData/external_api_responses.json')
         |), fda AS (
         |  SELECT count(*) AS n
-        |  FROM read_csv('/root/reference/test/data/UNII_Records_25Oct2018_sample.txt',
+        |  FROM read_csv('$TestData/UNII_Records_25Oct2018_sample.txt',
         |                delim='\t', header=true, all_varchar=true)
         |  WHERE UNII IS NOT NULL AND PT IS NOT NULL
         |)
@@ -1516,21 +1518,21 @@ private[graft] object OraclesRef {
         |  CAST((SELECT count(*) FROM vocab_recs) AS BIGINT)
         |UNION ALL SELECT 'table:terms', CAST(10 AS BIGINT)
         |UNION ALL SELECT 'table:vertices', CAST((SELECT count(*) FROM doid_nodes
-        |  WHERE regexp_extract(n.id, '.*/([A-Za-z]+_[0-9]+)$', 1) <> '') AS BIGINT)
+        |  WHERE regexp_extract(n.id, '.*/([A-Za-z]+_[0-9]+)$$', 1) <> '') AS BIGINT)
         |UNION ALL SELECT 'table:diseases', CAST((SELECT count(*) FROM onc) AS BIGINT)
         |-- + 1: the cgi node's therapy miss creates cgi:vemurafenib
         |-- (vemurafenib appears in none of the three therapy fixtures)
         |UNION ALL SELECT 'table:therapies', CAST((SELECT n FROM fda)
         |  + (SELECT len(regexp_extract_all(content, '<drug type='))
-        |     FROM read_text('/root/reference/test/data/drugbank_sample.xml'))
+        |     FROM read_text('$TestData/drugbank_sample.xml'))
         |  + (SELECT 1 + CASE WHEN usan_stem_definition IS NOT NULL THEN 1 ELSE 0 END
-        |     FROM read_json_auto('/root/reference/test/data/chembl.CHEMBL553.json'))
+        |     FROM read_json_auto('$TestData/chembl.CHEMBL553.json'))
         |  + 1 AS BIGINT)
         |UNION ALL SELECT 'table:genes', CAST((SELECT len(r.uids) FROM
         |    (SELECT result AS r
-        |     FROM read_json_auto('/root/reference/test/data/entrez_gene.3845.json')))
+        |     FROM read_json_auto('$TestData/entrez_gene.3845.json')))
         |  + (SELECT count(*)
-        |     FROM read_json_auto('/root/reference/test/data/civic_variant.json')
+        |     FROM read_json_auto('$TestData/civic_variant.json')
         |     WHERE CAST(entrez_id AS VARCHAR) <> '3845') AS BIGINT)
         |UNION ALL SELECT 'table:genes_hgnc', CAST((SELECT count(*)
         |  + sum(len(d.prev_symbol) + len(d.alias_symbol)) FROM hgnc_doc) AS BIGINT)
@@ -1539,16 +1541,16 @@ private[graft] object OraclesRef {
         |     + (SELECT count(*) FROM rs_u WHERE kind = 'f') AS BIGINT)
         |UNION ALL SELECT 'table:articles', CAST((SELECT len(r.uids) FROM
         |  (SELECT result AS r
-        |   FROM read_json_auto('/root/reference/test/data/entrez_pubmed.30016509.json'))) AS BIGINT)
+        |   FROM read_json_auto('$TestData/entrez_pubmed.30016509.json'))) AS BIGINT)
         |UNION ALL SELECT 'table:trials', CAST((SELECT count(*)
-        |  FROM read_json_auto('/root/reference/test/data/clinicaltrialsgov.NCT03478891.json')) AS BIGINT)
+        |  FROM read_json_auto('$TestData/clinicaltrialsgov.NCT03478891.json')) AS BIGINT)
         |-- variants: civic (from the fixture) + the record-level loaders'
         |-- disjoint demo ladders: moa 6 (9103's protein lands while its
         |-- chrom-99 genomic drops; 9104 drops whole), docm 2, oncokb 2,
         |-- hotspots 3, cosmic resistance 5, cosmic fusions 2,
         |-- pmc4232638 1, pmc4468049 1, cgl 2, cgi 1
         |UNION ALL SELECT 'table:variants', CAST((SELECT count(*)
-        |  FROM read_json_auto('/root/reference/test/data/civic_variant.json'))
+        |  FROM read_json_auto('$TestData/civic_variant.json'))
         |  + 25 AS BIGINT)
         |-- asco dedup collapses its 2 demo records to 1; one scraped
         |-- announcement; statements: hotspots + cosmic fusions +
@@ -1569,8 +1571,8 @@ private[graft] object OraclesRef {
         |UNION ALL SELECT 'table:refseqs', CAST(4 AS BIGINT)
         |UNION ALL SELECT 'table:edges', CAST(
         |    (SELECT count(*) FROM doid_edges WHERE e.pred = 'is_a'
-        |      AND regexp_extract(e.sub, '.*/([A-Za-z]+_[0-9]+)$', 1) <> ''
-        |      AND regexp_extract(e.obj, '.*/([A-Za-z]+_[0-9]+)$', 1) <> '')
+        |      AND regexp_extract(e.sub, '.*/([A-Za-z]+_[0-9]+)$$', 1) <> ''
+        |      AND regexp_extract(e.obj, '.*/([A-Za-z]+_[0-9]+)$$', 1) <> '')
         |  + (SELECT count(*) FROM onc
         |      WHERE parent IS NOT NULL AND parent IN (SELECT sid FROM onc))
         |  + (SELECT sum(n_nci) FROM onc)
@@ -1581,27 +1583,27 @@ private[graft] object OraclesRef {
         |      + CASE WHEN d.ensembl_gene_id IS NOT NULL THEN 1 ELSE 0 END
         |      + CASE WHEN d.entrez_id IS NOT NULL THEN 1 ELSE 0 END) FROM hgnc_doc)
         |  + (SELECT count(*) FROM (
-        |      SELECT unnest(CAST(json_extract(v, '$.links') AS JSON[]))
-        |      FROM vocab_recs WHERE json_extract(v, '$.links') IS NOT NULL))
+        |      SELECT unnest(CAST(json_extract(v, '$$.links') AS JSON[]))
+        |      FROM vocab_recs WHERE json_extract(v, '$$.links') IS NOT NULL))
         |  + (SELECT count(*) FROM (
-        |      SELECT unnest(CAST(json_extract(v, '$.links') AS JSON[]))
-        |      FROM sig_recs WHERE json_extract(v, '$.links') IS NOT NULL))
+        |      SELECT unnest(CAST(json_extract(v, '$$.links') AS JSON[]))
+        |      FROM sig_recs WHERE json_extract(v, '$$.links') IS NOT NULL))
         |  + (SELECT count(*) FROM (
-        |      SELECT unnest(CAST(json_extract(v, '$.links') AS JSON[]))
-        |      FROM ev_recs WHERE json_extract(v, '$.links') IS NOT NULL))
+        |      SELECT unnest(CAST(json_extract(v, '$$.links') AS JSON[]))
+        |      FROM ev_recs WHERE json_extract(v, '$$.links') IS NOT NULL))
         |-- + ncit 6 + chembl 1 + uberon subclass 2 + dgidb TargetOf 1
         |-- + record-loader Infers: moa 3, docm 1, hotspots 2,
         |--   cosmic resistance 4, cosmic fusions 1, cgl 1
         |  + 6 + 1 + 2 + 1 + 3 + 1 + 2 + 4 + 1 + 1 AS BIGINT)""".stripMargin,
     "g13_entrez" ->
-      """WITH g AS (
+      raw"""WITH g AS (
         |  SELECT r."3845" AS d
         |  FROM (SELECT result AS r
-        |        FROM read_json_auto('/root/reference/test/data/entrez_gene.3845.json'))
+        |        FROM read_json_auto('$TestData/entrez_gene.3845.json'))
         |), p AS (
         |  SELECT r."30016509" AS d
         |  FROM (SELECT result AS r
-        |        FROM read_json_auto('/root/reference/test/data/entrez_pubmed.30016509.json'))
+        |        FROM read_json_auto('$TestData/entrez_pubmed.30016509.json'))
         |)
         |SELECT 'gene' AS kind, d.uid AS source_id, d.name AS name,
         |  d.name AS display_name, CAST(NULL AS BIGINT) AS year,
@@ -1615,12 +1617,12 @@ private[graft] object OraclesRef {
         |  d.fulljournalname
         |FROM p""".stripMargin,
     "g12_civic_variant" ->
-      """WITH v AS (
+      raw"""WITH v AS (
         |  SELECT id, name, entrez_name, entrez_id
-        |  FROM read_json_auto('/root/reference/test/data/civic_variant.json')
+        |  FROM read_json_auto('$TestData/civic_variant.json')
         |), n AS (
         |  SELECT lower(entrez_name) AS gene, CAST(entrez_id AS VARCHAR) AS gid,
-        |    regexp_extract(lower(name), '^exon ([0-9]+) mutation$', 1) AS brk
+        |    regexp_extract(lower(name), '^exon ([0-9]+) mutation$$', 1) AS brk
         |  FROM v
         |)
         |SELECT 'feature:gene' AS kind, gid AS a, gene AS b FROM n
@@ -1672,12 +1674,12 @@ private[graft] object OraclesRef {
         |  CAST(year AS BIGINT) AS year, CAST(text_len AS BIGINT) AS text_len FROM (VALUES
         |(1, 1, 2021, 53), (2, 0, NULL, 19)) AS t(page_id, n_news_links, year, text_len)""".stripMargin,
     "s1_delim_scan" ->
-      """SELECT "Gene stable ID" AS gene_id,
+      raw"""SELECT "Gene stable ID" AS gene_id,
         |  "Transcript stable ID" AS transcript_id,
         |  "Protein stable ID" AS protein_id,
         |  "HGNC ID" AS hgnc_id,
         |  "Gene name" AS gene_name
-        |FROM read_csv('/root/reference/test/data/ensembl_biomart_export_ENSG00000139618.tsv',
+        |FROM read_csv('$TestData/ensembl_biomart_export_ENSG00000139618.tsv',
         |              delim='	', header=true)""".stripMargin,
     "s3_xml_dom" ->
       """SELECT CAST(name AS VARCHAR) AS name, CAST(cas_number AS VARCHAR) AS cas_number,
@@ -1708,25 +1710,25 @@ private[graft] object OraclesRef {
         |('vario:0009', 'effect on transport function of protein', 1),
         |('vario:0010', 'effect on RNA abundance', 1)) AS t(source_id, name, n_subclass)""".stripMargin,
     "s6_obograph_nodes" ->
-      """SELECT lower(replace(regexp_extract(n.id, '.*/([A-Za-z]+_[0-9]+)$', 1), '_', ':')) AS source_id,
+      raw"""SELECT lower(replace(regexp_extract(n.id, '.*/([A-Za-z]+_[0-9]+)$$', 1), '_', ':')) AS source_id,
         |  n.lbl AS name,
         |  CAST(coalesce(len(n.meta.synonyms), 0) AS BIGINT) AS n_alias,
         |  coalesce(len(list_filter(n.meta.basicPropertyValues,
         |    x -> x.pred LIKE '%deprecated' AND x.val = 'true')) > 0, false) AS deprecated
         |FROM (SELECT unnest(graphs[1].nodes) AS n
-        |      FROM read_json_auto('/root/reference/test/data/doid.sample.json',
+        |      FROM read_json_auto('$TestData/doid.sample.json',
         |                          maximum_object_size=20000000))""".stripMargin,
     "s8_json_scan" ->
-      """SELECT molecule_chembl_id AS chembl_id, pref_name AS name,
+      raw"""SELECT molecule_chembl_id AS chembl_id, pref_name AS name,
         |  CAST(max_phase AS BIGINT) AS max_phase,
         |  molecule_properties.full_molformula AS molformula
-        |FROM read_json_auto('/root/reference/test/data/chembl.CHEMBL553.json')""".stripMargin,
+        |FROM read_json_auto('$TestData/chembl.CHEMBL553.json')""".stripMargin,
     "s16_api_proxy" ->
-      """SELECT protocolSection.identificationModule.nctId AS nct_id,
+      raw"""SELECT protocolSection.identificationModule.nctId AS nct_id,
         |  protocolSection.statusModule.overallStatus AS status,
         |  array_to_string(protocolSection.designModule.phases, '/') AS phase,
         |  protocolSection.identificationModule.organization.fullName AS org
-        |FROM read_json_auto('/root/reference/test/data/clinicaltrialsgov.NCT03478891.json',
+        |FROM read_json_auto('$TestData/clinicaltrialsgov.NCT03478891.json',
         |                    maximum_object_size=20000000)""".stripMargin,
     "f1_hgvs_parse" ->
       """SELECT

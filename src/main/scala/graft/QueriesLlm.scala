@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import EntryHelpers._
+import Inputs.scratchDir
 
 /** LLM-data-pipeline query registry (SURVEY §2.12: dedup, ANN tiers, PCA, sketches, graphs, sampling, text analysis, multimodal). */
 private[graft] object QueriesLlm {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import EntryHelpers._
+import Inputs.{SeedData, TestData, scratchDir}
 
 /** Reference-surface query registry (SURVEY §2.1–2.11: scans, sinks, projections, joins, aggregations, scalars, combinatorial expansions, loader pipelines g1–g36 and the sf-scaled ldr_* replays). */
 private[graft] object QueriesRef {
@@ -127,7 +128,7 @@ private[graft] object QueriesRef {
     // it — normalize on this side.
     "s9_text_scan" -> ((s, dir) => {
       sources.Scans.textLines(s,
-        s"$REF_DATA/UNII_Records_25Oct2018_sample.txt")
+        s"$TestData/UNII_Records_25Oct2018_sample.txt")
         .select(regexp_replace(col("line"), "\r$", "").as("line"))
     }),
 
@@ -200,7 +201,7 @@ private[graft] object QueriesRef {
     // reference. Oracle re-reads the same TSV with DuckDB read_csv.
     "s1_delim_scan" -> ((s, dir) => {
       sources.Scans.delim(s,
-        s"$REF_DATA/ensembl_biomart_export_ENSG00000139618.tsv",
+        s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv",
         headerMap = Map(
           "Gene stable ID" -> "gene_id", "Transcript stable ID" -> "transcript_id",
           "Protein stable ID" -> "protein_id", "HGNC ID" -> "hgnc_id",
@@ -210,7 +211,7 @@ private[graft] object QueriesRef {
 
     // S3 (XML DOM scan via the xml2js-equivalent JSON bridge, util.js:87-114).
     "s3_xml_dom" -> ((s, dir) => {
-      sources.XmlScan.domDF(s, s"$REF_DATA/drugbank_sample.xml")
+      sources.XmlScan.domDF(s, s"$TestData/drugbank_sample.xml")
         .select(
           col("drugbank.drug.name").as("name"),
           col("drugbank.drug.`cas-number`").as("cas_number"),
@@ -223,7 +224,7 @@ private[graft] object QueriesRef {
     // fragment split (bounded memory) + typed per-fragment extraction.
     "s4_xml_rowtag" -> ((s, dir) => {
       import s.implicits._
-      sources.XmlScan.rowTagFragments(s, s"$REF_DATA/drugbank_sample.xml", "drug")
+      sources.XmlScan.rowTagFragments(s, s"$TestData/drugbank_sample.xml", "drug")
         .map { frag =>
           val x = scala.xml.XML.loadString(frag)
           val primaryId = (x \ "drugbank-id")
@@ -242,7 +243,7 @@ private[graft] object QueriesRef {
     "s5_owl_group" -> ((s, dir) => {
       val LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
       val SUB = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-      val tr = sources.OwlScan.triples(s, s"$REF_DATA/vario_v2018-04-27.owl")
+      val tr = sources.OwlScan.triples(s, s"$TestData/vario_v2018-04-27.owl")
       tr.filter(col("predicate").isin(LABEL, SUB))
         .groupBy(col("subject"))
         .agg(
@@ -261,7 +262,7 @@ private[graft] object QueriesRef {
     // S6 (OBO-graph JSON scan, diseaseOntology/index.js:157-166 + the
     // doid:<id> parser at :22-29). Oracle re-reads with read_json_auto.
     "s6_obograph_nodes" -> ((s, dir) => {
-      sources.Scans.json(s, s"$REF_DATA/doid.sample.json")
+      sources.Scans.json(s, s"$TestData/doid.sample.json")
         .select(explode(col("graphs")(0)("nodes")).as("n"))
         .select(
           lower(regexp_replace(
@@ -279,7 +280,7 @@ private[graft] object QueriesRef {
     // S8 (generic JSON scan, ontology/index.js:253-258 shape) on the ChEMBL
     // molecule dump fixture (chembl/index.js:63-71 fields).
     "s8_json_scan" -> ((s, dir) => {
-      sources.Scans.json(s, s"$REF_DATA/chembl.CHEMBL553.json")
+      sources.Scans.json(s, s"$TestData/chembl.CHEMBL553.json")
         .select(
           col("molecule_chembl_id").as("chembl_id"),
           col("pref_name").as("name"),
@@ -290,7 +291,7 @@ private[graft] object QueriesRef {
     // S16 (disk API proxy, oncokb/index.js:796-812): saved REST response
     // read as the API's stand-in; phase list folded like F12.
     "s16_api_proxy" -> ((s, dir) => {
-      sources.Scans.json(s, s"$REF_DATA/clinicaltrialsgov.NCT03478891.json")
+      sources.Scans.json(s, s"$TestData/clinicaltrialsgov.NCT03478891.json")
         .select(
           col("protocolSection.identificationModule.nctId").as("nct_id"),
           col("protocolSection.statusModule.overallStatus").as("status"),
@@ -308,7 +309,7 @@ private[graft] object QueriesRef {
     "g1_loader_pipeline" -> ((s, dir) => {
       val store = new core.PersistentGraphStore(s,
         scratchDir("g1"))
-      val path = s"$REF_DATA/doid.sample.json"
+      val path = s"$TestData/doid.sample.json"
       sources.Loaders.loadDoid(s, store, path)
       sources.Loaders.loadDoid(s, store, path) // idempotency pass
       store.read("vertices").get
@@ -416,7 +417,7 @@ private[graft] object QueriesRef {
     // external references; the oracle recomputes everything independently
     // with DuckDB's JSON reader.
     "g4_oncotree" -> ((s, dir) => {
-      val path = s"$REF_DATA/tumorTypes-oncotree_latest_stable.json"
+      val path = s"$TestData/tumorTypes-oncotree_latest_stable.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g4"))
       sources.Loaders.loadOncotree(s, store, path)
@@ -440,7 +441,7 @@ private[graft] object QueriesRef {
     // edges, all through the store; the oracle recomputes the same sets
     // straight from the TSV.
     "g5_ensembl" -> ((s, dir) => {
-      val path = s"$REF_DATA/ensembl_biomart_export_ENSG00000139618.tsv"
+      val path = s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g5"))
       sources.Loaders.loadEnsembl(s, store, path)
@@ -460,7 +461,7 @@ private[graft] object QueriesRef {
     // the same JSON with DuckDB.
     "g6_hgnc" -> ((s, dir) => {
       val docs = sources.Loaders.hgncDocs(s,
-        s"$REF_DATA/external_api_responses.json",
+        s"$TestData/external_api_responses.json",
         "http://rest.genenames.org/fetch/hgnc_id/1101")
       val store = new core.PersistentGraphStore(s,
         scratchDir("g6"))
@@ -483,7 +484,7 @@ private[graft] object QueriesRef {
     // reference's lookup-miss path (edge skipped, drug still created) is
     // exercised; the oracle re-derives the same exclusion in DuckDB.
     "g7_fdasrs" -> ((s, dir) => {
-      val path = s"$REF_DATA/UNII_Records_25Oct2018_sample.txt"
+      val path = s"$TestData/UNII_Records_25Oct2018_sample.txt"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g7"))
       val withNcit = sources.FdaSrs.rows(s, path).filter(col("ncit").isNotNull)
@@ -505,7 +506,7 @@ private[graft] object QueriesRef {
     // edges (both endpoints labeled); the oracle re-parses the raw RDF/XML
     // in DuckDB with regex extraction over read_text.
     "g8_vario" -> ((s, dir) => {
-      val path = s"$REF_DATA/vario_v2018-04-27.owl"
+      val path = s"$TestData/vario_v2018-04-27.owl"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g8"))
       sources.Vario.load(s, store, path)
@@ -526,7 +527,7 @@ private[graft] object QueriesRef {
     // the empty-ish disease dim misses its condition.
     "g9_ctg" -> ((s, dir) => {
       import s.implicits._
-      val path = s"$REF_DATA/clinicaltrialsgov.NCT03478891.json"
+      val path = s"$TestData/clinicaltrialsgov.NCT03478891.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g9"))
       val therapyDim = Seq("VRC-EBOMAB092-00-AB (MAb114)", "erlotinib").toDF("name")
@@ -552,11 +553,11 @@ private[graft] object QueriesRef {
     // generalizationof/elementof edges, gene elementof gated on the
     // hydrated dim; oracle recomputes everything from the raw tab + JSON.
     "g10_refseq" -> ((s, dir) => {
-      val path = s"$REF_DATA/LRG_RefSeqGene_d1541209245_kras.tab"
+      val path = s"$TestData/LRG_RefSeqGene_d1541209245_kras.tab"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g10"))
       val fetcher = sources.Entrez.fileFetcher(
-        Map("3845" -> s"$REF_DATA/entrez_gene.3845.json"))
+        Map("3845" -> s"$TestData/entrez_gene.3845.json"))
       sources.Entrez.hydrate(s, store, "genes", Seq("3845"), fetcher,
         sources.Entrez.parseGene(_), Seq("sourceId"),
         Seq("biotype", "name", "displayName", "longName", "description", "url"))
@@ -579,7 +580,7 @@ private[graft] object QueriesRef {
     // the USAN-stem parent therapy and its SubClassOf edge; oracle
     // re-reads the JSON with DuckDB.
     "g11_chembl" -> ((s, dir) => {
-      val path = s"$REF_DATA/chembl.CHEMBL553.json"
+      val path = s"$TestData/chembl.CHEMBL553.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g11"))
       sources.Chembl.load(s, store, path)
@@ -679,12 +680,11 @@ private[graft] object QueriesRef {
           |    <rdfs:subClassOf rdf:resource="http://purl.obolibrary.org/obo/SO_0000999"/>
           |  </owl:Class>
           |</rdf:RDF>""".stripMargin
-      val f = java.io.File.createTempFile("graft-g31", ".owl")
-      java.nio.file.Files.writeString(f.toPath, owl)
+      val f = Inputs.file("g31.owl", owl)
       val store = new core.PersistentGraphStore(s,
         scratchDir("g31"))
-      val c1 = sources.SequenceOntology.load(s, store, f.getPath)
-      sources.SequenceOntology.load(s, store, f.getPath) // idempotency pass
+      val c1 = sources.SequenceOntology.load(s, store, f)
+      sources.SequenceOntology.load(s, store, f) // idempotency pass
       val ents = store.read("vocabulary").get
         .select(lit("entity").as("kind"), col("sourceId").as("a"),
           col("name").as("b"),
@@ -746,13 +746,11 @@ private[graft] object QueriesRef {
         "(BCR,ABL1):fusion(e.13,e.3)", "badnotation", "  ",
         "NOVEL1:p.V600E", "MISSING9:p.V1M", "KRAS:c.100dup", "")
         .mkString("\n")
-      val f = java.io.File.createTempFile("graft-g33", ".txt")
-      java.nio.file.Files.writeString(f.toPath, txt)
+      val f = Inputs.file("g33.txt", txt)
       val json = """{"result":{"uids":["9999"],"9999":{"uid":"9999",
         |"name":"NOVEL1","description":"novel gene 1","summary":"fake"}}}"""
         .stripMargin.replace("\n", "")
-      val fj = java.io.File.createTempFile("graft-g33", ".json")
-      java.nio.file.Files.writeString(fj.toPath, json)
+      val fj = Inputs.file("g33.json", json)
       val store = new core.PersistentGraphStore(s,
         scratchDir("g33"))
       val geneCols = Seq("biotype", "name", "displayName", "longName",
@@ -770,12 +768,12 @@ private[graft] object QueriesRef {
       val fetcher: Seq[String] => Seq[(String, String)] = ids => {
         require(!ids.exists(seeded), // J9 runtime guard: dim hits never fetch
           s"anti-join must prune dim-resolved symbols, got $ids")
-        sources.Entrez.fileFetcher(Map("NOVEL1" -> fj.getPath))(ids)
+        sources.Entrez.fileFetcher(Map("NOVEL1" -> fj))(ids)
       }
       val vocab = Seq(("substitution", "t:sub"), ("fusion", "t:fusion"))
         .toDF("name", "term_id")
-      val c1 = sources.VariantsList.load(s, store, f.getPath, vocab, fetcher)
-      sources.VariantsList.load(s, store, f.getPath, vocab, fetcher) // idempotency
+      val c1 = sources.VariantsList.load(s, store, f, vocab, fetcher)
+      sources.VariantsList.load(s, store, f, vocab, fetcher) // idempotency
       val vars = store.read("variants").get
         .select(lit("variant").as("kind"), col("vid").as("a"),
           col("term").as("b"),
@@ -847,14 +845,14 @@ private[graft] object QueriesRef {
       import s.implicits._
       val store = new core.PersistentGraphStore(s, scratchDir("g35"))
       val fdaDim = sources.FdaSrs
-        .therapies(s, s"$REF_DATA/UNII_Records_25Oct2018_sample.txt")
+        .therapies(s, s"$TestData/UNII_Records_25Oct2018_sample.txt")
         .unionByName(Seq(("J4T82NDH7E", "ERLOTINIB")).toDF("sourceId", "name"))
       val chemblDim = sources.Chembl
-        .molecules(s, s"$REF_DATA/chembl.CHEMBL553.json")
+        .molecules(s, s"$TestData/chembl.CHEMBL553.json")
         .select("sourceId", "name")
       val geneDim = Seq(("HGNC:3236", "egfr")).toDF("hgncId", "symbol")
       val run = () => sources.Loaders.loadDrugbankFull(s, store,
-        s"$REF_DATA/drugbank_sample.xml", fdaDim, chemblDim, geneDim)
+        s"$TestData/drugbank_sample.xml", fdaDim, chemblDim, geneDim)
       run()
       val c2 = run() // idempotency pass: no create/update/delete, no edges
       val mutations = Seq("create", "update", "delete", "edges_created")
@@ -894,18 +892,16 @@ private[graft] object QueriesRef {
     "g36_snp" -> ((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s, scratchDir("g36"))
-      val snpFixture = sources.Snp.fixturePath("/fixtures/entrez_snp.esummary.json")
+      val snpFixture = Inputs.fixture("entrez_snp.esummary.json")
       val snpFetcher = sources.Snp.rsFetcher(
         Seq("121434568", "28934576", "1042522", "9999999")
           .map(u => u -> snpFixture).toMap)
       val refseqFetcher = sources.Entrez.fileFetcher(Map(
-        "NM_005228.5" -> s"$REF_DATA/entrez_refseq.NM_005228.5.json",
-        "NP_005219.2" ->
-          sources.Snp.fixturePath("/fixtures/entrez_refseq.NP_005219.2.json"),
-        "NP_000537.3" ->
-          sources.Snp.fixturePath("/fixtures/entrez_refseq.NP_000537.3.json")))
+        "NM_005228.5" -> s"$TestData/entrez_refseq.NM_005228.5.json",
+        "NP_005219.2" -> Inputs.fixture("entrez_refseq.NP_005219.2.json"),
+        "NP_000537.3" -> Inputs.fixture("entrez_refseq.NP_000537.3.json")))
       val geneFetcher = sources.Entrez.fileFetcher(
-        Map("1956" -> sources.Snp.fixturePath("/fixtures/entrez_gene.1956.json")))
+        Map("1956" -> Inputs.fixture("entrez_gene.1956.json")))
       val vocab = Seq(("substitution", "so:substitution")).toDF("name", "term_id")
       val run = () => sources.Snp.fetchAndLoad(s, store,
         Seq("rs121434568", "rs28934576", "rs1042522", "rs9999999",
@@ -1162,7 +1158,7 @@ private[graft] object QueriesRef {
     // links; the oracle re-derives everything from the raw JSON with
     // DuckDB's MAP reader.
     "g28_vocab_file" -> ((s, dir) => {
-      val path = "/root/reference/data/vocab.json"
+      val path = s"$SeedData/vocab.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g28"))
       sources.OntologyFile.load(s, store, path, "vocabulary")
@@ -1210,17 +1206,6 @@ private[graft] object QueriesRef {
     // comment, and one protein variant + statement per surviving row.
     "g26_pmc4232638" -> ((s, dir) => {
       import s.implicits._
-      val f = java.io.File.createTempFile("graft-g26", ".xlsx")
-      val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
-      def entry(name: String, content: String): Unit = {
-        zos.putNextEntry(new java.util.zip.ZipEntry(name))
-        zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-      }
-      entry("[Content_Types].xml",
-        """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""")
-      def cell(r: Int, c: Int, v: String) =
-        if (v.isEmpty) ""
-        else s"""<c r="${('A' + c).toChar}$r" t="inlineStr"><is><t>$v</t></is></c>"""
       val kinase = "Change in kinase, GTPase, or other enzymatic activity (i.e. RNase)"
       val rows = Seq(
         Seq("Additional file 2"),
@@ -1240,13 +1225,8 @@ private[graft] object QueriesRef {
         Seq("BRAF", "V600E", "Oncogene", "neutral", "yes", "", "", "", ""),
         Seq("TP53", "R282W", "Tumour suppressor", "non-neutral", "",
           "no effect", "yes", "no effect", "abc"))
-      val body = rows.zipWithIndex.map { case (r, ri) =>
-        s"""<row r="${ri + 1}">${r.zipWithIndex.map { case (v, ci) => cell(ri + 1, ci, v) }.mkString}</row>"""
-      }.mkString
-      entry("xl/worksheets/sheet1.xml",
-        s"""<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>$body</sheetData></worksheet>""")
-      zos.close()
-      val grid = sources.XlsxScan.df(s, f.getPath, superHeader = true)
+      val grid = sources.XlsxScan.df(s, Inputs.xlsx("g26.xlsx", rows),
+        superHeader = true)
       val store = new core.PersistentGraphStore(s,
         scratchDir("g26"))
       val genes = Seq(("TP53", "7157"), ("KRAS", "3845")).toDF("symbol", "sourceId")
@@ -1442,13 +1422,12 @@ private[graft] object QueriesRef {
           |    <rdfs:subClassOf rdf:resource="http://purl.obolibrary.org/obo/UBERON_0000001"/>
           |  </owl:Class>
           |</rdf:RDF>""".stripMargin
-      val f = java.io.File.createTempFile("graft-g22", ".owl")
-      java.nio.file.Files.writeString(f.toPath, owl)
+      val f = Inputs.file("g22.owl", owl)
       val store = new core.PersistentGraphStore(s,
         scratchDir("g22"))
       val ncitDim = Seq("c12345").toDF("sourceId")
-      sources.Uberon.load(s, store, f.getPath, ncitDim)
-      sources.Uberon.load(s, store, f.getPath, ncitDim) // idempotency pass
+      sources.Uberon.load(s, store, f, ncitDim)
+      sources.Uberon.load(s, store, f, ncitDim) // idempotency pass
       val ents = store.read("anatomy").get
         .select(lit("entity").as("kind"), col("sourceId").as("a"),
           col("name").as("b"),
@@ -1633,10 +1612,10 @@ private[graft] object QueriesRef {
         scratchDir("g17"))
       sources.Entrez.hydrate(s, store, "genes", Seq("3845"),
         sources.Entrez.fileFetcher(
-          Map("3845" -> s"$REF_DATA/entrez_gene.3845.json")),
+          Map("3845" -> s"$TestData/entrez_gene.3845.json")),
         sources.Entrez.parseGene(_), Seq("sourceId"),
         Seq("biotype", "name", "displayName", "longName", "description", "url"))
-      sources.Chembl.load(s, store, s"$REF_DATA/chembl.CHEMBL553.json")
+      sources.Chembl.load(s, store, s"$TestData/chembl.CHEMBL553.json")
       val records = Seq(
         Interaction("u1", "3845", "chembl:CHEMBL553",
           Seq("Inhibitor", " antagonist ")),
@@ -1716,7 +1695,7 @@ private[graft] object QueriesRef {
         scratchDir("g15"))
       val ids = Seq("NC_000003.11", "NC_000003", "NM_005228.5", "NP_008819.1")
       val fetcher = sources.Entrez.fileFetcher(
-        ids.map(i => i -> s"$REF_DATA/entrez_refseq.$i.json").toMap)
+        ids.map(i => i -> s"$TestData/entrez_refseq.$i.json").toMap)
       (1 to 2).foreach { _ => // second pass: versioned ids prune, merge noops
         sources.Entrez.hydrate(s, store, "refseqs", ids, fetcher,
           sources.Entrez.parseRefseq(_),
@@ -1799,10 +1778,10 @@ private[graft] object QueriesRef {
       val geneFetcher: Seq[String] => Seq[(String, String)] = ids => {
         require(!ids.contains("4869"), "anti-join must prune cached ids")
         sources.Entrez.fileFetcher(
-          Map("3845" -> s"$REF_DATA/entrez_gene.3845.json"))(ids)
+          Map("3845" -> s"$TestData/entrez_gene.3845.json"))(ids)
       }
       val pubmedFetcher = sources.Entrez.fileFetcher(
-        Map("30016509" -> s"$REF_DATA/entrez_pubmed.30016509.json"))
+        Map("30016509" -> s"$TestData/entrez_pubmed.30016509.json"))
       (1 to 2).foreach { _ =>
         sources.Entrez.hydrate(s, store, "genes", Seq("3845", "4869"),
           geneFetcher, sources.Entrez.parseGene(_), Seq("sourceId"), geneCols)
@@ -1833,14 +1812,10 @@ private[graft] object QueriesRef {
       // dbSNP loader — a CatalogueVariant + docsum ladder, NO gene
       // feature and NO category variant for it
       val fixture = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$REF_DATA/civic_variant.json")), "UTF-8")
+        java.nio.file.Paths.get(s"$TestData/civic_variant.json")), "UTF-8")
       val rsRec = """{"id": 999, "entrez_name": "EGFR", "entrez_id": 1956,
         |"name": "RS121434568", "description": ""}""".stripMargin
-      val tmp = java.io.File.createTempFile("graft-g12", ".json")
-      tmp.deleteOnExit()
-      java.nio.file.Files.write(tmp.toPath,
-        s"[$fixture,\n$rsRec]".getBytes("UTF-8"))
-      val path = tmp.getPath
+      val path = Inputs.file("g12.json", s"[$fixture,\n$rsRec]")
       val store = new core.PersistentGraphStore(s,
         scratchDir("g12"))
       val vocab = Seq(
@@ -1849,16 +1824,15 @@ private[graft] object QueriesRef {
         ("exon_variant", "sequence ontology", "so:exon_variant"),
         ("substitution", "sequence ontology", "so:substitution"))
         .toDF("name", "source", "term_id")
-      val snpFixture = sources.Snp.fixturePath("/fixtures/entrez_snp.esummary.json")
+      val snpFixture = Inputs.fixture("entrez_snp.esummary.json")
       val rsidLoad = (ids: org.apache.spark.sql.Dataset[String]) =>
         sources.Snp.fetchAndLoad(s, store, ids,
           sources.Snp.rsFetcher(Map("121434568" -> snpFixture)),
           sources.Entrez.fileFetcher(Map(
-            "NM_005228.5" -> s"$REF_DATA/entrez_refseq.NM_005228.5.json",
-            "NP_005219.2" -> sources.Snp.fixturePath(
-              "/fixtures/entrez_refseq.NP_005219.2.json"))),
+            "NM_005228.5" -> s"$TestData/entrez_refseq.NM_005228.5.json",
+            "NP_005219.2" -> Inputs.fixture("entrez_refseq.NP_005219.2.json"))),
           sources.Entrez.fileFetcher(Map(
-            "1956" -> sources.Snp.fixturePath("/fixtures/entrez_gene.1956.json"))),
+            "1956" -> Inputs.fixture("entrez_gene.1956.json"))),
           vocab.select("name", "term_id"))
       sources.CivicVariants.load(s, store, path, vocab, rsidLoad = Some(rsidLoad))
       // idempotency pass (the rsID leg is a catalogue cache hit)
@@ -1879,33 +1853,16 @@ private[graft] object QueriesRef {
     }),
 
     // S7 (XLSX scan with super-header flattening, PMC4232638/index.js:
-    // 24-60): a minimal OOXML workbook is written with the JDK zip inside
+    // 24-60): a minimal OOXML workbook is written by `Inputs.xlsx` inside
     // the query, then read back through the scan — fully self-contained.
     "s7_xlsx_scan" -> ((s, dir) => {
-      val f = java.io.File.createTempFile("graft-s7", ".xlsx")
-      val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
-      def entry(name: String, content: String): Unit = {
-        zos.putNextEntry(new java.util.zip.ZipEntry(name))
-        zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-      }
-      entry("[Content_Types].xml",
-        """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""")
-      def cell(r: Int, c: Int, v: String) =
-        if (v.isEmpty) ""
-        else s"""<c r="${('A' + c).toChar}$r" t="inlineStr"><is><t>$v</t></is></c>"""
       val rows = Seq(
         Seq("Supplementary Table 2"),
         Seq("", "Functional categories for TP53", "", "Other"),
         Seq("Gene", "Gain of function", "Loss of function", ""),
         Seq("TP53", "yes", "no effect", "x"),
         Seq("KRAS", "----", "", "y"))
-      val body = rows.zipWithIndex.map { case (r, ri) =>
-        s"""<row r="${ri + 1}">${r.zipWithIndex.map { case (v, ci) => cell(ri + 1, ci, v) }.mkString}</row>"""
-      }.mkString
-      entry("xl/worksheets/sheet1.xml",
-        s"""<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>$body</sheetData></worksheet>""")
-      zos.close()
-      sources.XlsxScan.df(s, f.getPath, superHeader = true)
+      sources.XlsxScan.df(s, Inputs.xlsx("s7.xlsx", rows), superHeader = true)
         .select(col("Gene").as("gene"),
           col("`Functional categories for TP53 - Gain of function`").as("gof"),
           col("`Functional categories for TP53 - Loss of function`").as("lof"),

@@ -1,8 +1,25 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Write one row's result to `<outDir>/<name>`; true when it wrote. A
+    * row that fails, also inside its write, leaves no directory behind, so
+    * `outDir` holds exactly one directory per written row.
+    */
+  def writeRow(outDir: String, name: String)(result: => DataFrame): Boolean =
+    try {
+      result.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      true
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: $e")
+      core.Fs.deleteRecursively(s"$outDir/$name")
+      false
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name subset (local iteration)
@@ -12,14 +29,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val rows = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
     val failed = rows.keys.toSeq.filterNot { name =>
-      try {
-        rows(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: $e")
-        false
-      }
+      try writeRow(outDir, name)(rows(name)(spark, sfDir))
       // queries that persist intermediates (DiffMerge tiers, resolver
       // passes) would otherwise accumulate storage blocks across the ~90
       // query run and squeeze execution memory

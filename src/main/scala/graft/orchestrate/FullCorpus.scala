@@ -3,7 +3,8 @@ package graft.orchestrate
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.EntryHelpers.REF_DATA
+import graft.Inputs
+import graft.Inputs.{SeedData, TestData}
 import graft.core.PersistentGraphStore
 import graft.sources._
 import Orchestrator.Loader
@@ -62,12 +63,8 @@ object FullCorpus {
     Seq("C1010", "<http://n/C1010>", "", "EGFR Receptor Variant|ov1", "", "Egfr Overexpression", "", "Neoplastic Process", ""),
     Seq("C1011", "<http://n/C1011>", "", "EGFR Kinase Variant|ov2", "", "Egfr Overexpression", "", "Neoplastic Process", ""))
 
-  def writeNcitSample(): String = {
-    val f = java.io.File.createTempFile("graft-ncit-corpus", ".txt")
-    java.nio.file.Files.writeString(f.toPath,
-      NcitSample.map(_.mkString("\t")).mkString("\n"))
-    f.getPath
-  }
+  def writeNcitSample(): String =
+    Inputs.file("ncit-corpus.txt", NcitSample.map(_.mkString("\t")).mkString("\n"))
 
   /** Inline uberon RDF/XML sample (no reference fixture exists): three
     * labeled classes, one unlabeled, one ncit xref that misses the NCIt
@@ -97,9 +94,7 @@ object FullCorpus {
         |    <rdfs:subClassOf rdf:resource="http://purl.obolibrary.org/obo/UBERON_0000001"/>
         |  </owl:Class>
         |</rdf:RDF>""".stripMargin
-    val f = java.io.File.createTempFile("graft-uberon-corpus", ".owl")
-    java.nio.file.Files.writeString(f.toPath, owl)
-    f.getPath
+    Inputs.file("uberon-corpus.owl", owl)
   }
 
   def loaders(store: PersistentGraphStore, ncitPath: String): Seq[Loader] = Seq(
@@ -112,63 +107,63 @@ object FullCorpus {
     // the REAL local-data DAG roots (Snakefile rule all_local: vocab,
     // signatures, chromosomes, evidenceLevels, aacr, asco)
     Loader("vocab", Seq.empty, sp => OntologyFile.load(sp, store,
-      "/root/reference/data/vocab.json", "vocabulary")),
+      s"$SeedData/vocab.json", "vocabulary")),
     Loader("signatures", Seq.empty, sp => OntologyFile.load(sp, store,
-      "/root/reference/data/signatures.json", "signatures")),
+      s"$SeedData/signatures.json", "signatures")),
     Loader("chromosomes", Seq.empty, sp => OntologyFile.load(sp, store,
-      "/root/reference/data/chromosomes.json", "chromosomes")),
+      s"$SeedData/chromosomes.json", "chromosomes")),
     Loader("evidenceLevels", Seq.empty, sp => OntologyFile.load(sp, store,
-      "/root/reference/data/evidenceLevels.json", "evidence_levels")),
+      s"$SeedData/evidenceLevels.json", "evidence_levels")),
     Loader("aacr", Seq.empty, sp => OntologyFile.load(sp, store,
-      "/root/reference/data/aacr.json", "abstracts_aacr")),
+      s"$SeedData/aacr.json", "abstracts_aacr")),
     Loader("ascoLocal", Seq.empty, sp => OntologyFile.load(sp, store,
-      "/root/reference/data/asco.json", "abstracts_asco")),
+      s"$SeedData/asco.json", "abstracts_asco")),
 
     Loader("ncit", Seq("vocab"), sp => NcitLoad.load(sp, store, ncitPath)),
 
     Loader("fdaSrs", Seq("vocab", "ncit"), sp => FdaSrs.load(sp, store,
-      s"$REF_DATA/UNII_Records_25Oct2018_sample.txt",
+      s"$TestData/UNII_Records_25Oct2018_sample.txt",
       store.read("terms").get.select("sourceId"))),
 
     Loader("do", Seq("ncit"), sp =>
-      Loaders.loadDoid(sp, store, s"$REF_DATA/doid.sample.json")),
+      Loaders.loadDoid(sp, store, s"$TestData/doid.sample.json")),
 
     Loader("oncotree", Seq("ncit"), sp => Loaders.loadOncotree(sp, store,
-      s"$REF_DATA/tumorTypes-oncotree_latest_stable.json")),
+      s"$TestData/tumorTypes-oncotree_latest_stable.json")),
 
     Loader("drugbank", Seq("fdaSrs"), sp =>
-      Loaders.loadDrugbank(sp, store, s"$REF_DATA/drugbank_sample.xml")),
+      Loaders.loadDrugbank(sp, store, s"$TestData/drugbank_sample.xml")),
 
     Loader("entrez", Seq.empty, sp => {
       val g = Entrez.hydrate(sp, store, "genes", Seq("3845"),
-        Entrez.fileFetcher(Map("3845" -> s"$REF_DATA/entrez_gene.3845.json")),
+        Entrez.fileFetcher(Map("3845" -> s"$TestData/entrez_gene.3845.json")),
         Entrez.parseGene(_), Seq("sourceId"),
         Seq("biotype", "name", "displayName", "longName", "description", "url"))
       val p = Entrez.hydrate(sp, store, "articles", Seq("30016509"),
         Entrez.fileFetcher(
-          Map("30016509" -> s"$REF_DATA/entrez_pubmed.30016509.json")),
+          Map("30016509" -> s"$TestData/entrez_pubmed.30016509.json")),
         Entrez.parsePubmed(_), Seq("sourceId"),
         Seq("name", "journalName", "year", "displayName"))
       g ++ p.map { case (k, v) => s"pubmed_$k" -> v }
     }),
 
     Loader("refseq", Seq("vocab", "entrez"), sp => RefseqTab.load(sp, store,
-      s"$REF_DATA/LRG_RefSeqGene_d1541209245_kras.tab",
+      s"$TestData/LRG_RefSeqGene_d1541209245_kras.tab",
       store.read("genes").get)),
 
     Loader("ensembl", Seq("refseq"), sp => Loaders.loadEnsembl(sp, store,
-      s"$REF_DATA/ensembl_biomart_export_ENSG00000139618.tsv")),
+      s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv")),
 
     Loader("hgnc", Seq("ensembl"), sp => Loaders.loadHgnc(sp, store,
-      Loaders.hgncDocs(sp, s"$REF_DATA/external_api_responses.json",
+      Loaders.hgncDocs(sp, s"$TestData/external_api_responses.json",
         "http://rest.genenames.org/fetch/hgnc_id/1101"),
       table = "genes_hgnc")),
 
     Loader("vario", Seq.empty, sp => Vario.load(sp, store,
-      s"$REF_DATA/vario_v2018-04-27.owl", table = "vario_terms")),
+      s"$TestData/vario_v2018-04-27.owl", table = "vario_terms")),
 
     Loader("chembl", Seq.empty, sp =>
-      Chembl.load(sp, store, s"$REF_DATA/chembl.CHEMBL553.json")),
+      Chembl.load(sp, store, s"$TestData/chembl.CHEMBL553.json")),
 
     Loader("civic", Seq("vocab", "entrez"), sp => {
       val vocabDim = store.read("vocabulary").get.select(col("name"),
@@ -177,17 +172,16 @@ object FullCorpus {
       // 508-522 → entrez/snp.js): the fixture carries no rsID variants,
       // so the leg runs empty here; g36_snp + the extended g12 row
       // exercise it with live rsIDs
-      val snpFix = Snp.fixturePath("/fixtures/entrez_snp.esummary.json")
-      CivicVariants.load(sp, store, s"$REF_DATA/civic_variant.json",
+      val snpFix = Inputs.fixture("entrez_snp.esummary.json")
+      CivicVariants.load(sp, store, s"$TestData/civic_variant.json",
         vocabDim, featuresTable = "genes",
         rsidLoad = Some(ids => Snp.fetchAndLoad(sp, store, ids,
           Snp.rsFetcher(Map("121434568" -> snpFix)),
           Entrez.fileFetcher(Map(
-            "NM_005228.5" -> s"$REF_DATA/entrez_refseq.NM_005228.5.json",
-            "NP_005219.2" ->
-              Snp.fixturePath("/fixtures/entrez_refseq.NP_005219.2.json"))),
+            "NM_005228.5" -> s"$TestData/entrez_refseq.NM_005228.5.json",
+            "NP_005219.2" -> Inputs.fixture("entrez_refseq.NP_005219.2.json"))),
           Entrez.fileFetcher(Map(
-            "1956" -> Snp.fixturePath("/fixtures/entrez_gene.1956.json"))),
+            "1956" -> Inputs.fixture("entrez_gene.1956.json"))),
           vocabDim.select("name", "term_id"), genesTable = "genes")))
     }),
 
@@ -204,7 +198,7 @@ object FullCorpus {
       val diseaseDim = store.read("vertices").get.select("name")
         .unionByName(store.read("diseases").get.select("name")).distinct()
       ClinicalTrials.load(sp, store,
-        s"$REF_DATA/clinicaltrialsgov.NCT03478891.json", therapyDim, diseaseDim)
+        s"$TestData/clinicaltrialsgov.NCT03478891.json", therapyDim, diseaseDim)
     }),
 
     // uberon ← ncit (Snakefile:270-278): the xref gate resolves against
@@ -218,7 +212,7 @@ object FullCorpus {
       val ids = Seq("NC_000003.11", "NC_000003", "NM_005228.5", "NP_008819.1")
       Entrez.hydrate(sp, store, "refseqs", ids,
         Entrez.fileFetcher(
-          ids.map(i => i -> s"$REF_DATA/entrez_refseq.$i.json").toMap),
+          ids.map(i => i -> s"$TestData/entrez_refseq.$i.json").toMap),
         Entrez.parseRefseq(_), Seq("sourceId", "sourceIdVersion"),
         Seq("biotype", "name", "displayName", "longName"),
         matchCol = "displayName")

@@ -38,23 +38,6 @@ object Snp {
 
   val LinkUrl = "https://www.ncbi.nlm.nih.gov/snp" // snp.js:18
 
-  /** Materialize a classpath-packaged recorded fixture (the repo's
-    * analog of the reference's `test/data/entrez_*.json` recordings) to a
-    * local file so the disk-proxy fetchers can read it. Local-replay by
-    * design, like every `remote/` fixture path.
-    */
-  def fixturePath(resource: String): String = {
-    val in = getClass.getResourceAsStream(resource)
-    require(in != null, s"missing resource $resource")
-    try {
-      val f = java.io.File.createTempFile("graft-fixture", ".json")
-      f.deleteOnExit()
-      java.nio.file.Files.copy(in, f.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      f.getPath
-    } finally in.close()
-  }
-
   /** esummary docsum parse (snp.js:107-130 `parseRecord`): identity
     * fields from the payload, plus the HGVS tag split — unescape `&gt;`,
     * split on `;`, take the FIRST `HGVS=` tag (the reference `break`s),

@@ -7,12 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-text lint of the loader system's boundary: what the loader
-  * packages may depend on, how a loader writes to the store, and where
-  * the load path starts threads. Reads source files only.
+  * packages may depend on, how a loader writes to the store, where the
+  * load path starts threads, and where input paths and input files are
+  * made. Reads source files only.
   */
 class LoaderBoundaryLintSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
+  private val test = Paths.get("src/test/scala")
 
   private def scalaFiles(dir: Path): Seq[Path] = {
     val stream = Files.walk(dir)
@@ -64,8 +66,39 @@ class LoaderBoundaryLintSpec extends AnyFunSuite {
     }
     val allowed = (s: String) =>
       s.startsWith("graft/core/Concurrent.scala: ") ||
-        (s.startsWith("graft/EntryHelpers.scala: ") && s.contains("addShutdownHook(new Thread("))
+        (s.startsWith("graft/Inputs.scala: ") && s.contains("addShutdownHook(new Thread("))
     assert(sites.exists(_.startsWith("graft/core/Concurrent.scala: ")))
     assert(sites.filterNot(allowed).isEmpty, sites.filterNot(allowed).mkString("\n"))
+  }
+
+  /** `file:line` of every line in `files` that contains one of `needles`. */
+  private def sitesOf(files: Seq[Path], needles: Seq[String]): Seq[String] =
+    files.flatMap { f =>
+      lines(f).collect { case (l, n) if needles.exists(l.contains) => s"$f:$n: ${l.trim}" }
+    }
+
+  private val inputs = main.resolve("graft/Inputs.scala")
+
+  private def assertOnlyInInputs(sites: Seq[String]): Unit = {
+    assert(sites.exists(_.startsWith(s"$inputs:")))
+    val elsewhere = sites.filterNot(_.startsWith(s"$inputs:"))
+    assert(elsewhere.isEmpty, elsewhere.mkString("\n"))
+  }
+
+  // the needles are split so that this file never names them whole
+  test("the reference root is named only in Inputs") {
+    assertOnlyInInputs(
+      sitesOf(scalaFiles(main) ++ scalaFiles(test), Seq("/root/" + "reference")))
+  }
+
+  test("src/main makes temp files and reads resources only in Inputs") {
+    assertOnlyInInputs(sitesOf(scalaFiles(main),
+      Seq("createTempFile" + "(", "getResourceAsStream" + "(")))
+  }
+
+  test("the loader packages do not name the registry plumbing EntryHelpers") {
+    val offenders = loaderPackages.flatMap(pkg =>
+      sitesOf(scalaFiles(main.resolve(s"graft/$pkg")), Seq("EntryHelpers")))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

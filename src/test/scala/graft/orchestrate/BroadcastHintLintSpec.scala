@@ -53,8 +53,8 @@ class BroadcastHintLintSpec extends AnyFunSuite {
     case lr: LogicalRelation => lr.relation match {
       case fs: HadoopFsRelation =>
         val path = fs.location.rootPaths.headOption.map(_.toString).getOrElse("")
-        if (path.contains("/reference/") || path.contains("graft-fixture") ||
-          path.contains("/resources/fixtures/")) Right(())
+        if (path.contains("/reference/") || path.contains("/resources/fixtures/") ||
+          path.contains(s"${graft.Inputs.scratchRoot}/fixture")) Right(())
         else {
           // store layout: .../<table>/v=<NNNN>[/__b=<bucket>]
           val table = "/([^/]+)/v=?\\d+".r.findFirstMatchIn(path).map(_.group(1))

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import graft.Inputs.TestData
 import graft.TestSpark
 import graft.core.PersistentGraphStore
 import graft.orchestrate.Orchestrator
@@ -16,8 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class LoadersSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  val doid = "/root/reference/test/data/doid.sample.json"
-  val drugbank = "/root/reference/test/data/drugbank_sample.xml"
+  val doid = s"$TestData/doid.sample.json"
+  val drugbank = s"$TestData/drugbank_sample.xml"
 
   test("doid loader: vertices + SubClassOf edges, idempotent rerun") {
     val store = new PersistentGraphStore(spark,
@@ -160,7 +161,7 @@ class LoadersSpec extends AnyFunSuite {
   }
 
   test("oncotree loader: 853 diseases, parent + NCI edges, idempotent") {
-    val path = "/root/reference/test/data/tumorTypes-oncotree_latest_stable.json"
+    val path = s"$TestData/tumorTypes-oncotree_latest_stable.json"
     val store = new PersistentGraphStore(spark,
       Files.createTempDirectory("graft-e2e4").toString)
     val c1 = Loaders.loadOncotree(spark, store, path)
@@ -174,7 +175,7 @@ class LoadersSpec extends AnyFunSuite {
   }
 
   test("ensembl biomart loader: versioned/generalized features + edge classes") {
-    val path = "/root/reference/test/data/ensembl_biomart_export_ENSG00000139618.tsv"
+    val path = s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv"
     val store = new PersistentGraphStore(spark,
       Files.createTempDirectory("graft-e2e5").toString)
     Loaders.loadEnsembl(spark, store, path)
@@ -193,7 +194,7 @@ class LoadersSpec extends AnyFunSuite {
 
   test("hgnc loader: primary + prev/alias dependents and their edges") {
     val docs = Loaders.hgncDocs(spark,
-      "/root/reference/test/data/external_api_responses.json",
+      s"$TestData/external_api_responses.json",
       "http://rest.genenames.org/fetch/hgnc_id/1101")
     val store = new PersistentGraphStore(spark,
       Files.createTempDirectory("graft-e2e6").toString)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import graft.Inputs
+import graft.Inputs.TestData
 import graft.TestSpark
 import graft.core.PersistentGraphStore
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,17 +15,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SnpSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  val refData = "/root/reference/test/data"
-  lazy val snpFixture = Snp.fixturePath("/fixtures/entrez_snp.esummary.json")
+  lazy val snpFixture = Inputs.fixture("entrez_snp.esummary.json")
   def snpFetcher = Snp.rsFetcher(
     Seq("121434568", "28934576", "1042522", "9999999")
       .map(u => u -> snpFixture).toMap)
   def refseqFetcher = Entrez.fileFetcher(Map(
-    "NM_005228.5" -> s"$refData/entrez_refseq.NM_005228.5.json",
-    "NP_005219.2" -> Snp.fixturePath("/fixtures/entrez_refseq.NP_005219.2.json"),
-    "NP_000537.3" -> Snp.fixturePath("/fixtures/entrez_refseq.NP_000537.3.json")))
+    "NM_005228.5" -> s"$TestData/entrez_refseq.NM_005228.5.json",
+    "NP_005219.2" -> Inputs.fixture("entrez_refseq.NP_005219.2.json"),
+    "NP_000537.3" -> Inputs.fixture("entrez_refseq.NP_000537.3.json")))
   def geneFetcher = Entrez.fileFetcher(
-    Map("1956" -> Snp.fixturePath("/fixtures/entrez_gene.1956.json")))
+    Map("1956" -> Inputs.fixture("entrez_gene.1956.json")))
 
   def vocab = {
     import spark.implicits._
@@ -105,7 +106,7 @@ class SnpSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-snp-civic")
     val json = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$refData/civic_variant.json")), "UTF-8")
+      java.nio.file.Paths.get(s"$TestData/civic_variant.json")), "UTF-8")
     val rsRec = """{"id": 999, "entrez_name": "EGFR", "entrez_id": 1956,
       |"name": "RS121434568", "description": ""}""".stripMargin
     val path = dir.resolve("civic_with_rsid.json")

@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, File, FileOutputStream}
-import java.nio.file.Files
-import java.util.zip.{ZipEntry, ZipOutputStream}
-
+import graft.Inputs
+import graft.Inputs.TestData
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +10,8 @@ class ScansSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpFile(name: String, content: String): String = {
-    val f = Files.createTempFile("graft-scan", name)
-    Files.writeString(f, content)
-    f.toString
-  }
-
   test("S1 delim: ## comments skipped, header map applied, types inferred") {
-    val path = tmpFile(".tsv",
+    val path = Inputs.file("scan.tsv",
       """## generated by a tool
         |## second comment line
         |id\tGene name\tscore
@@ -34,7 +26,7 @@ class ScansSpec extends AnyFunSuite {
   }
 
   test("S1 delim: quoting disabled — quotes pass through verbatim") {
-    val path = tmpFile(".tsv", "a\tb\n\"x\ty\"\tz\n")
+    val path = Inputs.file("scan.tsv", "a\tb\n\"x\ty\"\tz\n")
     val rows = Scans.delim(spark, path, inferSchema = false)
       .as[(String, String)].collect()
     assert(rows.head._1 == "\"x")
@@ -42,7 +34,7 @@ class ScansSpec extends AnyFunSuite {
 
   test("S1 delim reads the reference ensembl biomart fixture") {
     val df = Scans.delim(spark,
-      "/root/reference/test/data/ensembl_biomart_export_ENSG00000139618.tsv",
+      s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv",
       headerMap = Map("Gene stable ID" -> "gene_id", "Gene name" -> "gene_name"))
     assert(df.count() > 0)
     assert(df.select("gene_id").distinct().as[String].collect().toSeq ==
@@ -50,7 +42,7 @@ class ScansSpec extends AnyFunSuite {
   }
 
   test("S9 text lines") {
-    val path = tmpFile(".txt", "KRAS:p.G12D\nEGFR:c.2573T>G\n")
+    val path = Inputs.file("scan.txt", "KRAS:p.G12D\nEGFR:c.2573T>G\n")
     assert(Scans.textLines(spark, path).count() == 2)
   }
 }
@@ -59,7 +51,7 @@ class XmlScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  val drugbank = "/root/reference/test/data/drugbank_sample.xml"
+  val drugbank = s"$TestData/drugbank_sample.xml"
 
   test("S4 rowTag streaming split yields well-formed fragments") {
     val frags = XmlScan.rowTagFragments(spark, drugbank, "drug").collect()
@@ -69,11 +61,10 @@ class XmlScanSpec extends AnyFunSuite {
   }
 
   test("S4 rowTag on synthetic multi-row xml") {
-    val path = Files.createTempFile("graft", ".xml")
-    Files.writeString(path,
+    val path = Inputs.file("rows.xml",
       """<root xmlns:m="urn:m"><row><m:a>1</m:a></row><row><m:a>2</m:a></row>
         |<other/><row><m:a>3</m:a></row></root>""".stripMargin)
-    val frags = XmlScan.rowTagFragments(spark, path.toString, "row").collect()
+    val frags = XmlScan.rowTagFragments(spark, path, "row").collect()
     assert(frags.length == 3)
     // namespace repair keeps fragments independently parseable
     frags.foreach(f => scala.xml.XML.loadString(f))
@@ -106,7 +97,7 @@ class OwlScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  val vario = "/root/reference/test/data/vario_v2018-04-27.owl"
+  val vario = s"$TestData/vario_v2018-04-27.owl"
 
   test("S5 triples: 447 VariO classes (matches owl:Class rdf:about count)") {
     val tr = OwlScan.triples(spark, vario)
@@ -131,37 +122,8 @@ class OwlScanSpec extends AnyFunSuite {
 class XlsxScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** Minimal single-sheet xlsx written with the JDK zip — inline strings. */
-  private def makeXlsx(rows: Seq[Seq[String]]): String = {
-    val f = File.createTempFile("graft", ".xlsx")
-    val zos = new ZipOutputStream(new FileOutputStream(f))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    entry("[Content_Types].xml",
-      """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""")
-    def colRef(i: Int): String = {
-      var n = i + 1; var s = ""
-      while (n > 0) { val r = (n - 1) % 26; s = ('A' + r).toChar + s; n = (n - 1) / 26 }
-      s
-    }
-    val body = rows.zipWithIndex.map { case (r, ri) =>
-      val cells = r.zipWithIndex.collect {
-        case (v, ci) if v.nonEmpty =>
-          s"""<c r="${colRef(ci)}${ri + 1}" t="inlineStr"><is><t>$v</t></is></c>"""
-      }.mkString
-      s"""<row r="${ri + 1}">$cells</row>"""
-    }.mkString
-    entry("xl/worksheets/sheet1.xml",
-      s"""<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>$body</sheetData></worksheet>""")
-    zos.close()
-    f.getPath
-  }
-
   test("S7 super-header flattening (PMC4232638 semantics)") {
-    val path = makeXlsx(Seq(
+    val path = Inputs.xlsx("s7.xlsx", Seq(
       Seq("A big title"),
       Seq("", "Functional categories for TP53", "", "Other"),
       Seq("Gene", "Gain of function", "Loss of function", ""),
@@ -179,7 +141,7 @@ class XlsxScanSpec extends AnyFunSuite {
   }
 
   test("S7 plain header") {
-    val path = makeXlsx(Seq(Seq("a", "b"), Seq("1", "2")))
+    val path = Inputs.xlsx("plain.xlsx", Seq(Seq("a", "b"), Seq("1", "2")))
     val df = XlsxScan.df(spark, path)
     assert(df.columns.toSeq == Seq("a", "b"))
     assert(df.head().getString(0) == "1")
