@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.core.Cached.withCached
 
@@ -35,6 +36,25 @@ import graft.core.Cached.withCached
   * is O(changed buckets), not O(touched buckets) or O(table). Stored set
   * columns are always sorted (first write included), so the rewrite flag's
   * normalized comparison equals a stored-bytes comparison.
+  *
+  * A replayed batch costs only its discovery. Every upsert records, in
+  * `<table>/_replay`, its batch digest, the buckets it touched, the table
+  * version after it and the counters a replay of it returns. When the
+  * same batch arrives again with the same schema, keys, set columns and
+  * compare columns, touches the same buckets, and no version newer than
+  * the recorded one holds one of those buckets or is a `_FULL` snapshot
+  * (compaction, soft delete), the table still holds what that call left
+  * there: the upsert returns the recorded counters and runs no stored
+  * read, classify or write. The digest is the row count plus two
+  * independent 64-bit sums of a per-row hash whose input encodes the row
+  * exactly (every null flag, nested ones and array lengths included, see
+  * [[PersistentGraphStore.digest]]); a different batch of the
+  * same row count passes for the recorded one only if both sums collide,
+  * about 2^-128 for hashes that behave as random functions (not a defence
+  * against crafted input). The record is replaced by one atomic rename
+  * after each upsert; a crash before it, or a lost, torn or garbled record,
+  * only costs the next replay the full path, since every entry is checked
+  * against the published versions before it is trusted.
   *
   * Soft-delete merges (absent key ⇒ tombstone) inherently compare the full
   * key set, so they read and rewrite every bucket — that cost is in the
@@ -206,6 +226,13 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     seen.toSeq.sortBy(_._1)
   }
 
+  private def versionDir(table: String, v: Int) = Paths.get(f"${tableDir(table)}/v=$v%05d")
+
+  /** The buckets the version directory `vDir` holds. */
+  private def bucketsOf(vDir: java.nio.file.Path): Set[Int] =
+    Fs.list(vDir).map(_.getFileName.toString)
+      .collect { case n if n.startsWith("__b=") => n.drop(4).toInt }.toSet
+
   /** Per-dir schema cache: a published leaf directory is IMMUTABLE
     * (layers are staged and atomically renamed, never rewritten), so its
     * INFERRED schema is read once and cached — caching only what
@@ -290,14 +317,77 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
       d.withColumn(c, lit(null).cast(ref.schema(c).dataType))
     }
 
-  /** Buckets the incoming frame lands in — one global collect_set agg
-    * (at most nBuckets values): each task partial-aggs its slice to ≤
-    * nBuckets ints, so the job ships integers, not rows — the cheapest
-    * action that can materialize the (persisted) incoming frame.
+  /** Buckets the incoming frame lands in, and the batch digest when the
+    * batch has one — one global agg (at most nBuckets ints plus three
+    * numbers): each task partial-aggs its slice, so the job ships
+    * integers, not rows — the cheapest action that can materialize the
+    * (persisted) incoming frame.
     */
-  private def touchedBuckets(df: DataFrame, m: Meta): Set[Int] =
-    df.agg(collect_set(bucketExpr(m).cast("int")).as("__bs"))
-      .collect()(0).getSeq[Int](0).toSet
+  private def touchedBuckets(df: DataFrame, m: Meta,
+      digest: Seq[Column]): (Set[Int], Option[String]) = {
+    val r = df.agg(collect_set(bucketExpr(m).cast("int")).as("__bs"), digest: _*)
+      .collect()(0)
+    (r.getSeq[Int](0).toSet,
+      if (digest.isEmpty) None else Some(PersistentGraphStore.digestOf(r.toSeq.tail)))
+  }
+
+  // ---- replay record --------------------------------------------------------
+  // `<table>/_replay` lists the upserts whose result the table still
+  // holds, one entry per line: the SHA-256 of the call's identity (batch
+  // digest, batch schema, call shape), the table version after the call,
+  // the touched buckets and the counters a replay returns. The last line
+  // is the CRC32 of the lines before it, so a torn or garbled file reads
+  // as empty. It is read and rewritten under the table lock only.
+
+  private case class Entry(id: String, version: Int, buckets: Set[Int],
+      counters: Map[String, Long]) {
+    def line: String = Seq(id, version.toString, buckets.toSeq.sorted.mkString(","),
+      counters.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")).mkString("\t")
+  }
+
+  private def recordPath(table: String) = Paths.get(tableDir(table), "_replay")
+
+  private def crc(s: String): String = {
+    val c = new java.util.zip.CRC32
+    c.update(s.getBytes("UTF-8"))
+    java.lang.Long.toHexString(c.getValue)
+  }
+
+  private def readRecord(table: String): Seq[Entry] =
+    scala.util.Try {
+      val text = new String(Files.readAllBytes(recordPath(table)), "UTF-8")
+      val body = text.substring(0, text.lastIndexOf('\n', text.length - 2) + 1)
+      require(text == body + crc(body) + "\n")
+      body.split("\n").filter(_.nonEmpty).map { l =>
+        val Array(id, v, bs, cs) = l.split("\t", -1)
+        def csv(s: String) = s.split(",").filter(_.nonEmpty)
+        Entry(id, v.toInt, csv(bs).map(_.toInt).toSet,
+          csv(cs).map { kv => val Array(k, n) = kv.split("="); k -> n.toLong }.toMap)
+      }.toSeq
+    }.getOrElse(Nil)
+
+  /** Does `table` still hold what `e`'s call left in its buckets? Its
+    * version is published, and no newer version holds one of its buckets
+    * or is a `_FULL` snapshot (compaction, soft delete).
+    */
+  private def holds(e: Entry, vs: Seq[(Int, String)]): Boolean =
+    vs.exists(_._1 == e.version) && vs.filter(_._1 > e.version).forall { case (_, p) =>
+      !Files.exists(Paths.get(p, "_FULL")) && (bucketsOf(Paths.get(p)) & e.buckets).isEmpty
+    }
+
+  /** Put `e` first in the record, dropping entries the table no longer
+    * holds and any older entry of the same call; the file is replaced by
+    * one atomic rename.
+    */
+  private def record(table: String, e: Entry): Unit = {
+    val vs = versions(table)
+    val kept = e +: readRecord(table).filter(o => o.id != e.id && holds(o, vs))
+    val body = kept.take(PersistentGraphStore.RecordEntries).map(_.line + "\n").mkString
+    val tmp = Paths.get(tableDir(table), ".tmp_replay")
+    Files.write(tmp, (body + crc(body) + "\n").getBytes("UTF-8"))
+    Files.move(tmp, recordPath(table), java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
 
   // Negative result, kept for the record: fusing bucket discovery into
   // the write action for small tables (read ALL leaf dirs + in-plan
@@ -353,7 +443,7 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
   private def writeStaged(table: String, plan: DataFrame, full: Boolean)(
       keep: => Boolean): Option[Int] = {
     val next = latestVersion(table).getOrElse(0) + 1
-    val dir = Paths.get(f"${tableDir(table)}/v=$next%05d")
+    val dir = versionDir(table, next)
     val tmp = Paths.get(s"${tableDir(table)}/.tmp_v$next")
     Fs.deleteRecursively(tmp)
     plan.write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -439,6 +529,12 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * Upsert merges (softDelete = false) read and rewrite ONLY the buckets
     * the incoming batch touches. Soft-delete merges compare the full key
     * set (absence ⇒ tombstone), so they run over every bucket.
+    *
+    * A batch offers each key once, as [[upsertEdges]] enforces for edges.
+    * Two rows of one key are both stored and then each join both stored
+    * copies, so a full replay of such a batch counts more rows than its
+    * buckets hold, and the skip of a replayed batch, which returns the
+    * rows the recorded call left there, would count differently.
     */
   def merge(
       table: String,
@@ -462,8 +558,10 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
           .withColumn(GraphStore.REWRITE, lit(true))
     }
     if (!softDelete)
-      upsert(table, incoming, keyCols, GraphStore.ACTIONS.map(a =>
-        a -> count(when(col(GraphStore.ACTION) === a, 1))))(classified)
+      upsert(table, incoming, keyCols, setCols, s"merge|${compareCols.mkString(",")}",
+        GraphStore.ACTIONS.map(a => a -> count(when(col(GraphStore.ACTION) === a, 1))),
+        // every key of the batch is stored with the batch's values
+        cs => Map("noop" -> cs.values.sum))(classified)
         .filter(_._2 != 0L)
     else lockFor(table).synchronized {
       // soft delete compares the FULL key set and its layer is a _FULL
@@ -505,9 +603,15 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     *     sibling creates the table between the check and the lock, the
     *     discovery runs under the lock and evaluates `incoming` again —
     *     correct, marginally slower, rare.
+    *     The same aggregate computes the batch digest (a first write has
+    *     no discovery; its digest rides on the write's observation).
     *  2. Under the lock, which version allocation and sibling visibility
-    *     need, read the stored rows of those buckets only: a key always
-    *     lands in the same bucket.
+    *     need: if the table's replay record holds this call (same digest,
+    *     schema and call shape, same touched buckets, no newer version
+    *     holding one of them, no newer `_FULL` snapshot), return the
+    *     recorded counters — steps 3 to 5 are skipped. Otherwise read the
+    *     stored rows of the touched buckets only: a key always lands in
+    *     the same bucket.
     *  3. `layer` turns them (None: nothing stored there) into the rows of
     *     those buckets after the upsert, each flagged with
     *     [[GraphStore.REWRITE]]: true iff persisting it changes stored
@@ -521,51 +625,82 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     *     per-merge constant on DAGs of many tiny merges. The staged layer
     *     is published when a row rewrites: an idempotent replay, like an
     *     empty first write, publishes nothing.
+    *  5. Record the call in the table's replay record, with the counters
+    *     `replayed` derives from this call's: what the same batch returns
+    *     when it arrives again at unchanged buckets.
     *
     * Returns each counter's value.
     */
   private def upsert(table: String, incoming: DataFrame, keyCols: Seq[String],
-      counters: Seq[(String, Column)])(
+      setCols: Seq[String], shape: String, counters: Seq[(String, Column)],
+      replayed: Map[String, Long] => Map[String, Long])(
       layer: Option[DataFrame] => DataFrame): Map[String, Long] = {
+    val digest = PersistentGraphStore.digest(incoming.schema, setCols)
+    def identity(d: String) = PersistentGraphStore.sha256(Seq(d, shape,
+      incoming.schema.fields.map(f => s"${f.name}:${f.dataType.catalogString}")
+        .sorted.mkString(","), keyCols.mkString(","), setCols.mkString(",")).mkString("|"))
     val preDiscover = latestVersion(table).nonEmpty
     withCached((if (preDiscover) Seq(incoming) else Nil): _*) {
       val pre =
         if (preDiscover)
           Some(touchedBuckets(incoming,
-            lockFor(table).synchronized(metaFor(table, keyCols))))
+            lockFor(table).synchronized(metaFor(table, keyCols)), digest))
         else None
       lockFor(table).synchronized {
         val m = metaFor(table, keyCols)
         val first = latestVersion(table).isEmpty
-        val touched =
-          if (first) None else Some(pre.getOrElse(touchedBuckets(incoming, m)))
-        val stored = touched.flatMap(readBuckets(table, _))
-        // the layer holds rows of touched buckets only, so the shuffle is
-        // sized to their count (see [[writeWidth]]): a trickle merge runs
-        // a few write tasks, not nBuckets mostly empty ones. The window
-        // over the bucket id reuses the shuffle the write needs anyway.
-        val bucketed = layer(stored)
-          .withColumn("__b", bucketExpr(m))
-          .repartition(writeWidth(touched.fold(m.nBuckets)(_.size)), col("__b"))
-        val obs = org.apache.spark.sql.Observation()
-        def withCounters(df: DataFrame) = df.observe(obs,
-          coalesce(sum(col(GraphStore.REWRITE).cast("long")), lit(0L))
-            .as("__rewrites"), counters.map { case (n, c) => c.as(n) }: _*)
-        val anyRewrite = max(col(GraphStore.REWRITE).cast("int")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
-        // with nothing stored every row is new, so no bucket can be
-        // skipped; the window's sort would only add cost to a first load.
-        // An upsert classify emits no delete rows, so dropping the action
-        // column is all GraphStore.apply would do here.
-        val toWrite =
-          (if (stored.isEmpty) withCounters(bucketed)
-           else withCounters(bucketed.withColumn("__rw_b", anyRewrite))
-             .filter(col("__rw_b") === 1))
-            .drop("__rw_b", GraphStore.REWRITE, GraphStore.ACTION)
-        def counter(name: String) = obs.get(name).asInstanceOf[Number].longValue
-        writeStaged(table, toWrite, full = false)(counter("__rewrites") > 0L)
-          .foreach(_ => maybeCompact(table))
-        counters.map { case (n, _) => n -> counter(n) }.toMap
+        val found =
+          if (first) None else Some(pre.getOrElse(touchedBuckets(incoming, m, digest)))
+        val touched = found.map(_._1)
+        val id = found.flatMap(_._2).map(identity)
+        val replay = id.flatMap { i =>
+          val vs = versions(table)
+          readRecord(table).find(e =>
+            e.id == i && touched.contains(e.buckets) && holds(e, vs))
+        }
+        replay.fold {
+          val stored = touched.flatMap(readBuckets(table, _))
+          // the layer holds rows of touched buckets only, so the shuffle is
+          // sized to their count (see [[writeWidth]]): a trickle merge runs
+          // a few write tasks, not nBuckets mostly empty ones. The window
+          // over the bucket id reuses the shuffle the write needs anyway.
+          val bucketed = layer(stored)
+            .withColumn("__b", bucketExpr(m))
+            .repartition(writeWidth(touched.fold(m.nBuckets)(_.size)), col("__b"))
+          val obs = org.apache.spark.sql.Observation()
+          // a first write has no discovery: its digest rides on the write
+          val observed = counters.map { case (n, c) => c.as(n) } ++
+            (if (first) digest else Nil)
+          def withCounters(df: DataFrame) = df.observe(obs,
+            coalesce(sum(col(GraphStore.REWRITE).cast("long")), lit(0L))
+              .as("__rewrites"), observed: _*)
+          val anyRewrite = max(col(GraphStore.REWRITE).cast("int")).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("__b")))
+          // with nothing stored every row is new, so no bucket can be
+          // skipped; the window's sort would only add cost to a first load.
+          // An upsert classify emits no delete rows, so dropping the action
+          // column is all GraphStore.apply would do here.
+          val toWrite =
+            (if (stored.isEmpty) withCounters(bucketed)
+             else withCounters(bucketed.withColumn("__rw_b", anyRewrite))
+               .filter(col("__rw_b") === 1))
+              .drop("__rw_b", GraphStore.REWRITE, GraphStore.ACTION)
+          val published = writeStaged(table, toWrite, full = false)(
+            obs.get("__rewrites").asInstanceOf[Number].longValue > 0L)
+          published.foreach(_ => maybeCompact(table))
+          val result = counters.map { case (n, _) =>
+            n -> obs.get(n).asInstanceOf[Number].longValue }.toMap
+          // a first write touched exactly the buckets it published
+          val done =
+            if (!first) id.map((_, touched.get))
+            else if (digest.isEmpty) None
+            else published.map(v => (identity(PersistentGraphStore.digestOf(
+              PersistentGraphStore.DigestCols.map(obs.get))), bucketsOf(versionDir(table, v))))
+          done.foreach { case (i, bs) =>
+            record(table, Entry(i, latestVersion(table).get, bs, replayed(result)))
+          }
+          result
+        }(_.counters)
       }
     }
   }
@@ -584,8 +719,9 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     // WITHIN one batch too (a trial listing the same intervention twice
     // creates one edge) — dedup here so every caller gets that semantics
     val candidates = rawCandidates.dropDuplicates(EdgeKey)
-    upsert("edges", candidates, EdgeKey,
-      Seq("created" -> count(when(col(GraphStore.REWRITE), 1)))) {
+    upsert("edges", candidates, EdgeKey, Nil, "edges",
+      Seq("created" -> count(when(col(GraphStore.REWRITE), 1))),
+      _ => Map("created" -> 0L)) {
       // stored edges are kept as they are, new ones flagged
       // (allowMissingColumns: some sources carry edge payload columns —
       // actionType, uuid — the others lack)
@@ -632,6 +768,79 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
 }
 
 object PersistentGraphStore {
+
+  /** Entries a table's replay record keeps, newest first. A call that
+    * publishes a layer leaves few valid entries (on the loader benchmark's
+    * `bulk` and `dag_small` workloads, never more than one per table), but
+    * a call that changes nothing publishes nothing and invalidates no
+    * entry: 40 different no-op batches in a row keep 40 valid entries.
+    * The cap bounds the file, read and rewritten under the table lock,
+    * for such a run of no-op batches.
+    */
+  private val RecordEntries = 32
+
+  /** Names of the batch digest's aggregates, in [[digest]]'s order. */
+  private val DigestCols = Seq("__rows", "__h1", "__h2")
+
+  /** The batch digest of a frame with `schema`: the row count and the
+    * sums of two independent per-row 64-bit hashes (the second chains
+    * from a constant salt, so it starts from another seed). A row hash
+    * covers every column in sorted-name order, set columns sorted (as the
+    * store keeps them), each with its null flag. `xxhash64` skips nulls,
+    * at the top level and inside arrays and structs, so `(null, 'a')` and
+    * `('a', null)`, or `[a]` and `[a, null]`, would otherwise hash alike:
+    * [[explicit]] gives every nested value its null flag and every array
+    * its length, so equal hash inputs mean equal rows. The sums are
+    * decimals: a `long` sum overflows under ANSI. Empty for a schema with
+    * a map column, which `xxhash64` does not take: such a batch has no
+    * digest and never skips.
+    */
+  private def digest(schema: StructType, setCols: Seq[String]): Seq[Column] = {
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case a: ArrayType => hasMap(a.elementType)
+      case _ => false
+    }
+    if (schema.fields.exists(f => hasMap(f.dataType))) Nil
+    else {
+      val parts = schema.fields.sortBy(_.name).toSeq.flatMap { f =>
+        val c = if (setCols.contains(f.name)) sort_array(col(f.name)) else col(f.name)
+        Seq(c.isNull, explicit(c, f.dataType))
+      }
+      def total(h: Column) = sum(h.cast("decimal(20,0)"))
+      Seq(count(lit(1)), total(xxhash64(parts: _*)),
+        total(xxhash64(lit(0x9E3779B97F4A7C15L) +: parts: _*)))
+        .zip(DigestCols).map { case (c, n) => c.as(n) }
+    }
+  }
+
+  /** `c` of type `t` with what `xxhash64` skips made explicit: an array
+    * becomes its length and its elements' (null flag, value) pairs, a
+    * struct its fields' (null flag, value) pairs, recursively. A null
+    * stays null; the enclosing level hashes its flag.
+    */
+  private def explicit(c: Column, t: DataType): Column = {
+    def flagged(v: Column, vt: DataType, i: Int) =
+      Seq(v.isNull.as(s"z$i"), explicit(v, vt).as(s"v$i"))
+    t match {
+      case a: ArrayType => when(c.isNotNull, struct(size(c).as("n"),
+        transform(c, x => struct(flagged(x, a.elementType, 0): _*)).as("e")))
+      case s: StructType if s.nonEmpty => when(c.isNotNull, struct(
+        s.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
+          flagged(c.getField(f.name), f.dataType, i) }: _*))
+      case _ => c
+    }
+  }
+
+  /** The digest's values (count, then the two sums) as one string. */
+  private def digestOf(values: Seq[Any]): String =
+    values.map(v => if (v == null) "-" else BigDecimal(v.toString).toBigInt.toString)
+      .mkString(":")
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
 
   /** One write of a [[PersistentGraphStore.writeAll]] batch; `prefix`
     * names its counters in the loader's counter map.

@@ -127,6 +127,13 @@ object NcitLoad {
       .drop("__dups")
   }
 
+  /** Alias names of a concept, each once. `synonyms` is lowercased
+    * already, but `NcitClean` dedupes it on the original case before
+    * lowercasing, so `Foo Bar|foo bar` leaves one name twice, which would
+    * offer one `(sourceId, name)` key twice to a merge.
+    */
+  private def aliasNames = array_distinct(col("synonyms"))
+
   /** Primary + alias vertices (alias displayName = `synonym [sourceId]`,
     * ncit/index.js:398-418). Synonyms equal to the (possibly reassigned)
     * name are not aliased.
@@ -137,7 +144,7 @@ object NcitLoad {
       col("displayName"), col("endpoint"), lit(false).as("alias"))
     val alias = live
       .select(col("sourceId"), col("name").as("__primary"), col("endpoint"),
-        explode(col("synonyms")).as("syn"))
+        explode(aliasNames).as("syn"))
       .filter(lower(col("syn")) =!= lower(col("__primary")))
       .select(col("sourceId"), col("syn").as("name"),
         concat(col("syn"), lit(" ["), col("sourceId"), lit("]")).as("displayName"),
@@ -155,7 +162,7 @@ object NcitLoad {
       concat_ws("|", id, name)
     val aliasOf = live
       .select(col("sourceId"), col("name").as("__primary"),
-        explode(col("synonyms")).as("syn"))
+        explode(aliasNames).as("syn"))
       .filter(lower(col("syn")) =!= lower(col("__primary")))
       .select(rid(col("sourceId"), col("syn")).as("out"),
         rid(col("sourceId"), col("__primary")).as("in"),

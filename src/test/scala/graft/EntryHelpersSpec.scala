@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class EntryHelpersSpec extends AnyFunSuite {
 
   test("publish writes the marker inside the target; re-run is a no-op") {
-    val parent = Files.createTempDirectory("graft-eh-spec")
+    val parent = Paths.get(Inputs.scratchDir("graft-eh-spec"))
     val target = s"$parent/idx_a"
     var builds = 0
     EntryHelpers.ensureBuilt(target) { tmp =>
@@ -28,7 +28,7 @@ class EntryHelpersSpec extends AnyFunSuite {
   }
 
   test("crash orphans of THIS target are reclaimed; sibling orphans survive") {
-    val parent = Files.createTempDirectory("graft-eh-spec")
+    val parent = Paths.get(Inputs.scratchDir("graft-eh-spec"))
     val target = s"$parent/idx_b"
     // a pre-crash builder of idx_b left a temp dir with content...
     val mine = Files.createDirectories(
@@ -51,7 +51,7 @@ class EntryHelpersSpec extends AnyFunSuite {
     // the advice case: targets "idx" and "idx_c" in the same parent —
     // ".build_idx_c_cafe" starts with target idx's ".build_idx_" prefix,
     // but its remainder carries the '_' no real temp suffix contains
-    val parent = Files.createTempDirectory("graft-eh-spec")
+    val parent = Paths.get(Inputs.scratchDir("graft-eh-spec"))
     val target = s"$parent/idx"
     val nested = Files.createDirectories(
       Paths.get(s"$parent/.build_idx_c_cafe"))
@@ -65,7 +65,7 @@ class EntryHelpersSpec extends AnyFunSuite {
   }
 
   test("a stale partial at the target (no marker) is replaced, not kept") {
-    val parent = Files.createTempDirectory("graft-eh-spec")
+    val parent = Paths.get(Inputs.scratchDir("graft-eh-spec"))
     val target = s"$parent/idx_d"
     Files.createDirectories(Paths.get(target))
     Files.write(Paths.get(target, "stale"), "s".getBytes)

@@ -96,6 +96,12 @@ class LoaderBoundaryLintSpec extends AnyFunSuite {
       Seq("createTempFile" + "(", "getResourceAsStream" + "(")))
   }
 
+  test("specs make temp dirs and files only under the Inputs scratch root") {
+    val sites = sitesOf(scalaFiles(test),
+      Seq("createTempDirectory" + "(", "createTempFile" + "("))
+    assert(sites.isEmpty, sites.mkString("\n"))
+  }
+
   test("the loader packages do not name the registry plumbing EntryHelpers") {
     val offenders = loaderPackages.flatMap(pkg =>
       sitesOf(scalaFiles(main.resolve(s"graft/$pkg")), Seq("EntryHelpers")))

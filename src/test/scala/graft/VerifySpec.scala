@@ -12,7 +12,7 @@ class VerifySpec extends AnyFunSuite {
 
   test("a row that throws inside its write leaves no directory") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-verify-spec")
+    val out = java.nio.file.Paths.get(Inputs.scratchDir("graft-verify-spec"))
     try {
       val boom = spark.range(4).as[Long]
         .map(i => if (i == 2L) throw new IllegalStateException("boom") else i)

@@ -1,8 +1,6 @@
 package graft.core
 
-import java.nio.file.Files
-
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import graft.core.Cached.withCached
 import graft.orchestrate.FullCorpus
 import graft.sources.{CancerHotspots, CosmicFusions, NcitLoad}
@@ -61,7 +59,7 @@ class CachedSpec extends AnyFunSuite {
     * cannot pass the release check vacuously.
     */
   private class FailingMergeStore extends PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-cached").toString) {
+      Inputs.scratchDir("graft-cached")) {
     @volatile var cachedAtMerge = false
     override def merge(table: String, incoming: DataFrame, keyCols: Seq[String],
         compareCols: Seq[String], setCols: Seq[String],

@@ -5,9 +5,11 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Test listener: the job group of every job started, and per stage the
-  * number of finished tasks and whether any of them wrote output rows.
+/** Test listener: the job group of every job started, per stage the
+  * number of finished tasks and whether any of them wrote output rows, and
+  * the physical plan of every SQL execution started.
   * Events arrive asynchronously; [[drain]] waits until every event posted
   * before it has been seen. Call [[close]] when done.
   */
@@ -18,6 +20,8 @@ final class JobRecorder(sc: SparkContext) extends SparkListener {
   val stageTasks = new ConcurrentHashMap[Int, AtomicInteger]
   /** Ids of stages with a task that wrote output rows. */
   val writeStages: java.util.Set[Int] = ConcurrentHashMap.newKeySet[Int]
+  /** Physical plan description of each SQL execution, in start order. */
+  val plans = new ConcurrentLinkedQueue[String]
   private val markerJobs: java.util.Set[Int] = ConcurrentHashMap.newKeySet[Int]
   private val markersDone = new AtomicInteger(0)
   sc.addSparkListener(this)
@@ -36,6 +40,11 @@ final class JobRecorder(sc: SparkContext) extends SparkListener {
     stageTasks.computeIfAbsent(e.stageId, _ => new AtomicInteger).incrementAndGet()
     if (Option(e.taskMetrics).exists(_.outputMetrics.recordsWritten > 0))
       writeStages.add(e.stageId)
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+    case _ =>
   }
 
   /** Run a marker job and wait for its end event: the bus delivers events

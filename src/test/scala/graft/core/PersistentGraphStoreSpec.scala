@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
 
   private def freshStore(): PersistentGraphStore =
     new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-store").toString)
+      Inputs.scratchDir("graft-store"))
 
   private def v1 = Seq(
     ("d1", "melanoma", Seq("solid"), false),
@@ -106,7 +106,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
   }
 
   test("upsert merge rewrites only touched buckets; readers layer versions") {
-    val dir = Files.createTempDirectory("graft-store")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
     val store = new PersistentGraphStore(spark, dir.toString, nBuckets = 8)
     val full = (1 to 64).map(i => (s"id$i", s"name$i"))
       .toDF("sourceId", "name")
@@ -160,7 +160,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
   }
 
   test("compact folds layers into one _FULL snapshot; old layers pruned") {
-    val dir = Files.createTempDirectory("graft-store")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
     val store = new PersistentGraphStore(spark, dir.toString, nBuckets = 8)
     store.merge("vertices", v1, Seq("sourceId"),
       compareCols = Seq("name", "deprecated"), setCols = Seq("subsets"))
@@ -193,7 +193,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
   }
 
   test("auto-compaction fires at the layer threshold during merges") {
-    val dir = Files.createTempDirectory("graft-store")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
     val store = new PersistentGraphStore(spark, dir.toString, nBuckets = 8,
       compactEvery = 3)
     // a lazy frame taken BEFORE auto-compaction fires: it references the
@@ -267,7 +267,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
     // 32 buckets: the two edges sit in different buckets, so the read
     // merges two layers of different schemas
     Seq(1 -> 2L, 32 -> 1L).foreach { case (n, newLayerRows) =>
-      val dir = Files.createTempDirectory("graft-store")
+      val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
       val store = new PersistentGraphStore(spark, dir.toString, nBuckets = n)
       store.upsertEdges(Seq(("a", "b", "SubClassOf")).toDF("out", "in", "edgeClass"))
       assert(store.upsertEdges(edgeRows(("a", "c", "Treats", "sensitivity"))) ==
@@ -318,7 +318,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
   }
 
   test("a stale staging directory is reclaimed by the next merge, not published") {
-    val dir = Files.createTempDirectory("graft-store")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
     val store = new PersistentGraphStore(spark, dir.toString)
     val clean = freshStore()
     val update = Seq(("d2", "glioma-renamed", Seq("cns"), false))
@@ -351,7 +351,7 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
   }
 
   test("a first merge that fails mid-write publishes nothing; a rerun converges") {
-    val dir = Files.createTempDirectory("graft-store")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
     val store = new PersistentGraphStore(spark, dir.toString)
     val clean = freshStore()
     val boom = udf { (id: Long) =>

@@ -1,11 +1,10 @@
 package graft.core
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import graft.core.PersistentGraphStore.{Edges, Merge, Write}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +13,7 @@ class StoreWriteAllSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft-writeall").toString
+  private def tmp() = Inputs.scratchDir("graft-writeall")
   private def freshStore() = new PersistentGraphStore(spark, tmp(), nBuckets = 8)
 
   private def terms(rows: (String, String)*): DataFrame =

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shuffle in front of a layer write is capped at the slot count
@@ -43,7 +43,7 @@ class StoreWriteWidthSpec extends AnyFunSuite {
   test("merges and edge upserts touching all 32 buckets write with at most 8 tasks") {
     val slots = spark.sparkContext.defaultParallelism
     assert(slots == 8)
-    val dir = Files.createTempDirectory("graft-width")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-width"))
     val store = new PersistentGraphStore(spark, dir.toString)
     val keys = 1 to 320
     val v1 = keys.map(i => (s"id$i", s"name$i")).toDF("sourceId", "name")

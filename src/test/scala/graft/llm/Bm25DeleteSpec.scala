@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,8 +91,7 @@ class Bm25DeleteSpec extends AnyFunSuite {
 
   test("deleted-index probe on a saved layout stays partition-pruned; save compacts") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25del-spec").toString
+    val dir = Inputs.scratchDir("graft-bm25del-spec")
     Retrieval.buildInvIndex(docs, "doc_id", "text").save(s"$dir/full")
     val loaded = Retrieval.InvIndex.load(spark, s"$dir/full")
     val deleted = Retrieval.deleteFromInvIndex(loaded,

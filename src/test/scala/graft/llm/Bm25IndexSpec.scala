@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,8 +27,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     val queries = queryBatch(docs)
     val inline = Retrieval.bm25TopK(docs, "doc_id", "text",
       queries, "qid", "qtext", k = 5, excludeIdEq = true)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25-spec").toString
+    val dir = Inputs.scratchDir("graft-bm25-spec")
     Retrieval.buildInvIndex(docs, "doc_id", "text").save(dir)
     val loaded = Retrieval.InvIndex.load(spark, dir)
     val probed = Retrieval.bm25TopK(queries, "qid", "qtext", loaded,
@@ -51,8 +50,7 @@ class Bm25IndexSpec extends AnyFunSuite {
   test("probe reads ONLY the query terms' postings bands (pruned scan)") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
     val queries = queryBatch(docs)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25band-spec").toString
+    val dir = Inputs.scratchDir("graft-bm25band-spec")
     Retrieval.buildInvIndex(docs, "doc_id", "text").save(dir)
     val loaded = Retrieval.InvIndex.load(spark, dir)
     // the bands the query terms hash into, recomputed independently

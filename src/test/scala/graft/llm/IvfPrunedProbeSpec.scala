@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,8 +22,7 @@ class IvfPrunedProbeSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("vq"), col("norm2"))
     val idx = Ann.buildIvfPqIndex(c, step = 25, iters = 2)
-    val layout = java.nio.file.Files
-      .createTempDirectory("graft-ivfcell-spec").toString + "/layout"
+    val layout = Inputs.scratchDir("graft-ivfcell-spec") + "/layout"
     Ann.writeCellLayout(idx, layout)
 
     val pruned = Ann.ivfPqSearchPruned(spark, q, idx, layout, k = 3, nProbe = 2)

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Inputs
 import graft.{Tables, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -927,7 +928,7 @@ class SamplingSpec extends AnyFunSuite {
 
   test("writeShards: one directory per shard, content matches shardPlan") {
     val df = (1L to 100L).map(i => (i, s"body $i")).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    val out = Inputs.scratchDir("shards")
     Sampling.writeShards(df, "doc_id", "text", 4, out)
     val back = spark.read.parquet(out)
     val gotShards = back.select(col("doc_id"), col("shard").cast("long"))
@@ -1524,7 +1525,7 @@ class AnnSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
-    val tmp = java.nio.file.Files.createTempDirectory("pqidx").toString
+    val tmp = Inputs.scratchDir("pqidx")
     val idx = Ann.buildIvfPqIndex(corpus, step = 25, iters = 2)
     idx.save(tmp)
     val loaded = Ann.IvfPqIndex.load(spark, tmp)
@@ -1554,7 +1555,7 @@ class AnnSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
-    val tmp = java.nio.file.Files.createTempDirectory("sqidx").toString
+    val tmp = Inputs.scratchDir("sqidx")
     Ann.buildIvfSqIndex(corpus, step = 25, iters = 2).save(tmp)
     val loaded = Ann.IvfSqIndex.load(spark, tmp)
 

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -159,8 +159,7 @@ class PhraseSpec extends AnyFunSuite {
 
   test("probe of a saved banded layout is partition-pruned to query bands") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-phrase-spec").toString
+    val dir = Inputs.scratchDir("graft-phrase-spec")
     Retrieval.buildPosIndex(docs, "doc_id", "text").save(s"$dir/pos")
     val loaded = Retrieval.PosIndex.load(spark, s"$dir/pos")
     val queries = docs.filter(col("doc_id") % 89 === 0)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,8 +64,7 @@ class PrfExpandSpec extends AnyFunSuite {
       .select(col("doc_id").as("qid"),
         expr("array_join(slice(filter(split(lower(text), ' '), " +
           "w -> length(w) > 0), 1, 5), ' ')").as("qtext"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-prfproj-spec").toString
+    val dir = Inputs.scratchDir("graft-prfproj-spec")
     Retrieval.buildInvIndex(docs, "doc_id", "text").save(dir)
     val loaded = Retrieval.InvIndex.load(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()

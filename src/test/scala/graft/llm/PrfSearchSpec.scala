@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -100,8 +100,7 @@ class PrfSearchSpec extends AnyFunSuite {
 
   test("weighted probe on a saved layout is partition-pruned to its term bands") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-prfband-spec").toString
+    val dir = Inputs.scratchDir("graft-prfband-spec")
     Retrieval.buildInvIndex(docs, "doc_id", "text").save(dir)
     val loaded = Retrieval.InvIndex.load(spark, dir)
     val queries = docs.filter(col("doc_id") % 97 === 0)

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, OneRowRelation, ResolvedHint}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.QueryExecution
@@ -85,7 +85,7 @@ class BroadcastHintLintSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     // a store-shaped FACT table path (statements is corpus-proportional)
-    val root = java.nio.file.Files.createTempDirectory("graft-lint-neg")
+    val root = java.nio.file.Paths.get(Inputs.scratchDir("graft-lint-neg"))
     val p = s"$root/statements/v=00001/__b=0"
     Seq((1L, "s")).toDF("id", "payload").write.parquet(p)
     val fact = spark.read.parquet(p)
@@ -115,7 +115,7 @@ class BroadcastHintLintSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val store = new graft.core.PersistentGraphStore(spark,
-        java.nio.file.Files.createTempDirectory("graft-lint").toString)
+        Inputs.scratchDir("graft-lint"))
       val r = FullCorpus.run(spark, store, FullCorpus.writeNcitSample())
       val failed = r.statuses.filterNot(_._2.isInstanceOf[Orchestrator.Succeeded])
       assert(failed.isEmpty, failed.toString)

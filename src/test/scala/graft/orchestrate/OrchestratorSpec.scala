@@ -1,6 +1,6 @@
 package graft.orchestrate
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 import Orchestrator._
@@ -83,9 +83,9 @@ class OrchestratorSpec extends AnyFunSuite {
       (store, writers :+ boom :+ dependent)
     }
     val (seqStore, seqLoaders) = build(
-      java.nio.file.Files.createTempDirectory("graft-orc-seq").toString)
+      Inputs.scratchDir("graft-orc-seq"))
     val (parStore, parLoaders) = build(
-      java.nio.file.Files.createTempDirectory("graft-orc-par").toString)
+      Inputs.scratchDir("graft-orc-par"))
     val rs = Orchestrator.run(spark, seqLoaders)
     val rp = Orchestrator.run(spark, parLoaders, parallelism = 8)
     assert(rp.statuses("boom").isInstanceOf[Failed])
@@ -122,7 +122,7 @@ class OrchestratorSpec extends AnyFunSuite {
     }
     for (par <- Seq(1, 4)) {
       val (store, loaders, seen) = build(
-        java.nio.file.Files.createTempDirectory(s"graft-pin$par").toString)
+        Inputs.scratchDir(s"graft-pin$par"))
       val r = Orchestrator.run(spark, loaders, parallelism = par,
         beforeLevel = () => store.pinVersions(),
         afterLevel = () => store.unpinVersions())
@@ -139,7 +139,7 @@ class OrchestratorSpec extends AnyFunSuite {
     // pin is active: the second merge's bucket rewrite must include the
     // first's rows — a pinned classify would silently drop them
     val store = new graft.core.PersistentGraphStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-pinmerge").toString,
+      Inputs.scratchDir("graft-pinmerge"),
       nBuckets = 1) // one bucket forces full overlap
     val writers = (1 to 4).map { i =>
       Loader(s"w$i", Seq.empty, _ =>
@@ -156,7 +156,7 @@ class OrchestratorSpec extends AnyFunSuite {
     import spark.implicits._
     // the NullPointerException comes back from a writeAll batch thread
     val store = new graft.core.PersistentGraphStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-npe").toString) {
+      Inputs.scratchDir("graft-npe")) {
       override def upsertEdges(rawCandidates: org.apache.spark.sql.DataFrame) =
         throw new NullPointerException()
     }
@@ -175,7 +175,7 @@ class OrchestratorSpec extends AnyFunSuite {
 
   test("full corpus DAG: every loader succeeds into one store; rerun creates nothing") {
     val store = new graft.core.PersistentGraphStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-corpus").toString)
+      Inputs.scratchDir("graft-corpus"))
     val ncit = FullCorpus.writeNcitSample()
     val r1 = FullCorpus.run(spark, store, ncit)
     val failed = r1.statuses.filterNot(_._2.isInstanceOf[Succeeded])

@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Seeded-random drugbank XML → drugbankRecords equivalence: each trial
@@ -150,8 +148,7 @@ class DrugbankRecordsPropertySpec extends AnyFunSuite {
             .map(c => if (rnd.nextBoolean()) Seq(c, s"Second $c") else Seq(c)))
       }
       val doc = <drugbank version="5.1">{drugs.map(xmlOf)}</drugbank>
-      val f = Files.createTempFile(s"graft-dbprop$trial", ".xml")
-      Files.writeString(f, doc.toString)
+      val f = Inputs.file(s"dbprop$trial.xml", doc.toString)
       val got = Loaders.drugbankRecords(spark, f.toString).collect()
         .map { r =>
           (r.getString(0), r.getString(1), r.getString(2), r.getString(3),

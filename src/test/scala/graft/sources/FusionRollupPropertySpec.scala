@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import graft.core.PersistentGraphStore
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -93,7 +91,7 @@ class FusionRollupPropertySpec extends AnyFunSuite {
           famPool(rnd.nextInt(famPool.size)), "")
       }
       val store = new PersistentGraphStore(spark,
-        Files.createTempDirectory(s"graft-fprop$trial").toString)
+        Inputs.scratchDir(s"graft-fprop$trial"))
       val counts = CosmicFusions.loadDf(spark, store,
         spark.createDataset(rows).toDF(), disDf)
       val got = store.read("statements").get

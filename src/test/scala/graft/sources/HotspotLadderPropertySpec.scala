@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import graft.core.PersistentGraphStore
 import graft.variant.HgvsParser
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,7 +83,7 @@ class HotspotLadderPropertySpec extends AnyFunSuite {
           Vector("mel", "lung", "unknown_d")(rnd.nextInt(3)))
       }
       val store = new PersistentGraphStore(spark,
-        Files.createTempDirectory(s"graft-hprop$trial").toString)
+        Inputs.scratchDir(s"graft-hprop$trial"))
       val terms = Map("substitution" -> "t:sub", "deletion" -> "t:del",
         "insertion" -> "t:ins", "indel" -> "t:indel", "frameshift" -> "t:fs")
       val c = CancerHotspots.loadDs(spark, store,

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
+import graft.Inputs
 import graft.Inputs.TestData
 import graft.TestSpark
 import graft.core.PersistentGraphStore
@@ -22,7 +21,7 @@ class LoadersSpec extends AnyFunSuite {
 
   test("doid loader: vertices + SubClassOf edges, idempotent rerun") {
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e").toString)
+      Inputs.scratchDir("graft-e2e"))
     val c1 = Loaders.loadDoid(spark, store, doid)
     assert(c1("create") == 2L) // two nodes in the sample
     assert(c1("edges_created") == 2L) // two is_a edges
@@ -35,7 +34,7 @@ class LoadersSpec extends AnyFunSuite {
 
   test("drugbank loader through the streaming rowTag scan") {
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e2").toString)
+      Inputs.scratchDir("graft-e2e2"))
     assert(Loaders.loadDrugbank(spark, store, drugbank) == Map("create" -> 1L))
     val row = store.read("therapies").get.collect().head
     assert(row.getAs[String]("sourceId") == "DB00530")
@@ -75,7 +74,7 @@ class LoadersSpec extends AnyFunSuite {
   test("drugbank full loader: vertices + 6 edge families, idempotent rerun") {
     import spark.implicits._
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e5").toString)
+      Inputs.scratchDir("graft-e2e5"))
     val fda = Seq(("J4T82NDH7E", "ERLOTINIB"), ("XXUNMATCHED", "OTHER"))
       .toDF("sourceId", "name")
     val chembl = Seq(("CHEMBL553", "ERLOTINIB")).toDF("sourceId", "name")
@@ -139,10 +138,9 @@ class LoadersSpec extends AnyFunSuite {
         |  </atc-code></atc-codes>
         |</drug>
         |</drugbank>""".stripMargin
-    val f = Files.createTempFile("graft-atc", ".xml")
-    Files.writeString(f, xml)
+    val f = Inputs.file("atc.xml", xml)
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e-atc").toString)
+      Inputs.scratchDir("graft-e2e-atc"))
     val empty = Seq.empty[(String, String)].toDF("sourceId", "name")
     val genes = Seq.empty[(String, String)].toDF("hgncId", "symbol")
     Loaders.loadDrugbankFull(spark, store, f.toString, empty, empty, genes)
@@ -163,7 +161,7 @@ class LoadersSpec extends AnyFunSuite {
   test("oncotree loader: 853 diseases, parent + NCI edges, idempotent") {
     val path = s"$TestData/tumorTypes-oncotree_latest_stable.json"
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e4").toString)
+      Inputs.scratchDir("graft-e2e4"))
     val c1 = Loaders.loadOncotree(spark, store, path)
     assert(c1("create") == 853L)
     // every code except the root has a resolvable parent
@@ -177,7 +175,7 @@ class LoadersSpec extends AnyFunSuite {
   test("ensembl biomart loader: versioned/generalized features + edge classes") {
     val path = s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv"
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e5").toString)
+      Inputs.scratchDir("graft-e2e5"))
     Loaders.loadEnsembl(spark, store, path)
     import org.apache.spark.sql.functions.col
     val feats = store.read("features").get
@@ -197,7 +195,7 @@ class LoadersSpec extends AnyFunSuite {
       s"$TestData/external_api_responses.json",
       "http://rest.genenames.org/fetch/hgnc_id/1101")
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e6").toString)
+      Inputs.scratchDir("graft-e2e6"))
     val c1 = Loaders.loadHgnc(spark, store, docs)
     assert(c1("create") == 8L) // BRCA2 + 3 prev + 4 alias
     import org.apache.spark.sql.functions.col
@@ -216,10 +214,8 @@ class LoadersSpec extends AnyFunSuite {
       Seq("C2", "<u>", "", "Syn B", "", "Dup Name", "", "Neoplastic Process", ""),
       Seq("C3", "<u>", "", "", "", "Mouse Dup", "", "Neoplastic Process", ""),
       Seq("C4", "<u>", "", "", "", "Mouse Dup", "", "Neoplastic Process", ""))
-    val f = java.io.File.createTempFile("graft-ncit", ".txt")
-    java.nio.file.Files.writeString(f.toPath,
-      rows.map(_.mkString("\t")).mkString("\n"))
-    val r = NcitLoad.resolved(spark, f.getPath)
+    val f = Inputs.file("ncit.txt", rows.map(_.mkString("\t")).mkString("\n"))
+    val r = NcitLoad.resolved(spark, f)
     // species duplicates rejected wholesale
     assert(r.filter(col("rejected")).select("sourceId").as[String]
       .collect().toSet == Set("c3", "c4"))
@@ -234,9 +230,24 @@ class LoadersSpec extends AnyFunSuite {
       .select("name").as[String].head() == "Syn B")
   }
 
+  test("ncit synonyms equal but for case offer one alias key once") {
+    import spark.implicits._
+    val f = Inputs.file("ncit.txt", Seq(
+      Seq("C1", "<u>", "", "Foo Bar|foo bar|Other", "", "Melanoma", "", "Neoplastic Process", ""))
+      .map(_.mkString("\t")).mkString("\n"))
+    val store = new PersistentGraphStore(spark, Inputs.scratchDir("graft-ncit-alias"))
+    val first = NcitLoad.load(spark, store, f)
+    assert(first("create") == 3L && first("edges_created") == 2L, first)
+    val terms = store.read("terms").get.select("sourceId", "name").as[(String, String)]
+      .collect().toSeq
+    assert(terms.sorted == Seq(("c1", "foo bar"), ("c1", "melanoma"), ("c1", "other")))
+    val replay = NcitLoad.load(spark, store, f)
+    assert(replay == Map("noop" -> 3L, "edges_created" -> 0L), replay)
+  }
+
   test("orchestrated mini-corpus: vocab → {doid, drugbank}, rerun all-noop") {
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-e2e3").toString)
+      Inputs.scratchDir("graft-e2e3"))
     val loaders = Seq(
       Loader("vocab", Seq.empty, sp => Loaders.loadVocab(sp, store)),
       Loader("doid", Seq("vocab"), sp => Loaders.loadDoid(sp, store, doid)),

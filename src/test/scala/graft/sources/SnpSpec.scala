@@ -50,7 +50,7 @@ class SnpSpec extends AnyFunSuite {
   test("full ladder: catalogue + cds/protein/alt variants + Infers chain") {
     import spark.implicits._
     val store = new PersistentGraphStore(spark,
-      Files.createTempDirectory("graft-snp").toString)
+      Inputs.scratchDir("graft-snp"))
     val ids = Seq("rs121434568", "rs28934576", "rs1042522", "rs9999999",
       "rs404040404").toDS()
     val c = Snp.fetchAndLoad(spark, store, ids, snpFetcher, refseqFetcher,
@@ -104,7 +104,7 @@ class SnpSpec extends AnyFunSuite {
 
   test("civic rsID routing: catalogue variant instead of category variant") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snp-civic")
+    val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-snp-civic"))
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$TestData/civic_variant.json")), "UTF-8")
     val rsRec = """{"id": 999, "entrez_name": "EGFR", "entrez_id": 1956,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.TestSpark
+import graft.{Inputs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -13,7 +13,7 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("S2 streaming delimited scan: availableNow over a csv dir") {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = Inputs.scratchDir("graft-stream")
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "id\tname\n1\talpha\n2\tbeta\n")
     Files.writeString(java.nio.file.Paths.get(dir, "b.tsv"),
@@ -27,7 +27,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("watermarked windowed aggregation (availableNow batch-up)") {
-    val dir = Files.createTempDirectory("graft-stream2").toString
+    val dir = Inputs.scratchDir("graft-stream2")
     val events = Seq(
       ("2026-01-01 00:00:10", "click", 1.0),
       ("2026-01-01 00:00:50", "click", 2.0),
@@ -51,7 +51,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful first-wins dedup across micro-batches") {
-    val dir = Files.createTempDirectory("graft-stream3").toString
+    val dir = Inputs.scratchDir("graft-stream3")
     Files.writeString(java.nio.file.Paths.get(dir, "x.tsv"),
       "key\tpayload\nk1\tfirst\nk1\tsecond\nk2\tonly\n")
     val schema = StructType.fromDDL("key STRING, payload STRING")
@@ -67,7 +67,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("firstEventPerKey folds state across micro-batches deterministically") {
-    val dir = Files.createTempDirectory("graft-stream4").toString
+    val dir = Inputs.scratchDir("graft-stream4")
     // batch 1 (file a): later event for u1; batch 2 (file b): the true
     // earliest — state must improve on the second batch
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("minIdPerKey: min survives batch boundaries; non-improving batches emit nothing") {
-    val dir = Files.createTempDirectory("graft-stream-dedup").toString
+    val dir = Inputs.scratchDir("graft-stream-dedup")
     // batch 1: key 10 seen at id 5; batch 2: a SMALLER id arrives (emit);
     // batch 3: a larger id (silent)
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"), "k\tid\n10\t5\n20\t9\n")
@@ -129,7 +129,7 @@ class StreamingSpec extends AnyFunSuite {
   test("minIdPerKeyExpiring: in-window results match the unexpiring min-fold") {
     // the minIdPerKey improvement scenario with timestamps, ttl large
     // enough that nothing retires — emissions must be identical
-    val dir = Files.createTempDirectory("graft-stream-dedup2").toString
+    val dir = Inputs.scratchDir("graft-stream-dedup2")
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "key\tid\tts\n10\t5\t10000000\n20\t9\t10500000\n")
     Thread.sleep(20)
@@ -158,7 +158,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("minIdPerKeyExpiring: a retired content hash re-admits its next crawl") {
-    val dir = Files.createTempDirectory("graft-stream-dedup3").toString
+    val dir = Inputs.scratchDir("graft-stream-dedup3")
     // batch 1: key 10 at t=10s, id 5. ttl=2s → expiry armed at 12s.
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "key\tid\tts\n10\t5\t10000000\n")
@@ -193,7 +193,7 @@ class StreamingSpec extends AnyFunSuite {
   test("firstEventPerKeyExpiring: in-window results match the unexpiring variant") {
     // same 3-batch improvement scenario as the NoTimeout spec, ttl large
     // enough that nothing retires — outputs must be identical
-    val dir = Files.createTempDirectory("graft-stream5").toString
+    val dir = Inputs.scratchDir("graft-stream5")
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "user_id\tts\tevent_id\tevent_type\n1\t50000000\t7\tlate\n2\t10000000\t3\tonly\n")
     Thread.sleep(20)
@@ -221,7 +221,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("firstEventPerKeyExpiring: keys retire once the watermark passes their ttl") {
-    val dir = Files.createTempDirectory("graft-stream6").toString
+    val dir = Inputs.scratchDir("graft-stream6")
     // batch 1: u1 at t=10s. ttl=2s → armed to expire at event-time 12s.
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "user_id\tts\tevent_id\tevent_type\n1\t10000000\t1\tfirst\n")
@@ -259,7 +259,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("firstWinsExpiring: retired key re-emits; live key stays deduped") {
-    val dir = Files.createTempDirectory("graft-stream7").toString
+    val dir = Inputs.scratchDir("graft-stream7")
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "key\tpayload\tts\nk1\tfirst\t10000000\nk2\tkeep\t10500000\n")
     Thread.sleep(20)
@@ -288,7 +288,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming HLL registers are bit-identical to the batch sketch") {
-    val dir = Files.createTempDirectory("graft-hll").toString
+    val dir = Inputs.scratchDir("graft-hll")
     // two micro-batches with overlapping values — the union must match
     // the batch registers over all values
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
@@ -322,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming count-min grid is bit-identical to the batch counters") {
-    val dir = Files.createTempDirectory("graft-cm").toString
+    val dir = Inputs.scratchDir("graft-cm")
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "v\n" + (0 until 300).map(i => s"w${i % 90}").mkString("\n") + "\n")
     Thread.sleep(20)
@@ -353,7 +353,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming quantile histogram is bit-identical to the batch one") {
-    val dir = Files.createTempDirectory("graft-hq").toString
+    val dir = Inputs.scratchDir("graft-hq")
     // two overlapping batches spanning several octaves per key
     Files.writeString(java.nio.file.Paths.get(dir, "a.tsv"),
       "k\tv\n" + (1 until 400).map(i => s"a\t${i * 3}\nb\t${i * 7}").mkString("\n") + "\n")
