@@ -1,122 +1,21 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: times the headline (scale-relevant) queries at
+/** Benchmark main: times the registry rows at
   * SPARK_GRAFT_SF_DIR and emits ONE JSON line — printed raw to stdout
   * (`run / outputStrategy := StdoutOutput` keeps sbt from prefixing it)
   * AND written to SPARK_GRAFT_BENCH_OUT (default `bench_out.json`) so the
   * driver can parse per-query numbers either way.
   *
-  * Headline = queries whose cost scales with the sf tables. Fixture-driven
-  * grammar/golden queries (f1, f5-f14, x1/x4/x8, s3-s17 scans of fixed
-  * reference files) are correctness rows, not benchmarks — timing them
-  * would measure constant overhead, so they run once in the `fixtures`
-  * bucket but don't dominate the loop.
+  * Each row's declared timing kind (`EntryHelpers.Timing`, written next
+  * to the row in its registry) decides how it is timed: `scaled` rows,
+  * whose inputs grow with sf, are the headline and are timed one by one;
+  * `fixture` and `loader` rows cost the same at any sf and run once per
+  * pass in the `fixtures_bucket` and `loaders_bucket`, so they don't
+  * dominate the loop.
   */
 object Bench {
-  /** Scale-relevant: every input grows with sf. */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "p2_filter_status", "p7_limit_topn", "p8_dedup_first",
-    "j11_xref_join", "j13_anti_join", "t1_top1_per_group", "t2_newest_top1",
-    "set_except",
-    "f13_year_extract", "a7_consensus", "a1_hash_id", "j1_resolve_unique",
-    "k1_upsert_classify", "k2_change_counts", "j12_diff_tiers",
-    "k8_nullkey_upsert", "x2_cartesian", "x3_therapy_groups", "x5_per_drug",
-    "x6_two_statements", "x7_per_relevance", "x9_alias_explode",
-    "j4_plural_fallback", "j6_therapy_combo", "j7_coalesce_resolve",
-    "j8_cascade_resolve", "j9_fetch_union", "j10_biotype_lookup",
-    "a2_recurrence", "a4_fill_collapse", "a5_name_collision",
-    "a6_version_fold", "a9_column_scan", "f17_display_name",
-    "p5_deprecation_filter", "p6_null_normalize", "p9_jsonpath",
-    "set_union_dedup", "j3_filter_tree", "j14_struct_key",
-    "p4_validation_split", "k10_error_sink", "s15_entrez_batch",
-    "llm_exact_dedup", "llm_minhash_neardup", "llm_minhash_recall",
-    "llm_simhash", "llm_simhash_neardup", "llm_ngram_jaccard", "llm_text_stats", "llm_langid",
-    "llm_script_detect",
-    "llm_ann_topk", "llm_ann_lsh", "llm_ann_ivf", "llm_ann_recall",
-    "llm_embed_neardup", "llm_ann_index_build",
-    "llm_multimodal", "llm_dedup_clusters", "llm_incremental_dedup",
-    "llm_rolling_dedup",
-    "llm_hash_sample", "llm_quality_gopher", "llm_pii_scrub",
-    "llm_line_dedup", "llm_decontaminate", "llm_contamination_report",
-    "llm_corpus_diff", "llm_seq_pack",
-    "llm_vocab_census", "llm_domain_mix", "llm_domain_mix_temp",
-    "llm_semantic_dedup", "llm_span_dedup", "llm_span_scrub", "llm_tfidf_terms",
-    "llm_word_dropout", "llm_text_normalize", "llm_split",
-    "llm_shard_plan", "llm_curriculum_plan", "llm_corpus_profile", "llm_source_overlap",
-    "llm_stream_dedup", "llm_bpe_pairs", "llm_pq_encode", "llm_pq_search", "llm_pq_recall", "llm_ivfpq_search", "llm_hard_negatives",
-    "llm_ann_filtered", "llm_index_update",
-    "llm_sq_search", "llm_sq_recall", "llm_rp_topk", "llm_rp_recall",
-    "llm_ivfpq_recall", "llm_full_pipeline", "llm_url_ops", "llm_token_budget",
-    "llm_salted_join", "llm_quantile_sketch", "llm_corpus_report",
-    "llm_zorder_layout", "llm_compaction_plan", "llm_scd2_build", "llm_interval_merge",
-    "llm_winsorize", "llm_sketch_overlap", "llm_weighted_quantile",
-    "llm_join_estimate", "llm_sketch_registry", "llm_anomaly_days",
-    "llm_triangles", "llm_attribution", "llm_cooccur",
-    "llm_chunking", "llm_bm25", "llm_hybrid_search", "llm_ngram_lm",
-    "llm_epoch_plan", "llm_pack_efficiency",
-    "llm_domain_budget", "llm_corpus_drift", "llm_quality_cut", "llm_rag_pipeline", "llm_bpe_train", "llm_bpe_encode", "llm_unicode_nfc", "llm_sessionize", "llm_funnel", "llm_retention",
-    "llm_ivf_stats", "llm_ivf_probe_curve",
-    "llm_asof_join", "llm_range_join", "llm_distinct_sketch", "llm_pagerank",
-    "llm_heavy_hitters", "llm_bloom_filter", "llm_pmi_pairs",
-    "llm_event_transitions", "llm_feature_snapshot",
-    "llm_set_join", "llm_decayed_score",
-    "llm_trustrank", "llm_seed_distance", "llm_pps_sample", "llm_pps_estimate",
-    "llm_domain_similarity", "llm_communities",
-    // round-12 additions that read sf-scaled documents/annCorpus inputs —
-    // headline (median-of-reps), NOT fixtures: leaving them in the
-    // min-of-2 bucket tripled fixtures_bucket in r12 and broke
-    // round-over-round comparability
-    "llm_score_calibrate", "llm_calibrate_ks", "llm_mad_outliers",
-    "llm_mad_by_source", "llm_gram_matrix", "llm_gram_incremental",
-    "llm_gram_shifted",
-    "llm_pca_power", "llm_pca_project", "llm_pca_shifted_power",
-    "llm_mmr_rerank", "llm_mmr_ivf",
-    "llm_kanon_audit", "llm_cluster_split", "llm_best_of_cluster",
-    "llm_label_centroids", "llm_ivf_sq_search", "llm_sq_encode", "llm_sq_index",
-    "llm_rp_project", "llm_retrieval_eval", "llm_lang_confusion",
-    "llm_token_fertility",
-    // round-13 additions (all sf-scaled)
-    "llm_sq_update", "llm_importance_weights", "llm_importance_cut",
-    "llm_importance_bigram",
-    "llm_bin_sketch", "llm_hamming_topk", "llm_hamming_recall",
-    "llm_hamming_rerank", "llm_hamming_rerank_recall",
-    // round-14 additions (sf-scaled: the shortlist sweep reruns the
-    // two-stage chain per breadth; the phash row decodes one raster per
-    // document row and block-joins the hash words; the pruned probe reads
-    // only probed cells of the partitioned layout)
-    "llm_hamming_curve", "llm_image_phash_scale", "llm_ivf_pruned_probe",
-    "llm_hamming_wide", "llm_bm25_index",
-    // round-15 additions (sf-scaled: the update row re-tokenizes the
-    // held-out batch and rescores; maxscore runs the 3-phase exact
-    // pruning probe over the shared standing index)
-    "llm_bm25_update", "llm_bm25_maxscore",
-    // round-16 additions (sf-scaled: auto runs the volume estimate +
-    // picked probe; drift scans corpus + batch through every standing
-    // index; phrase joins positional postings against the slot votes)
-    "llm_bm25_auto", "llm_index_drift", "llm_phrase_search",
-    "llm_query_expand",
-    // round-17 additions (sf-scaled: prf runs the two-pass RM3 chain
-    // over the standing index; delete probes the tombstoned index after
-    // subtracting the %11 batch; phrase_update folds the held-out 10%
-    // and probes; drift_retrain retrains SQ bounds + folds the vocab
-    // batch and gates both phases)
-    "llm_prf_search", "llm_bm25_delete", "llm_phrase_update",
-    "llm_drift_retrain", "llm_proximity_search", "llm_ann_delete",
-    "llm_snippets",
-    // round-18 additions (sf-scaled: prox_rank composes the banded BM25
-    // probe with candidate-restricted positional window counting; the
-    // lifecycle row chains build→update→delete→re-add→probe over the
-    // net corpus)
-    "llm_prox_rank", "llm_index_lifecycle", "llm_snippets_multi",
-    "s2_stream_agg", "s2b_stream_state", "s2c_stream_sessions",
-    "s2d_stream_join", "s2e_stream_dedup_wm", "s2f_stream_enrich",
-    "s2g_stream_hll", "s2h_stream_cm", "s2i_stream_quantile",
-    // sf-scaled LOADER rows: the same plans the fixture g-rows pin for
-    // correctness, driven over inputs that grow with sf — these are the
-    // falsifiable loader-bench signal (median-of-reps, compute-dominated),
-    // while the g-rows in loaders_bucket measure fixed fixture overhead
-    "ldr_ncit_scale", "ldr_fusion_scale", "ldr_hotspot_scale")
+  import EntryHelpers.{Fixture, Loader, Scaled}
 
   /** Fixed CPU-bound sentinel work (rows hashed and XOR-folded): ~0.6 s
     * on a quiet host at local[32], pure compute with no I/O or shuffle,
@@ -235,16 +134,14 @@ object Bench {
     // practice); interleaving puts a whole suite pass (~minutes) between a
     // query's reps, so one load window cannot touch more than one of them
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val names = if (args.nonEmpty) args.toSeq else headline.filter(all.contains)
-    // fixture/golden queries split into two buckets: grammar/golden frames
-    // (fixtures_bucket) vs the gN loader pipelines, which each run a store
-    // round-trip twice plus the g14 full-DAG run (loaders_bucket) — both
-    // constant-cost, not per-query news, but the loader bucket grows with
-    // every new composed source and would otherwise read as a fixtures
-    // regression
-    val rest =
-      if (args.nonEmpty) Nil else all.keys.toSeq.sorted.filterNot(headline.contains)
-    val (loaderQs, fixtureQs) = rest.partition(_.matches("^g\\d+_.*"))
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.timedAs(Scaled)
+    // constant-cost rows split into two buckets: grammar/golden frames
+    // (fixtures_bucket) vs the loader pipelines with their store
+    // round-trips (loaders_bucket) — the loader bucket grows with every
+    // new composed source and would otherwise read as a fixtures regression
+    val (fixtureQs, loaderQs) =
+      if (args.nonEmpty) (Nil, Nil)
+      else (SparkEntry.timedAs(Fixture), SparkEntry.timedAs(Loader))
     // per-row attribution log (name, pass, epoch-second start, elapsed)
     // and the interleaved sentinel series — both land in the bench_out
     // file (NOT the stdout metric lines, whose tail-parse window is

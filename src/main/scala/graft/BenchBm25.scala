@@ -40,8 +40,7 @@ object BenchBm25 {
           "w -> length(w) > 0), 1, 5), ' ')").as("qtext"))
     println(s"[benchbm25] queries=${queries.count()} qmod=$qmod sf=$sfDir")
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-benchbm25").toString
+    val dir = Inputs.scratchDir("benchbm25")
     val tb = System.nanoTime()
     llm.Retrieval.buildInvIndex(docs, "doc_id", "text").save(dir)
     println(f"[benchbm25] index build+save: ${(System.nanoTime() - tb) / 1e9}%.2f s")

@@ -13,6 +13,24 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object EntryHelpers {
 
+  /** How `Bench` times a registry row, declared where the row is defined:
+    * [[Scaled]] rows read inputs that grow with sf and are timed one by
+    * one (median of interleaved reps); [[Fixture]] rows build constant-cost
+    * grammar/golden frames and [[Loader]] rows run a loader pipeline with
+    * its store round-trips, timed in `fixtures_bucket` and `loaders_bucket`.
+    */
+  sealed trait Timing
+  case object Scaled extends Timing
+  case object Fixture extends Timing
+  case object Loader extends Timing
+
+  /** A registry row: the frame it builds and how `Bench` times it. */
+  final case class Timed(timing: Timing, run: (SparkSession, String) => DataFrame)
+
+  def scaled(run: (SparkSession, String) => DataFrame): Timed = Timed(Scaled, run)
+  def fixture(run: (SparkSession, String) => DataFrame): Timed = Timed(Fixture, run)
+  def loader(run: (SparkSession, String) => DataFrame): Timed = Timed(Loader, run)
+
   /** Exact order-independent sum for 2-decimal money values: per-row the
     * double product is within 1e-10 of a 4-decimal grid point, so the
     * decimal(18,4) cast is deterministic; decimal addition is exact.

@@ -10,13 +10,13 @@ import Inputs.scratchDir
 /** LLM-data-pipeline query registry (SURVEY §2.12: dedup, ANN tiers, PCA, sketches, graphs, sampling, text analysis, multimodal). */
 private[graft] object QueriesLlm {
 
-  def registry: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def registry: Map[String, Timed] = Map(
 
 
     // ---- LLM training-data pipeline operators (documents/embeddings) ----
 
     // Exact content dedup: hash-groupBy on full text, canonical = min id.
-    "llm_exact_dedup" -> ((s, dir) => {
+    "llm_exact_dedup" -> scaled((s, dir) => {
       val w = Window.partitionBy(col("content_key"))
       t(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("content_key"))
@@ -26,7 +26,7 @@ private[graft] object QueriesLlm {
     // MinHash + banded LSH near-dup pairs with exact-Jaccard verification:
     // candidates only ever come from shared (band, key) buckets — the
     // all-pairs comparison that kills 100 TB runs never happens.
-    "llm_minhash_neardup" -> ((s, dir) => {
+    "llm_minhash_neardup" -> scaled((s, dir) => {
       llm.TextOps.minhashNearDups(
         t(s, dir, "documents"), "doc_id", "text", threshold = 0.5)
     }),
@@ -41,7 +41,7 @@ private[graft] object QueriesLlm {
     // is constant-size at any scale (TakeOrderedAndProject picks the
     // sample without a global sort). Recall = banded pairs touching the
     // sample / true pairs touching the sample.
-    "llm_minhash_recall" -> ((s, dir) => {
+    "llm_minhash_recall" -> scaled((s, dir) => {
       val thr = 0.5
       val ws = t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
@@ -84,12 +84,12 @@ private[graft] object QueriesLlm {
     // 60-bit fingerprints, radius 3 — pigeonhole makes the block join
     // LOSSLESS at this radius, so the oracle replays brute all-pairs and
     // the decomposition must equal it exactly.
-    "llm_simhash_neardup" -> ((s, dir) => {
+    "llm_simhash_neardup" -> scaled((s, dir) => {
       llm.TextOps.simhashNearDups(t(s, dir, "documents"), "doc_id", "text")
     }),
 
     // SimHash document fingerprint (32-bit, +1/-1 bit votes over shingles).
-    "llm_simhash" -> ((s, dir) => {
+    "llm_simhash" -> scaled((s, dir) => {
       t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("shingles", llm.TextOps.shingles(3))
@@ -102,14 +102,14 @@ private[graft] object QueriesLlm {
     // routed through the MinHash-LSH path so no single giant block can
     // make the pair join quadratic at scale. (At this sf every block is
     // under the cap, so the result is the exact brute-force answer.)
-    "llm_ngram_jaccard" -> ((s, dir) => {
+    "llm_ngram_jaccard" -> scaled((s, dir) => {
       llm.TextOps.blockedNgramJaccard(
         t(s, dir, "documents"), "doc_id", "text",
         blockCols = Seq("lang", "source"), threshold = 0.5)
     }),
 
     // Token counts, quality score, rolling fingerprint, content key.
-    "llm_text_stats" -> ((s, dir) => {
+    "llm_text_stats" -> scaled((s, dir) => {
       t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("shingles", llm.TextOps.shingles(3))
@@ -123,7 +123,7 @@ private[graft] object QueriesLlm {
     // Exact top-20% quality cut: threshold = k-th largest micro-quantized
     // quality score read off a bounded histogram (no global sort; ties at
     // the threshold kept — the cut is a pure function of the score).
-    "llm_quality_cut" -> ((s, dir) => {
+    "llm_quality_cut" -> scaled((s, dir) => {
       val scored = t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("q", llm.TextOps.qualityScore)
@@ -131,7 +131,7 @@ private[graft] object QueriesLlm {
     }),
 
     // Language-ID heuristic: stopword hit counts + argmax guess.
-    "llm_langid" -> ((s, dir) => {
+    "llm_langid" -> scaled((s, dir) => {
       t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .select(Seq(col("doc_id")) ++ llm.TextOps.langIdColumns: _*)
@@ -143,7 +143,7 @@ private[graft] object QueriesLlm {
     // codepoint counts over the major script blocks + dominant-script
     // verdict. Fixture salts in pure-Cyrillic/CJK/Arabic docs and Greek
     // tails so every branch and the tie-break get real work.
-    "llm_script_detect" -> ((s, dir) => {
+    "llm_script_detect" -> scaled((s, dir) => {
       val salted = t(s, dir, "documents").select(col("doc_id"),
         when(col("doc_id") % 11 === 0,
           lit("привет мир это документ на русском языке"))
@@ -157,7 +157,7 @@ private[graft] object QueriesLlm {
     }),
 
     // Brute-force cosine top-3 (integer-quantized → bit-exact ranking).
-    "llm_ann_topk" -> ((s, dir) => {
+    "llm_ann_topk" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
       val q = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("vq"), col("norm2"))
@@ -167,7 +167,7 @@ private[graft] object QueriesLlm {
 
     // LSH-bucketed ANN: difference-hyperplane sign bucket, top-3 within
     // the query's bucket.
-    "llm_ann_lsh" -> ((s, dir) => {
+    "llm_ann_lsh" -> scaled((s, dir) => {
       val e = llm.Ann.withBucket(
         llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding"),
         llm.Ann.DefaultPairs)
@@ -182,7 +182,7 @@ private[graft] object QueriesLlm {
     // spherical k-means (seed = vec_id%25, 2 iterations, integer centroid
     // components so the oracle reproduces training) — one-cell corpus
     // assignment, 2-probe queries, exact re-rank within probed cells.
-    "llm_ann_ivf" -> ((s, dir) => {
+    "llm_ann_ivf" -> scaled((s, dir) => {
       // standing-index probe: shared coarse quantizer + prebuilt cell
       // assignment (identical deterministic training → same oracle)
       val idx = sharedAnnIndex(s, dir)
@@ -195,7 +195,7 @@ private[graft] object QueriesLlm {
     // memory cut stacked, proving the composition the SQ docs claim.
     // Standing-index form: bounds/codes come off the LOADED shared SQ
     // index, cells off the shared IVF index — nothing trains in-query.
-    "llm_ivf_sq_search" -> ((s, dir) => {
+    "llm_ivf_sq_search" -> scaled((s, dir) => {
       val idx = sharedAnnIndex(s, dir)
       llm.Ann.ivfSqSearch(annQueries(s, dir), sharedSqIndex(s, dir),
         idx.coarse, idx.cells, k = 3, nProbe = 2)
@@ -203,7 +203,7 @@ private[graft] object QueriesLlm {
 
     // Recall gate for the composed path: what cell pruning AND 8-bit
     // reconstruction together cost vs brute truth.
-    "llm_ivf_sq_recall" -> ((s, dir) => {
+    "llm_ivf_sq_recall" -> fixture((s, dir) => {
       val idx = sharedAnnIndex(s, dir)
       val queries = annQueries(s, dir)
       val corpus = annCorpus(s, dir)
@@ -220,7 +220,7 @@ private[graft] object QueriesLlm {
     // search cost scales with the filtered subset, not the corpus; at
     // 100 TB the filter would prune source-partitioned parquet before a
     // single dot product runs.
-    "llm_ann_filtered" -> ((s, dir) => {
+    "llm_ann_filtered" -> scaled((s, dir) => {
       val allowed = t(s, dir, "documents")
         .filter(col("source").isin("src0", "src1", "src2", "src3"))
         .select(col("doc_id").as("nid"))
@@ -231,7 +231,7 @@ private[graft] object QueriesLlm {
     // ANN recall gate: recall@3 of the LSH and trained-IVF paths against
     // brute-force ground truth on the same queries — the measurement that
     // keeps bucket/probe tuning honest. Exact integer hit counting.
-    "llm_ann_recall" -> ((s, dir) => {
+    "llm_ann_recall" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
       val corpus = e.select(col("vec_id").as("nid"), col("vq"), col("norm2"))
       val queries = e.filter(col("vec_id") % 50 === 0)
@@ -259,7 +259,7 @@ private[graft] object QueriesLlm {
     // fingerprint. Every IVF/IVF-PQ gate row below LOADS this index
     // instead of retraining in-query. Emits per-component row counts;
     // the oracle replays both trainings and re-derives the same counts.
-    "llm_ann_index_build" -> ((s, dir) => {
+    "llm_ann_index_build" -> scaled((s, dir) => {
       val path = buildSharedAnnIndex(s, dir)
       val idx = llm.Ann.IvfPqIndex.load(s, path)
       Seq(
@@ -279,7 +279,7 @@ private[graft] object QueriesLlm {
     // candidates per query). Centroids AND corpus cell assignment come
     // off the prebuilt index (build-once/probe-many); training is
     // deterministic, so the loaded index equals the oracle's replay.
-    "llm_ivf_probe_curve" -> ((s, dir) => {
+    "llm_ivf_probe_curve" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -296,7 +296,7 @@ private[graft] object QueriesLlm {
     // balanced" claim every IVF probe-cost estimate rests on. Reads the
     // prebuilt index's cell assignment (one partial-agg count per cell);
     // the spec pins a max/mean ceiling.
-    "llm_ivf_stats" -> ((s, dir) => {
+    "llm_ivf_stats" -> scaled((s, dir) => {
       sharedAnnIndex(s, dir).cells
         .groupBy(col("cell")).agg(count(lit(1)).cast("long").as("n_vectors"))
         .select(col("cell"), col("n_vectors"))
@@ -311,7 +311,7 @@ private[graft] object QueriesLlm {
     // same standing-index assignment/encode paths the probes use; the
     // DriftSpec pins that an iid batch does NOT trip the gate while this
     // shifted batch does.
-    "llm_index_drift" -> ((s, dir) => {
+    "llm_index_drift" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val batch = corpus.filter(col("nid") % 7 === 0)
         .select(col("nid"), expr("transform(vq, v -> v * 3 + 41)").as("vq"))
@@ -324,7 +324,7 @@ private[graft] object QueriesLlm {
     }),
 
     // Embedding-cosine near-dup pairs blocked by label.
-    "llm_embed_neardup" -> ((s, dir) => {
+    "llm_embed_neardup" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
         .withColumnRenamed("vec_id", "id")
       llm.Ann.nearDupPairs(e, "id", "label", 0.45)
@@ -336,7 +336,7 @@ private[graft] object QueriesLlm {
     // LYING metadata (0×0), decoded back via ImageIO — dimensions and the
     // pixel-sum feature must come off the raster; a garbage payload takes
     // the decoded=false sentinel path instead of killing the partition.
-    "llm_image_decode" -> ((s, dir) => {
+    "llm_image_decode" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val pngs = s.range(1, 5).map { id =>
@@ -357,7 +357,7 @@ private[graft] object QueriesLlm {
     // generated executor-side, decoded back via AudioSystem — format
     // fields and the Σ sample² energy feature must come off the decoded
     // PCM frames; a garbage payload takes the decoded=false sentinel.
-    "llm_audio_decode" -> ((s, dir) => {
+    "llm_audio_decode" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val wavs = s.range(1, 4).map { id =>
@@ -387,7 +387,7 @@ private[graft] object QueriesLlm {
     // the oracle recomputes the exact compand→expand round trip per
     // sample in SQL (verified against the JDK codec sample-by-sample) —
     // a real independent oracle, not a pinned constant.
-    "llm_audio_g711" -> ((s, dir) => {
+    "llm_audio_g711" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val ulaw = s.range(1, 4).map { id =>
@@ -421,7 +421,7 @@ private[graft] object QueriesLlm {
     // index and nibble stream are pure formulas, so the oracle replays
     // the IMA recursion sample-by-sample. A truncated-RIFF payload takes
     // the sentinel.
-    "llm_audio_adpcm" -> ((s, dir) => {
+    "llm_audio_adpcm" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val adpcm = s.range(1, 4).map { id =>
@@ -457,7 +457,7 @@ private[graft] object QueriesLlm {
     // band. The lossless pattern sums (655200 / 1425408 / 2711520) sit
     // within 0.1% of the pinned decoded values, bounding the JPEG
     // round-trip error; the spec keeps the decoder-portable 1% check.
-    "llm_video_frames" -> ((s, dir) => {
+    "llm_video_frames" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val avis = s.range(1, 4).map { id =>
@@ -479,7 +479,7 @@ private[graft] object QueriesLlm {
     // REAL raster resize: same synthetic PNGs as llm_image_decode,
     // nearest-neighbor downscale in exact integer index math — the oracle
     // re-derives the resized pixel sum arithmetically from the pattern.
-    "llm_image_resize" -> ((s, dir) => {
+    "llm_image_resize" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val pngs = s.range(1, 5).map { id =>
@@ -498,7 +498,7 @@ private[graft] object QueriesLlm {
           col("outPixelSum").as("out_pixel_sum"))
     }),
 
-    "llm_multimodal" -> ((s, dir) => {
+    "llm_multimodal" -> scaled((s, dir) => {
       val items = llm.Multimodal.fromDocuments(s, t(s, dir, "documents"))
       val feats = llm.Multimodal.decodeStub(items).toDF()
       val resized = llm.Multimodal.resizeMeta(items.toDF(), 256)
@@ -517,7 +517,7 @@ private[graft] object QueriesLlm {
     // list — min-label propagation + pointer jumping (O(log d) rounds,
     // lineage-truncated per round). Every document gets a cluster;
     // the min doc id is canonical, matching the exact-dedup rule.
-    "llm_dedup_clusters" -> ((s, dir) => {
+    "llm_dedup_clusters" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = llm.TextOps.minhashNearDups(docs, "doc_id", "text",
         threshold = 0.5)
@@ -528,7 +528,7 @@ private[graft] object QueriesLlm {
     // Gopher-style repetition/composition signals + keep decision (Rae et
     // al. 2021 appendix A1.1) — pure column expressions; the word, line
     // and bigram arrays are bound once per row.
-    "llm_quality_gopher" -> ((s, dir) => {
+    "llm_quality_gopher" -> scaled((s, dir) => {
       t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("lines", llm.TextOps.docLines)
@@ -543,7 +543,7 @@ private[graft] object QueriesLlm {
     // row is salted with a deterministic email/phone/IP derived from its
     // id — the scrub then has real work to do and the oracle re-derives
     // the identical salted text.
-    "llm_pii_scrub" -> ((s, dir) => {
+    "llm_pii_scrub" -> scaled((s, dir) => {
       val salted = t(s, dir, "documents")
         .withColumn("text2", concat(col("text"),
           lit(" contact user"), col("doc_id"), lit("@example.com call +1 555 "),
@@ -557,7 +557,7 @@ private[graft] object QueriesLlm {
     // the doc id (md5 bucket), so the sample reproduces under any
     // partitioning/engine — downsample dominant-language text, keep the
     // rest at higher rates. Narrow map-side predicate + broadcast rates.
-    "llm_hash_sample" -> ((s, dir) => {
+    "llm_hash_sample" -> scaled((s, dir) => {
       llm.Sampling.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
         Map("en" -> 10, "fr" -> 100), defaultPct = 40)
         .select(col("doc_id"), col("lang"), col("source"))
@@ -567,7 +567,7 @@ private[graft] object QueriesLlm {
     // the existing corpus — exact content-hash tier + LSH band-index
     // probe tier with exact-Jaccard verification. The corpus contributes
     // only its (id, band, key) index to the join; O(batch) per ingest.
-    "llm_incremental_dedup" -> ((s, dir) => {
+    "llm_incremental_dedup" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       llm.TextOps.incrementalDedup(
         docs.filter(col("doc_id") % 5 =!= 0),
@@ -579,7 +579,7 @@ private[graft] object QueriesLlm {
     // oversampled to 50% of budget, src1 to 20%, the rest share the
     // default) — rates derived from the data's own token sums, membership
     // a pure id-hash function, all integer arithmetic.
-    "llm_domain_mix" -> ((s, dir) => {
+    "llm_domain_mix" -> scaled((s, dir) => {
       llm.Sampling.domainMix(t(s, dir, "documents"), "doc_id", "text",
         "source", Map("src0" -> 5000L, "src1" -> 2000L), defaultBp = 100L)
     }),
@@ -589,7 +589,7 @@ private[graft] object QueriesLlm {
     // tails. The input is deliberately SKEWED (src0/src1 keep all docs,
     // other sources only every 3rd) so the √-damping has real work; with
     // the uniform synthetic corpus it would be a no-op.
-    "llm_domain_mix_temp" -> ((s, dir) => {
+    "llm_domain_mix_temp" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
         .filter(col("doc_id") % 3 === 0 || col("source").isin("src0", "src1"))
       llm.Sampling.domainMixTemperature(docs, "doc_id", "text", "source")
@@ -598,7 +598,7 @@ private[graft] object QueriesLlm {
     // Corpus vocabulary census: top-100 terms by global frequency with
     // per-term document frequency — distributed top-k over a Zipf
     // distribution (partial aggs absorb the head; no global sort).
-    "llm_vocab_census" -> ((s, dir) => {
+    "llm_vocab_census" -> scaled((s, dir) => {
       llm.TextOps.vocabCensus(t(s, dir, "documents"), "doc_id", "text", 100)
     }),
 
@@ -606,7 +606,7 @@ private[graft] object QueriesLlm {
     // hash groups (count derived from corpus size; 32 at this sf), chunked
     // into 512-token blocks; each doc reports the block span it occupies.
     // Integer-exact layout.
-    "llm_seq_pack" -> ((s, dir) => {
+    "llm_seq_pack" -> scaled((s, dir) => {
       llm.TextOps.seqPack(t(s, dir, "documents"), "doc_id", "text",
         budget = 512L)
     }),
@@ -617,7 +617,7 @@ private[graft] object QueriesLlm {
     // deterministic boilerplate footers are salted in (every 3rd doc a
     // newsletter line, every 7th a copyright line) and the oracle
     // re-derives the identical salt.
-    "llm_line_dedup" -> ((s, dir) => {
+    "llm_line_dedup" -> scaled((s, dir) => {
       val salted = t(s, dir, "documents")
         .withColumn("text2", concat(col("text"),
           when(col("doc_id") % 3 === 0,
@@ -631,7 +631,7 @@ private[graft] object QueriesLlm {
     // with the eval split (doc_id%100=0) are flagged. Every 20th training
     // doc is salted with the first 12 words of one eval doc — a real
     // leak the oracle reproduces.
-    "llm_decontaminate" -> ((s, dir) => {
+    "llm_decontaminate" -> scaled((s, dir) => {
       val (train, evalSet) = contaminationFixture(s, dir, leakMods = Seq(1))
       llm.TextOps.contaminationFlags(train, evalSet, "doc_id", "text2", k = 8)
     }),
@@ -647,7 +647,7 @@ private[graft] object QueriesLlm {
     // over the UNION and tags each eval row with its benchmark source,
     // so the per-eval breakdown is proven on ≥2 distinct suites at once
     // (burned and clean rows in both).
-    "llm_contamination_report" -> ((s, dir) => {
+    "llm_contamination_report" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val evalA = docs.filter(col("doc_id") % 100 === 0)
         .select(col("doc_id"), col("text").as("text2"))
@@ -683,7 +683,7 @@ private[graft] object QueriesLlm {
     // Fresh ids are NEGATIVE (-20..-1): real doc_ids are dense 0..N-1,
     // so a positive literal range would collide with existing docs at a
     // larger sf and silently break the 'added' semantics.
-    "llm_corpus_diff" -> ((s, dir) => {
+    "llm_corpus_diff" -> scaled((s, dir) => {
       val v1 = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val v2 = t(s, dir, "documents")
         .filter(col("doc_id") % 17 =!= 0)
@@ -701,7 +701,7 @@ private[graft] object QueriesLlm {
     // Corpus word-distribution drift between the same two snapshots the
     // corpus_diff row compares — top-20 most-drifted words by |Δ(c/N)|
     // (one IEEE division per rate; word tie-break pins the cut).
-    "llm_corpus_drift" -> ((s, dir) => {
+    "llm_corpus_drift" -> scaled((s, dir) => {
       val v1 = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val v2 = t(s, dir, "documents")
         .filter(col("doc_id") % 17 =!= 0)
@@ -719,14 +719,14 @@ private[graft] object QueriesLlm {
     // Overlapping token-window chunking (RAG/embedding front gate):
     // 32-token chunks every 24 tokens — pure map-side transform+explode,
     // zero shuffles, layout a pure function of (doc id, offsets).
-    "llm_chunking" -> ((s, dir) => {
+    "llm_chunking" -> scaled((s, dir) => {
       llm.Retrieval.chunk(t(s, dir, "documents"), "doc_id", "text",
         window = 32, stride = 24)
     }),
 
     // Inactivity-gap sessionization over the events stream (30-min gap):
     // per-user epoch-us windows, integer gap math, decimal value sums.
-    "llm_sessionize" -> ((s, dir) => {
+    "llm_sessionize" -> scaled((s, dir) => {
       core.Sessionize.sessionize(
         t(s, dir, "events").withColumn("ts_us", expr("ts_ns div 1000")),
         "user_id", "event_id", "value", gapUs = 1800000000L)
@@ -734,7 +734,7 @@ private[graft] object QueriesLlm {
 
     // Ordered conversion funnel view→click→purchase: per-step min
     // aggregations chained on the user key, strict integer-us ordering.
-    "llm_funnel" -> ((s, dir) => {
+    "llm_funnel" -> scaled((s, dir) => {
       core.EventAnalytics.funnel(
         t(s, dir, "events").withColumn("ts_us", expr("ts_ns div 1000")),
         "user_id", "event_type", Seq("view", "click", "purchase"))
@@ -742,7 +742,7 @@ private[graft] object QueriesLlm {
 
     // Cohort retention matrix: first-event epoch-day cohorts × activity
     // day offsets, distinct active users per cell.
-    "llm_retention" -> ((s, dir) => {
+    "llm_retention" -> scaled((s, dir) => {
       core.EventAnalytics.retention(
         t(s, dir, "events").withColumn("ts_us", expr("ts_ns div 1000")),
         "user_id")
@@ -752,7 +752,7 @@ private[graft] object QueriesLlm {
     // decomposed salt sequences (e+U+0301, A+U+030A, o+U+0308) compose
     // to single codepoints — the pre-hash cleanup exact dedup needs.
     // Oracle is DuckDB's independent nfc_normalize of the same salts.
-    "llm_unicode_nfc" -> ((s, dir) => {
+    "llm_unicode_nfc" -> scaled((s, dir) => {
       val nfc = plans.NfcNormalize.nfc _
       val salted = t(s, dir, "documents").select(col("doc_id"),
         concat(col("text"),
@@ -769,13 +769,13 @@ private[graft] object QueriesLlm {
 
     // BPE tokenizer training: 6 greedy merges learned on the word dict
     // (corpus touched once by the census); output is the merge table.
-    "llm_bpe_train" -> ((s, dir) => {
+    "llm_bpe_train" -> scaled((s, dir) => {
       llm.TextOps.bpeTrain(t(s, dir, "documents"), "doc_id", "text", 6)
     }),
 
     // BPE APPLY: the trained dict's final segmentation (word → learned
     // token sequence) after the same 6 merges.
-    "llm_bpe_encode" -> ((s, dir) => {
+    "llm_bpe_encode" -> scaled((s, dir) => {
       llm.TextOps.bpeEncode(t(s, dir, "documents"), "doc_id", "text", 6)
     }),
 
@@ -785,7 +785,7 @@ private[graft] object QueriesLlm {
     // neural embedder would fill) → integer-exact brute cosine top-3.
     // Chunk key cid = doc_id·1024 + chunk_id; queries are chunk 0 of
     // every doc_id % 173 == 0 document.
-    "llm_rag_pipeline" -> ((s, dir) => {
+    "llm_rag_pipeline" -> scaled((s, dir) => {
       val chunks = llm.Retrieval
         .chunk(t(s, dir, "documents"), "doc_id", "text", 32, 24)
         .withColumn("cid", col("doc_id") * 1024 + col("chunk_id"))
@@ -805,7 +805,7 @@ private[graft] object QueriesLlm {
     // excluded). Rational idf + micro-quantized integer term scores keep
     // the ranking bit-exact cross-engine; corpus tokens are pruned by the
     // broadcast query-term set before any aggregation.
-    "llm_bm25" -> ((s, dir) => {
+    "llm_bm25" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -821,7 +821,7 @@ private[graft] object QueriesLlm {
     // keyed like the ANN indexes); this row probes the LOADED index, so
     // per query batch only its terms' postings are read. Deterministic
     // build ⇒ identical rows to llm_bm25 — same oracle SQL.
-    "llm_bm25_index" -> ((s, dir) => {
+    "llm_bm25_index" -> scaled((s, dir) => {
       val queries = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
           expr("array_join(slice(filter(split(lower(text), ' '), " +
@@ -835,7 +835,7 @@ private[graft] object QueriesLlm {
     // in additively (only the batch tokenizes — postings/dl union, df
     // sum, stats add), probe the same query set. The oracle scores the
     // FULL corpus: incremental fold ≡ full rebuild is the row's claim.
-    "llm_bm25_update" -> ((s, dir) => {
+    "llm_bm25_update" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -859,7 +859,7 @@ private[graft] object QueriesLlm {
     // small sf-batch measures the dispatcher's cheap path; the pruning
     // machinery itself stays pinned by maxScoreChunk's componentwise
     // spec and the BenchBm25 big-batch lane.
-    "llm_bm25_maxscore" -> ((s, dir) => {
+    "llm_bm25_maxscore" -> scaled((s, dir) => {
       val queries = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
           expr("array_join(slice(filter(split(lower(text), ' '), " +
@@ -875,7 +875,7 @@ private[graft] object QueriesLlm {
     // are bit-identical (they share this oracle), so the pick is purely
     // a cost decision — this is the entry point a production caller
     // should use; the _index/_maxscore rows pin each branch explicitly.
-    "llm_bm25_auto" -> ((s, dir) => {
+    "llm_bm25_auto" -> scaled((s, dir) => {
       val queries = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
           expr("array_join(slice(filter(split(lower(text), ' '), " +
@@ -890,7 +890,7 @@ private[graft] object QueriesLlm {
     // uses, original query terms dropped, top-10 per query on
     // (Σ impact DESC, term ASC) through the bounded string-keyed
     // TopKWords tail (binary UTF-8 tie law ≡ DuckDB's collation).
-    "llm_query_expand" -> ((s, dir) => {
+    "llm_query_expand" -> scaled((s, dir) => {
       val queries = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
           expr("array_join(slice(filter(split(lower(text), ' '), " +
@@ -904,7 +904,7 @@ private[graft] object QueriesLlm {
     // phrase (query doc's words 2-4) at start s iff every slot's word
     // sits at s + i; n_occurrences counts distinct starts. Entirely
     // relational slot-vote algebra (no array folds), same in the oracle.
-    "llm_phrase_search" -> ((s, dir) => {
+    "llm_phrase_search" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 89 === 0)
         .select(col("doc_id").as("qid"),
@@ -923,7 +923,7 @@ private[graft] object QueriesLlm {
     // the batch tokenizes; postings of distinct ids are a disjoint
     // union), probe the same phrase set. The oracle replays the FULL
     // corpus: incremental fold ≡ full rebuild is the row's claim.
-    "llm_phrase_update" -> ((s, dir) => {
+    "llm_phrase_update" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 89 === 0)
         .select(col("doc_id").as("qid"),
@@ -943,7 +943,7 @@ private[graft] object QueriesLlm {
     // the distinct matching starts. Pure start-vote algebra (each hit
     // position votes for the ≤ W starts it covers), probing the same
     // persisted banded positional layout.
-    "llm_proximity_search" -> ((s, dir) => {
+    "llm_proximity_search" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 89 === 0)
         .select(col("doc_id").as("qid"),
@@ -963,7 +963,7 @@ private[graft] object QueriesLlm {
     // Queries keep coming from the FULL document set — a deleted
     // document's query text is still a valid query; its doc just can't
     // rank anymore.
-    "llm_bm25_delete" -> ((s, dir) => {
+    "llm_bm25_delete" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -981,7 +981,7 @@ private[graft] object QueriesLlm {
     // with offset, hit count, and snippet text. Forward-index access
     // over the top-k-sized doc set only (the corpus semi-joins down to
     // |queries|·k docs before any tokenize).
-    "llm_snippets" -> ((s, dir) => {
+    "llm_snippets" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -1000,7 +1000,7 @@ private[graft] object QueriesLlm {
     // earlier pick — a chain of relational argmax steps, Window-free)
     // plus 0-based match offsets inside each snippet (comma-joined — the
     // highlight payload).
-    "llm_snippets_multi" -> ((s, dir) => {
+    "llm_snippets_multi" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -1020,7 +1020,7 @@ private[graft] object QueriesLlm {
     // RE-QUERY the same standing index with the weighted-term BM25 form
     // ((weight · impact) div 10⁶ per matched term). One lazy chain, two
     // partition-pruned probes, integer-deterministic end to end.
-    "llm_prf_search" -> ((s, dir) => {
+    "llm_prf_search" -> scaled((s, dir) => {
       val queries = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
           expr("array_join(slice(filter(split(lower(text), ' '), " +
@@ -1038,7 +1038,7 @@ private[graft] object QueriesLlm {
     // pairs, boosted_micro = score_micro + 100000·n_windows, re-ranked
     // top-5. Integer multiply-add on the quantized score — the whole
     // composition replays bit-identically in the oracle.
-    "llm_prox_rank" -> ((s, dir) => {
+    "llm_prox_rank" -> scaled((s, dir) => {
       val queries = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
           expr("array_join(slice(filter(split(lower(text), ' '), " +
@@ -1058,7 +1058,7 @@ private[graft] object QueriesLlm {
     // corpus (% 7 != 0 OR % 21 == 0) from scratch: any interaction bug
     // between the fold and subtract paths (df drift, stats skew,
     // double-subtraction under interleaving) breaks the hash match.
-    "llm_index_lifecycle" -> ((s, dir) => {
+    "llm_index_lifecycle" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -1101,7 +1101,7 @@ private[graft] object QueriesLlm {
     // shifted distribution gates against the retrained artifacts
     // (phase 2): retraining repairs exactly what the gate detected.
     // All-integer metrics; the oracle replays both phases from scratch.
-    "llm_drift_retrain" -> ((s, dir) => {
+    "llm_drift_retrain" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val docs = t(s, dir, "documents")
       def vbatch(m: Int, off: Long) = corpus.filter(col("nid") % 7 === m)
@@ -1135,7 +1135,7 @@ private[graft] object QueriesLlm {
     // SAME query set (vec_id % 50 == 0; query text = that doc's first 5
     // words) — the standard sparse+dense production shape; fusion cost
     // is O(queries × k), the corpus is never touched again.
-    "llm_hybrid_search" -> ((s, dir) => {
+    "llm_hybrid_search" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val queries = docs.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("qid"),
@@ -1154,7 +1154,7 @@ private[graft] object QueriesLlm {
     // determinism-safe arithmetic-mean form): add-one-smoothed
     // p(w2|w1) trained on the corpus itself, per-doc mean token
     // probability in ppb, head/tail vs the corpus mean.
-    "llm_ngram_lm" -> ((s, dir) => {
+    "llm_ngram_lm" -> scaled((s, dir) => {
       llm.Retrieval.bigramLmScore(t(s, dir, "documents"), "doc_id", "text")
     }),
 
@@ -1164,7 +1164,7 @@ private[graft] object QueriesLlm {
     // cumsum never serializes a mega-domain through one task. Oracle is
     // the NAIVE per-source global window — the bucketed decomposition
     // must reproduce it exactly.
-    "llm_domain_budget" -> ((s, dir) => {
+    "llm_domain_budget" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val budgets = docs.select(col("source")).distinct()
         .withColumn("budget",
@@ -1179,7 +1179,7 @@ private[graft] object QueriesLlm {
     // probe), closing only the SMALL graph of new ids + touched cluster
     // labels. Result is pinned identical to a full re-cluster of the
     // unioned corpus (the recursive-CTE oracle), at O(batch) cost.
-    "llm_rolling_dedup" -> ((s, dir) => {
+    "llm_rolling_dedup" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val batch = docs.filter(col("doc_id") % 5 === 0)
@@ -1212,7 +1212,7 @@ private[graft] object QueriesLlm {
     // cells as the blocking key, exact integer cosine within cells, then
     // connected components for the keep/drop decision. Reuses the
     // llm_ann_ivf quantizer, so the oracle replays identical training.
-    "llm_semantic_dedup" -> ((s, dir) => {
+    "llm_semantic_dedup" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
       val corpus = e.select(col("vec_id").as("nid"), col("vq"), col("norm2"))
       // blocking cells come off the prebuilt index (build-once/probe-many);
@@ -1234,7 +1234,7 @@ private[graft] object QueriesLlm {
     // substring. Deterministic boilerplate is salted in (every 5th doc a
     // fox sentence, every 7th a legal footer) so real cross-doc spans
     // exist; the oracle re-derives the identical salt.
-    "llm_span_dedup" -> ((s, dir) => {
+    "llm_span_dedup" -> scaled((s, dir) => {
       val salted = t(s, dir, "documents")
         .withColumn("text2", concat(col("text"),
           when(col("doc_id") % 5 === 0,
@@ -1247,7 +1247,7 @@ private[graft] object QueriesLlm {
     // Deterministic train/val/test split: the id-hash bucket gate cut at
     // 90/95 — membership is a pure function of identity, so the split
     // never leaks across re-runs, engines or repartitions.
-    "llm_split" -> ((s, dir) => {
+    "llm_split" -> scaled((s, dir) => {
       val b = llm.Sampling.hashBucket(col("doc_id"))
       t(s, dir, "documents").select(col("doc_id"), col("source"),
         when(b < 90, "train").when(b < 95, "val").otherwise("test").as("split"))
@@ -1261,7 +1261,7 @@ private[graft] object QueriesLlm {
     // (perDomainCapAgg — no hot-domain sort window; rows beyond the cap
     // carry a NULL rank). Messy URLs are salted in deterministically;
     // 7 .com + 3 .co.uk synthetic hosts make both tiers bind.
-    "llm_url_ops" -> ((s, dir) => {
+    "llm_url_ops" -> scaled((s, dir) => {
       val withUrl = t(s, dir, "documents").select(col("doc_id"),
         concat(lit("HTTPS://"),
           when(col("doc_id") % 11 === 0,
@@ -1287,7 +1287,7 @@ private[graft] object QueriesLlm {
     // collect_set so no single task materializes the full hot set. The
     // oracle is the PLAIN join + grouped distinct-list — salting must be
     // physically different but semantically invisible.
-    "llm_salted_join" -> ((s, dir) => {
+    "llm_salted_join" -> scaled((s, dir) => {
       import s.implicits._
       val big = t(s, dir, "documents").select(col("doc_id"),
         when(col("doc_id") % 10 < 8, lit("hot"))
@@ -1316,7 +1316,7 @@ private[graft] object QueriesLlm {
     // audit compares against the EXACT percentile computed over the
     // value-domain histogram (window over distinct lengths — bounded
     // cardinality, never a row-global sort).
-    "llm_quantile_sketch" -> ((s, dir) => {
+    "llm_quantile_sketch" -> scaled((s, dir) => {
       // the v >= 1 cut applies to BOTH the sketch and the exact audit:
       // the populations must match or the q·N thresholds diverge
       val v = t(s, dir, "documents")
@@ -1338,7 +1338,7 @@ private[graft] object QueriesLlm {
     // count quantiles mislead when long docs carry most of the mass).
     // Same bucket algebra with Σ tokens as bucket mass; exact audit
     // over the token-weighted value-domain histogram.
-    "llm_weighted_quantile" -> ((s, dir) => {
+    "llm_weighted_quantile" -> scaled((s, dir) => {
       // same population rule as llm_quantile_sketch: v >= 1 everywhere
       val d = t(s, dir, "documents")
         .select(length(col("text")).cast("long").as("v"),
@@ -1360,7 +1360,7 @@ private[graft] object QueriesLlm {
     // pipeline runs before ratio features. The bounds come from the
     // ≤ ~1000-bucket histogram (broadcast back as two scalars), so the
     // whole pass is one scan + one tiny side computation at any scale.
-    "llm_winsorize" -> ((s, dir) => {
+    "llm_winsorize" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), length(col("text")).cast("long").as("v"))
       val bounds = llm.Sketches.histQuantiles(
@@ -1379,7 +1379,7 @@ private[graft] object QueriesLlm {
     // over (length class × shard) with doc and token totals; the
     // grouping_id bitmask disambiguates subtotal rows. The standard
     // "corpus composition dashboard" rollup at any scale.
-    "llm_corpus_report" -> ((s, dir) => {
+    "llm_corpus_report" -> scaled((s, dir) => {
       val d = t(s, dir, "documents").select(
         expr("CAST(length(text) AS BIGINT) div 128").as("len_class"),
         (col("doc_id") % 4).cast("long").as("shard"),
@@ -1396,7 +1396,7 @@ private[graft] object QueriesLlm {
     // every 10-bit z-cell MUST cover < 2048 of each dimension, the
     // guarantee multi-dimensional file-skipping consumes. The oracle
     // replays the interleave bit-for-bit.
-    "llm_zorder_layout" -> ((s, dir) => {
+    "llm_zorder_layout" -> scaled((s, dir) => {
       val d = t(s, dir, "documents").select(
         (llm.TextOps.h64c(concat(col("doc_id").cast("string"), lit(":dom")))
           % 65536L).as("x"),
@@ -1412,7 +1412,7 @@ private[graft] object QueriesLlm {
     // needs without interleaving distant key ranges. The running fill is
     // the tokenBudget two-level bucketed cumsum (no global-window task);
     // the oracle replays it as one plain global window.
-    "llm_compaction_plan" -> ((s, dir) => {
+    "llm_compaction_plan" -> scaled((s, dir) => {
       val files = t(s, dir, "documents")
         .groupBy((expr("CAST(substr(source, 4) AS BIGINT)") * 1000L +
           expr("doc_id div 100")).as("fid"))
@@ -1424,7 +1424,7 @@ private[graft] object QueriesLlm {
     // budget·weight target — exact integer epochs (millionths), the
     // repeat cap, and the deficit where supply runs out. The planner a
     // mixture designer iterates on before any sampler runs.
-    "llm_epoch_plan" -> ((s, dir) => {
+    "llm_epoch_plan" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val weights = docs.select(col("source")).distinct()
         .withColumn("weight_bp",
@@ -1437,7 +1437,7 @@ private[graft] object QueriesLlm {
     // vs length-sorted batching, one summary row each — the measured
     // padding-FLOP fraction sorted batching recovers. Both global orders
     // rank via the two-level bucketed decomposition (no global sort).
-    "llm_pack_efficiency" -> ((s, dir) => {
+    "llm_pack_efficiency" -> scaled((s, dir) => {
       llm.TextOps.packEfficiency(t(s, dir, "documents"), "doc_id", "text",
         batchSize = 16)
     }),
@@ -1447,7 +1447,7 @@ private[graft] object QueriesLlm {
     // "exactly N training tokens" sampler. The running sum decomposes
     // into 1024 hash-prefix range buckets (offsets via one tiny window),
     // so no task ever sums the whole corpus.
-    "llm_token_budget" -> ((s, dir) => {
+    "llm_token_budget" -> scaled((s, dir) => {
       llm.Sampling.tokenBudget(t(s, dir, "documents"), "doc_id", "text",
         budget = 10000L)
     }),
@@ -1455,7 +1455,7 @@ private[graft] object QueriesLlm {
     // Deterministic word-dropout augmentation: token drops iff
     // h64(id:salt:pos) % 100 < 15 — reproducible across engines and
     // re-runs; a new salt = a fresh epoch mask.
-    "llm_word_dropout" -> ((s, dir) => {
+    "llm_word_dropout" -> scaled((s, dir) => {
       llm.TextOps.wordDropout(t(s, dir, "documents"), "doc_id", "text",
         pct = 15, salt = "ep1")
     }),
@@ -1464,7 +1464,7 @@ private[graft] object QueriesLlm {
     // tabs/CRs → spaces, space runs collapsed, trimmed. The corpus is
     // clean prose, so messy URLs + runs are salted in deterministically
     // and the oracle re-derives the identical salt.
-    "llm_text_normalize" -> ((s, dir) => {
+    "llm_text_normalize" -> scaled((s, dir) => {
       val salted = t(s, dir, "documents")
         .withColumn("text2", concat(col("text"),
           when(col("doc_id") % 4 === 0,
@@ -1481,7 +1481,7 @@ private[graft] object QueriesLlm {
     // except the globally first (min (doc, pos) per gram) is cut and the
     // text rebuilt from uncovered words — the transformation
     // llm_span_dedup measures, same salt.
-    "llm_span_scrub" -> ((s, dir) => {
+    "llm_span_scrub" -> scaled((s, dir) => {
       val salted = t(s, dir, "documents")
         .withColumn("text2", concat(col("text"),
           when(col("doc_id") % 5 === 0,
@@ -1494,7 +1494,7 @@ private[graft] object QueriesLlm {
     // Per-doc top-3 keywords by tf·(N/df) — rational idf keeps every step
     // exact (integer product + one IEEE division), where log(N/df)'s last
     // ulp is libm-dependent and would make the top-k cut nondeterministic.
-    "llm_tfidf_terms" -> ((s, dir) => {
+    "llm_tfidf_terms" -> scaled((s, dir) => {
       llm.TextOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", 3)
     }),
 
@@ -1502,7 +1502,7 @@ private[graft] object QueriesLlm {
     // shard = h64(id) mod 8, seq = rank by (h64, id) within the shard —
     // membership and order are pure functions of identity, reproducible
     // across engines and re-runs (what orderBy(rand()) can never give).
-    "llm_shard_plan" -> ((s, dir) => {
+    "llm_shard_plan" -> scaled((s, dir) => {
       llm.Sampling.shardPlan(t(s, dir, "documents"), "doc_id", "text", 8)
     }),
 
@@ -1510,7 +1510,7 @@ private[graft] object QueriesLlm {
     // computed off the length HISTOGRAM (no per-source window over docs —
     // sources are low-cardinality, a raw-rank window would straggle), and
     // per-source distinct vocabulary.
-    "llm_corpus_profile" -> ((s, dir) => {
+    "llm_corpus_profile" -> scaled((s, dir) => {
       llm.TextOps.corpusProfile(t(s, dir, "documents"), "doc_id", "text",
         "source")
     }),
@@ -1521,7 +1521,7 @@ private[graft] object QueriesLlm {
     // (one assignment pass per subspace, training lives in
     // llm_ann_index_build; deterministic training keeps the oracle's
     // replay identical).
-    "llm_pq_encode" -> ((s, dir) => {
+    "llm_pq_encode" -> scaled((s, dir) => {
       llm.Ann.pqEncode(annCorpus(s, dir), sharedAnnIndex(s, dir).pq)
     }),
 
@@ -1533,7 +1533,7 @@ private[graft] object QueriesLlm {
     // 100 TB this is the nightly-ingest path: train monthly, encode every
     // new shard against the standing books. The oracle replays the
     // base-only training, then encodes the batch.
-    "llm_index_update" -> ((s, dir) => {
+    "llm_index_update" -> scaled((s, dir) => {
       val all = annCorpus(s, dir)
       val base = all.filter(col("nid") % 7 =!= 0)
       val batch = all.filter(col("nid") % 7 === 0)
@@ -1546,7 +1546,7 @@ private[graft] object QueriesLlm {
     // vectors arrive, bounds stay frozen, out-of-range values saturate
     // to code 0/255 (the clamp in sqEncode). The PQ analogue is
     // llm_index_update.
-    "llm_sq_update" -> ((s, dir) => {
+    "llm_sq_update" -> scaled((s, dir) => {
       val all = annCorpus(s, dir)
       val bounds = llm.Ann.sqTrain(all.filter(col("nid") % 7 =!= 0))
       llm.Ann.sqEncode(all.filter(col("nid") % 7 === 0), bounds)
@@ -1561,7 +1561,7 @@ private[graft] object QueriesLlm {
     // BIT-RESOLUTION log-likelihood ratios (integer floor-log2 via the
     // binary string; no floating logarithm) → per-doc summed weight.
     // The 1024-row llr table broadcasts at any corpus size.
-    "llm_importance_weights" -> ((s, dir) => {
+    "llm_importance_weights" -> scaled((s, dir) => {
       llm.Sampling.importanceWeights(t(s, dir, "documents"), "doc_id",
         "text", col("lang") === "en", buckets = 1024)
     }),
@@ -1569,7 +1569,7 @@ private[graft] object QueriesLlm {
     // DSIR importance weights with the published recipe's FULL feature
     // set — unigrams plus adjacent-pair bigrams of the filtered token
     // sequence (lead() per doc; the 1024-cell llr table still broadcasts).
-    "llm_importance_bigram" -> ((s, dir) => {
+    "llm_importance_bigram" -> scaled((s, dir) => {
       llm.Sampling.importanceWeights(t(s, dir, "documents"), "doc_id",
         "text", col("lang") === "en", buckets = 1024, bigrams = true)
     }),
@@ -1578,7 +1578,7 @@ private[graft] object QueriesLlm {
     // top-p% histogram cut — "keep the 10% most target-like documents",
     // the composed data-selection pipeline (score → threshold → flag)
     // with no row ever sorted globally.
-    "llm_importance_cut" -> ((s, dir) => {
+    "llm_importance_cut" -> scaled((s, dir) => {
       val w = llm.Sampling.importanceWeights(t(s, dir, "documents"),
           "doc_id", "text", col("lang") === "en", buckets = 1024)
         .withColumn("imp", col("imp_bits").cast("double"))
@@ -1589,7 +1589,7 @@ private[graft] object QueriesLlm {
     // cosine neighbors EXCLUDING its own semantic-dedup cluster — near
     // but not duplicate, the pairs an embedding model learns most from.
     // Brute top-10 → drop clustermates → re-rank to 3.
-    "llm_hard_negatives" -> ((s, dir) => {
+    "llm_hard_negatives" -> scaled((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
       val corpus = e.select(col("vec_id").as("nid"), col("vq"), col("norm2"))
@@ -1615,7 +1615,7 @@ private[graft] object QueriesLlm {
     // through broadcast per-subspace lookup tables (two lookups + an add
     // per corpus vector — never a d-dim dot), ranked by cosine-against-
     // reconstruction. At scale this composes with IVF cells (IVF-PQ).
-    "llm_pq_search" -> ((s, dir) => {
+    "llm_pq_search" -> scaled((s, dir) => {
       // standing-index ADC search: probes the shared prebuilt codebooks
       llm.Ann.pqSearch(annQueries(s, dir), sharedAnnIndex(s, dir).pq, k = 3)
     }),
@@ -1623,7 +1623,7 @@ private[graft] object QueriesLlm {
     // IVF-PQ search: the production ANN layout — coarse cells prune the
     // corpus, PQ codes + broadcast LUTs score the survivors. Per query:
     // (corpus/nCells)·nProbe lookup-adds, never a d-dim dot.
-    "llm_ivfpq_search" -> ((s, dir) => {
+    "llm_ivfpq_search" -> scaled((s, dir) => {
       // the standing-index search path: probes the parquet-loaded index,
       // no training inside the call (build-once/probe-many)
       llm.Ann.ivfPqSearch(annQueries(s, dir), sharedAnnIndex(s, dir),
@@ -1637,7 +1637,7 @@ private[graft] object QueriesLlm {
     // (PartitionFilters, spec-pinned), the executable form of the layout
     // claim every IVF scaladoc makes. Returns exactly llm_ivfpq_search's
     // rows; the oracle is the same SQL.
-    "llm_ivf_pruned_probe" -> ((s, dir) => {
+    "llm_ivf_pruned_probe" -> scaled((s, dir) => {
       llm.Ann.ivfPqSearchPruned(s, annQueries(s, dir),
         sharedAnnIndex(s, dir), sharedCellLayout(s, dir), k = 3, nProbe = 2)
     }),
@@ -1650,7 +1650,7 @@ private[graft] object QueriesLlm {
     // quantizers saw the deleted vectors) with the candidate set
     // filtered to survivors — exactly what a frozen-artifact delete
     // means.
-    "llm_ann_delete" -> ((s, dir) => {
+    "llm_ann_delete" -> scaled((s, dir) => {
       val tomb = annCorpus(s, dir).filter(col("nid") % 9 === 0)
         .select(col("nid"))
       llm.Ann.ivfPqSearch(annQueries(s, dir),
@@ -1661,7 +1661,7 @@ private[graft] object QueriesLlm {
     // PQ recall gate: recall@3 of ADC search against brute-force truth —
     // what two 20-centroid subspace codebooks actually buy (measured 0.40
     // at sf0.01); the same honesty metric the ANN paths carry.
-    "llm_pq_recall" -> ((s, dir) => {
+    "llm_pq_recall" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -1676,7 +1676,7 @@ private[graft] object QueriesLlm {
     // re-rank stage is how production PQ recovers accuracy: within
     // probed cells it returns exactly what brute force would, so its
     // recall equals the coarse tier's cell recall.
-    "llm_ivfpq_recall" -> ((s, dir) => {
+    "llm_ivfpq_recall" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -1694,7 +1694,7 @@ private[graft] object QueriesLlm {
     // (per-coordinate fidelity at 8 bits/dim). Exploded (vec_id, pos,
     // mn, mx, code) rows for the %25 sample pin the trained bounds AND
     // every code against the oracle's replay of the same train+encode.
-    "llm_sq_encode" -> ((s, dir) => {
+    "llm_sq_encode" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val bounds = llm.Ann.sqTrain(corpus)
       llm.Ann.sqEncode(corpus.filter(col("nid") % 25 === 0), bounds)
@@ -1711,14 +1711,14 @@ private[graft] object QueriesLlm {
     // ADC) — corpus never shuffles, query batch broadcasts. Standing-index
     // form: probes the LOADED shared SQ index (build-once/probe-many);
     // deterministic training keeps the oracle's inline replay identical.
-    "llm_sq_search" -> ((s, dir) => {
+    "llm_sq_search" -> scaled((s, dir) => {
       llm.Ann.sqSearch(annQueries(s, dir), sharedSqIndex(s, dir), k = 3)
     }),
 
     // SQ8 standing-index build: the one-time bounds-train + corpus-encode
     // cost every probe row amortizes (mirrors llm_ann_index_build) —
     // component row counts of the persisted parquet artifacts.
-    "llm_sq_index" -> ((s, dir) => {
+    "llm_sq_index" -> scaled((s, dir) => {
       val idx = sharedSqIndex(s, dir)
       Seq(("bounds", idx.bounds), ("codes", idx.codes))
         .map { case (name, df) =>
@@ -1732,7 +1732,7 @@ private[graft] object QueriesLlm {
     // brute truth — what 8-bit per-coordinate storage actually costs
     // (SQ recall runs far above PQ's: per-dim bounds lose only grid
     // resolution, not subspace structure).
-    "llm_sq_recall" -> ((s, dir) => {
+    "llm_sq_recall" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -1743,7 +1743,7 @@ private[graft] object QueriesLlm {
     // from an explicit integer LCG over (j,k) — no stored matrix, any
     // engine replays it bit-exactly. Exploded (vec_id, k, y) for the %25
     // sample pins every projected coordinate.
-    "llm_rp_project" -> ((s, dir) => {
+    "llm_rp_project" -> scaled((s, dir) => {
       llm.Ann.rpProject(annCorpus(s, dir).filter(col("nid") % 25 === 0), 16)
         .select(col("nid").as("vec_id"), posexplode(col("rp")).as(Seq("k", "y")))
         .select(col("vec_id"), col("k").cast("long").as("k"), col("y"))
@@ -1751,27 +1751,27 @@ private[graft] object QueriesLlm {
 
     // Brute top-k in the projected space: the d/dOut× cheaper scoring
     // tier reduction buys — same ranking law, 16-dim integer dots.
-    "llm_rp_topk" -> ((s, dir) => {
+    "llm_rp_topk" -> scaled((s, dir) => {
       llm.Ann.rpTopK(annQueries(s, dir), annCorpus(s, dir), dOut = 16, k = 3)
     }),
 
     // 64-bit binary sign sketch (two 32-bit words — engine-safe shifts):
     // 8 bytes per vector, the cheapest ANN storage tier. %25 sample pins
     // every packed word against the oracle's replay.
-    "llm_bin_sketch" -> ((s, dir) => {
+    "llm_bin_sketch" -> scaled((s, dir) => {
       llm.Ann.binSketch(annCorpus(s, dir).filter(col("nid") % 25 === 0))
         .select(col("nid").as("vec_id"), col("blo"), col("bhi"))
     }),
 
     // Hamming top-k over the sign sketches: two XOR+POPCNT per candidate
     // pair — the binary shortlist tier, same (distance, nid) tie law.
-    "llm_hamming_topk" -> ((s, dir) => {
+    "llm_hamming_topk" -> scaled((s, dir) => {
       llm.Ann.hammingTopK(annQueries(s, dir), annCorpus(s, dir), k = 3)
     }),
 
     // Hamming recall gate: what 1-bit-per-dimension quantization costs
     // vs exact cosine truth — the price tag on the 64× memory cut.
-    "llm_hamming_recall" -> ((s, dir) => {
+    "llm_hamming_recall" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -1783,11 +1783,11 @@ private[graft] object QueriesLlm {
     // re-rank to top-3 (full-precision vectors touched only for
     // |q|·16 candidates), plus the recall the refine stage recovers
     // over the raw Hamming tier — one frame, both rows.
-    "llm_hamming_rerank" -> ((s, dir) => {
+    "llm_hamming_rerank" -> scaled((s, dir) => {
       llm.Ann.hammingRerank(annQueries(s, dir), annCorpus(s, dir),
         k = 3, shortlist = 16)
     }),
-    "llm_hamming_rerank_recall" -> ((s, dir) => {
+    "llm_hamming_rerank_recall" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -1800,7 +1800,7 @@ private[graft] object QueriesLlm {
     // mirroring llm_ivf_probe_curve's nProbe sweep. Each widening of the
     // shortlist multiplies only the full-precision re-rank work
     // (|q|·shortlist exact dots); the corpus-wide scan stays 8 B/vector.
-    "llm_hamming_curve" -> ((s, dir) => {
+    "llm_hamming_curve" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       // ONE exact-truth pass and ONE corpus-wide Hamming scan feed all
@@ -1825,7 +1825,7 @@ private[graft] object QueriesLlm {
     // ceil(96/32) = 3 packed words, ranks popcount-of-XOR through the
     // bounded TopKPairs aggregate — proof the guard's escape hatch
     // carries the full contract, not just a spec fixture.
-    "llm_hamming_wide" -> ((s, dir) => {
+    "llm_hamming_wide" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
         .withColumn("vq", expr("concat(vq, slice(vq, 1, 32))"))
       val corpus = e.select(col("vec_id").as("nid"), col("vq"))
@@ -1837,7 +1837,7 @@ private[graft] object QueriesLlm {
     // JL recall gate: recall@3 of projected-space ranking against
     // original-space brute truth at dOut = 16 AND 32 — the measured
     // distortion/dimension tradeoff curve the reduction is priced by.
-    "llm_rp_recall" -> ((s, dir) => {
+    "llm_rp_recall" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val queries = annQueries(s, dir)
       val truth = llm.Ann.bruteTopK(queries, corpus, 3)
@@ -1851,7 +1851,7 @@ private[graft] object QueriesLlm {
     // constant-state aggregator (d(d+1)/2 + d + 1 longs) — upper-triangle
     // products + sums + count, with exact-integer mean centering
     // ncov = N·G − S_j·S_k. The frame is d² rows regardless of corpus size.
-    "llm_gram_matrix" -> ((s, dir) => {
+    "llm_gram_matrix" -> scaled((s, dir) => {
       llm.Pca.gramRows(s, llm.Pca.fit(annCorpus(s, dir)))
     }),
 
@@ -1861,7 +1861,7 @@ private[graft] object QueriesLlm {
     // SHIFTED Gram (magnitudes re-centered, the 64-bit headroom win) while
     // `ncov` equals the one-pass row's ncov EXACTLY — the shift-invariance
     // law the oracle re-derives relationally from scratch.
-    "llm_gram_shifted" -> ((s, dir) => {
+    "llm_gram_shifted" -> scaled((s, dir) => {
       llm.Pca.gramRows(s, llm.Pca.fitShifted(annCorpus(s, dir)).model)
     }),
 
@@ -1870,7 +1870,7 @@ private[graft] object QueriesLlm {
     // ORACLE replays one whole-corpus Gram directly, so the hash match
     // proves base+delta merge ≡ full refit end to end (the law that lets
     // a daily ingest update the covariance without rescanning history).
-    "llm_gram_incremental" -> ((s, dir) => {
+    "llm_gram_incremental" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       val base = llm.Pca.fit(corpus.filter(col("nid") % 2 === 0), iters = 0)
       val delta = llm.Pca.fit(corpus.filter(col("nid") % 2 === 1), iters = 0)
@@ -1881,7 +1881,7 @@ private[graft] object QueriesLlm {
     // the scaled covariance (sign-truncating rescale to |c| ≤ 1e6,
     // |w| ≤ 1e5 per sweep) — Rayleigh ≥ 0.9·λ1 even on this corpus's
     // near-isotropic spectrum (PcaSpec pins the quality contract).
-    "llm_pca_power" -> ((s, dir) => {
+    "llm_pca_power" -> scaled((s, dir) => {
       llm.Pca.componentRows(s, llm.Pca.fit(annCorpus(s, dir)))
     }),
 
@@ -1891,14 +1891,14 @@ private[graft] object QueriesLlm {
     // residual < N² per entry, negligible on any non-degenerate corpus).
     // The oracle replays means → shifted Gram → the identical
     // scale-and-sweep chain from scratch.
-    "llm_pca_shifted_power" -> ((s, dir) => {
+    "llm_pca_shifted_power" -> scaled((s, dir) => {
       llm.Pca.componentRows(s,
         llm.Pca.componentFromShiftedGram(llm.Pca.fitShifted(annCorpus(s, dir))))
     }),
 
     // Projection onto the fitted component: a broadcast-literal integer
     // dot per row — map-side only, the corpus never shuffles. %5 sample.
-    "llm_pca_project" -> ((s, dir) => {
+    "llm_pca_project" -> scaled((s, dir) => {
       val corpus = annCorpus(s, dir)
       llm.Pca.project(corpus.filter(col("nid") % 5 === 0),
           llm.Pca.fit(corpus))
@@ -1910,7 +1910,7 @@ private[graft] object QueriesLlm {
     // diversification pass between retrieval and a context window. The
     // corpus is scanned once; the greedy steps run on the checkpointed
     // |q|·m candidate frame with m²-per-query sims, never corpus pairs.
-    "llm_mmr_rerank" -> ((s, dir) => {
+    "llm_mmr_rerank" -> scaled((s, dir) => {
       llm.Ann.mmrRerank(annQueries(s, dir), annCorpus(s, dir), m = 8, k = 3)
     }),
 
@@ -1919,7 +1919,7 @@ private[graft] object QueriesLlm {
     // minimal safe rung, returned as the disclosure-risk histogram.
     // Four partial-aggregated census frames, AQE-decided joins (no
     // pinned broadcasts — L0 combo cardinality is data-derived).
-    "llm_kanon_audit" -> ((s, dir) => {
+    "llm_kanon_audit" -> scaled((s, dir) => {
       llm.TextOps.kAnonLevels(t(s, dir, "documents"), k = 5)
     }),
 
@@ -1927,7 +1927,7 @@ private[graft] object QueriesLlm {
     // quality score maps onto the pooled distribution via exact integer
     // rank arithmetic — histograms rank, rows never sort; the only
     // non-equi join is histogram × broadcast-histogram. %20 sample.
-    "llm_score_calibrate" -> ((s, dir) => {
+    "llm_score_calibrate" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("score_micro",
@@ -1943,7 +1943,7 @@ private[graft] object QueriesLlm {
     // calibration align the feeds" audit (it caught min-rank tie
     // collapse: 0.49 max gap vs midrank's 0.10). Cross-multiplied
     // integers, one row per source.
-    "llm_calibrate_ks" -> ((s, dir) => {
+    "llm_calibrate_ks" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("score_micro",
@@ -1956,7 +1956,7 @@ private[graft] object QueriesLlm {
     // Leakage-safe split: near-dup CLUSTERS (not documents) hash into
     // train/test, so no near-duplicate pair straddles the split — the
     // audit column proves it (n_cross_pairs is COMPUTED, and 0).
-    "llm_cluster_split" -> ((s, dir) => {
+    "llm_cluster_split" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = llm.TextOps.minhashNearDups(docs, "doc_id", "text",
         threshold = 0.5).localCheckpoint()
@@ -1978,7 +1978,7 @@ private[graft] object QueriesLlm {
     // Robust outlier gate: exact median + MAD off a ONE-scan value
     // histogram (deviation histogram derives from the value histogram,
     // never from rows), k = 2 fence, one audit row.
-    "llm_mad_outliers" -> ((s, dir) => {
+    "llm_mad_outliers" -> scaled((s, dir) => {
       llm.Sketches.madOutliers(t(s, dir, "documents"), "n_chars", k = 2)
     }),
 
@@ -1986,7 +1986,7 @@ private[graft] object QueriesLlm {
     // feed — a clean feed's outliers vanish inside a global gate when
     // another feed's tail dominates. Keyed two-level folds; one row per
     // source.
-    "llm_mad_by_source" -> ((s, dir) => {
+    "llm_mad_by_source" -> scaled((s, dir) => {
       llm.Sketches.madOutliersByKey(t(s, dir, "documents"), "source",
         "n_chars", k = 2)
     }),
@@ -1995,7 +1995,7 @@ private[graft] object QueriesLlm {
     // elects its highest-scoring member (tie → lowest id) via a
     // skew-absorbing max(struct) partial aggregate — the representative
     // selection real curation runs instead of keep-min-id.
-    "llm_best_of_cluster" -> ((s, dir) => {
+    "llm_best_of_cluster" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .withColumn("score_micro",
@@ -2009,7 +2009,7 @@ private[graft] object QueriesLlm {
     // Class-prototype similarity: integer centroid SUMS per label (one
     // posexplode partial agg — cosine is scale-invariant, so sums need
     // no division), then the |labels|² broadcast pair cosine audit.
-    "llm_label_centroids" -> ((s, dir) => {
+    "llm_label_centroids" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
         .select(col("label"), col("vq"))
       llm.Ann.labelCentroidCosine(e, "label")
@@ -2021,7 +2021,7 @@ private[graft] object QueriesLlm {
     // seeds sit 13–30 apart; the junk payload takes the sentinel and is
     // excluded. At corpus scale the pair join routes the words through
     // the Charikar block scheme (simhashNearDups) instead.
-    "llm_image_phash" -> ((s, dir) => {
+    "llm_image_phash" -> fixture((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val pngs = s.range(1, 5).map { id =>
@@ -2058,7 +2058,7 @@ private[graft] object QueriesLlm {
     // exact-dup pairs are planted throughout; output is the hamming
     // histogram + an id checksum — constant-size however many pairs the
     // corpus plants.
-    "llm_image_phash_scale" -> ((s, dir) => {
+    "llm_image_phash_scale" -> scaled((s, dir) => {
       import s.implicits._
       import llm.Multimodal.{MediaItem, MediaMeta}
       val items = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2081,7 +2081,7 @@ private[graft] object QueriesLlm {
     // before trusting a shared token budget across languages (a
     // tokenizer that fragments one language inflates its effective
     // cost). One partial aggregation; ratios as exact integer micros.
-    "llm_token_fertility" -> ((s, dir) => {
+    "llm_token_fertility" -> scaled((s, dir) => {
       t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .select(Seq(col("lang"), col("n_chars")) ++ llm.TextOps.tokenCounts: _*)
@@ -2100,7 +2100,7 @@ private[graft] object QueriesLlm {
     // prediction — the label-noise audit a mixed-source corpus runs
     // before trusting per-language budgets. Two partial aggs + a
     // lang-cardinality join; shares as integer basis points.
-    "llm_lang_confusion" -> ((s, dir) => {
+    "llm_lang_confusion" -> scaled((s, dir) => {
       val pred = t(s, dir, "documents")
         .withColumn("ws", llm.TextOps.words("text"))
         .select(Seq(col("doc_id"), col("lang")) ++ llm.TextOps.langIdColumns: _*)
@@ -2117,7 +2117,7 @@ private[graft] object QueriesLlm {
     // standing index's cell-pruned top-8 instead of brute force — the
     // tier-agnostic composition mmrRerankFrom exists for. Corpus-side
     // cost is the IVF probe; the greedy runs on the |q|·m frame.
-    "llm_mmr_ivf" -> ((s, dir) => {
+    "llm_mmr_ivf" -> scaled((s, dir) => {
       val idx = sharedAnnIndex(s, dir)
       val queries = annQueries(s, dir)
       val corpus = annCorpus(s, dir)
@@ -2129,7 +2129,7 @@ private[graft] object QueriesLlm {
     // Retrieval evaluation harness: label-relevance MRR / precision@k of
     // the brute ranking — all-integer per query (rr_micro = 1e6 div
     // first relevant rank), the eval row any ANN tier slots into.
-    "llm_retrieval_eval" -> ((s, dir) => {
+    "llm_retrieval_eval" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
       val q = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("vq"), col("norm2"),
@@ -2153,14 +2153,14 @@ private[graft] object QueriesLlm {
     // BPE merge-pair statistics: the corpus-weighted adjacent-char-pair
     // counts tokenizer training maximizes — top-32, counted over the
     // vocab-sized word-frequency table, never the raw token stream.
-    "llm_bpe_pairs" -> ((s, dir) => {
+    "llm_bpe_pairs" -> scaled((s, dir) => {
       llm.TextOps.bpePairStats(t(s, dir, "documents"), "doc_id", "text", 32)
     }),
 
     // Cross-source duplication matrix: which feeds duplicate each other —
     // banded MinHash pairs (no all-pairs) joined back to doc→source,
     // least/greatest canonicalizes to the upper triangle.
-    "llm_source_overlap" -> ((s, dir) => {
+    "llm_source_overlap" -> scaled((s, dir) => {
       llm.TextOps.sourceOverlap(t(s, dir, "documents"), "doc_id", "text",
         "source", threshold = 0.5)
     }),
@@ -2171,7 +2171,7 @@ private[graft] object QueriesLlm {
     // under id+1000000 through a self-union of the stream), and the
     // update-mode sink is folded to the per-key minimum so the result is
     // micro-batch-boundary-proof and equals SQL min(id) GROUP BY hash.
-    "llm_stream_dedup" -> ((s, dir) => {
+    "llm_stream_dedup" -> scaled((s, dir) => {
       import s.implicits._
       val stream = s.readStream
         .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
@@ -2198,7 +2198,7 @@ private[graft] object QueriesLlm {
     // Curriculum-ordered export: shard layout as llm_shard_plan, but
     // within-shard order is (quality bin DESC, hash, id) — every shard
     // streams its best documents first (easy-to-hard schedule).
-    "llm_curriculum_plan" -> ((s, dir) => {
+    "llm_curriculum_plan" -> scaled((s, dir) => {
       llm.Sampling.curriculumPlan(t(s, dir, "documents"), "doc_id",
         nShards = 8, nBins = 10)
     }),
@@ -2215,7 +2215,7 @@ private[graft] object QueriesLlm {
     // The oracle recomputes the entire chain. The eval split and source
     // lookup read the RAW table — decontamination guards against the
     // full eval set, not just the part that survived the crawl gate.
-    "llm_full_pipeline" -> ((s, dir) => {
+    "llm_full_pipeline" -> scaled((s, dir) => {
       val docsAll = t(s, dir, "documents")
       // 0. URL front gate: same synthetic-URL scheme + cap as llm_url_ops
       val withUrl = docsAll.select(col("doc_id"),
@@ -2311,7 +2311,7 @@ private[graft] object QueriesLlm {
     // never the quadratic inequality-join-then-prune rewrite. Oracle is
     // DuckDB's NATIVE ASOF LEFT JOIN — an independent implementation of
     // the same semantics.
-    "llm_asof_join" -> ((s, dir) => {
+    "llm_asof_join" -> scaled((s, dir) => {
       val e = t(s, dir, "events").withColumn("ts_us", expr("ts_ns div 1000"))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
@@ -2327,7 +2327,7 @@ private[graft] object QueriesLlm {
     // windows every 3 hours — bucketized interval join (15-min grid) →
     // plain shuffled hash join on the cell id, never a nested-loop scan
     // of every window per event. Oracle is the naive inequality join.
-    "llm_range_join" -> ((s, dir) => {
+    "llm_range_join" -> scaled((s, dir) => {
       val e = t(s, dir, "events")
         .select(col("user_id"), col("value"), expr("ts_ns div 1000").as("ts_us"))
       val t0 = e.agg(min(col("ts_us")).as("__t0"))
@@ -2355,7 +2355,7 @@ private[graft] object QueriesLlm {
     // row itself audits the ±4.6% estimator. Every op is integer/string
     // (rank via length(bin()), harmonic sum as an exact scaled BIGINT);
     // the single float division replays IEEE-identically in the oracle.
-    "llm_distinct_sketch" -> ((s, dir) => {
+    "llm_distinct_sketch" -> scaled((s, dir) => {
       val uday = t(s, dir, "events")
         .withColumn("ts_us", expr("ts_ns div 1000"))
         .select(col("event_type"),
@@ -2380,7 +2380,7 @@ private[graft] object QueriesLlm {
     // doc fans out to 20 sub-ids so all three cardinalities sit above
     // the 2.5m small-range cutoff where the raw estimator is honest;
     // ratio_micro audits the estimate against the exact overlap.
-    "llm_sketch_overlap" -> ((s, dir) => {
+    "llm_sketch_overlap" -> scaled((s, dir) => {
       val ids = t(s, dir, "documents")
         .select(col("doc_id"),
           explode(sequence(lit(0), lit(19))).as("k"))
@@ -2413,7 +2413,7 @@ private[graft] object QueriesLlm {
     // sharing ≥ 50 documents, apriori-pruned (only df ≥ 50 tokens ever
     // reach the pair join — the rare-token long tail never pays the
     // quadratic step), ranked by micro-quantized doc-count lift.
-    "llm_cooccur" -> ((s, dir) => {
+    "llm_cooccur" -> scaled((s, dir) => {
       llm.TextOps.cooccurPairs(t(s, dir, "documents"), "doc_id", "text",
         minDf = 50L, minSup = 50L, topK = 25)
     }),
@@ -2424,7 +2424,7 @@ private[graft] object QueriesLlm {
     // max-event-id row so the as-of pick is deterministic); the
     // single-shuffle as-of form vs DuckDB's native ASOF with a strict
     // inequality. Unattributed purchases land in 'none'.
-    "llm_attribution" -> ((s, dir) => {
+    "llm_attribution" -> scaled((s, dir) => {
       val e = t(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           expr("ts_ns div 1000").as("ts_us"), col("event_id"))
@@ -2457,7 +2457,7 @@ private[graft] object QueriesLlm {
     // (the scale formulation). Graph = arithmetic links + consecutive
     // (i−1, i−2) links, whose sliding triples carry a known triangle
     // per node; each triangle counted once, credited to all 3 corners.
-    "llm_triangles" -> ((s, dir) => {
+    "llm_triangles" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val n = docs.agg(count(lit(1)).as("__n"))
       val base = docs.crossJoin(broadcast(n))
@@ -2477,7 +2477,7 @@ private[graft] object QueriesLlm {
     // detected with ZERO floats: (x·n − S)² > k²(n·ΣX² − S²) in
     // DECIMAL(38,0), the pipeline-telemetry monitor that replays
     // bit-identically in any engine (no sqrt/division/doubles).
-    "llm_anomaly_days" -> ((s, dir) => {
+    "llm_anomaly_days" -> scaled((s, dir) => {
       val daily = t(s, dir, "events")
         .groupBy(col("event_type"),
           expr("(ts_ns div 1000) div 86400000000").as("day"))
@@ -2496,7 +2496,7 @@ private[graft] object QueriesLlm {
     // associative, so the incrementally-maintained registry is EXACTLY
     // the sketch of all data ever seen — the oracle recomputes the
     // full-data registers directly and every column hashes equal.
-    "llm_sketch_registry" -> ((s, dir) => {
+    "llm_sketch_registry" -> scaled((s, dir) => {
       val store = new core.PersistentGraphStore(s,
         scratchDir("skreg"))
       val users = t(s, dir, "events")
@@ -2528,7 +2528,7 @@ private[graft] object QueriesLlm {
     // output BEFORE shuffling either side's keys. One-sided (hash
     // collisions only add), audited in-row against the exact
     // Σ nA(u)·nB(u).
-    "llm_join_estimate" -> ((s, dir) => {
+    "llm_join_estimate" -> scaled((s, dir) => {
       val e = t(s, dir, "events")
         .select(col("user_id").cast("string").as("v"), col("event_type"))
         .localCheckpoint() // two grids + two exact censuses read it
@@ -2553,7 +2553,7 @@ private[graft] object QueriesLlm {
     // neighbours) — fixed-point INTEGER ranks (ppb), 8 iterations,
     // bit-identical in any engine. The oracle replays all 8 supersteps
     // as generated materialized CTEs.
-    "llm_pagerank" -> ((s, dir) => {
+    "llm_pagerank" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val edges = docGraphEdges(docs)
       llm.Graphs.pageRankPpb(docs, "doc_id", edges, "src", "dst", iters = 8)
@@ -2563,7 +2563,7 @@ private[graft] object QueriesLlm {
     // from a 4×1024 counter grid — constant sketch state, counters merge
     // by addition, estimates one-sided (never undercount). Probes are the
     // exact top-20 so the row audits the overcount directly.
-    "llm_heavy_hitters" -> ((s, dir) => {
+    "llm_heavy_hitters" -> scaled((s, dir) => {
       val words = t(s, dir, "documents")
         .select(explode(llm.TextOps.words("text")).as("word"))
         .filter(length(col("word")) > 0)
@@ -2582,7 +2582,7 @@ private[graft] object QueriesLlm {
     // broadcast gate a decontamination pass runs before any exact join.
     // False positives only; the row reports them against exact
     // membership so the FP contract is auditable.
-    "llm_bloom_filter" -> ((s, dir) => {
+    "llm_bloom_filter" -> scaled((s, dir) => {
       val keyed = t(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("ck"))
         .localCheckpoint() // three consumers: eval slice, probes, output join
@@ -2601,7 +2601,7 @@ private[graft] object QueriesLlm {
     // PMI COLLOCATIONS (TextOps.pmiCollocations): top adjacent pairs by
     // the log-free micro-quantized PMI ratio — exact integer ranking,
     // long tail pruned before any join, top-k via TakeOrderedAndProject.
-    "llm_pmi_pairs" -> ((s, dir) => {
+    "llm_pmi_pairs" -> scaled((s, dir) => {
       llm.TextOps.pmiCollocations(t(s, dir, "documents"), "doc_id", "text",
         minCount = 3L, topK = 30)
     }),
@@ -2609,7 +2609,7 @@ private[graft] object QueriesLlm {
     // EVENT TRANSITION MATRIX: per-user next-event Markov counts +
     // micro-quantized transition probabilities — one lag window on the
     // high-cardinality user key, then type²-sized aggregates.
-    "llm_event_transitions" -> ((s, dir) => {
+    "llm_event_transitions" -> scaled((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
@@ -2635,7 +2635,7 @@ private[graft] object QueriesLlm {
     // each user's last event state as of end-of-day. One AsOfJoin
     // shuffle; days before a user's first event stay NULL (no future
     // leak). The oracle replays the grid and DuckDB's native ASOF join.
-    "llm_feature_snapshot" -> ((s, dir) => {
+    "llm_feature_snapshot" -> scaled((s, dir) => {
       val e = t(s, dir, "events").withColumn("ts_us", expr("ts_ns div 1000"))
       val bounds = e.agg(expr("min(ts_us) div 86400000000").as("d0"),
         expr("max(ts_us) div 86400000000").as("d1"))
@@ -2659,7 +2659,7 @@ private[graft] object QueriesLlm {
     // complement of the probabilistic MinHash path; rare-first prefix
     // tokens keep the candidate join skew-free. Oracle is the full
     // brute-force quadratic join, so any missed pair fails the row.
-    "llm_set_join" -> ((s, dir) => {
+    "llm_set_join" -> scaled((s, dir) => {
       llm.TextOps.prefixFilterNearDups(t(s, dir, "documents"),
         "doc_id", "text", k = 3, tNum = 1L, tDen = 2L)
     }),
@@ -2669,7 +2669,7 @@ private[graft] object QueriesLlm {
     // 97 == 0) — authority flows outward from seeds, spam clusters with
     // no seed in-path starve. Same integer-ppb fixed-point arithmetic;
     // oracle replays all 8 supersteps with the seed-scaled teleport.
-    "llm_trustrank" -> ((s, dir) => {
+    "llm_trustrank" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val edges = docGraphEdges(docs)
       llm.Graphs.trustRankPpb(docs, "doc_id", edges, "src", "dst",
@@ -2680,7 +2680,7 @@ private[graft] object QueriesLlm {
     // synchronous LPA over the undirected doc link graph — most-frequent
     // neighbour label, smallest-label tie-break, 4 supersteps; the
     // "template family / mirror farm" clustering signal.
-    "llm_communities" -> ((s, dir) => {
+    "llm_communities" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val edges = docGraphEdges(docs)
       llm.Graphs.labelPropagation(docs, "doc_id", edges, "src", "dst",
@@ -2691,7 +2691,7 @@ private[graft] object QueriesLlm {
     // count from the trusted frontier, capped at 4 — the "how far from
     // a whitelisted page" crawl-curation signal; unreached nodes are
     // absent, min over equal paths is order-free.
-    "llm_seed_distance" -> ((s, dir) => {
+    "llm_seed_distance" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val edges = docGraphEdges(docs)
       llm.Graphs.bfsDistance(edges, "src", "dst",
@@ -2704,7 +2704,7 @@ private[graft] object QueriesLlm {
     // vectors never materialize: per-label integer SUM vectors (a
     // posexplode partial agg, 10×64 state), native qdot pairwise, one
     // sqrt each (IEEE-exact in both engines).
-    "llm_domain_similarity" -> ((s, dir) => {
+    "llm_domain_similarity" -> scaled((s, dir) => {
       val e = llm.Ann.withQuantized(t(s, dir, "embeddings"), "embedding")
         .select(col("label").cast("long").as("label"), col("vq"))
       val sums = e.select(col("label"), posexplode(col("vq")))
@@ -2735,7 +2735,7 @@ private[graft] object QueriesLlm {
     // cumsum (no global window), pointer hits counted by inverting the
     // pointer arithmetic, Σ n_hits = 50 exactly, zero randomness
     // beyond the salt.
-    "llm_pps_sample" -> ((s, dir) => {
+    "llm_pps_sample" -> scaled((s, dir) => {
       llm.Sampling.ppsSample(
         t(s, dir, "documents").withColumn("w0",
           size(split(lower(col("text")), " ")).cast("long")),
@@ -2747,7 +2747,7 @@ private[graft] object QueriesLlm {
     // the producer side of the as-of/feature-snapshot joins. Windows
     // are user-partitioned (per-key work only); consecutive duplicate
     // states collapse into one run.
-    "llm_scd2_build" -> ((s, dir) => {
+    "llm_scd2_build" -> scaled((s, dir) => {
       val e = t(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           expr("ts_ns div 1000").as("ts_us"), col("event_id"))
@@ -2760,7 +2760,7 @@ private[graft] object QueriesLlm {
     // user's 30-minute activity spans into maximal islands — the
     // running-max island detector that handles nested intervals a
     // lag-only check would split. Per-user windows; integer epoch-us.
-    "llm_interval_merge" -> ((s, dir) => {
+    "llm_interval_merge" -> scaled((s, dir) => {
       val iv = t(s, dir, "events")
         .select(col("user_id"),
           expr("ts_ns div 1000").as("lo"),
@@ -2775,7 +2775,7 @@ private[graft] object QueriesLlm {
     // sample: Ŷ = (W/n)·Σ n_hits·(y/w), all micro-quantized integer
     // arithmetic (per-doc quotient truncates identically in both
     // engines). ratio_micro audits the estimator against the exact sum.
-    "llm_pps_estimate" -> ((s, dir) => {
+    "llm_pps_estimate" -> scaled((s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("w0", size(split(lower(col("text")), " ")).cast("long"))
         .withColumn("chars", length(col("text")).cast("long"))
@@ -2798,7 +2798,7 @@ private[graft] object QueriesLlm {
     // RECENCY-DECAYED ACTIVITY SCORE: per-user Σ 2^(30 − age_days) over
     // a 30-day horizon — exponential decay in EXACT shifted integers
     // (power-of-two half-life, no float pow), map-side partial agg.
-    "llm_decayed_score" -> ((s, dir) => {
+    "llm_decayed_score" -> scaled((s, dir) => {
       val e = t(s, dir, "events")
         .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
       val mx = e.agg(max(col("day")).as("__maxd"))

@@ -29,11 +29,11 @@ private[graft] object QueriesRef {
       .select(col("id"), col("total"), col(core.GraphStore.ACTION).as("action"))
   }
 
-  def registry: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def registry: Map[String, Timed] = Map(
 
 
     // A-family (SURVEY §2.5): hash aggregation with exact + money sums.
-    "q1_agg" -> ((s, dir) => {
+    "q1_agg" -> scaled((s, dir) => {
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -45,7 +45,7 @@ private[graft] object QueriesRef {
     }),
 
     // P1 (rename/remap projection): util.convertRowFields equivalent.
-    "p1_rename_project" -> ((s, dir) => {
+    "p1_rename_project" -> fixture((s, dir) => {
       t(s, dir, "part").select(
         col("p_partkey").as("part_id"),
         lower(trim(col("p_name"))).as("name"),
@@ -53,7 +53,7 @@ private[graft] object QueriesRef {
     }),
 
     // P2/P3 (row filters on status fields): cancerhotspots/civic-style gates.
-    "p2_filter_status" -> ((s, dir) => {
+    "p2_filter_status" -> scaled((s, dir) => {
       t(s, dir, "lineitem")
         .filter(col("l_returnflag") === "R" && col("l_quantity") >= 30 &&
           !col("l_linestatus").isin("X"))
@@ -62,7 +62,7 @@ private[graft] object QueriesRef {
     }),
 
     // P7 (maxRecords limit) with total order for determinism.
-    "p7_limit_topn" -> ((s, dir) => {
+    "p7_limit_topn" -> scaled((s, dir) => {
       t(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(100)
@@ -70,7 +70,7 @@ private[graft] object QueriesRef {
     }),
 
     // P8 (dedup by id, first-wins): deterministic via min-key per group.
-    "p8_dedup_first" -> ((s, dir) => {
+    "p8_dedup_first" -> scaled((s, dir) => {
       val w = Window.partitionBy(col("lang"), col("source")).orderBy(col("doc_id").asc)
       t(s, dir, "documents")
         .withColumn("rn", row_number().over(w))
@@ -79,7 +79,7 @@ private[graft] object QueriesRef {
     }),
 
     // J11 (xref joins): fact→dim→dim chain, dims broadcast.
-    "j11_xref_join" -> ((s, dir) => {
+    "j11_xref_join" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
       val n = t(s, dir, "nation")
       val r = t(s, dir, "region")
@@ -90,7 +90,7 @@ private[graft] object QueriesRef {
     }),
 
     // J13 (existence/anti join): skip-already-loaded pattern.
-    "j13_anti_join" -> ((s, dir) => {
+    "j13_anti_join" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
@@ -98,7 +98,7 @@ private[graft] object QueriesRef {
     }),
 
     // T1/T2 (preference top-1 per key): newest order per customer.
-    "t1_top1_per_group" -> ((s, dir) => {
+    "t1_top1_per_group" -> scaled((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
       t(s, dir, "orders")
@@ -111,7 +111,7 @@ private[graft] object QueriesRef {
     // T2 (newest-created top-1 per key, civic/therapy.js:85-97: sort by
     // createdAt desc, return first) — distinct from t1's business-date
     // ordering: the key here is the record CREATION timestamp.
-    "t2_newest_top1" -> ((s, dir) => {
+    "t2_newest_top1" -> scaled((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_ns").desc, col("event_id").desc)
       t(s, dir, "events")
@@ -126,28 +126,28 @@ private[graft] object QueriesRef {
     // src/variants/index.js:30-44). The fixture is CRLF: Spark's
     // read.text splits on \n and keeps the \r, DuckDB's read_csv strips
     // it — normalize on this side.
-    "s9_text_scan" -> ((s, dir) => {
+    "s9_text_scan" -> fixture((s, dir) => {
       sources.Scans.textLines(s,
         s"$TestData/UNII_Records_25Oct2018_sample.txt")
         .select(regexp_replace(col("line"), "\r$", "").as("line"))
     }),
 
     // §2.7 set ops: EXCEPT (deprecated-id set difference, civic GC pattern).
-    "set_except" -> ((s, dir) => {
+    "set_except" -> scaled((s, dir) => {
       val o = t(s, dir, "orders")
       o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
         .except(o.filter(col("o_orderstatus") === "P").select(col("o_custkey")))
     }),
 
     // F13 (date/year extraction) + A-family counters.
-    "f13_year_extract" -> ((s, dir) => {
+    "f13_year_extract" -> scaled((s, dir) => {
       t(s, dir, "orders")
         .groupBy(year(col("o_orderdate")).cast("long").as("order_year"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
     }),
 
     // A7 (consensus aggregation): single consensus value per key else null.
-    "a7_consensus" -> ((s, dir) => {
+    "a7_consensus" -> scaled((s, dir) => {
       t(s, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(
@@ -162,7 +162,7 @@ private[graft] object QueriesRef {
     // with (a,b,null)), the JSON keeps the field name next to each null.
     // ignoreNullFields=false so the null fields serialize as `"k":null` on
     // both engines.
-    "a1_hash_id" -> ((s, dir) => {
+    "a1_hash_id" -> scaled((s, dir) => {
       t(s, dir, "orders").select(
         col("o_orderkey"),
         sha2(to_json(struct(
@@ -175,7 +175,7 @@ private[graft] object QueriesRef {
 
     // J1/J2 (preference-ranked unique resolution) via core.Resolver:
     // best customer per market segment, broadcast-join + window top-1.
-    "j1_resolve_unique" -> ((s, dir) => {
+    "j1_resolve_unique" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
       val lookups = c.select(col("c_mktsegment").as("segment")).distinct()
       val r = core.Resolver.resolveUnique(
@@ -188,10 +188,10 @@ private[graft] object QueriesRef {
     // K1/K2 (MERGE upsert classification with change detection + soft
     // delete) via core.GraphStore: target=even orderkeys, updates=multiples
     // of 3 with a +1.00 price perturbation on multiples of 5.
-    "k1_upsert_classify" -> (upsertClassify(_, _)),
+    "k1_upsert_classify" -> scaled(upsertClassify(_, _)),
 
     // K9 (audit counters): action → count over the same classification.
-    "k2_change_counts" -> ((s, dir) => {
+    "k2_change_counts" -> scaled((s, dir) => {
       upsertClassify(s, dir)
         .groupBy(col("action")).agg(count(lit(1)).as("n"))
     }),
@@ -199,7 +199,7 @@ private[graft] object QueriesRef {
     // S1 (delimited scan with ## comments + header remap, util.js:69-84):
     // distributed text filter → csv parse, quoting disabled like the
     // reference. Oracle re-reads the same TSV with DuckDB read_csv.
-    "s1_delim_scan" -> ((s, dir) => {
+    "s1_delim_scan" -> fixture((s, dir) => {
       sources.Scans.delim(s,
         s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv",
         headerMap = Map(
@@ -210,7 +210,7 @@ private[graft] object QueriesRef {
     }),
 
     // S3 (XML DOM scan via the xml2js-equivalent JSON bridge, util.js:87-114).
-    "s3_xml_dom" -> ((s, dir) => {
+    "s3_xml_dom" -> fixture((s, dir) => {
       sources.XmlScan.domDF(s, s"$TestData/drugbank_sample.xml")
         .select(
           col("drugbank.drug.name").as("name"),
@@ -222,7 +222,7 @@ private[graft] object QueriesRef {
 
     // S4 (streaming rowTag XML scan, drugbank/index.js:279-333): StAX
     // fragment split (bounded memory) + typed per-fragment extraction.
-    "s4_xml_rowtag" -> ((s, dir) => {
+    "s4_xml_rowtag" -> fixture((s, dir) => {
       import s.implicits._
       sources.XmlScan.rowTagFragments(s, s"$TestData/drugbank_sample.xml", "drug")
         .map { frag =>
@@ -240,7 +240,7 @@ private[graft] object QueriesRef {
     // S5 (OWL/RDF scan → triples → group-by-subject, util.js:22-66 as used
     // by vario.js:45-55): single shuffle on subject; top-10 codes frozen as
     // the golden oracle (447 classes total — asserted in OwlScanSpec).
-    "s5_owl_group" -> ((s, dir) => {
+    "s5_owl_group" -> fixture((s, dir) => {
       val LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
       val SUB = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
       val tr = sources.OwlScan.triples(s, s"$TestData/vario_v2018-04-27.owl")
@@ -261,7 +261,7 @@ private[graft] object QueriesRef {
 
     // S6 (OBO-graph JSON scan, diseaseOntology/index.js:157-166 + the
     // doid:<id> parser at :22-29). Oracle re-reads with read_json_auto.
-    "s6_obograph_nodes" -> ((s, dir) => {
+    "s6_obograph_nodes" -> fixture((s, dir) => {
       sources.Scans.json(s, s"$TestData/doid.sample.json")
         .select(explode(col("graphs")(0)("nodes")).as("n"))
         .select(
@@ -279,7 +279,7 @@ private[graft] object QueriesRef {
 
     // S8 (generic JSON scan, ontology/index.js:253-258 shape) on the ChEMBL
     // molecule dump fixture (chembl/index.js:63-71 fields).
-    "s8_json_scan" -> ((s, dir) => {
+    "s8_json_scan" -> fixture((s, dir) => {
       sources.Scans.json(s, s"$TestData/chembl.CHEMBL553.json")
         .select(
           col("molecule_chembl_id").as("chembl_id"),
@@ -290,7 +290,7 @@ private[graft] object QueriesRef {
 
     // S16 (disk API proxy, oncokb/index.js:796-812): saved REST response
     // read as the API's stand-in; phase list folded like F12.
-    "s16_api_proxy" -> ((s, dir) => {
+    "s16_api_proxy" -> fixture((s, dir) => {
       sources.Scans.json(s, s"$TestData/clinicaltrialsgov.NCT03478891.json")
         .select(
           col("protocolSection.identificationModule.nctId").as("nct_id"),
@@ -306,7 +306,7 @@ private[graft] object QueriesRef {
     // disk is the result. The oracle re-derives the same vertices straight
     // from the JSON — so a broken merge, a non-idempotent rerun, or a bad
     // store round-trip all fail the row.
-    "g1_loader_pipeline" -> ((s, dir) => {
+    "g1_loader_pipeline" -> loader((s, dir) => {
       val store = new core.PersistentGraphStore(s,
         scratchDir("g1"))
       val path = s"$TestData/doid.sample.json"
@@ -325,7 +325,7 @@ private[graft] object QueriesRef {
     // unsupported-combination error side-channel → content diff against the
     // existing statements (J12, statement.js:56-178) → create/match/delete
     // buckets.
-    "g2_civic_sync" -> ((s, dir) => {
+    "g2_civic_sync" -> loader((s, dir) => {
       import s.implicits._
       val names = Map(1L -> "V600E", 2L -> "T790M", 3L -> "AMP", 5L -> "Q157P/R")
       // (id, profileExpr, therapies, interactionType, eType, direction, significance)
@@ -394,7 +394,7 @@ private[graft] object QueriesRef {
     // NCIt sample the corpus DAG loads too (the reference ships no NCIt
     // flat file) and exercises every branch; the oracle is the
     // hand-derived frozen frame.
-    "g3_ncit" -> ((s, dir) => {
+    "g3_ncit" -> loader((s, dir) => {
       val ncit = orchestrate.FullCorpus.writeNcitSample()
       val store = new core.PersistentGraphStore(s,
         scratchDir("g3"))
@@ -416,7 +416,7 @@ private[graft] object QueriesRef {
     // SubClassOf from the parent code, CrossReferenceOf from the NCI
     // external references; the oracle recomputes everything independently
     // with DuckDB's JSON reader.
-    "g4_oncotree" -> ((s, dir) => {
+    "g4_oncotree" -> loader((s, dir) => {
       val path = s"$TestData/tumorTypes-oncotree_latest_stable.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g4"))
@@ -440,7 +440,7 @@ private[graft] object QueriesRef {
     // gene/transcript/protein, generalizationof/elementof/crossreferenceof
     // edges, all through the store; the oracle recomputes the same sets
     // straight from the TSV.
-    "g5_ensembl" -> ((s, dir) => {
+    "g5_ensembl" -> loader((s, dir) => {
       val path = s"$TestData/ensembl_biomart_export_ENSG00000139618.tsv"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g5"))
@@ -459,7 +459,7 @@ private[graft] object QueriesRef {
     // features sharing the primary sourceId, deprecatedby/aliasof edges
     // into the primary, ensembl + entrez crossreferences; oracle re-reads
     // the same JSON with DuckDB.
-    "g6_hgnc" -> ((s, dir) => {
+    "g6_hgnc" -> loader((s, dir) => {
       val docs = sources.Loaders.hgncDocs(s,
         s"$TestData/external_api_responses.json",
         "http://rest.genenames.org/fetch/hgnc_id/1101")
@@ -483,7 +483,7 @@ private[graft] object QueriesRef {
     // The dim deliberately omits the smallest NCIT code in the file so the
     // reference's lookup-miss path (edge skipped, drug still created) is
     // exercised; the oracle re-derives the same exclusion in DuckDB.
-    "g7_fdasrs" -> ((s, dir) => {
+    "g7_fdasrs" -> loader((s, dir) => {
       val path = s"$TestData/UNII_Records_25Oct2018_sample.txt"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g7"))
@@ -505,7 +505,7 @@ private[graft] object QueriesRef {
     // fixture: 447 labeled classes → vocabulary vertices, 443 subclassof
     // edges (both endpoints labeled); the oracle re-parses the raw RDF/XML
     // in DuckDB with regex extraction over read_text.
-    "g8_vario" -> ((s, dir) => {
+    "g8_vario" -> loader((s, dir) => {
       val path = s"$TestData/vario_v2018-04-27.owl"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g8"))
@@ -525,7 +525,7 @@ private[graft] object QueriesRef {
     // phase fold, A7 location consensus, drug/disease resolution with the
     // Missing comment; the therapy dim resolves the trial's biological,
     // the empty-ish disease dim misses its condition.
-    "g9_ctg" -> ((s, dir) => {
+    "g9_ctg" -> loader((s, dir) => {
       import s.implicits._
       val path = s"$TestData/clinicaltrialsgov.NCT03478891.json"
       val store = new core.PersistentGraphStore(s,
@@ -552,7 +552,7 @@ private[graft] object QueriesRef {
     // (J9 + S15): versioned+generalized transcript/protein features,
     // generalizationof/elementof edges, gene elementof gated on the
     // hydrated dim; oracle recomputes everything from the raw tab + JSON.
-    "g10_refseq" -> ((s, dir) => {
+    "g10_refseq" -> loader((s, dir) => {
       val path = s"$TestData/LRG_RefSeqGene_d1541209245_kras.tab"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g10"))
@@ -579,7 +579,7 @@ private[graft] object QueriesRef {
     // fixture: pref_name/formula fallback, `name [CHEMBLID]` display name,
     // the USAN-stem parent therapy and its SubClassOf edge; oracle
     // re-reads the JSON with DuckDB.
-    "g11_chembl" -> ((s, dir) => {
+    "g11_chembl" -> loader((s, dir) => {
       val path = s"$TestData/chembl.CHEMBL553.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g11"))
@@ -600,7 +600,7 @@ private[graft] object QueriesRef {
     // routing incl. the reference's empty-insertion quirk and first-base
     // check, per-form isolation, Infers, pathogenic statements on the
     // most specific form.
-    "g30_cgl" -> ((s, dir) => {
+    "g30_cgl" -> loader((s, dir) => {
       import s.implicits._
       import sources.Cgl.CglRecord
       val store = new core.PersistentGraphStore(s,
@@ -648,7 +648,7 @@ private[graft] object QueriesRef {
     // vocabulary terms (label required, `_`→space names, deprecated flag)
     // + subclassof edges gated on /^so:\d+$/i parents with BOTH endpoints
     // labeled; unlabeled subjects and dangling links surface as counts.
-    "g31_so" -> ((s, dir) => {
+    "g31_so" -> loader((s, dir) => {
       import s.implicits._
       val owl =
         """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -706,7 +706,7 @@ private[graft] object QueriesRef {
     // split + aliasof, drug→parent→grandparent subclassof chain (both
     // grandparents hang off the parent), class→same-name-drug and
     // DrugBankID crossreferenceof, DBid-miss errors.
-    "g32_gsct" -> ((s, dir) => {
+    "g32_gsct" -> loader((s, dir) => {
       import s.implicits._
       import sources.GscTherapy.GscRow
       val store = new core.PersistentGraphStore(s,
@@ -740,7 +740,7 @@ private[graft] object QueriesRef {
     // gene resolve with by-symbol fetch fallback (the fetched gene is
     // upserted; a biotype!=gene dim row with the same name must NOT
     // satisfy the lookup) → variant upsert; each failure rung counts.
-    "g33_variants" -> ((s, dir) => {
+    "g33_variants" -> loader((s, dir) => {
       import s.implicits._
       val txt = Seq("KRAS:p.G12D", "EGFR:c.2573T>G",
         "(BCR,ABL1):fusion(e.13,e.3)", "badnotation", "  ",
@@ -794,7 +794,7 @@ private[graft] object QueriesRef {
     // composed J2 resolve whose sourceRank rung reads the LOADED `sort`
     // field (drugbank 0 beats chembl 1, do 1 beats ncit 2, a ranked
     // 99999 source beats an unranked one via nulls-last).
-    "g34_all_sources" -> ((s, dir) => {
+    "g34_all_sources" -> loader((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s,
         scratchDir("g34"))
@@ -841,7 +841,7 @@ private[graft] object QueriesRef {
     // production file carries — the 100-row sample stops at 'C'), the
     // recorded chembl.CHEMBL553 molecule fetch, and the hgnc:3236
     // resolution the reference's fetchAndLoadBySymbol performs.
-    "g35_drugbank" -> ((s, dir) => {
+    "g35_drugbank" -> loader((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s, scratchDir("g35"))
       val fdaDim = sources.FdaSrs
@@ -889,7 +889,7 @@ private[graft] object QueriesRef {
     // hydration, the cds→protein→gene-alt PositionalVariant ladder with
     // its Infers chain, the per-leg error + API-miss side-channels, and
     // the catalogue-cache idempotent rerun.
-    "g36_snp" -> ((s, dir) => {
+    "g36_snp" -> loader((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s, scratchDir("g36"))
       val snpFixture = Inputs.fixture("entrez_snp.esummary.json")
@@ -948,7 +948,7 @@ private[graft] object QueriesRef {
     // MEASURES the rollup: its cost scales with sf, it runs in the
     // median-of-reps headline loop, and a plan regression (lost
     // broadcast, lost map-side distinct) moves its time.
-    "ldr_fusion_scale" -> ((s, dir) => {
+    "ldr_fusion_scale" -> scaled((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s, scratchDir("ldrf"))
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
@@ -1003,7 +1003,7 @@ private[graft] object QueriesRef {
     // stripe (1/5 → genomic links to protein), a disease-miss stripe
     // (1/5 no statement). Measures the executor-side HGVS grammar + the
     // broadcast dim ladder + statement merge at sf scale.
-    "ldr_hotspot_scale" -> ((s, dir) => {
+    "ldr_hotspot_scale" -> scaled((s, dir) => {
       import s.implicits._
       import sources.CancerHotspots.HotspotRecord
       val store = new core.PersistentGraphStore(s, scratchDir("ldrh"))
@@ -1078,7 +1078,7 @@ private[graft] object QueriesRef {
     // merge + edge upsert at sf size. The fixture g3 stays the branch-
     // coverage row; THIS row is the one whose time moves when the
     // collision window or the parent join loses its plan shape.
-    "ldr_ncit_scale" -> ((s, dir) => {
+    "ldr_ncit_scale" -> scaled((s, dir) => {
       val store = new core.PersistentGraphStore(s, scratchDir("ldrn"))
       val raw = t(s, dir, "events").select(col("event_id"))
         .select(
@@ -1111,7 +1111,7 @@ private[graft] object QueriesRef {
     // Table S7): low-frequency skip, first-matching-count-column disease
     // specificity with the cancer fallback, disease-miss skips,
     // gene-miss errors, fusion variants + recurrent statements.
-    "g29_pmc4468049" -> ((s, dir) => {
+    "g29_pmc4468049" -> loader((s, dir) => {
       import s.implicits._
       import sources.Pmc4468049.{CodeCount, FusionRow}
       val store = new core.PersistentGraphStore(s,
@@ -1157,7 +1157,7 @@ private[graft] object QueriesRef {
     // records (sourceId/name defaulting, source defaulting) + 278 typed
     // links; the oracle re-derives everything from the raw JSON with
     // DuckDB's MAP reader.
-    "g28_vocab_file" -> ((s, dir) => {
+    "g28_vocab_file" -> loader((s, dir) => {
       val path = s"$SeedData/vocab.json"
       val store = new core.PersistentGraphStore(s,
         scratchDir("g28"))
@@ -1178,7 +1178,7 @@ private[graft] object QueriesRef {
     // G27 — ASCO abstracts dedup-and-load (asco/index.js:47-93): the
     // fill-score collapse with the last-encountered tie-break, upserted
     // by the duplicate key.
-    "g27_asco" -> ((s, dir) => {
+    "g27_asco" -> loader((s, dir) => {
       import sources.Asco.Abstract
       val store = new core.PersistentGraphStore(s,
         scratchDir("g27"))
@@ -1204,7 +1204,7 @@ private[graft] object QueriesRef {
     // decision table (kinase oncogenes, the 'no '-prefix falsiness,
     // multi-category skip), PMID cell parse with annotations kept in the
     // comment, and one protein variant + statement per surviving row.
-    "g26_pmc4232638" -> ((s, dir) => {
+    "g26_pmc4232638" -> loader((s, dir) => {
       import s.implicits._
       val kinase = "Change in kinase, GTPase, or other enzymatic activity (i.e. RNase)"
       val rows = Seq(
@@ -1251,7 +1251,7 @@ private[graft] object QueriesRef {
     // G25 — FDA approvals announcement scrape (fdaApprovals/index.js:
     // 40-137): blacklisted-link harvest, h1/article extraction, the
     // one-distinct-year rule, CuratedContent upsert, missing-page errors.
-    "g25_fda_approvals" -> ((s, dir) => {
+    "g25_fda_approvals" -> loader((s, dir) => {
       import s.implicits._
       val index =
         """<html><body><nav><a href="/drugs">Drugs</a>
@@ -1292,7 +1292,7 @@ private[graft] object QueriesRef {
     // three specificity levels with >=3-distinct-sample gating,
     // success-only suppression of less-specific groups, NS folds, the
     // level-2 cancer override, and per-group disease-miss errors.
-    "g24_cosmic_fusions" -> ((s, dir) => {
+    "g24_cosmic_fusions" -> loader((s, dir) => {
       import s.implicits._
       import sources.CosmicFusions.FusionRow
       val store = new core.PersistentGraphStore(s,
@@ -1355,7 +1355,7 @@ private[graft] object QueriesRef {
     // 56-206): ensembl-referenced protein/cds forms, the entrez-first
     // hgnc-fallback general protein, chromosome-gated genomic with
     // GRCh38, the catalog variant, and the four Infers link rules.
-    "g23_cosmic_resistance" -> ((s, dir) => {
+    "g23_cosmic_resistance" -> loader((s, dir) => {
       import s.implicits._
       import sources.CosmicResistance.ResistanceRecord
       val store = new core.PersistentGraphStore(s,
@@ -1392,7 +1392,7 @@ private[graft] object QueriesRef {
     // G22 — uberon OWL load (uberon/index.js:36-207) on an inline RDF/XML
     // sample: label-gated entities, subset URL parsing, deprecated flag,
     // both-ends-loaded subclassof, ncit-gated crossreferenceof.
-    "g22_uberon" -> ((s, dir) => {
+    "g22_uberon" -> loader((s, dir) => {
       import s.implicits._
       val owl =
         """<?xml version="1.0"?>
@@ -1445,7 +1445,7 @@ private[graft] object QueriesRef {
     // with the variantClass suffix, exon phrases, fusion pairs, evidence
     // routing with guideline drops, therapy drugFamily fallback; errors
     // to the K10 side-channel.
-    "g21_cgi" -> ((s, dir) => {
+    "g21_cgi" -> loader((s, dir) => {
       import sources.Cgi.CgiRow
       val rows = Seq(
         CgiRow("c1", "BRAF (V600E)", "BRAF", "MUT", "BRAF:V600E",
@@ -1471,7 +1471,7 @@ private[graft] object QueriesRef {
     // into the category-first routing, fusion reference2 resolve + flip,
     // Other Biomarkers signature path, raw-name vocabulary fallback,
     // unsupported/unresolvable records counted as errors.
-    "g20_oncokb" -> ((s, dir) => {
+    "g20_oncokb" -> loader((s, dir) => {
       import s.implicits._
       import sources.OncoKb.OncoKbVariant
       val store = new core.PersistentGraphStore(s,
@@ -1514,7 +1514,7 @@ private[graft] object QueriesRef {
     // per-form failure isolation (protein fatal, genomic/cds not),
     // conditional Infers topology, statement with the oncotree disease as
     // condition AND subject, previous-load sourceId skip.
-    "g19_cancerhotspots" -> ((s, dir) => {
+    "g19_cancerhotspots" -> loader((s, dir) => {
       import s.implicits._
       import sources.CancerHotspots.HotspotRecord
       val store = new core.PersistentGraphStore(s,
@@ -1562,7 +1562,7 @@ private[graft] object QueriesRef {
     // fixes, variant_type-routed genomic composition, chromosome
     // sourceId-OR-name resolve (J7), protein-fatal vs genomic-non-fatal
     // failure isolation, genomic→protein Infers.
-    "g18_docm" -> ((s, dir) => {
+    "g18_docm" -> loader((s, dir) => {
       import s.implicits._
       import sources.Docm.DocmRecord
       val store = new core.PersistentGraphStore(s,
@@ -1605,7 +1605,7 @@ private[graft] object QueriesRef {
     // entrez hydrate + chembl load: gene + drug resolved against the
     // pre-loaded dims, TargetOf edges with the canonical sorted
     // actionType, unresolvable records counted as errors and skipped.
-    "g17_dgidb" -> ((s, dir) => {
+    "g17_dgidb" -> loader((s, dir) => {
       import s.implicits._
       import sources.Dgidb.Interaction
       val store = new core.PersistentGraphStore(s,
@@ -1641,7 +1641,7 @@ private[graft] object QueriesRef {
     // plus a full genomic+cds+protein+exon ladder and a germline
     // frameshift: forms fan-out, chromosome parseInt normalization,
     // annotation-first vocab double-lookup, Infers chain in join order.
-    "g16_moa" -> ((s, dir) => {
+    "g16_moa" -> loader((s, dir) => {
       import s.implicits._
       import sources.Moa.MoaVariant
       val store = new core.PersistentGraphStore(s,
@@ -1690,7 +1690,7 @@ private[graft] object QueriesRef {
     // ACCESSION ids (uid-keyed responses), so the dedup match is on
     // displayName; the unversioned NC_000003 request resolves to the
     // LATEST version (.12) alongside the pinned .11.
-    "g15_entrez_refseq" -> ((s, dir) => {
+    "g15_entrez_refseq" -> loader((s, dir) => {
       val store = new core.PersistentGraphStore(s,
         scratchDir("g15"))
       val ids = Seq("NC_000003.11", "NC_000003", "NM_005228.5", "NP_008819.1")
@@ -1716,7 +1716,7 @@ private[graft] object QueriesRef {
     // shared store, run twice (second pass must create nothing); the
     // readout is per-table row counts plus orchestration summary, each
     // re-derived independently from the raw fixtures by the oracle.
-    "g14_full_dag" -> ((s, dir) => {
+    "g14_full_dag" -> loader((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s,
         scratchDir("g14"))
@@ -1764,7 +1764,7 @@ private[graft] object QueriesRef {
     // THROWS if consulted — a broken anti-join fails the query rather
     // than silently refetching; both hydrates run twice (second pass
     // all-cached).
-    "g13_entrez" -> ((s, dir) => {
+    "g13_entrez" -> loader((s, dir) => {
       import s.implicits._
       val store = new core.PersistentGraphStore(s,
         scratchDir("g13"))
@@ -1805,7 +1805,7 @@ private[graft] object QueriesRef {
     // term double-lookup (civic source preferred) → store upsert of the
     // variant and its gene reference; oracle re-derives the exon-mutation
     // normalization from the raw JSON.
-    "g12_civic_variant" -> ((s, dir) => {
+    "g12_civic_variant" -> loader((s, dir) => {
       import s.implicits._
       // the real fixture record + an rsID variant (the uploadVariant
       // exception path, civic/variant.js:508-522): the rsID routes to the
@@ -1855,7 +1855,7 @@ private[graft] object QueriesRef {
     // S7 (XLSX scan with super-header flattening, PMC4232638/index.js:
     // 24-60): a minimal OOXML workbook is written by `Inputs.xlsx` inside
     // the query, then read back through the scan — fully self-contained.
-    "s7_xlsx_scan" -> ((s, dir) => {
+    "s7_xlsx_scan" -> fixture((s, dir) => {
       val rows = Seq(
         Seq("Supplementary Table 2"),
         Seq("", "Functional categories for TP53", "", "Other"),
@@ -1871,7 +1871,7 @@ private[graft] object QueriesRef {
 
     // S12 (token pagination, clinicaltrialsgov/index.js:301-371): follow
     // nextPageToken until absent.
-    "s12_token_scan" -> ((s, dir) => {
+    "s12_token_scan" -> fixture((s, dir) => {
       import remote.Http._
       val pages = Map(
         "api/studies" ->
@@ -1890,7 +1890,7 @@ private[graft] object QueriesRef {
 
     // S13 (numbered-page links, dgidb/index.js:48-86): each page names the
     // next request.
-    "s13_link_scan" -> ((s, dir) => {
+    "s13_link_scan" -> fixture((s, dir) => {
       import remote.Http._
       val pages = Map(
         "api/interactions?page=1" ->
@@ -1907,7 +1907,7 @@ private[graft] object QueriesRef {
     }),
 
     // S14 (solr offset paging by numFound, asco/index.js:72-92).
-    "s14_solr_scan" -> ((s, dir) => {
+    "s14_solr_scan" -> fixture((s, dir) => {
       import remote.Http._
       val pages = Map(
         "GET api/abstracts?rows=2&start=0 " ->
@@ -1928,7 +1928,7 @@ private[graft] object QueriesRef {
     // S15 (batched-ID fetch, entrez/util.js:269-303): ids repartitioned,
     // fetched in <=batchSize chunks per partition through a deterministic
     // fetcher (the offline stand-in for esummary).
-    "s15_entrez_batch" -> ((s, dir) => {
+    "s15_entrez_batch" -> scaled((s, dir) => {
       import s.implicits._
       val ids = t(s, dir, "customer").filter(col("c_custkey") % 37 === 0)
         .select(col("c_custkey").cast("string")).as[String]
@@ -1940,7 +1940,7 @@ private[graft] object QueriesRef {
 
     // J2 (the full 8-rung ontology preference ladder, graphkb.js:133-196)
     // over a fixture dimension with one discriminating pair per rung.
-    "j2_preference_ladder" -> ((s, dir) => {
+    "j2_preference_ladder" -> fixture((s, dir) => {
       import s.implicits._
       // (key, name, deprecated, alias, dependency, sourceIdVersion,
       //  sourceVersion, description, sourceRank)
@@ -1977,7 +1977,7 @@ private[graft] object QueriesRef {
     // S10 (offset-paginated REST scan, graphkb.js:341-372) driven through
     // the full remote stack — fixture transport (the reference's recorded-
     // request test style), retry client, cache — then pages → DataFrame.
-    "s10_paginated_scan" -> ((s, dir) => {
+    "s10_paginated_scan" -> fixture((s, dir) => {
       import remote.Http._
       val pages = Map(
         "GET api/records?limit=2&skip=0 " ->
@@ -1996,7 +1996,7 @@ private[graft] object QueriesRef {
 
     // S11 (GraphQL cursor pagination, civic/evidenceItem.js:28-53): follow
     // endCursor while hasNextPage through the fixture transport.
-    "s11_cursor_scan" -> ((s, dir) => {
+    "s11_cursor_scan" -> fixture((s, dir) => {
       import remote.Http._
       val pages = Map(
         "api/evidence" ->
@@ -2016,7 +2016,7 @@ private[graft] object QueriesRef {
 
     // S17 (HTML scrape: link harvest + text + consensus year,
     // fdaApprovals/index.js:13-105).
-    "s17_html_scrape" -> ((s, dir) => {
+    "s17_html_scrape" -> fixture((s, dir) => {
       import s.implicits._
       val docs = Seq(
         (1L, """<html><body><a href="/news/2021/x">FDA approves X</a>
@@ -2036,7 +2036,7 @@ private[graft] object QueriesRef {
     // pinned) so regressions fail the DuckDB compare. At scale the parser
     // runs inside Dataset.map over notation columns — pure function, no
     // shuffle, fully distributed.
-    "f1_hgvs_parse" -> ((s, dir) => {
+    "f1_hgvs_parse" -> fixture((s, dir) => {
       import s.implicits._
       s.createDataset(variant.F1Corpus.notations)
         .map(variant.HgvsParser.flat)
@@ -2046,7 +2046,7 @@ private[graft] object QueriesRef {
     // X1 (molecular-profile boolean expression → DNF condition sets,
     // civic/profile.js:19-255): recursive parse + implicit-or
     // disambiguation inside flatMap — one row in, N condition sets out.
-    "x1_dnf" -> ((s, dir) => {
+    "x1_dnf" -> fixture((s, dir) => {
       import s.implicits._
       val names = Map(1L -> "V600E", 2L -> "T790M", 3L -> "AMP",
         4L -> "DEL", 5L -> "Q157P/R")
@@ -2064,7 +2064,7 @@ private[graft] object QueriesRef {
     // X2 (conditions × therapies cartesian, civic/evidenceItem.js:237-264):
     // collect both sets per entity then double-explode — one shuffle, then
     // narrow generators.
-    "x2_cartesian" -> ((s, dir) => {
+    "x2_cartesian" -> scaled((s, dir) => {
       t(s, dir, "lineitem").filter(col("l_orderkey") % 97 === 0)
         .groupBy(col("l_orderkey").as("order_id"))
         .agg(collect_set(col("l_linenumber")).as("conditions"),
@@ -2078,7 +2078,7 @@ private[graft] object QueriesRef {
     // X3 (therapy grouping by interaction type, civic/therapy.js:19-50):
     // SUBSTITUTES → one group per therapy; COMBINATION/SEQUENTIAL → a
     // single group of all, canonicalized by sort (T4).
-    "x3_therapy_groups" -> ((s, dir) => {
+    "x3_therapy_groups" -> scaled((s, dir) => {
       val o = t(s, dir, "orders")
       val li = t(s, dir, "lineitem").filter(col("l_orderkey") % 97 === 0)
       val isCombo = col("o_orderpriority").like("1-%") ||
@@ -2099,7 +2099,7 @@ private[graft] object QueriesRef {
 
     // X4 (CGI multi-variant biomarker expansion,
     // cancergenomeinterpreter/index.js:122-189) via variant.Biomarkers.
-    "x4_biomarker_expand" -> ((s, dir) => {
+    "x4_biomarker_expand" -> fixture((s, dir) => {
       import s.implicits._
       val rows = Seq(
         (1L, "KRAS (G12,G13)", "MUT", ""),
@@ -2117,7 +2117,7 @@ private[graft] object QueriesRef {
 
     // X5 (statement-per-drug explode of a delimited list,
     // oncokb/index.js:563-580).
-    "x5_per_drug" -> ((s, dir) => {
+    "x5_per_drug" -> scaled((s, dir) => {
       t(s, dir, "part").filter(col("p_partkey") % 11 === 0)
         .select(col("p_partkey").as("part_id"),
           explode(split(col("p_type"), " ")).as("drug"))
@@ -2126,7 +2126,7 @@ private[graft] object QueriesRef {
     // X6 (two statements per annotation — mutation-effect with the gene
     // subject + oncogenicity with the variant subject,
     // oncokb/index.js:583-609).
-    "x6_two_statements" -> ((s, dir) => {
+    "x6_two_statements" -> scaled((s, dir) => {
       t(s, dir, "orders").filter(col("o_orderkey") % 199 === 0)
         .select(col("o_orderkey").as("order_id"), explode(array(
           struct(lit("mutation-effect").as("stmt_type"),
@@ -2138,7 +2138,7 @@ private[graft] object QueriesRef {
 
     // X7 (one statement per applicable relevance term,
     // moa/index.js:519-553).
-    "x7_per_relevance" -> ((s, dir) => {
+    "x7_per_relevance" -> scaled((s, dir) => {
       t(s, dir, "orders").filter(col("o_orderkey") % 101 === 0)
         .select(col("o_orderkey").as("order_id"), explode(
           when(col("o_orderstatus") === "F",
@@ -2150,7 +2150,7 @@ private[graft] object QueriesRef {
     // X8 (variant-form ladder: genomic→cds→protein rows chained by Infers
     // edges, moa/index.js:48-188): build the present forms, posexplode,
     // parent = previous present form.
-    "x8_variant_ladder" -> ((s, dir) => {
+    "x8_variant_ladder" -> fixture((s, dir) => {
       import s.implicits._
       val rows = Seq(
         (1L, "KRAS", "g.1A>T", "c.2B>C", "p.G12D"),
@@ -2173,7 +2173,7 @@ private[graft] object QueriesRef {
 
     // X9 (alias/synonym explosion → one alias row per synonym,
     // ncit/index.js:391-432).
-    "x9_alias_explode" -> ((s, dir) => {
+    "x9_alias_explode" -> scaled((s, dir) => {
       t(s, dir, "part").filter(col("p_partkey") % 11 === 0)
         .select(col("p_partkey").as("part_id"),
           explode(array_distinct(array(col("p_brand"), col("p_type"),
@@ -2182,7 +2182,7 @@ private[graft] object QueriesRef {
 
     // J4 (therapy lookup with plural fallback, graphkb.js:427-478): direct
     // name join, misses retry on the inhibitor↔inhibitors swapped term.
-    "j4_plural_fallback" -> ((s, dir) => {
+    "j4_plural_fallback" -> scaled((s, dir) => {
       val p = t(s, dir, "part")
       val dim = p.groupBy(
         concat(lower(col("p_type")),
@@ -2198,7 +2198,7 @@ private[graft] object QueriesRef {
 
     // J5 (vocabulary term lookup by sourceId + source-name subquery filter,
     // graphkb.js:484-498): broadcast dim join.
-    "j5_vocab_lookup" -> ((s, dir) => {
+    "j5_vocab_lookup" -> fixture((s, dir) => {
       val vocab = t(s, dir, "nation")
         .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
         .filter(col("r_name") === "AMERICA")
@@ -2211,7 +2211,7 @@ private[graft] object QueriesRef {
     // J6 (therapy-combination resolution, graphkb.js:673-713 +
     // civic/therapy.js:145-194): split the combo, resolve each element
     // against the dim, regroup with canonical sourceId/name sort.
-    "j6_therapy_combo" -> ((s, dir) => {
+    "j6_therapy_combo" -> scaled((s, dir) => {
       val li = t(s, dir, "lineitem").filter(col("l_orderkey") % 251 === 0)
       val p = t(s, dir, "part")
       val dim = p.groupBy(lower(col("p_type")).as("elem_name"))
@@ -2233,7 +2233,7 @@ private[graft] object QueriesRef {
 
     // J7 (disease resolution by id else name, civic/disease.js:13-37):
     // two-stage left join + coalesce.
-    "j7_coalesce_resolve" -> ((s, dir) => {
+    "j7_coalesce_resolve" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
       val lookups = t(s, dir, "orders").filter(col("o_orderkey") % 41 === 0)
         .join(c, col("o_custkey") === col("c_custkey"))
@@ -2253,7 +2253,7 @@ private[graft] object QueriesRef {
     // J8 (cascading mapping+clean joins, cosmic/resistance.js:211-266,
     // cancergenomeinterpreter/index.js:46-58): exact → case-cleaned →
     // mapping-table rewrite, first hit wins.
-    "j8_cascade_resolve" -> ((s, dir) => {
+    "j8_cascade_resolve" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
       val lookups = t(s, dir, "orders").filter(col("o_orderkey") % 43 === 0)
         .join(c, col("o_custkey") === col("c_custkey"))
@@ -2283,7 +2283,7 @@ private[graft] object QueriesRef {
     // J9 (Entrez dimension pattern, entrez/util.js:269-303): anti-join the
     // preloaded dim for misses, "fetch" them (from the full table standing
     // in for the remote API), union into the dim, re-join.
-    "j9_fetch_union" -> ((s, dir) => {
+    "j9_fetch_union" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
       val dim0 = c.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey").as("key"), col("c_name").as("name"))
@@ -2300,7 +2300,7 @@ private[graft] object QueriesRef {
 
     // J10 (feature lookup by (biotype, sourceId), moa/index.js:63-75):
     // typed dimension union + broadcast join on the composite key.
-    "j10_biotype_lookup" -> ((s, dir) => {
+    "j10_biotype_lookup" -> scaled((s, dir) => {
       val dim = t(s, dir, "nation")
         .select(lit("nation").as("biotype"), col("n_nationkey").as("sid"),
           col("n_name").as("feature_name"))
@@ -2318,7 +2318,7 @@ private[graft] object QueriesRef {
     // cosmic/fusions.js:143-226): three specificity levels, distinct-sample
     // count >= 3, a passing specific group suppresses its less-specific
     // projections via left_anti.
-    "a2_recurrence" -> ((s, dir) => {
+    "a2_recurrence" -> scaled((s, dir) => {
       // all three specificity levels from ONE scan via rollup + grouping_id
       // (0 = (p,rf,ls), 1 = (p,rf), 3 = (p); grand total dropped), then the
       // suppression rule ("a passing specific group blocks its projections")
@@ -2352,7 +2352,7 @@ private[graft] object QueriesRef {
 
     // A4 (dup collapse by fill score, asco/index.js:41-69): per key keep
     // the most-filled record, deterministic tiebreak.
-    "a4_fill_collapse" -> ((s, dir) => {
+    "a4_fill_collapse" -> scaled((s, dir) => {
       val o = t(s, dir, "orders")
       val fill = (col("o_orderstatus") =!= "P").cast("int") +
         (col("o_orderpriority") =!= "3-MEDIUM").cast("int")
@@ -2367,7 +2367,7 @@ private[graft] object QueriesRef {
 
     // A5 (name-collision resolution, ncit/index.js:221-308): group by
     // normalized name, resolve to the unique best member else reject.
-    "a5_name_collision" -> ((s, dir) => {
+    "a5_name_collision" -> scaled((s, dir) => {
       val c = t(s, dir, "customer")
         .withColumn("name", concat(lit("cust-"), col("c_custkey") % 500))
       val withMax = c.withColumn("mx",
@@ -2383,7 +2383,7 @@ private[graft] object QueriesRef {
 
     // A6 (multi-version ontology fold, oncotree/index.js:72-175): versions
     // oldest→latest, first-seen code wins, history chained.
-    "a6_version_fold" -> ((s, dir) => {
+    "a6_version_fold" -> scaled((s, dir) => {
       val o = t(s, dir, "orders")
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(year(col("o_orderdate")).asc, col("o_orderkey").asc)
@@ -2398,7 +2398,7 @@ private[graft] object QueriesRef {
 
     // A9 (pivot-ish column scan, PMC4468049/index.js:95-105): find which
     // column of a fixed set matches the target value.
-    "a9_column_scan" -> ((s, dir) => {
+    "a9_column_scan" -> scaled((s, dir) => {
       t(s, dir, "lineitem").filter(col("l_orderkey") % 89 === 0)
         .select(col("l_orderkey"), col("l_linenumber"),
           when(round(col("l_quantity")).cast("long") === col("l_linenumber"), lit("l_quantity"))
@@ -2408,7 +2408,7 @@ private[graft] object QueriesRef {
     }),
 
     // F5 (genomic HGVS composer, moa/index.js:19-45).
-    "f5_genomic_compose" -> ((s, dir) => {
+    "f5_genomic_compose" -> fixture((s, dir) => {
       import s.implicits._
       val rows = Seq(
         (1L, "A", "T", 100L, 100L), (2L, "-", "TT", 100L, 101L),
@@ -2422,7 +2422,7 @@ private[graft] object QueriesRef {
     // F6 (relevance translation, civic/relevance.js:11-333): full decision
     // tree as a broadcast dimension; unsupported combos → null (error
     // side-channel).
-    "f6_relevance" -> ((s, dir) => {
+    "f6_relevance" -> fixture((s, dir) => {
       import s.implicits._
       val inputs = (functions.Relevance.table.map(_._1) ++ Seq(
         ("SUPPORTS", "DIAGNOSTIC", "NA"),
@@ -2436,7 +2436,7 @@ private[graft] object QueriesRef {
     }),
 
     // F7 (evidence level → relevance regex, oncokb/index.js:555-562).
-    "f7_level_relevance" -> ((s, dir) => {
+    "f7_level_relevance" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "R1"), (2L, "r2"), (3L, "1"), (4L, "2A"), (5L, "3b"), (6L, "X9"))
         .toDF("case_id", "level")
@@ -2445,7 +2445,7 @@ private[graft] object QueriesRef {
     }),
 
     // F8 (name cleaning: squash/plural/locale folds).
-    "f8_name_clean" -> ((s, dir) => {
+    "f8_name_clean" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "  EGFR   Inhibitors  "), (2L, "acute lymphoblastic leukaemia"),
         (3L, "MEK\tinhibitor"), (4L, "Trametinib"))
@@ -2454,7 +2454,7 @@ private[graft] object QueriesRef {
     }),
 
     // F9 (title matching, civic/publication.js:17-21).
-    "f9_title_match" -> ((s, dir) => {
+    "f9_title_match" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "The Title.", "the title"), (2L, "A <i>Gene</i> Study", "a gene study"),
         (3L, "Different", "titles"))
@@ -2465,7 +2465,7 @@ private[graft] object QueriesRef {
     }),
 
     // F10 (abstract citation parse, oncokb/index.js:389-397).
-    "f10_citation_parse" -> ((s, dir) => {
+    "f10_citation_parse" -> fixture((s, dir) => {
       import s.implicits._
       val df = Seq((1L, "Abstract# 8001, ASCO 2014"), (2L, "abstract 102, AACR 2020"))
         .toDF("case_id", "citation")
@@ -2473,7 +2473,7 @@ private[graft] object QueriesRef {
     }),
 
     // F11 (id parsing: DOID urls, versioned ids).
-    "f11_id_parse" -> ((s, dir) => {
+    "f11_id_parse" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "http://purl.obolibrary.org/obo/DOID_8718", "ENSG00000139618.17"),
         (2L, "http://purl.obolibrary.org/obo/doid_14566", "NM_005228.5"),
@@ -2486,7 +2486,7 @@ private[graft] object QueriesRef {
     }),
 
     // F12 (phase normalization, clinicaltrialsgov/index.js:92-110).
-    "f12_phase_norm" -> ((s, dir) => {
+    "f12_phase_norm" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "PHASE1/EARLY_PHASE1,NA"), (2L, "PHASE2,PHASE1"), (3L, "PHASE3"),
         (4L, "NA"))
@@ -2496,7 +2496,7 @@ private[graft] object QueriesRef {
     }),
 
     // F14 (species detection, ncit/index.js:141-166).
-    "f14_species" -> ((s, dir) => {
+    "f14_species" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "Mouse Tp53"), (2L, "murine model antigen"), (3L, "TP53 human"),
         (4L, "stratum"))
@@ -2506,7 +2506,7 @@ private[graft] object QueriesRef {
     }),
 
     // F17 (display-name builders) over real rows — oracle recomputes.
-    "f17_display_name" -> ((s, dir) => {
+    "f17_display_name" -> scaled((s, dir) => {
       t(s, dir, "part").filter(col("p_partkey") % 23 === 0)
         .select(col("p_partkey"),
           functions.Scalars.nameWithSourceId(col("p_name"), col("p_brand"))
@@ -2516,7 +2516,7 @@ private[graft] object QueriesRef {
 
     // T3 (version sort): numeric-run padded sort key makes lexicographic
     // order match component-wise numeric order.
-    "t3_version_sort" -> ((s, dir) => {
+    "t3_version_sort" -> fixture((s, dir) => {
       import s.implicits._
       val w = Window.orderBy(col("sort_key").asc, col("version").asc)
       Seq((1L, "NM_005228.5"), (2L, "NM_005228.10"), (3L, "v1.2.10"),
@@ -2528,7 +2528,7 @@ private[graft] object QueriesRef {
     }),
 
     // P5 (deprecation filter via array_intersect, ncit/index.js:55-58).
-    "p5_deprecation_filter" -> ((s, dir) => {
+    "p5_deprecation_filter" -> scaled((s, dir) => {
       t(s, dir, "part").filter(col("p_partkey") % 19 === 0)
         .withColumn("subsets", split(col("p_type"), " "))
         .filter(size(array_intersect(col("subsets"),
@@ -2537,7 +2537,7 @@ private[graft] object QueriesRef {
     }),
 
     // P6 (None/''→null normalization, moa/index.js:489-515).
-    "p6_null_normalize" -> ((s, dir) => {
+    "p6_null_normalize" -> scaled((s, dir) => {
       t(s, dir, "part").filter(col("p_partkey") % 19 === 0)
         .withColumn("raw",
           when(col("p_size") % 3 === 0, lit("None"))
@@ -2548,7 +2548,7 @@ private[graft] object QueriesRef {
     }),
 
     // P9 (jsonpath extraction from a JSON string column, util.js:210).
-    "p9_jsonpath" -> ((s, dir) => {
+    "p9_jsonpath" -> scaled((s, dir) => {
       t(s, dir, "events").filter(col("event_id") % 97 === 0)
         .select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -2556,7 +2556,7 @@ private[graft] object QueriesRef {
 
     // §2.7 union + dedupe (unionByName + dropDuplicates,
     // civic/evidenceItem.js:67-92).
-    "set_union_dedup" -> ((s, dir) => {
+    "set_union_dedup" -> scaled((s, dir) => {
       t(s, dir, "customer").filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey").as("key"))
         .unionByName(t(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
@@ -2567,7 +2567,7 @@ private[graft] object QueriesRef {
     // J3 (record → filter-tree join keys, graphkb.js:114-123): an
     // AND/OR tree compiled to one Column predicate — pushed into the scan
     // like any native filter.
-    "j3_filter_tree" -> ((s, dir) => {
+    "j3_filter_tree" -> scaled((s, dir) => {
       import core.Filters._
       val tree = Or(Seq(
         fromRecord(Map("c_mktsegment" -> "BUILDING", "c_nationkey" -> 5)),
@@ -2579,7 +2579,7 @@ private[graft] object QueriesRef {
     // J14 (JSON-struct equality join key, civic/statement.js:14-16): match
     // records on (sorted condition set, subject) — the struct key is the
     // join key, serialization stays engine-internal.
-    "j14_struct_key" -> ((s, dir) => {
+    "j14_struct_key" -> scaled((s, dir) => {
       val li = t(s, dir, "lineitem")
       def contentKey(filterExpr: Column) = li.filter(filterExpr)
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
@@ -2598,7 +2598,7 @@ private[graft] object QueriesRef {
 
     // P4 (spec-validation split: valid side) — named Column rules, one
     // codegen'd pass.
-    "p4_validation_split" -> ((s, dir) => {
+    "p4_validation_split" -> scaled((s, dir) => {
       val rules = Seq(
         "max_price" -> (col("o_totalprice") <= 150000),
         "not_urgent" -> (col("o_orderpriority") =!= "1-URGENT"))
@@ -2610,7 +2610,7 @@ private[graft] object QueriesRef {
     // K10 (error side-channel): the invalid rows land in a parquet error
     // sink with their violated-rule list; the query output is the sink
     // read back off disk.
-    "k10_error_sink" -> ((s, dir) => {
+    "k10_error_sink" -> scaled((s, dir) => {
       val rules = Seq(
         "max_price" -> (col("o_totalprice") <= 150000),
         "not_urgent" -> (col("o_orderpriority") =!= "1-URGENT"))
@@ -2627,7 +2627,7 @@ private[graft] object QueriesRef {
     // upsert a second batch (anti-join dedup on (out,in,edgeClass)), read
     // the final state back OFF DISK — the query output is the durable edge
     // set, so the oracle checks store round-trip + merge semantics.
-    "k5_edge_upsert" -> ((s, dir) => {
+    "k5_edge_upsert" -> fixture((s, dir) => {
       val li = t(s, dir, "lineitem")
       val existing = li.filter(col("l_orderkey") % 3 === 0)
         .select(col("l_orderkey").as("out"), col("l_partkey").as("in"),
@@ -2646,7 +2646,7 @@ private[graft] object QueriesRef {
     // K7 (source-dimension upsert keyed by name, graphkb.js:614-624):
     // two successive merges through the persistent store; output is the
     // final dimension state read back from parquet.
-    "k7_source_upsert" -> ((s, dir) => {
+    "k7_source_upsert" -> fixture((s, dir) => {
       val sup = t(s, dir, "supplier")
       val target = sup.filter(col("s_suppkey") % 2 === 0).select(
         col("s_name").as("name"), col("s_nationkey").as("nation"),
@@ -2666,7 +2666,7 @@ private[graft] object QueriesRef {
     // the unique key via null-safe equality — (id, NULL) matches (id, NULL)
     // instead of never-matching (graphkb.js:631-660 pads variant keys with
     // explicit nulls for exactly this).
-    "k8_nullkey_upsert" -> ((s, dir) => {
+    "k8_nullkey_upsert" -> scaled((s, dir) => {
       val o = t(s, dir, "orders")
       val nkey = nullif(col("o_orderstatus"), lit("P"))
       val target = o.filter(col("o_orderkey") % 2 === 0).select(
@@ -2686,7 +2686,7 @@ private[graft] object QueriesRef {
     // civic/variant.js:20-257): one raw name → N normalized records inside
     // flatMap; jest corpus transcribed in CivicNamesSpec, output frozen in
     // the oracle.
-    "f2_civic_names" -> ((s, dir) => {
+    "f2_civic_names" -> fixture((s, dir) => {
       import s.implicits._
       import variant.CivicNames._
       // one case per non-skipped jest family in
@@ -2741,7 +2741,7 @@ private[graft] object QueriesRef {
 
     // F3 (OncoKB variant-name parser, oncokb/index.js:131-193): protein
     // fallback, splice shorthands, en-dash fusions with flip detection.
-    "f3_oncokb_names" -> ((s, dir) => {
+    "f3_oncokb_names" -> fixture((s, dir) => {
       import s.implicits._
       val cases = Seq(
         (1L, "V600_K601insFGLAT", Some("braf")), (2L, "BCR-ABL1 Fusion", None),
@@ -2755,7 +2755,7 @@ private[graft] object QueriesRef {
     }),
 
     // F4 (DOCM notation fixes, docm/index.js:33-67).
-    "f4_docm_fixes" -> ((s, dir) => {
+    "f4_docm_fixes" -> fixture((s, dir) => {
       import s.implicits._
       Seq((1L, "p.W802-"), (2L, "p.DIM842-"), (3L, "p.DI842VM"),
         (4L, "p.AB100AC"), (5L, "p.G12D"), (6L, "p.ABC100X"))
@@ -2769,7 +2769,7 @@ private[graft] object QueriesRef {
     // core.DiffMerge: incoming=even keys, existing=multiples of 3. Tiers
     // join on tight (high-cardinality) keys; the weak residual pairing is
     // the artificial final pass (distributed zip, no skewed window).
-    "j12_diff_tiers" -> ((s, dir) => {
+    "j12_diff_tiers" -> scaled((s, dir) => {
       val o = t(s, dir, "orders")
       val incoming = o.filter(col("o_orderkey") % 2 === 0).select(
         col("o_orderkey").as("iid"), col("o_custkey").as("cust"),

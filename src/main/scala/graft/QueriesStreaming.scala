@@ -9,7 +9,7 @@ import EntryHelpers._
 /** Structured-streaming query registry (SURVEY §2.10: the s2* live rows). */
 private[graft] object QueriesStreaming {
 
-  def registry: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def registry: Map[String, Timed] = Map(
 
 
     // S2 (streaming scan → watermarked windowed agg, run to completion
@@ -17,7 +17,7 @@ private[graft] object QueriesStreaming {
     // STREAM, aggregated per (hour window, event_type), and the finished
     // memory-sink table is the query result. Exact columns only (count,
     // min, max) — float sums are order-dependent across micro-batches.
-    "s2_stream_agg" -> ((s, dir) => {
+    "s2_stream_agg" -> scaled((s, dir) => {
       // Tables.eventsStream normalizes the on-disk ts encoding (legacy
       // INT64 nanos vs native TIMESTAMP micros) behind one schema
       val stream = Tables.eventsStream(s, dir)
@@ -39,7 +39,7 @@ private[graft] object QueriesStreaming {
     // Spark's native session_window gap-merge aggregation under
     // availableNow; oracle replays the [ts, ts+gap) overlap-merge
     // semantics (same session iff delta < gap) with integer-us lag math.
-    "s2c_stream_sessions" -> ((s, dir) => {
+    "s2c_stream_sessions" -> scaled((s, dir) => {
       val stream = Tables.eventsStream(s, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -60,7 +60,7 @@ private[graft] object QueriesStreaming {
     // EARLIEST event per user by (event time, event id). Unlike
     // arrival-order first-wins, the fold is deterministic across
     // micro-batch boundaries, so it verifies against an exact SQL oracle.
-    "s2b_stream_state" -> ((s, dir) => {
+    "s2b_stream_state" -> scaled((s, dir) => {
       import s.implicits._
       // micros, matching the oracle's timestamp precision; encoding
       // normalization (legacy nanos vs native micros) lives in Tables
@@ -92,7 +92,7 @@ private[graft] object QueriesStreaming {
     // lookback per user, both sides watermarked (state stays bounded by
     // the watermark delay + join range, the production shape). Inner
     // join, append mode; oracle is the batch inequality join.
-    "s2d_stream_join" -> ((s, dir) => {
+    "s2d_stream_join" -> scaled((s, dir) => {
       val views = Tables.eventsStream(s, dir)
         .filter(col("event_type") === "view")
         .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
@@ -125,7 +125,7 @@ private[graft] object QueriesStreaming {
     // operator (state expires with the watermark, unlike plain
     // dropDuplicates whose state grows forever). Oracle: the original
     // rows, exactly once.
-    "s2e_stream_dedup_wm" -> ((s, dir) => {
+    "s2e_stream_dedup_wm" -> scaled((s, dir) => {
       val base = Tables.eventsStream(s, dir)
         .select(col("event_id"), col("event_type"), col("user_id"), col("ts"))
       val doubled = base.unionByName(base)
@@ -144,7 +144,7 @@ private[graft] object QueriesStreaming {
     // S2f — STREAM-STATIC JOIN: the streaming dimension-enrichment shape
     // (a broadcast static dim joined into an unbounded stream — no
     // watermark needed, no state: each row enriches map-side).
-    "s2f_stream_enrich" -> ((s, dir) => {
+    "s2f_stream_enrich" -> scaled((s, dir) => {
       import s.implicits._
       val dim = Seq(("view", 1L), ("click", 5L), ("purchase", 20L),
         ("signup", 2L), ("error", 0L)).toDF("event_type", "weight")
@@ -171,7 +171,7 @@ private[graft] object QueriesStreaming {
     // sketch is the production shape). Same register algebra as the
     // batch row; the min(register_sum) fold picks the final sketch
     // across any micro-batching.
-    "s2g_stream_hll" -> ((s, dir) => {
+    "s2g_stream_hll" -> scaled((s, dir) => {
       import s.implicits._
       val stream = Tables.eventsStream(s, dir)
         .select(col("event_type"),
@@ -201,7 +201,7 @@ private[graft] object QueriesStreaming {
     // final grid is probed with the exact top-20 user-days. Streamed
     // counters are bit-identical to batch ones, so estimates stay
     // one-sided.
-    "s2h_stream_cm" -> ((s, dir) => {
+    "s2h_stream_cm" -> scaled((s, dir) => {
       import s.implicits._
       val stream = Tables.eventsStream(s, dir)
         .select(concat(col("user_id").cast("string"), lit("@"),
@@ -239,7 +239,7 @@ private[graft] object QueriesStreaming {
     // P95/P99 from the streamed grid audited against the exact batch
     // percentile. Values are cents: floor(value·100), IEEE-identical
     // in both engines.
-    "s2i_stream_quantile" -> ((s, dir) => {
+    "s2i_stream_quantile" -> scaled((s, dir) => {
       import s.implicits._
       val stream = Tables.eventsStream(s, dir)
         .select(col("event_type"),

@@ -47,8 +47,15 @@ import scala.jdk.CollectionConverters._
   // (queries/oracleSql) is unchanged. Row counts live in README.md and are
   // spec-pinned (BenchConsistencySpec), not repeated here.
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  private def registry: Map[String, Timed] =
     QueriesRef.registry ++ QueriesStreaming.registry ++ QueriesLlm.registry
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, row) => name -> row.run }
+
+  /** The names of the rows declared with `timing`, in name order. */
+  private[graft] def timedAs(timing: Timing): Seq[String] =
+    registry.collect { case (name, row) if row.timing == timing => name }.toSeq.sorted
 
   def oracleSql: Map[String, String] =
     OraclesRef.registry ++ OraclesStreaming.registry ++ OraclesLlm.registry

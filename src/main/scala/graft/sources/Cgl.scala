@@ -180,7 +180,7 @@ object Cgl {
           keyCols = Seq("vid"),
           compareCols = Seq("form", "notation", "term", "reference1", "assembly")),
         Edges(cdsToProt.unionByName(genomicTo)
-          .withColumn("edgeClass", lit("Infers")).distinct()),
+          .withColumn("edgeClass", lit("Infers"))),
         Merge("statements",
           best.filter(col("condition").isNotNull)
             .select(col("recId").as("sourceId"),

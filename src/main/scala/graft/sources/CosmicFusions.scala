@@ -142,7 +142,7 @@ object CosmicFusions {
           keyCols = Seq("vid"), compareCols = Seq("form", "break1", "break2")),
         Edges(live.filter(col("specific_vid").isNotNull)
           .select(col("specific_vid").as("out"), col("general_vid").as("in"),
-            lit("Infers").as("edgeClass")).distinct()),
+            lit("Infers").as("edgeClass"))),
         Merge("statements",
           live.select(col("rep.recId").as("sourceId"),
             col("level").cast("long").as("level"),

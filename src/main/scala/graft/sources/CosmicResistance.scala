@@ -121,8 +121,7 @@ object CosmicResistance {
           keyCols = Seq("vid"),
           compareCols = Seq("form", "notation", "term", "reference1", "assembly")),
         Edges(protToGen.unionByName(cdsToProt).unionByName(genomicTo)
-          .unionByName(catalogTo).withColumn("edgeClass", lit("Infers"))
-          .distinct())))
+          .unionByName(catalogTo).withColumn("edgeClass", lit("Infers")))))
     }
   }
 }

@@ -199,7 +199,7 @@ object Snp {
             fetcher: Seq[String] => Seq[(String, String)],
             parser: DataFrame => DataFrame, compareCols: Seq[String]): Unit = {
           val want = ok.filter(legFilter).select(idCol.as("id")).distinct()
-          val miss = store.read(table) match {
+          val miss = store.readLatest(table) match {
             case Some(dim) => want.join(
               dim.select(col("sourceId").as("idKey")),
               split_part(col("id"), lit("."), lit(1)) === col("idKey"),
@@ -221,10 +221,12 @@ object Snp {
         // dropped (the reference's rid(undefined) throw inside the leg
         // try, snp.js:52-55 / 67-73), and the alternate leg additionally
         // requires its protein leg to have survived (the throw happens
-        // before the gene branch, snp.js:66-92)
-        val refDim = store.read(refseqTable).map(_.select(col("sourceId")))
+        // before the gene branch, snp.js:66-92). readLatest, not read: the
+        // dims must include what hydrateDim just merged, even under the
+        // orchestrator's level pin (read-your-own-writes)
+        val refDim = store.readLatest(refseqTable).map(_.select(col("sourceId")))
           .getOrElse(Seq.empty[String].toDF("sourceId"))
-        val geneDim = store.read(genesTable).map(_.select(col("sourceId")))
+        val geneDim = store.readLatest(genesTable).map(_.select(col("sourceId")))
           .getOrElse(Seq.empty[String].toDF("sourceId"))
         val refLegs = ok.filter(col("leg").isin("cds", "protein"))
           .join(refDim, col("ref1Resolved") === col("sourceId"), "left_semi")

@@ -76,7 +76,7 @@ object Uberon {
         Merge(table, ents, keyCols = Seq("sourceId"),
           compareCols = Seq("name", "description", "deprecated"),
           setCols = Seq("subsets")),
-        Edges(sub.unionByName(xref).distinct())))
+        Edges(sub.unionByName(xref))))
     }
   }
 }

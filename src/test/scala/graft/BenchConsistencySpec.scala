@@ -2,26 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Meta-guards over the query/oracle/bench registries: `Bench` silently
-  * filters its headline list through `queries.contains`, so a typo'd
-  * name would just vanish from the bench — and a `queries` entry
+/** Meta-guards over the query/oracle/bench registries: every row
+  * declares its own timing kind, so Bench's three sets must partition the
+  * registry and Bench itself must name no row — and a `queries` entry
   * without an `oracleSql` twin only gets the driver's weaker rows-only
   * check. Pin both wirings so drift fails a spec instead of silently
   * weakening a gate.
   */
 class BenchConsistencySpec extends AnyFunSuite {
-
-  test("every bench headline name is a real query") {
-    val missing = Bench.headline.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"headline names with no query: $missing")
-  }
-
-  test("headline names are unique") {
-    val dups = Bench.headline.groupBy(identity).collect {
-      case (n, occ) if occ.size > 1 => n
-    }
-    assert(dups.isEmpty, s"duplicated headline names: $dups")
-  }
+  import EntryHelpers.{Fixture, Loader, Scaled}
 
   test("every query has an oracle, and no oracle is orphaned") {
     val q = SparkEntry.queries.keySet
@@ -74,11 +63,19 @@ class BenchConsistencySpec extends AnyFunSuite {
   }
 
   test("every query is timed: headline, loader bucket, or fixture bucket") {
-    // Bench buckets everything not in headline; this just pins that the
-    // partition rule (gN prefix = loader) covers what we think it does
-    val rest = SparkEntry.queries.keySet -- Bench.headline.toSet
-    val (loaders, fixtures) = rest.partition(_.matches("^g\\d+_.*"))
-    assert(loaders.nonEmpty && fixtures.nonEmpty)
-    assert(rest.size + Bench.headline.size == SparkEntry.queries.size)
+    // each row's declared kind puts it in exactly one of Bench's sets
+    val sets = Seq(Scaled, Loader, Fixture).map(SparkEntry.timedAs)
+    assert(sets.forall(_.nonEmpty))
+    assert(sets.flatten.sorted == SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("Bench.scala names no registry row") {
+    // the timing kind lives next to each row; a hand list of row names in
+    // Bench would be a second place to keep in step with the registry
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala")), "UTF-8")
+    val named = "\"([^\"\\\\\n]*)\"".r.findAllMatchIn(src).map(_.group(1))
+      .filter(SparkEntry.queries.contains).toSeq.distinct
+    assert(named.isEmpty, s"Bench.scala names ${named.size} registry rows: $named")
   }
 }

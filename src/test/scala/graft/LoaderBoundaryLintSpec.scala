@@ -96,6 +96,20 @@ class LoaderBoundaryLintSpec extends AnyFunSuite {
       Seq("createTempFile" + "(", "getResourceAsStream" + "(")))
   }
 
+  test("src/main makes temp dirs only in Inputs and the ensureBuilt staging dir") {
+    // ensureBuilt stages its build next to the target, so the final
+    // rename stays on one filesystem and is atomic
+    val helpers = main.resolve("graft/EntryHelpers.scala")
+    val ls = lines(helpers)
+    val start = ls.collectFirst { case (l, n) if l.contains("def ensureBuilt(") => n }.get
+    val end = ls.collectFirst { case (l, n) if n > start && l.startsWith("  }") => n }.get
+    val staging = (start to end).map(n => s"$helpers:$n:")
+    val (inEnsureBuilt, sites) = sitesOf(scalaFiles(main), Seq("createTempDirectory" + "("))
+      .partition(s => staging.exists(s.startsWith))
+    assert(inEnsureBuilt.size == 1, inEnsureBuilt.mkString("\n"))
+    assertOnlyInInputs(sites)
+  }
+
   test("specs make temp dirs and files only under the Inputs scratch root") {
     val sites = sitesOf(scalaFiles(test),
       Seq("createTempDirectory" + "(", "createTempFile" + "("))

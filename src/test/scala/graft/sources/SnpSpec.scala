@@ -102,6 +102,28 @@ class SnpSpec extends AnyFunSuite {
     assert(c2.getOrElse("edges_created", 0L) == 0L)
   }
 
+  test("a level pin does not hide the dims the loader hydrates itself") {
+    import spark.implicits._
+    // bundled fixtures only; NM_005228.5 is left out, so its cds leg is
+    // a refMiss on both stores
+    val refseq = Entrez.fileFetcher(Map(
+      "NP_005219.2" -> Inputs.fixture("entrez_refseq.NP_005219.2.json"),
+      "NP_000537.3" -> Inputs.fixture("entrez_refseq.NP_000537.3.json")))
+    def load(pinned: Boolean) = {
+      val store = new PersistentGraphStore(spark, Inputs.scratchDir("graft-snp-pin"))
+      // as inside an orchestrated level: refseq and genes are created after the pin
+      if (pinned) store.pinVersions()
+      val c = Snp.fetchAndLoad(spark, store,
+        Seq("rs121434568", "rs28934576", "rs9999999").toDS(), snpFetcher,
+        refseq, geneFetcher, vocab)
+      (c, store.readLatest("variants").toSeq.flatMap(_.collect().map(_.toString)).sorted)
+    }
+    val (free, pinned) = (load(pinned = false), load(pinned = true))
+    assert(free._1("variants_create") == 3L) // protein and alt of rs121434568, protein of rs28934576
+    assert(pinned._1 == free._1)
+    assert(pinned._2 == free._2)
+  }
+
   test("civic rsID routing: catalogue variant instead of category variant") {
     import spark.implicits._
     val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-snp-civic"))
