@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -435,10 +437,11 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     * The staging name (`.tmp_v<n>`) never matches the `v=` prefix
     * [[versions]] lists, and publication is ONE atomic directory rename,
     * so concurrent readers can never observe a layer that is later
-    * discarded — no transient-version race, no torn listing. A stale
-    * staging dir (crashed predecessor) is reclaimed here: mutators of a
-    * table are serialized by its lock, so any `.tmp_v` already present
-    * when we start is an orphan.
+    * discarded — no transient-version race, no torn listing. A write
+    * that throws removes its staging dir; a stale one (crashed
+    * predecessor) is reclaimed here: mutators of a table are serialized
+    * by its lock, so any `.tmp_v` already present when we start is an
+    * orphan.
     */
   private def writeStaged(table: String, plan: DataFrame, full: Boolean)(
       keep: => Boolean): Option[Int] = {
@@ -446,7 +449,8 @@ class PersistentGraphStore(spark: SparkSession, root: String, nBuckets: Int = 32
     val dir = versionDir(table, next)
     val tmp = Paths.get(s"${tableDir(table)}/.tmp_v$next")
     Fs.deleteRecursively(tmp)
-    plan.write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(tmp.toString)
+    try plan.write.partitionBy("__b").mode(SaveMode.Overwrite).parquet(tmp.toString)
+    catch { case NonFatal(e) => Fs.deleteRecursively(tmp); throw e }
     if (keep) {
       if (full) Files.createFile(tmp.resolve("_FULL"))
       Files.move(tmp, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)

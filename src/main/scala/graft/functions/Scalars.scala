@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import CaseFold.{lowerCase, upperCase}
 
 /** Scalar normalization layer (SURVEY §2.8) — every function is a pure
   * Column expression (codegen'd, no UDFs).
@@ -33,8 +34,8 @@ object Scalars {
     * `r\d+` → resistance, `\d+[a-z]?` → sensitivity.
     */
   def levelToRelevance(level: Column): Column =
-    when(lower(level).rlike("^r\\d+$"), lit("resistance"))
-      .when(lower(level).rlike("^\\d+[a-z]?$"), lit("sensitivity"))
+    when(lowerCase(level).rlike("^r\\d+$"), lit("resistance"))
+      .when(lowerCase(level).rlike("^\\d+[a-z]?$"), lit("sensitivity"))
       .otherwise(lit(null).cast("string"))
 
   /** F8 — name cleaning: lower/trim, whitespace squash, plural inhibitors
@@ -44,7 +45,7 @@ object Scalars {
   def cleanName(c: Column): Column =
     regexp_replace(
       regexp_replace(
-        regexp_replace(lower(trim(c)), "\\s+", " "),
+        regexp_replace(lowerCase(trim(c)), "\\s+", " "),
         "\\binhibitors\\b", "inhibitor"),
       "leukaemia", "leukemia")
 
@@ -52,7 +53,7 @@ object Scalars {
     * trailing periods and markup insensitive.
     */
   def titleNorm(c: Column): Column =
-    regexp_replace(regexp_replace(lower(trim(c)), "<[^>]+>", ""), "\\.$", "")
+    regexp_replace(regexp_replace(lowerCase(trim(c)), "<[^>]+>", ""), "\\.$", "")
 
   /** F10 — abstract citation parse (oncokb/index.js:389-397):
     * `Abstract# 8001, ASCO 2014` → (number, meeting, year).
@@ -67,7 +68,7 @@ object Scalars {
     * refseq/index.js:55).
     */
   def doidFromUrl(c: Column): Column =
-    lower(regexp_replace(regexp_extract(c, "(?i).*(DOID_\\d+)$", 1), "_", ":"))
+    lowerCase(regexp_replace(regexp_extract(c, "(?i).*(DOID_\\d+)$", 1), "_", ":"))
 
   def versionedIdBase(c: Column): Column =
     regexp_extract(c, "^([^.]+)(\\.\\d+)?$", 1)
@@ -89,7 +90,7 @@ object Scalars {
 
   /** F14 — species detection (ncit/index.js:141-166). */
   def nonHumanSpecies(c: Column): Column =
-    lower(c).rlike("\\b(murine|mouse|rat|bovine|canine)\\b")
+    lowerCase(c).rlike("\\b(murine|mouse|rat|bovine|canine)\\b")
 
   /** F17 — display-name builders: `pmid:N` (entrez/pubmed.js:62),
     * `name [SOURCEID]` (ncit/index.js:178-180).
@@ -97,7 +98,7 @@ object Scalars {
   def pmidDisplay(id: Column): Column = concat(lit("pmid:"), id)
 
   def nameWithSourceId(name: Column, sourceId: Column): Column =
-    concat(lower(trim(name)), lit(" ["), upper(sourceId), lit("]"))
+    concat(lowerCase(trim(name)), lit(" ["), upperCase(sourceId), lit("]"))
 
   /** T3 — version-string sort key (`NM_005228.5`, `2021-03-02`,
     * `v1.2.10`): extract numeric runs, pad each to fixed width so

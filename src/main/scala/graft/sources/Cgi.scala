@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore.Merge
+import graft.functions.CaseFold.lowerCase
 
 /** Cancer Genome Interpreter row parsing (reference
   * src/cancergenomeinterpreter/index.js:73-190):
@@ -214,45 +215,45 @@ object Cgi {
     val meta = rows.map(r => (r.rowId, r.disease, r.relevance))
       .toDF("rowId", "disease", "relevance")
     val relName = coalesce(
-      element_at(typedLit(RelevanceMapping), lower(trim(col("relevance")))),
+      element_at(typedLit(RelevanceMapping), lowerCase(trim(col("relevance")))),
       col("relevance"))
     // dims dedup to ONE row per lowercased key (deterministic min) —
     // a caller-supplied dim with case-duplicate names (e.g. the DAG's
     // vertices ∪ diseases union) would otherwise fan the left joins
     // out into duplicate statement rows under the same merge key
     val withRel = meta.withColumn("rel_name", relName)
-      .join(broadcast(vocab.select(lower(col("name")).as("rel_key"),
+      .join(broadcast(vocab.select(lowerCase(col("name")).as("rel_key"),
         col("term_id").as("rel_term"))
         .groupBy("rel_key").agg(min("rel_term").as("rel_term"))),
-        lower(col("rel_name")) === col("rel_key"), "left")
-    val dDim = broadcast(diseases.select(lower(col("name")).as("d_key"),
+        lowerCase(col("rel_name")) === col("rel_key"), "left")
+    val dDim = broadcast(diseases.select(lowerCase(col("name")).as("d_key"),
       col("sourceId").as("d_sid"))
       .groupBy("d_key").agg(min("d_sid").as("d_sid")))
     val mapped = withRel.withColumn("d_mapped",
-      element_at(typedLit(DiseaseMapping), lower(trim(col("disease")))))
+      element_at(typedLit(DiseaseMapping), lowerCase(trim(col("disease")))))
     // rung 1: the mapped name, else the raw name
     val direct = mapped.join(dDim,
-      coalesce(lower(col("d_mapped")), lower(trim(col("disease")))) === col("d_key"),
+      coalesce(lowerCase(col("d_mapped")), lowerCase(trim(col("disease")))) === col("d_key"),
       "left").drop("d_key")
     // rung 2: unmapped misses retry as `<name> cancer`
     val retry = direct.filter(col("d_sid").isNull && col("d_mapped").isNull)
       .drop("d_sid")
-      .join(dDim, concat(lower(trim(col("disease"))), lit(" cancer")) === col("d_key"),
+      .join(dDim, concat(lowerCase(trim(col("disease"))), lit(" cancer")) === col("d_key"),
         "left").drop("d_key")
     val rowMeta = direct.filter(col("d_sid").isNotNull || col("d_mapped").isNotNull)
       .unionByName(retry)
 
     // ---- therapy resolve-or-create
-    val tDim = broadcast(therapies.select(lower(col("name")).as("t_key"),
+    val tDim = broadcast(therapies.select(lowerCase(col("name")).as("t_key"),
       col("sourceId").as("t_dim_sid"))
       .groupBy("t_key").agg(min("t_dim_sid").as("t_dim_sid")))
     val comboName = when(col("value").contains(";"),
       array_join(array_sort(transform(split(col("value"), ";"),
-        x => lower(trim(x)))), " + "))
+        x => lowerCase(trim(x)))), " + "))
       .otherwise(col("value"))
     val drugs = parsed.filter(col("kind") === "therapy")
-      .withColumn("t_name", lower(trim(coalesce(
-        element_at(typedLit(TherapyMapping), lower(trim(comboName))),
+      .withColumn("t_name", lowerCase(trim(coalesce(
+        element_at(typedLit(TherapyMapping), lowerCase(trim(comboName))),
         comboName))))
       .join(tDim, col("t_name") === col("t_key"), "left")
       .withColumn("t_rid",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.upperCase
 
 /** ChEMBL loader (reference src/chembl/index.js:30-107): one molecule
   * document per fetch → a Therapy vertex, plus an optional USAN-stem
@@ -29,8 +30,8 @@ object Chembl {
       col("molecule_chembl_id").as("sourceId"),
       name.as("name"),
       when(name.isNotNull,
-          concat(name, lit(" ["), upper(col("molecule_chembl_id")), lit("]")))
-        .otherwise(upper(col("molecule_chembl_id"))).as("displayName"),
+          concat(name, lit(" ["), upperCase(col("molecule_chembl_id")), lit("]")))
+        .otherwise(upperCase(col("molecule_chembl_id"))).as("displayName"),
       col("molecule_properties.full_molformula").as("molecularFormula"),
       col("usan_stem_definition").as("usanStem"))
   }

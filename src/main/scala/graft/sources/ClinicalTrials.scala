@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 import graft.functions.Scalars
 
 /** clinicaltrials.gov loader (reference src/clinicaltrialsgov/index.js):
@@ -37,12 +38,12 @@ object ClinicalTrials {
     // transform them first, then null-coalesce at the uniform result type
     val drugs = coalesce(
       filter(col(s"$p.armsInterventionsModule.interventions"),
-        i => lower(i("type")).isin("drug", "biological")).getField("name"),
+        i => lowerCase(i("type")).isin("drug", "biological")).getField("name"),
       array().cast("array<string>"))
     val locations = coalesce(
       filter(
         transform(col(s"$p.contactsLocationsModule.locations"), l =>
-          struct(lower(l("city")).as("city"), lower(l("country")).as("country"))),
+          struct(lowerCase(l("city")).as("city"), lowerCase(l("country")).as("country"))),
         l => l("city").isNotNull || l("country").isNotNull),
       array().cast("array<struct<city:string,country:string>>"))
     studies.select(
@@ -93,9 +94,9 @@ object ClinicalTrials {
   /** processRecord content columns (no link resolution). */
   def process(converted: DataFrame): DataFrame = {
     val spaced = regexp_replace(col("recruitmentStatus"), "_", " ")
-    val status = when(lower(spaced) === "active not recruiting",
+    val status = when(lowerCase(spaced) === "active not recruiting",
         lit("active, not recruiting"))
-      .when(lower(spaced) === "unknown status", lit("unknown"))
+      .when(lowerCase(spaced) === "unknown status", lit("unknown"))
       .otherwise(spaced)
     val consensus = locationConsensus(col("locations"))
     converted

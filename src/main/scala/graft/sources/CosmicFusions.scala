@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.upperCase
 
 /** COSMIC fusions recurrence loader (reference src/cosmic/fusions.js:
   * 36-225): a three-level recurrence rollup with specificity suppression —
@@ -40,8 +41,8 @@ object CosmicFusions {
 
   /** Preprocessed rows (fusions.js:163-186). */
   def preprocess(rows: DataFrame): DataFrame = {
-    val dis = when(upper(col("disease")) === "NS", lit("")).otherwise(col("disease"))
-    val fam0 = when(upper(col("diseaseFamily")) === "NS", lit(""))
+    val dis = when(upperCase(col("disease")) === "NS", lit("")).otherwise(col("disease"))
+    val fam0 = when(upperCase(col("diseaseFamily")) === "NS", lit(""))
       .otherwise(col("diseaseFamily"))
     val fam = when(dis === "" && fam0 === "", lit("cancer")).otherwise(fam0)
     rows

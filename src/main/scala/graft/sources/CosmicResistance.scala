@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 import graft.variant.HgvsParser
 
 /** COSMIC resistance-mutation variant ladder (reference
@@ -64,18 +65,18 @@ object CosmicResistance {
     import spark.implicits._
     val f = spark.createDataset(records).flatMap(forms).toDF()
     // entrez-first, hgnc-fallback symbol resolve (J7 coalesce)
-    val geneDim = genes.select(lower(col("symbol")).as("sym"),
+    val geneDim = genes.select(lowerCase(col("symbol")).as("sym"),
       col("sourceId").as("entrez_sid"))
-    val hgncDim = hgnc.select(lower(col("symbol")).as("sym"),
+    val hgncDim = hgnc.select(lowerCase(col("symbol")).as("sym"),
       col("sourceId").as("hgnc_sid"))
     val chromDim = chromosomes.select(col("sourceId").as("chrom_key"),
       col("sourceId").as("chrom_sid"))
     val anyTerms = vocab.groupBy(col("name").as("vtype"))
       .agg(min(col("term_id")).as("term"))
     val resolved = f
-      .join(broadcast(geneDim), lower(col("ref1")) === col("sym"), "left")
+      .join(broadcast(geneDim), lowerCase(col("ref1")) === col("sym"), "left")
       .drop("sym")
-      .join(broadcast(hgncDim), lower(col("ref1")) === col("sym"), "left")
+      .join(broadcast(hgncDim), lowerCase(col("ref1")) === col("sym"), "left")
       .drop("sym")
       .join(broadcast(chromDim), col("ref1") === col("chrom_key"), "left")
       .join(broadcast(anyTerms), Seq("vtype"), "left")

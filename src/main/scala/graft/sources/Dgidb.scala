@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.Edges
+import graft.functions.CaseFold.lowerCase
 
 /** DGIdb drug-gene interaction loader (reference src/dgidb/index.js:
   * 30-86): each interaction record resolves its entrez gene and its
@@ -33,7 +34,7 @@ object Dgidb {
       .withColumn("chemblId",
         regexp_replace(col("conceptId"), "^chembl:", ""))
       .withColumn("actionType", array_join(sort_array(
-        expr("transform(interactionTypes, x -> lower(trim(x)))")), ";"))
+        transform(col("interactionTypes"), x => lowerCase(trim(x)))), ";"))
     val g = genes.select(col("sourceId").as("entrezId"), lit(true).as("gene_ok"))
     val d = therapies.select(col("sourceId").as("chemblId"), lit(true).as("drug_ok"))
     val joined = recs

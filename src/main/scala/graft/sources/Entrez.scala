@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.Merge
+import graft.functions.CaseFold.upperCase
 import graft.remote.EntrezBatch
 
 /** Entrez dimension hydration (reference src/entrez/{gene,pubmed,refseq}.js
@@ -97,7 +98,7 @@ object Entrez {
       nullif(split_part(acc, lit("."), lit(2)), lit("")).as("sourceIdVersion"),
       biotype.as("biotype"),
       when(biotype === "chromosome", g(p, "subname")).as("name"),
-      upper(acc).as("displayName"),
+      upperCase(acc).as("displayName"),
       g(p, "title").as("longName"))
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 
 /** GSC therapeutic (drug-class) ontology loader (reference
   * src/gscTherapeuticOntology.js:13-240): TSV rows → therapy records with
@@ -56,7 +57,7 @@ object GscTherapy {
     * /g-less JS replace.
     */
   def cleanTerm(c: Column): Column =
-    regexp_replace(lower(trim(c)), "^(.*?)\\binhibitors\\b", "$1inhibitor")
+    regexp_replace(lowerCase(trim(c)), "^(.*?)\\binhibitors\\b", "$1inhibitor")
 
   /** TAGS: subset labels for every class column the term equals. */
   private def tagsFor(term: Column): Column =
@@ -84,7 +85,7 @@ object GscTherapy {
     val db = broadcast(drugbank.select(col("name"),
       concat(lit("drugbank:"), col("sourceId")).as("db_rid")))
     val dbById = broadcast(drugbank.select(
-      lower(col("sourceId")).as("db_id"),
+      lowerCase(col("sourceId")).as("db_id"),
       concat(lit("drugbank:"), col("sourceId")).as("dbid_rid")))
     val ch = broadcast(chembl.select(col("name"),
       concat(lit("chembl:"), col("sourceId")).as("ch_rid")))
@@ -152,7 +153,7 @@ object GscTherapy {
       // DrugBankID mapping: hit → crossref unless same rid; miss → error
       val dbIdRows = withDrug
         .filter(col("drugbankId").rlike("(?i)^DB\\d+$"))
-        .join(dbById, lower(col("drugbankId")) === col("db_id"), "left")
+        .join(dbById, lowerCase(col("drugbankId")) === col("db_id"), "left")
       withCached(dbIdRows) {
         val dbIdXref = dbIdRows
           .filter(col("dbid_rid").isNotNull && col("dbid_rid") =!= col("drug_rid"))

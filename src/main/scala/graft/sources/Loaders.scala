@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.{lowerCase, upperCase}
 
 /** End-to-end loader slice (SURVEY §7.2 step 3): scan → normalize →
   * resolve → upsert into the persistent graph store, per source, with the
@@ -24,7 +25,7 @@ import graft.core.PersistentGraphStore.{Edges, Merge}
 object Loaders {
 
   private def parseCurie(c: org.apache.spark.sql.Column) =
-    lower(regexp_replace(regexp_extract(c, ".*/([A-Za-z]+_[0-9]+)$", 1), "_", ":"))
+    lowerCase(regexp_replace(regexp_extract(c, ".*/([A-Za-z]+_[0-9]+)$", 1), "_", ":"))
 
   /** Disease vertices from an OBO-graph JSON dump. */
   def doidVertices(spark: SparkSession, path: String): DataFrame =
@@ -342,12 +343,12 @@ object Loaders {
       version: String = "oncotree_latest_stable"): DataFrame =
     Scans.json(spark, path)
       .select(
-        lower(col("code")).as("sourceId"),
+        lowerCase(col("code")).as("sourceId"),
         col("name"),
-        concat(col("name"), lit(" ["), upper(col("code")), lit("]")).as("displayName"),
+        concat(col("name"), lit(" ["), upperCase(col("code")), lit("]")).as("displayName"),
         col("mainType").as("subset"),
         lit(version).as("sourceIdVersion"),
-        lower(col("parent")).as("parent"),
+        lowerCase(col("parent")).as("parent"),
         coalesce(col("externalReferences.NCI"), array()).as("nciIds"))
 
   /** SubClassOf (child → parent, oncotree/index.js:131-137) and NCI
@@ -363,7 +364,7 @@ object Loaders {
         lit("SubClassOf").as("edgeClass"))
     val xref = v.select(col("sourceId").as("out"),
         explode(col("nciIds")).as("in"))
-      .withColumn("in", lower(col("in")))
+      .withColumn("in", lowerCase(col("in")))
       .withColumn("edgeClass", lit("CrossReferenceOf"))
     sub.unionByName(xref)
   }
@@ -391,10 +392,10 @@ object Loaders {
     val raw = Scans.delim(spark, path, headerMap = BiomartHeader,
       inferSchema = false)
     def split(c: String, id: String, ver: String) = Seq(
-      split_part(lower(col(c)), lit("."), lit(1)).as(id),
+      split_part(lowerCase(col(c)), lit("."), lit(1)).as(id),
       // an unversioned id has no '.', split_part gives '' — null it like
       // the reference's undefined version (ensembl/index.js:105-107)
-      nullif(split_part(lower(col(c)), lit("."), lit(2)), lit("")).as(ver))
+      nullif(split_part(lowerCase(col(c)), lit("."), lit(2)), lit("")).as(ver))
     raw.select(
       split("geneIdVersion", "geneId", "geneVer") ++
         split("transcriptIdVersion", "transcriptId", "transcriptVer") ++
@@ -451,7 +452,7 @@ object Loaders {
         lit("elementof").as("edgeClass")),
       // gene → crossreferenceof → hgnc
       rows.filter(col("hgncId").isNotNull)
-        .select(col("geneId").as("out"), lower(col("hgncId")).as("in"),
+        .select(col("geneId").as("out"), lowerCase(col("hgncId")).as("in"),
           lit("crossreferenceof").as("edgeClass")))
     parts.reduce(_ unionByName _).distinct()
   }
@@ -473,7 +474,7 @@ object Loaders {
     * 'orf' segment, so the outputs agree on real symbols.)
     */
   def hgncDisplayName(c: org.apache.spark.sql.Column) =
-    regexp_replace(upper(c), "ORF", "orf")
+    regexp_replace(upperCase(c), "ORF", "orf")
 
   /** Gene features from an HGNC fetch response: the primary record plus
     * deprecated prev_symbol and alias_symbol dependents, all sharing the
@@ -509,7 +510,7 @@ object Loaders {
     val alias = docs.select(explode(col("alias_symbol")).as("out"),
       col("symbol").as("in"), lit("aliasof").as("edgeClass"))
     val ensg = docs.filter(col("ensembl_gene_id").isNotNull)
-      .select(col("symbol").as("out"), lower(col("ensembl_gene_id")).as("in"),
+      .select(col("symbol").as("out"), lowerCase(col("ensembl_gene_id")).as("in"),
         lit("crossreferenceof").as("edgeClass"))
     val entrez = docs.filter(col("entrez_id").isNotNull)
       .select(col("symbol").as("out"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 
 /** The composed NCIt flat-file pipeline (reference `uploadFile`
   * src/ncit/index.js:199-460): scan → parent-concept derivation → row
@@ -145,7 +146,7 @@ object NcitLoad {
     val alias = live
       .select(col("sourceId"), col("name").as("__primary"), col("endpoint"),
         explode(aliasNames).as("syn"))
-      .filter(lower(col("syn")) =!= lower(col("__primary")))
+      .filter(lowerCase(col("syn")) =!= lowerCase(col("__primary")))
       .select(col("sourceId"), col("syn").as("name"),
         concat(col("syn"), lit(" ["), col("sourceId"), lit("]")).as("displayName"),
         col("endpoint"), lit(true).as("alias"))
@@ -163,7 +164,7 @@ object NcitLoad {
     val aliasOf = live
       .select(col("sourceId"), col("name").as("__primary"),
         explode(aliasNames).as("syn"))
-      .filter(lower(col("syn")) =!= lower(col("__primary")))
+      .filter(lowerCase(col("syn")) =!= lowerCase(col("__primary")))
       .select(rid(col("sourceId"), col("syn")).as("out"),
         rid(col("sourceId"), col("__primary")).as("in"),
         lit("aliasof").as("edgeClass"))

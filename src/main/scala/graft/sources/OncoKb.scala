@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.Merge
+import graft.functions.CaseFold.lowerCase
 import graft.variant.{HgvsParser, OncoKbNames}
 
 /** OncoKB variant loader (reference src/oncokb/index.js:199-312
@@ -74,12 +75,12 @@ object OncoKb {
     val h = spark.createDataset(records).map(hydrate).toDF()
     val byId = genes.select(col("sourceId").as("entrezGeneId"),
       col("sourceId").as("gene1_sid"))
-    val bySymbol = genes.select(lower(col("symbol")).as("reference2"),
+    val bySymbol = genes.select(lowerCase(col("symbol")).as("reference2"),
       col("sourceId").as("gene2_sid"))
     val sigDim = signatures
       .filter(col("name") === "microsatellite instability")
       .select(col("sourceId").as("sig_sid"))
-    val terms = vocab.select(lower(col("name")).as("term_name"),
+    val terms = vocab.select(lowerCase(col("name")).as("term_name"),
       col("term_id"))
     val resolved = h
       .join(broadcast(byId), Seq("entrezGeneId"), "left")
@@ -87,10 +88,10 @@ object OncoKb {
       .crossJoin(broadcast(sigDim))
       // category-first: the vocabulary term wins over the HGVS parse
       .join(broadcast(terms.withColumnRenamed("term_id", "cat_term")),
-        lower(col("vtype")) === col("term_name"), "left")
+        lowerCase(col("vtype")) === col("term_name"), "left")
       .drop("term_name")
       .join(broadcast(terms.withColumnRenamed("term_id", "pos_term")),
-        lower(col("posVtype")) === col("term_name"), "left")
+        lowerCase(col("posVtype")) === col("term_name"), "left")
       .withColumn("ref1",
         when(col("biomarker"), col("sig_sid")).otherwise(col("gene1_sid")))
       .withColumn("ref2_resolved", col("gene2_sid"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.Merge
+import graft.functions.CaseFold.lowerCase
 import graft.variant.HgvsParser
 
 /** PMC4232638 supplementary-table loader (reference
@@ -39,7 +40,7 @@ object Pmc4232638 {
     * (a bare 'no' is TRUTHY in the reference).
     */
   private def isNo(c: Column): Column =
-    c.isNull || c === "" || lower(c).startsWith("no ")
+    c.isNull || c === "" || lowerCase(c).startsWith("no ")
 
   /** Relevance-annotated rows from the scanned grid (already
     * super-header-flattened); '----' cells are blanked like the

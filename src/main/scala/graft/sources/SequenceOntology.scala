@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 
 /** Sequence Ontology loader (reference src/sequenceOntology.js:82-133):
   * SO OWL RDF/XML → Vocabulary vertices + subclassof edges, end-to-end
@@ -75,7 +76,7 @@ object SequenceOntology {
   def terms(recs: DataFrame): DataFrame =
     recs.filter(col("label").isNotNull)
       .select(
-        lower(col("code")).as("sourceId"),
+        lowerCase(col("code")).as("sourceId"),
         regexp_replace(col("label"), "_", " ").as("name"),
         col("description"), col("deprecated"))
 
@@ -100,7 +101,7 @@ object SequenceOntology {
       val labeled = terms(recs)
       val codes = broadcast(labeled.select(col("sourceId")).distinct())
       val cands = subclassCandidates(triples)
-        .select(lower(col("out")).as("out"), lower(col("in")).as("in"))
+        .select(lowerCase(col("out")).as("out"), lowerCase(col("in")).as("in"))
       val good = cands
         .join(codes.withColumnRenamed("sourceId", "out"), Seq("out"), "left_semi")
         .join(codes.withColumnRenamed("sourceId", "in"), Seq("in"), "left_semi")

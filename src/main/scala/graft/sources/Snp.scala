@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 import graft.remote.EntrezBatch
 import graft.variant.HgvsParser
 
@@ -158,7 +159,7 @@ object Snp {
     // catalogue names are not re-fetched
     val missing = store.read(catalogueTable) match {
       case Some(dim) => requested.toDF("name")
-        .join(dim.select(lower(col("name")).as("name")), Seq("name"), "left_anti")
+        .join(dim.select(lowerCase(col("name")).as("name")), Seq("name"), "left_anti")
         .as[String]
       case None => requested
     }
@@ -173,7 +174,7 @@ object Snp {
       // ids the API returned nothing for — the civic path treats these as
       // an error ("unable to fetch variant by RSID", civic/variant.js:519)
       val misses = missing.toDF("name")
-        .join(parsed.select(lower(col("name")).as("name")), Seq("name"), "left_anti")
+        .join(parsed.select(lowerCase(col("name")).as("name")), Seq("name"), "left_anti")
         .count()
 
       val legs = parsed.select(col("sourceId"), col("name"), col("cds"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 
 /** Uberon anatomy ontology loader (reference src/uberon/index.js:36-207):
   * OWL classes keyed `uberon:<digits>` (parseUberonId, :36-41), entities
@@ -63,9 +64,9 @@ object Uberon {
         .select(col("out"), col("in"), lit("subclassof").as("edgeClass"))
       val xref = t
         .filter(col("predicate") === CrossRef &&
-          lower(col("obj")).rlike("^ncit:c\\d+$"))
+          lowerCase(col("obj")).rlike("^ncit:c\\d+$"))
         .select(uberonId(col("subject")).as("out"),
-          expr("substring(lower(obj), 6)").as("in"))
+          lowerCase(col("obj")).substr(6, Int.MaxValue).as("in"))
         .filter(col("out").isNotNull)
         .join(loaded.withColumnRenamed("sourceId", "out"), Seq("out"), "left_semi")
         // NCIt misses are skipped, not fatal (index.js:196-199)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Cached.withCached
 import graft.core.PersistentGraphStore
 import graft.core.PersistentGraphStore.{Edges, Merge}
+import graft.functions.CaseFold.lowerCase
 
 /** VariO loader (reference src/vario.js:45-105): OWL RDF/XML → vocabulary
   * vertices + subclassof edges, end-to-end through the store.
@@ -30,7 +31,7 @@ object Vario {
   val SubPred = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
 
   def parseCode(c: Column): Column =
-    lower(regexp_replace(regexp_extract(c, ".*/(VariO_\\d+)$", 1), "_", ":"))
+    lowerCase(regexp_replace(regexp_extract(c, ".*/(VariO_\\d+)$", 1), "_", ":"))
 
   /** VariO-subject triples with both ends code-parsed. */
   def varioTriples(spark: SparkSession, path: String): DataFrame =

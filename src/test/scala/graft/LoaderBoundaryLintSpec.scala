@@ -116,6 +116,15 @@ class LoaderBoundaryLintSpec extends AnyFunSuite {
     assert(sites.isEmpty, sites.mkString("\n"))
   }
 
+  test("the loader packages case-fold only through CaseFold") {
+    // Spark's own lower/upper/initcap build a 1.1M-code-point title-case
+    // table on first use; SQL text inside expr(...) strings counts too
+    val offenders = loaderPackages.flatMap(pkg =>
+      sitesOf(scalaFiles(main.resolve(s"graft/$pkg")),
+        Seq("lower", "upper", "initcap").map(_ + "(")))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("the loader packages do not name the registry plumbing EntryHelpers") {
     val offenders = loaderPackages.flatMap(pkg =>
       sitesOf(scalaFiles(main.resolve(s"graft/$pkg")), Seq("EntryHelpers")))

@@ -21,20 +21,23 @@ object TestSpark {
 
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Run `f` with AQE off (plain FileSourceScanExec trees for
-    * partition-pruning assertions), restoring whatever value the shared
-    * session HAD — the loan pattern both pruned-scan specs previously
-    * copy-pasted (and drifted on).
+  /** Run `f` with the given session settings, restoring whatever values
+    * the shared session HAD, set or unset.
     */
-  def withAqeDisabled[T](f: => T): T = {
-    val before = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+  def withConf[T](pairs: (String, String)*)(f: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try f
-    finally before match {
-      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Run `f` with AQE off (plain FileSourceScanExec trees for
+    * partition-pruning assertions).
+    */
+  def withAqeDisabled[T](f: => T): T = withConf("spark.sql.adaptive.enabled" -> "false")(f)
 }
 
 /** Memoized per-name query-frame construction against sf0.001 — shared by

@@ -5,6 +5,9 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.{Inputs, TestSpark}
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -374,4 +377,60 @@ class PersistentGraphStoreSpec extends AnyFunSuite {
     assert(sortedRows(store.read("vertices").get) ==
       sortedRows(clean.read("vertices").get))
   }
+
+  test("a later merge that fails keeps v1 readable and replayable; a rerun converges") {
+    // two places a later merge can fail: its batch's own UDF, which the
+    // bucket discovery evaluates before any stored read, and the layer's
+    // job commit, after every task staged its files and before the publish
+    val boom = udf { (id: Long) =>
+      if (id == 3L) throw new IllegalStateException("sentinel row")
+      s"renamed$id"
+    }
+    def batch(name: org.apache.spark.sql.Column) =
+      spark.range(0, 8, 1, 4).select(concat(lit("id"), col("id")).as("sourceId"),
+        name.as("name"))
+    def mergeInto(s: PersistentGraphStore, df: org.apache.spark.sql.DataFrame) =
+      s.merge("vertices", df, Seq("sourceId"), compareCols = Seq("name"))
+    val first = batch(concat(lit("name"), col("id")))
+    val good = batch(concat(lit("renamed"), col("id")))
+    Seq[(String, PersistentGraphStore => Any)](
+      "udf" -> (s => mergeInto(s, batch(boom(col("id"))))),
+      "job commit" -> (s => TestSpark.withConf("spark.sql.sources.commitProtocolClass" ->
+        classOf[FailingJobCommit].getName)(mergeInto(s, good)))
+    ).foreach { case (point, failing) =>
+      val dir = java.nio.file.Paths.get(Inputs.scratchDir("graft-store"))
+      val store = new PersistentGraphStore(spark, dir.toString)
+      val clean = freshStore()
+      Seq(store, clean).foreach(s => assert(mergeInto(s, first) == Map("create" -> 8L), point))
+      val v1Rows = sortedRows(store.read("vertices").get)
+      intercept[Exception](failing(store))
+      assert(store.latestVersion("vertices").contains(1), point)
+      assert(sortedRows(store.read("vertices").get) == v1Rows, point)
+      assert(tmpDirs(dir.resolve("vertices")).isEmpty, point)
+      // the replay record still holds batch 1: its replay reads and writes nothing
+      val rec = new JobRecorder(spark.sparkContext)
+      try {
+        rec.drain()
+        assert(mergeInto(store, first) == Map("noop" -> 8L), point)
+        rec.drain()
+        assert(rec.writeStages.isEmpty, point)
+        assert(!rec.plans.asScala.exists(_.contains("Scan parquet")), point)
+      } finally rec.close()
+      assert(store.latestVersion("vertices").contains(1), point)
+      Seq(store, clean).foreach(s => assert(mergeInto(s, good) == Map("update" -> 8L), point))
+      assert(store.latestVersion("vertices").contains(2), point)
+      assert(tmpDirs(dir.resolve("vertices")).isEmpty, point)
+      assert(sortedRows(store.read("vertices").get) ==
+        sortedRows(clean.read("vertices").get), point)
+    }
+  }
+}
+
+/** A file commit protocol whose job commit throws: every task has staged
+  * its files under the write's path, and nothing is committed.
+  */
+class FailingJobCommit(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    throw new IllegalStateException("injected job-commit failure")
 }
